@@ -2,7 +2,7 @@
 banded range join.
 
 The reference implements no joins at all (SURVEY.md §2.2 — its only
-lookup is the broadcast dimension map, T6); these are part of the
+lookup is an in-memory dimension map, T6); these are part of the
 general analytics surface, built as compositions of DataFrame ops —
 no UDFs, no Catalyst extensions.
 

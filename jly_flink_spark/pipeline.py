@@ -5,14 +5,15 @@ T1–T7) as a lazy DataFrame plan:
 
     envelopes -> op='d' filter (T1) -> validity guards (T2)
               -> project target row (T3) -> union of N sources (T5)
-              -> broadcast dim enrichment fb_no (T6)
+              -> literal-map enrichment fb_no (T6)
               -> routing key db_tb_name (T6/T7)
 
 The reference runs this imperatively per record at parallelism 1
 (StartJob.java:39); here it is declarative, so Catalyst pushes the
-filters into the scan, prunes columns, and picks a broadcast hash
-join for the tiny sources dim — which is exactly what the reference
-hand-codes with its in-memory lookup map (AdbSink.java:43-47,88-90).
+filters into the scan and prunes columns. The tiny sources dim is
+inlined into the plan as a literal map, exactly the in-memory lookup
+map the reference hand-codes (AdbSink.java:43-47,88-90): no join, no
+broadcast, no extra Spark job per action.
 At 100 TB the envelope scan parallelizes freely: the plan is
 order-insensitive (bag union, idempotent keyed loads), so lifting
 parallelism 1 is semantics-preserving (SURVEY.md §4.2).
@@ -227,25 +228,25 @@ def union_sources(dfs: Iterable[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, dfs)
 
 
-def sources_dim(spark: SparkSession, cfg: TaskConfig) -> DataFrame:
-    """The tiny instance->fb_no dimension the reference builds as an
-    in-memory hash map in each sink (AdbSink.java:43-47)."""
-    rows = [(s.instance_name, s.fb_no) for s in cfg.sources]
-    return spark.createDataFrame(rows, "instance_name string, fb_no string")
-
-
-def enrich_and_route(
-    df: DataFrame, dim: DataFrame, db_alias: str
-) -> DataFrame:
-    """T6+T7: broadcast-join the sources dim to stamp fb_no and derive
-    the routing key db_tb_name = '<dbAlias>_<tableName>'
+def enrich_and_route(df: DataFrame, cfg: TaskConfig) -> DataFrame:
+    """T6+T7: stamp fb_no from the sources' instance->fb_no map and
+    derive the routing key db_tb_name = '<dbAlias>_<tableName>'
     (AdbSink.java:88-90, SrSink.java:89-91).
 
-    Broadcast is explicit: the dim is O(10) rows while the fact side is
-    the full delete stream — at 100 TB this must never shuffle."""
-    return df.join(F.broadcast(dim), "instance_name", "left").withColumn(
+    The map is the reference's in-memory `Map<String, SourceInfo>`
+    (AdbSink.java:43-47) inlined as a literal `create_map`, so the
+    lookup runs inside the scan's projection: the plan has no join and
+    no broadcast, and no action pays a job to ship a dim of O(10) rows.
+    Left-join parity with `map.get()`: an unknown or NULL
+    instance_name stamps fb_no NULL and keeps the row; a duplicated
+    instance_name keeps its last fb_no, like repeated `map.put()`."""
+    fb_no = {s.instance_name: s.fb_no for s in cfg.sources}
+    pairs = [F.lit(v) for kv in fb_no.items() for v in kv]
+    # the cast types an empty map's NULL lookup; on strings it is a no-op
+    lookup = F.element_at(F.create_map(*pairs), F.col("instance_name"))
+    return df.withColumn("fb_no", lookup.cast("string")).withColumn(
         "db_tb_name",
-        F.concat_ws("_", F.lit(db_alias), F.col("table_name")),
+        F.concat_ws("_", F.lit(cfg.db_alias), F.col("table_name")),
     )
 
 
@@ -268,14 +269,13 @@ def build_pipeline(
     The reference parses/filters per source stream then unions
     (StartJob.java:52-92); with `instance_name` as a column the union
     is implicit and the plan is identical — one scan, one filter chain,
-    one broadcast join (SURVEY.md T5 note). `normalize_data_json`:
+    one projection (SURVEY.md T5 note). `normalize_data_json`:
     see `project_target`."""
     deletes = validity_guards(delete_filter(envelopes))
     projected = project_target(
         deletes, normalize_data_json=normalize_data_json
     )
-    enriched = enrich_and_route(projected, sources_dim(spark, cfg), cfg.db_alias)
-    return target_rows(enriched)
+    return target_rows(enrich_and_route(projected, cfg))
 
 
 def route_counts(target: DataFrame) -> DataFrame:

@@ -4,7 +4,7 @@ oracles.
 The envelope table is derived deterministically from the driver's
 `events` parquet on BOTH sides (sources/envelopes.py mirrors
 SYNTH_ENVELOPES_ORACLE_SQL), so the whole reference dataflow —
-parse, delete filter, guards, projection, union, broadcast
+parse, delete filter, guards, projection, union, literal-map
 enrichment, routing — is value-hash-checked end to end.
 """
 
@@ -30,7 +30,8 @@ from .registry import register
 _CFG = demo_task_config(n_sources=3, db_alias="demo")
 
 # Shared oracle prelude: the synthetic envelope table + the sources dim
-# (the dim mirrors config.demo_task_config — the broadcast side of T6).
+# (the dim mirrors config.demo_task_config — the Spark side inlines it
+# as a literal map, T6).
 _ORACLE_PRELUDE = f"""
 WITH env AS ({SYNTH_ENVELOPES_ORACLE_SQL}),
 dim(instance_name, fb_no) AS (

@@ -30,12 +30,41 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
 # Sink column order matches the ADB INSERT list (AdbSink.java:111).
 SINK_COLUMNS = ("db_tb_name", "id", "fb_no", "record_del_time", "data_json")
+
+
+def route(df: DataFrame) -> DataFrame:
+    """Group an epoch's rows by destination table (SrSink.java:93): each
+    table's rows share one hash partition, sorted on the full row so
+    chunk contents are replay-deterministic. Over a cached routed frame
+    this is a plain cache scan, since the cache reports its partitioning
+    and order (while Spark's default
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false
+    holds)."""
+    return (
+        df.select(*SINK_COLUMNS)
+        .repartition("db_tb_name")
+        .sortWithinPartitions(*SINK_COLUMNS)
+    )
+
+
+@contextmanager
+def _job_description(sc, text: str):
+    """Name the Spark jobs run inside the block (Spark UI, event log),
+    then restore the caller's description — under foreachBatch that is
+    the micro-batch's own."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 class LabelLedger:
@@ -323,9 +352,9 @@ class SrStyleSink:
     only within a single attempt.
 
     Chunk CONTENTS are deterministic too, not just labels: rows are
-    sorted by the full row key before chunking (sortWithinPartitions
-    below), so a replayed epoch re-produces byte-identical chunks
-    under the same labels. Without the sort, shuffle row order could
+    sorted by the full row key before chunking (`route`), so a
+    replayed epoch re-produces byte-identical chunks under the same
+    labels. Without the sort, shuffle row order could
     differ across task retries and a replayed chunk would carry
     different rows under an already-committed label — silent row
     loss masked by the 'Label Already Exists' skip."""
@@ -365,19 +394,12 @@ class SrStyleSink:
                         raise RuntimeError(f"stream load failed: {resp}")
 
         transport = self.transport
-        # Repartition by routing key so each destination table's rows
-        # co-locate (the groupingBy at SrSink.java:93), then sort
-        # within each partition on the full row so chunk membership is
-        # a pure function of (epoch contents, batch_size) — replay-
-        # deterministic. coalesce(1) per epoch would serialize like
-        # the reference's parallelism-1; we keep it parallel (bag +
-        # labels make order irrelevant).
-        (
-            batch_df.select(*SINK_COLUMNS)
-            .repartition("db_tb_name")
-            .sortWithinPartitions(*SINK_COLUMNS)
-            .foreachPartition(load_partition)
-        )
+        # One partition per destination table (chunk indices restart
+        # per table, so a table split across partitions would reuse
+        # labels). coalesce(1) per epoch would serialize like the
+        # reference's parallelism-1; we keep it parallel (bag + labels
+        # make order irrelevant).
+        route(batch_df).foreachPartition(load_partition)
 
 
 @dataclass
@@ -386,6 +408,14 @@ class DualSink:
     AdbSink always and SrSink behind --sink_to_sr (StartJob.java:
     94-104; C3). One source read, two writes, exactly as the Flink
     job replicates records to both sink operators.
+
+    The batch is routed once (`route`) and cached; both sinks read the
+    cache, so the ADB write makes one parquet file per table per epoch
+    and the SR load needs no second shuffle. Trade-off: ADB write
+    parallelism per epoch is bounded by the number of distinct tables
+    in it, as SR's already was; the reference runs both sinks at
+    parallelism 1 (StartJob.java:39). Sink jobs are described
+    `sink.adb epoch=<n>` / `sink.sr epoch=<n>`.
 
     `query_id` is the idempotency namespace: labels and the JDBC
     cleanup key are (query_id, epoch_id, ...)-scoped, so TWO
@@ -399,10 +429,13 @@ class DualSink:
     query_id: str = "q"
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
+        sc = batch_df.sparkSession.sparkContext
+        routed = route(batch_df).persist()
         try:
-            self.adb.write(batch_df, epoch_id, self.query_id)
+            with _job_description(sc, f"sink.adb epoch={epoch_id}"):
+                self.adb.write(routed, epoch_id, self.query_id)
             if self.sr is not None:
-                self.sr.write(batch_df, epoch_id, self.query_id)
+                with _job_description(sc, f"sink.sr epoch={epoch_id}"):
+                    self.sr.write(routed, epoch_id, self.query_id)
         finally:
-            batch_df.unpersist()
+            routed.unpersist()

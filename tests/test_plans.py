@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
+import uuid
 
 import pytest
 
@@ -70,16 +72,17 @@ class TestPushdown:
 
 
 class TestJoinStrategies:
-    def test_cdc_enrichment_is_broadcast(self, spark):
-        """T6: the sources dim must broadcast — a shuffled join on the
-        envelope stream would shuffle the full payload."""
+    def test_cdc_enrichment_has_no_join(self, spark):
+        """T6: fb_no comes from a literal map inlined in the scan's
+        projection, the reference's in-memory lookup map — no join
+        and no broadcast, each of which costs one more Spark job per
+        action (build_pipeline over a local frame: test_pipeline)."""
         plan = plan_of(spark, "cdc_delete_archive")
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
+        assert not re.search(r"Join|CartesianProduct|BroadcastExchange", plan), plan
 
     def test_cdc_pipeline_has_no_shuffle(self, spark):
         """The whole parse→filter→project→enrich pipeline is
-        shuffle-free: scan-local work + one broadcast."""
+        shuffle-free: scan-local work only."""
         plan = plan_of(spark, "cdc_delete_archive", mode="simple")
         assert n_exchanges(plan) == 0
 
@@ -710,6 +713,52 @@ class TestShuffleBudget:
     def test_shuffle_budget(self, spark, name, budget):
         plan = plan_of(spark, name, mode="simple")
         assert n_exchanges(plan) <= budget, plan
+
+
+def jobs_run(spark, action) -> int:
+    """Spark jobs `action()` runs, counted through a fresh job group."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestJobBudget:
+    """Jobs per action, beside the shuffle budgets: in small streaming
+    epochs each Spark job is a fixed scheduling cost, so the CDC
+    path's job counts are pinned like its exchange counts."""
+
+    def test_build_pipeline_forces_in_one_job(self, spark):
+        """The enrichment adds no job: no broadcast of the sources
+        dim, one job for the scan-filter-project stage."""
+        df = REGISTRY["cdc_delete_archive"].spark_fn(spark, SF_DIR)
+        n = jobs_run(
+            spark, lambda: df.write.format("noop").mode("overwrite").save()
+        )
+        assert n == 1
+
+    def test_dual_sink_call_job_budget(self, spark, tmp_path):
+        """One DualSink call: the route's shuffle-map stage, the cache
+        build and the ADB write, then the SR load straight off the
+        cache (no second shuffle) — 4 jobs."""
+        from jly_flink_spark.streaming.sinks import (
+            AdbStyleSink,
+            DualSink,
+            LocalDirTransport,
+            SrStyleSink,
+        )
+
+        df = REGISTRY["cdc_delete_archive"].spark_fn(spark, SF_DIR)
+        sink = DualSink(
+            AdbStyleSink(str(tmp_path / "adb")),
+            SrStyleSink(LocalDirTransport(str(tmp_path / "sr")), batch_size=20),
+        )
+        assert jobs_run(spark, lambda: sink(df, 0)) <= 4
 
 
 class TestScaleShapes:

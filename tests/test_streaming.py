@@ -1260,3 +1260,94 @@ class TestIvmBatchStreamParity:
         )
         after = sorted(map(tuple, spark.read.parquet(store).collect()))
         assert after == before and before
+
+
+def _routing_frame(spark):
+    """Target rows over three tables with more rows per table than one
+    SR chunk, spread over several input partitions."""
+    rows = [
+        (f"src-{i % 3}", "d", 1754000000000 + i, f"t_{i % 3}",
+         f'{{"id":"{i}"}}')
+        for i in range(30)
+    ]
+    env = spark.createDataFrame(
+        rows,
+        "instance_name string, op string, ts_ms long, "
+        "source_table string, before string",
+    ).repartition(4)
+    return build_pipeline(spark, env, CFG)
+
+
+def _label_files(root):
+    return {
+        os.path.relpath(f, root): open(f, "rb").read()
+        for f in glob.glob(os.path.join(root, "*", "*.json"))
+    }
+
+
+def test_dual_sink_routes_once_for_both_sinks(spark, tmp_path):
+    """DualSink routes the batch once and hands the cached routed
+    frame to both sinks: the SR side writes the same labels with the
+    same bytes as a standalone SrStyleSink.write of the same frame and
+    epoch, and the ADB side writes one parquet file per table."""
+    target = _routing_frame(spark)
+    DualSink(
+        AdbStyleSink(str(tmp_path / "adb")),
+        SrStyleSink(LocalDirTransport(str(tmp_path / "dual")), batch_size=4),
+    )(target, 3)
+    SrStyleSink(LocalDirTransport(str(tmp_path / "solo")), batch_size=4).write(
+        target, epoch_id=3, query_id="q"
+    )
+    dual = _label_files(str(tmp_path / "dual"))
+    assert len(dual) == 9  # 3 tables x ceil(10 / 4) chunks
+    assert dual == _label_files(str(tmp_path / "solo"))
+
+    epoch_dir = tmp_path / "adb" / "data" / "epoch_id=3"
+    tables = sorted(p.name for p in epoch_dir.glob("db_tb_name=*"))
+    assert tables == [f"db_tb_name=demo_t_{i}" for i in range(3)]
+    for t in tables:
+        assert len(list((epoch_dir / t).glob("*.parquet"))) == 1, t
+
+
+def test_route_over_routed_cache_has_no_exchange(spark):
+    """The SR sink's own route over DualSink's cached routed frame
+    must not shuffle again: the cache reports the hash partitioning
+    on db_tb_name, so Catalyst drops the repeated exchange."""
+    import contextlib
+    import io
+
+    from jly_flink_spark.streaming.sinks import route
+
+    routed = route(_routing_frame(spark)).persist()
+    try:
+        routed.count()
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            route(routed).explain()
+        top = buf.getvalue().split("InMemoryRelation")[0]
+        assert "Exchange" not in top and "Sort" not in top, buf.getvalue()
+    finally:
+        routed.unpersist()
+
+
+def test_dual_sink_names_its_jobs(spark, tmp_path):
+    """Each sink's Spark jobs carry `sink.<name> epoch=<n>` as their
+    description, and the caller's description is restored after."""
+    sc = spark.sparkContext
+    group = "dual-sink-job-descriptions"
+    sc.setJobGroup(group, "outer")
+    try:
+        DualSink(
+            AdbStyleSink(str(tmp_path / "adb")),
+            SrStyleSink(LocalDirTransport(str(tmp_path / "sr"))),
+        )(_routing_frame(spark), 7)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    descriptions = {
+        store.job(j).description().getOrElse(None)
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    }
+    assert descriptions == {"sink.adb epoch=7", "sink.sr epoch=7"}

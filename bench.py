@@ -323,7 +323,7 @@ def main() -> None:
         # Host context for cross-run comparison: observed run-to-run
         # swings exceed 30% between VMs/boots, so per-query ratios
         # within ~1.5x of a floor measured on a DIFFERENT host are
-        # noise unless the plan changed (see regression_notes).
+        # noise unless the plan changed.
         "load_avg_1m": round(os.getloadavg()[0], 2),
         # pre-run load: ~0-1 substantiates an idle-box run; the
         # end-of-run value above is dominated by the bench's own 32
@@ -348,63 +348,6 @@ def main() -> None:
         out["vs_baseline"] = ratios
         out["regressions"] = {n: r for n, r in ratios.items() if r > 1.5}
         out["baseline_total"] = base.get("value")
-        # Known, accepted deltas vs the r01 floor (scale-correctness
-        # traded for small-SF latency — see commit history):
-        out["regression_notes"] = {
-            "dedup_embedding_cosine": (
-                "r01 collected the corpus to the driver (OOM at scale); "
-                "now a blocked distributed self-join sized from cluster "
-                "parallelism (B ~ sqrt(2*cores) blocks, so the "
-                "replicated shuffle is B*n rows) with a two-stage "
-                "kernel: f32 GEMM prefilter, exact quantized rescore "
-                "of candidates only (bit-identical output). Measured "
-                "at 10x data: ~1x wall — the remaining sf0.1 delta is "
-                "flat orchestration overhead (docs/SCALE_PROBE.md)"
-            ),
-            "batch_by_token_budget": (
-                "r01 ran a single-task global window; now a sharded "
-                "prefix sum (16-way parallel) with broadcast offsets. "
-                "r6 removed the flap source: the offsets branch is the "
-                "same Window subtree as the probe (per-shard total = "
-                "max of the running sum), so ReuseExchange shares the "
-                "one shuffle and the localCheckpoint materialization "
-                "job is gone — single job, single corpus scan "
-                "(best-of-5 idle: 0.33s, at the r5 pin)"
-            ),
-            "udf_mapinpandas_tokens": (
-                "plan unchanged since r01 (one Arrow-batched "
-                "mapInPandas scan, zero shuffle); sub-second query "
-                "whose wall is dominated by Python-worker fork/warmup "
-                "variance — observed 0.45-0.95s across same-day runs "
-                "at identical plans, flat in data size "
-                "(docs/SCALE_PROBE.md 1.3x decade)"
-            ),
-            "events_multigrain_rollup": (
-                "plan unchanged since r01 (single-pass GROUPING SETS, "
-                "one shuffle); sub-second query whose min-of-N at "
-                "sf0.1 is dominated by JVM/GC variance on a shared box"
-            ),
-            "multimodal_variant_decode_stats": (
-                "r11: media builders fan small scans to cluster "
-                "parallelism before the Arrow decode "
-                "(ensure_min_parallelism — the measured fix for the "
-                "video tier's single-core 10x decode); at sf0.1 the "
-                "added ~0.5s repartition exceeds the tiny decode it "
-                "parallelizes, the same scale-correctness-for-"
-                "small-SF-latency trade dedup_embedding_cosine made "
-                "in r02 (decade evidence: docs/SCALE_PROBE.md)"
-            ),
-            "curation_gopher_rules": (
-                "plan unchanged since its pin (verified via git); "
-                "single-task sub-second scan whose wall on the r11 "
-                "boot carries a uniform ~+0.3-0.5s fixed overhead "
-                "also seen on pareto_front_parts and "
-                "events_attribution_linear, while multi-task "
-                "queries run BELOW their floors on the same boot "
-                "(q1 0.74x, q3 0.48x) — per-core host variance, "
-                "not a regression"
-            ),
-        }
     # Persist the complete result in-repo (the driver's stdout tail
     # truncates at 2000 chars, which has cut the vs_baseline map in
     # half before — the saved artifact keeps every round auditable).

@@ -137,12 +137,7 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def doc_shingles(docs):
     """(doc_id, shingle) exploded per-doc-distinct token 3-grams —
-    the shingle stream the contamination family probes. NOTE:
-    `plans/training_queries.py::contamination_ngram_overlap` predates
-    this helper and inlines the identical derivation (its registered
-    source is pin-frozen against its verified hash); any change to
-    the shingle definition must touch both, plus the two oracle CTE
-    mirrors."""
+    the shingle stream the contamination family probes."""
     from pyspark.sql import functions as F
 
     return docs.select(

@@ -25,7 +25,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import dsum, dsum_sql, hash_frac, hash_frac_sql
-from ..io import load_table, stage
+from ..io import ensure_min_parallelism, load_table, stage, stage_eager
 from ..operators.text import STOPWORDS_EN, tokens
 from .registry import register
 
@@ -764,6 +764,27 @@ def agg_kmv_source_overlap(spark, sf_dir):
 CHUNK_TOKENS = 3  # tokens per non-overlapping chunk
 BOILER_MIN_DF = 3  # chunk is boilerplate when seen in ≥ this many docs
 
+
+def _chunk_structs(ts):
+    """(h, clen) per non-overlapping CHUNK_TOKENS-token slice of the
+    token-array column `ts`: the slice's md5 and its token count.
+    Never empty (n_chunks >= 1), so an empty `ts` yields one clen = 0
+    element that callers drop. SQL mirror: the `spine`/`chunks` CTEs
+    below and in `_chunk_graph_prefix`."""
+    K = CHUNK_TOKENS
+    n_chunks = F.greatest(
+        F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
+    )
+    return F.transform(
+        F.sequence(F.lit(1), n_chunks),
+        lambda i: F.struct(
+            F.md5(
+                F.array_join(F.slice(ts, (i - 1) * K + 1, F.lit(K)), " ")
+            ).alias("h"),
+            F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias("clen"),
+        ),
+    )
+
 _BOILER_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, lang,
@@ -811,27 +832,12 @@ GROUP BY lang
     "broadcast back — the corpus itself is never shuffled.",
 )
 def text_boilerplate_chunks(spark, sf_dir):
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "lang", tokens(F.col("text")).alias("ts"))
-    n_chunks = F.greatest(
-        F.ceil(F.size("ts") / F.lit(K)).cast("int"), F.lit(1)
-    )
-    chunk_structs = F.transform(
-        F.sequence(F.lit(1), n_chunks),
-        lambda i: F.struct(
-            F.md5(
-                F.array_join(
-                    F.slice(F.col("ts"), (i - 1) * K + 1, F.lit(K)), " "
-                )
-            ).alias("h"),
-            F.size(F.slice(F.col("ts"), (i - 1) * K + 1, F.lit(K))).alias(
-                "clen"
-            ),
-        ),
-    )
     chunks = (
-        toks.select("doc_id", "lang", F.explode(chunk_structs).alias("c"))
+        toks.select(
+            "doc_id", "lang", F.explode(_chunk_structs(F.col("ts"))).alias("c")
+        )
         .select("doc_id", "lang", F.col("c.h").alias("h"),
                 F.col("c.clen").alias("clen"))
         .filter(F.col("clen") > 0)
@@ -913,9 +919,6 @@ FROM scoredocs GROUP BY source
     "per-source rollups are map-side combined.",
 )
 def curation_dup_chunk_fraction(spark, sf_dir):
-    from ..io import ensure_min_parallelism
-
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
     # fan the raw text before the tokenize+chunk-md5 grid (×10
     # probe: 2-task 5.4 s/task at scan parallelism) — no-op on real
@@ -923,22 +926,6 @@ def curation_dup_chunk_fraction(spark, sf_dir):
     toks = ensure_min_parallelism(
         docs.select("doc_id", "source", "text"), keys=["doc_id"]
     ).select("doc_id", "source", tokens(F.col("text")).alias("ts"))
-    n_chunks = F.greatest(
-        F.ceil(F.size("ts") / F.lit(K)).cast("int"), F.lit(1)
-    )
-    chunk_structs = F.transform(
-        F.sequence(F.lit(1), n_chunks),
-        lambda i: F.struct(
-            F.md5(
-                F.array_join(
-                    F.slice(F.col("ts"), (i - 1) * K + 1, F.lit(K)), " "
-                )
-            ).alias("h"),
-            F.size(F.slice(F.col("ts"), (i - 1) * K + 1, F.lit(K))).alias(
-                "clen"
-            ),
-        ),
-    )
     # explode_OUTER: the array is never empty (n_chunks >= 1) but a
     # plain explode lets InferFiltersFromGenerate push the whole
     # chunk-md5 grid into the scan filter (a second full evaluation
@@ -946,7 +933,9 @@ def curation_dup_chunk_fraction(spark, sf_dir):
     # existing clen filter drops any NULL row identically.
     chunks = (
         toks.select(
-            "doc_id", "source", F.explode_outer(chunk_structs).alias("c")
+            "doc_id",
+            "source",
+            F.explode_outer(_chunk_structs(F.col("ts"))).alias("c"),
         )
         .filter(F.col("c.clen") > 0)
         .select("doc_id", "source", F.col("c.h").alias("h"))
@@ -1058,6 +1047,92 @@ WITH toks AS (
 )"""
 
 
+def _dup_chunk_frame(docs):
+    """The df-capped (doc_id, h) rows of the duplicate-chunk graph:
+    each doc's distinct chunk hashes, kept when the chunk is in
+    PR_EDGE_MIN_DF..PR_EDGE_MAX_DF docs — the Spark side of the `ca`
+    CTE in `_chunk_graph_prefix`. Takes the caller's `documents`
+    frame (a second `load_table` would add a parquet schema job).
+    Runs one job at construction: the eager chunk cut below."""
+    # fan the RAW text to cluster parallelism before tokenize + the
+    # md5 chunk grid: the per-row work otherwise runs at the scan's
+    # split count — one task on a small single-file scan; a no-op on
+    # real many-split scans
+    fanned = ensure_min_parallelism(
+        docs.select("doc_id", "text"), keys=["doc_id"]
+    )
+    # The token array is bound ONCE per row as a higher-order lambda
+    # variable (the Bloom-probe discipline), so no later projection
+    # collapse can inline tokens(text) back into the 2·n_chunks
+    # references inside the chunk lambda. An
+    # order-controlled probe (fresh session per variant, 3 reps)
+    # measured the bound and projected-column forms EQUAL at sf0.1
+    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
+    # — the binding is insurance for optimizer drift, not a
+    # measured win today.
+    chunk_structs = F.get(
+        F.transform(F.array(tokens(F.col("text"))), _chunk_structs), 0
+    )
+    chunks = (
+        # explode_OUTER: a plain explode lets
+        # InferFiltersFromGenerate synthesize a size()>0 scan
+        # filter that inlines the whole tokenize+md5 grid into
+        # the parquet scan (computing it twice, once single-task);
+        # c.clen > 0 drops the same rows (NULL > 0 is NULL), values
+        # identical
+        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
+        .filter(F.col("c.clen") > 0)
+        .select("doc_id", F.col("c.h").alias("h"))
+        .distinct()
+        # staged EAGERLY: two consumers (the df-cap groupBy and
+        # the pair join) are concurrent subtrees of one join —
+        # unstaged, the whole chunk derivation executed twice
+        # (profiled: twin 2.3 s single-task stages with
+        # byte-identical 3.4 MB writes); a lazy cut would let
+        # the two branches race the cache population
+        .transform(stage_eager)
+    )
+    okh = (
+        chunks.groupBy("h")
+        .agg(F.count("*").alias("df"))
+        .filter(
+            (F.col("df") >= PR_EDGE_MIN_DF)
+            & (F.col("df") <= PR_EDGE_MAX_DF)
+        )
+        .select("h")
+    )
+    return chunks.join(okh, "h")
+
+
+def _dup_chunk_edges(docs):
+    """Directed duplicate-chunk edges (src, dst), both orientations —
+    the `edges` CTE of `_chunk_graph_prefix`. Unstaged."""
+    ca = _dup_chunk_frame(docs)
+    a, b = ca.alias("a"), ca.alias("b")
+    return (
+        a.join(b, "h")
+        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
+        )
+        .distinct()
+    )
+
+
+def _dup_chunk_und(docs):
+    """Undirected duplicate-chunk edges (u, v) with u < v. Unstaged."""
+    ca = _dup_chunk_frame(docs)
+    a, b = ca.alias("a"), ca.alias("b")
+    return (
+        a.join(b, "h")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v")
+        )
+        .distinct()
+    )
+
+
 def _pagerank_oracle(iters: int = PR_ITERS) -> str:
     """Unrolled integer-PageRank mirror: every CTE round is exact
     integer division (`//`), so ranks are bit-identical to the Spark
@@ -1117,90 +1192,8 @@ SELECT node AS doc_id, rank_q, rnk FROM (
 def graph_pagerank_dup_chunks(spark, sf_dir):
     from ..operators.graph import pagerank_fixed
 
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    edges = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-        )
-        .distinct()
-    )
+    edges = _dup_chunk_edges(docs)
     nodes = docs.select(F.col("doc_id").alias("node"))
     ranks = pagerank_fixed(nodes, edges, iterations=PR_ITERS)
     top = ranks.orderBy(F.col("rank_q").desc(), F.col("node")).limit(20)
@@ -1270,96 +1263,10 @@ GROUP BY node
     "checkpointed once and read three times.",
 )
 def graph_triangles_dup_chunks(spark, sf_dir):
-    """The chunk-edge derivation duplicates graph_pagerank_dup_chunks'
-    inline construction (that fn's registered source is pin-frozen
-    against its verified hash, like contamination_ngram_overlap);
-    changes to the chunk/df-cap definition must touch both."""
     from ..operators.graph import triangle_counts
 
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    und = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v")
-        )
-        .distinct()
-    )
+    und = _dup_chunk_und(docs)
     return triangle_counts(und).select(
         F.col("node").alias("doc_id"), "n_triangles"
     )
@@ -1419,95 +1326,8 @@ def _bfs_oracle() -> str:
     "node, depth) longs bounded by seeds x nodes.",
 )
 def graph_bfs_reachability(spark, sf_dir):
-    """Chunk-edge derivation duplicates graph_pagerank_dup_chunks'
-    inline construction (that fn's registered source is pin-frozen
-    against its verified hash); changes to the chunk/df-cap
-    definition must touch both."""
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    edges = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-        )
-        .distinct()
-        .transform(stage)
-    )
+    edges = _dup_chunk_edges(docs).transform(stage)
     seeds = (
         edges.select("src").distinct().orderBy("src").limit(BFS_N_SEEDS)
     )
@@ -1586,94 +1406,8 @@ WHERE n >= 2 AND n * sxx <> sx * sx AND n * syy <> sy * sy
     "aggregate — no window, no all-pairs anything.",
 )
 def graph_degree_assortativity(spark, sf_dir):
-    """Chunk-edge derivation duplicates graph_pagerank_dup_chunks'
-    inline construction (pin-stability pattern); changes to the
-    chunk/df-cap definition must touch both."""
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    edges = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-        )
-        .distinct()
-        .transform(stage)
-    )
+    edges = _dup_chunk_edges(docs).transform(stage)
     deg = edges.groupBy("src").agg(
         F.count("*").cast("bigint").alias("d")
     )
@@ -3523,96 +3257,10 @@ GROUP BY 1
     "hashes with no float drift.",
 )
 def graph_clustering_coeff_buckets(spark, sf_dir):
-    """Chunk-edge derivation duplicates graph_pagerank_dup_chunks'
-    pin-frozen inline construction (see graph_triangles_dup_chunks'
-    docstring); changes to the chunk/df-cap definition must touch
-    all three."""
     from ..operators.graph import triangle_counts
 
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    und = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v")
-        )
-        .distinct()
-    ).transform(stage)
+    und = _dup_chunk_und(docs).transform(stage)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -3844,93 +3492,8 @@ FROM deg GROUP BY 1
     "(node, node) shuffles; the histogram is |buckets| rows.",
 )
 def graph_degree_distribution(spark, sf_dir):
-    """Chunk-edge derivation duplicates graph_pagerank_dup_chunks'
-    pin-frozen inline construction (see graph_triangles_dup_chunks);
-    changes to the chunk/df-cap definition must touch all four."""
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    und = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v")
-        )
-        .distinct()
-    ).transform(stage)
+    und = _dup_chunk_und(docs).transform(stage)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -4335,91 +3898,8 @@ und1 AS MATERIALIZED (
     "stays linear; every exchanged row is (node) or (u, v).",
 )
 def graph_kcore_peel(spark, sf_dir):
-    K = CHUNK_TOKENS
     docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    und = (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v")
-        )
-        .distinct()
-        .transform(stage)
-    )
+    und = _dup_chunk_und(docs).transform(stage)
     stages = []
     edges = und
     for t in range(1, KCORE_ROUNDS + 1):
@@ -4925,7 +4405,8 @@ def graph_link_prediction_topk(spark, sf_dir):
 
     from ..operators.graph import wedge_pairs, wedge_unpack
 
-    und = _dup_chunk_und(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
+    und = _dup_chunk_und(docs).transform(stage)
     adj = und.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(
@@ -5332,98 +4813,6 @@ def _wedges_sans_edges(wp, und, memo_key=None):
     return wp.join(F.broadcast(undxy), "xy", "left_anti"), False
 
 
-def _dup_chunk_und(spark, sf_dir):
-    """The duplicate-chunk graph's undirected edge list (u < v),
-    df-capped and staged — shared by the whole link-prediction
-    family (`graph_link_prediction_topk` / `graph_adamic_adar_topk`
-    / `graph_jaccard_linkpred_topk`)."""
-    K = CHUNK_TOKENS
-    docs = load_table(spark, sf_dir, "documents")
-    # fan the RAW text to cluster parallelism before tokenize +
-    # the md5 chunk grid (round 14): the per-row work otherwise
-    # runs at the scan's split count — one task on a small
-    # single-file scan; a no-op on real many-split scans
-    from ..io import ensure_min_parallelism, stage_eager
-
-    fanned = ensure_min_parallelism(
-        docs.select("doc_id", "text"), keys=["doc_id"]
-    )
-
-    def _chunk_structs_over(ts):
-        n_chunks = F.greatest(
-            F.ceil(F.size(ts) / F.lit(K)).cast("int"), F.lit(1)
-        )
-        return F.transform(
-            F.sequence(F.lit(1), n_chunks),
-            lambda i: F.struct(
-                F.md5(
-                    F.array_join(
-                        F.slice(ts, (i - 1) * K + 1, F.lit(K)), " "
-                    )
-                ).alias("h"),
-                F.size(F.slice(ts, (i - 1) * K + 1, F.lit(K))).alias(
-                    "clen"
-                ),
-            ),
-        )
-
-    # The token array is bound ONCE per row as a higher-order lambda
-    # variable (the Bloom-probe discipline, SKILL.md), so no later
-    # projection collapse can inline tokens(text) back into the
-    # 2·n_chunks references inside the chunk lambda. An
-    # order-controlled probe (fresh session per variant, 3 reps)
-    # measured the bound and projected-column forms EQUAL at sf0.1
-    # (0.29 s vs 0.30 s warm; ~4.5 s cold-JIT first execution both)
-    # — the binding is insurance for optimizer drift, not a
-    # measured win today.
-    chunk_structs = F.get(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda ts: _chunk_structs_over(ts),
-        ),
-        0,
-    )
-    chunks = (
-        # explode_OUTER: a plain explode lets
-        # InferFiltersFromGenerate synthesize a size()>0 scan
-        # filter that inlines the whole tokenize+md5 grid into
-        # the parquet scan (computing it twice, once single-task
-        # — the r13 second-wave trap); c.clen > 0 drops the same
-        # rows (NULL > 0 is NULL), values identical
-        fanned.select("doc_id", F.explode_outer(chunk_structs).alias("c"))
-        .filter(F.col("c.clen") > 0)
-        .select("doc_id", F.col("c.h").alias("h"))
-        .distinct()
-        # staged EAGERLY: two consumers (the df-cap groupBy and
-        # the pair join) are concurrent subtrees of one join —
-        # unstaged, the whole chunk derivation executed twice
-        # (r14 profile: twin 2.3 s single-task stages with
-        # byte-identical 3.4 MB writes); a lazy cut would let
-        # the two branches race the cache population
-        .transform(stage_eager)
-    )
-    okh = (
-        chunks.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(
-            (F.col("df") >= PR_EDGE_MIN_DF)
-            & (F.col("df") <= PR_EDGE_MAX_DF)
-        )
-        .select("h")
-    )
-    ca = chunks.join(okh, "h")
-    a, b = ca.alias("a"), ca.alias("b")
-    return (
-        a.join(b, "h")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v")
-        )
-        .distinct()
-        .transform(stage)
-    )
-
-
 @register(
     "graph_adamic_adar_topk",
     oracle=_adamic_adar_oracle(),
@@ -5462,7 +4851,8 @@ def graph_adamic_adar_topk(spark, sf_dir):
 
     from ..operators.graph import wedge_pairs, wedge_unpack
 
-    und = _dup_chunk_und(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
+    und = _dup_chunk_und(docs).transform(stage)
     adj = und.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(
@@ -5592,7 +4982,8 @@ def graph_jaccard_linkpred_topk(spark, sf_dir):
 
     from ..operators.graph import wedge_pairs, wedge_unpack
 
-    und = _dup_chunk_und(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
+    und = _dup_chunk_und(docs).transform(stage)
     adj = und.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(

@@ -651,15 +651,9 @@ GROUP BY c.doc_id
     "standard decontamination pass before training.",
 )
 def contamination_ngram_overlap(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    from ..operators.text import trigram_shingles
+    from ..operators.text import doc_shingles
 
-    shingles = docs.select(
-        "doc_id", tokens(F.col("text")).alias("ts")
-    ).select(
-        "doc_id",
-        F.explode(trigram_shingles(F.col("ts"))).alias("shingle"),
-    )
+    shingles = doc_shingles(load_table(spark, sf_dir, "documents"))
     bench = (
         shingles.filter(F.col("doc_id") < 20)
         .select("shingle")

@@ -149,6 +149,19 @@ def edge_sf_dir(tmp_path_factory):
         # structurally valid); doc 0 is the planted-truncation case
         "multimodal_extract_features",
         "multimodal_frame_counts",
+        # the shared duplicate-chunk builder (`_dup_chunk_frame`):
+        # token-less docs yield one clen = 0 chunk that must drop,
+        # 1-token and ragged-tail docs yield short final chunks, and
+        # the shared "t0 t1 ..." prefixes make a dense near-clique;
+        # directed (pagerank, bfs) and undirected (triangles, degree,
+        # k-core) edge lists, staged and unstaged
+        "graph_pagerank_dup_chunks",
+        "graph_triangles_dup_chunks",
+        "graph_bfs_reachability",
+        "graph_degree_distribution",
+        "graph_kcore_peel",
+        # the same chunk grid without the df cap
+        "text_boilerplate_chunks",
     ],
 )
 def test_boundary_shapes_match_oracle(spark, edge_sf_dir, name):

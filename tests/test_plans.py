@@ -760,6 +760,19 @@ class TestJobBudget:
         )
         assert jobs_run(spark, lambda: sink(df, 0)) <= 4
 
+    def test_pagerank_dup_chunks_job_budget(self, spark):
+        """Building and forcing PageRank over the duplicate-chunk
+        graph: 21 jobs, counting the plan-time ones (the `documents`
+        schema read, the eager chunk cut, the staged frames). The
+        chunk-graph builder takes the caller's `documents` frame; one
+        that loaded the table again would add a schema job."""
+
+        def run():
+            df = REGISTRY["graph_pagerank_dup_chunks"].spark_fn(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+
+        assert jobs_run(spark, run) <= 21
+
 
 class TestScaleShapes:
     """Plan shapes of the round-2 distributed rewrites: the properties

@@ -1,141 +1,45 @@
-"""Distributed K-means over embedding vectors, fixed-point and
-fully declarative — the batch clustering flagship next to the IVF
-index build (operators/similarity.py), whose centroid refinement is
-deliberately driver-side model state. Here the WHOLE algorithm stays
-inside the DataFrame plan, so it is value-hash oracle-checkable and
-scales with the cluster, not the driver.
+"""Distributed K-means over int8-quantized embedding vectors — the
+batch clustering flagship next to the IVF index build
+(operators/similarity.py). K-means is product quantization with one
+subspace, so `kmeans_fixed` runs PQ's Lloyd loop with m=1
+(`pq.pq_train_encode`): one loop, and one Arrow nearest-centroid
+kernel (`pq.nearest_centroids`) for training, the final assignment
+and streaming routing (`assign_stream`).
 
 Bit-exactness: vectors are int8-quantized with the hash-verified
 absmax/floor formula (`int8_codes`, mirrored by the
-`embedding_quantize_int8` oracle), distances are exact integer sums
-of squared differences, centroid updates are truncating integer
-means (`sum div count` — Spark `div` and DuckDB `//` both truncate
-toward zero), and argmin ties break to the smallest centroid id. A
-fixed iteration count (like PageRank's PR_ITERS) makes the unrolled
-computation identical on any engine.
+`embedding_quantize_int8` oracle), distances are exact int64 sums of
+squared differences, centroid updates are truncating integer means
+(`sum div count` — Spark `div` and DuckDB `//` both truncate toward
+zero), empty clusters keep their centroid, and argmin ties break to
+the smallest centroid id. A fixed iteration count (like PageRank's
+PR_ITERS) makes the unrolled computation identical on any engine, so
+the `embedding_kmeans_clusters` oracle replays it bit for bit.
 
 Scale shape (the 100-TB argument):
-- Assignment never shuffles the corpus: the K centroid arrays ride
-  in ONE broadcast row, and each vector computes its argmin inline
-  (struct-array `array_min` argmin over the centroid list — per-row,
-  whole-stage codegen, zero exchange).
+- The K centroids are driver-side model state (K·d ints). Assignment
+  is one numpy pass per Arrow batch over the staged code table: no
+  join, no corpus shuffle.
 - The update shuffles only (cid, dim) partial sums: posexplode is
   map-side combined to ≤ K·d rows per partition before the exchange,
   so per-iteration shuffle volume is O(partitions × K × d),
-  independent of corpus size.
+  independent of corpus size; the K·d sums and counts are collected
+  in the same action and the means taken on the driver.
 - The quantized code table is staged (io.stage) once; each of the
   `iterations`+1 assignment passes reads the checkpoint, not the
-  parquet + quantize lineage. Centroids (K·d ints) are checkpointed
-  per iteration, which also keeps the lazy plan linear in
-  iterations (the centroid frame is referenced twice per round:
-  assignment + empty-cluster fallback).
+  parquet + quantize lineage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import stage
-
+from .pq import nearest_centroids, pq_codebook_state, pq_train_encode
 from .similarity import int8_codes
 
 KM_K = 8  # clusters
 KM_ITERS = 3  # fixed unroll depth
-
-
-def _sqdist(code, carr):
-    """Exact integer squared L2 distance of two int arrays."""
-    return F.aggregate(
-        F.zip_with(code, carr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda a, v: a + v,
-    )
-
-
-def _argmin_cid(code, cents):
-    """bigint Column: cid of the nearest centroid in the `cents`
-    struct-array, ties to the smallest cid. `transform` computes each
-    distance ONCE and `array_min` on (dist, cid) structs is the
-    lexicographic argmin — order-independent despite collect_list's
-    nondeterministic order (min is commutative), and ~3× cheaper than
-    a fold whose CASE re-evaluates the candidate distance per
-    comparison branch."""
-    return F.array_min(
-        F.transform(
-            cents,
-            lambda c: F.struct(
-                _sqdist(code, c["carr"]).alias("dist"),
-                c["cid"].cast("bigint").alias("cid"),
-            ),
-        )
-    )["cid"]
-
-
-def _assign(codes: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, code, cid): nearest centroid per vector, ties to the
-    smallest cid. The K centroids are model state (K·d ints,
-    collected once per call — the IVF-centroid discipline); the
-    argmin runs as ONE Arrow numpy kernel per batch (guide §4.2 —
-    the r13 int8-ADC template) instead of the interpreted
-    fold-over-broadcast-structs expression, which was the dominant
-    compute stage of every K-means family query (25.7 task-seconds
-    per assignment pass at sf0.1). Exact: int64 squared-L2 sums in
-    numpy are the same integers the expression computed, and
-    `argmin` over cid-ascending rows is min-dist-then-smallest-cid
-    (pinned by test_assign_arrow_matches_expression). No join, no
-    corpus shuffle, same as before."""
-    import numpy as np
-
-    rows = sorted(cent.collect(), key=lambda r: r["cid"])
-    cmat = np.asarray([list(r["carr"]) for r in rows], dtype=np.int64)
-    cids = np.asarray([r["cid"] for r in rows], dtype=np.int64)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(cid=pd.Series([], dtype="int64"))
-                continue
-            # Ragged/NULL code arrays are malformed input — fail
-            # loudly with the named message downstream callers pin
-            # (semdedup's contract) instead of a raw numpy
-            # broadcast error.
-            try:
-                x = np.asarray(
-                    [
-                        np.asarray(c, dtype=np.int64)
-                        for c in pdf["code"]
-                    ],
-                    dtype=np.int64,
-                )
-            except (ValueError, TypeError):
-                x = None
-            if x is None or x.ndim != 2 or x.shape[1] != cmat.shape[1]:
-                lens = sorted(
-                    {
-                        "null" if c is None else str(len(c))
-                        for c in pdf["code"]
-                    }
-                )
-                raise ValueError(
-                    f"ragged embedding lengths {lens} — every code "
-                    f"must match the centroid dimension "
-                    f"{cmat.shape[1]}"
-                )
-            d2 = ((x[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "code": pdf["code"],
-                    "cid": cids[d2.argmin(axis=1)],
-                }
-            )
-
-    return codes.mapInPandas(
-        kernel, schema="vec_id long, code array<bigint>, cid bigint"
-    )
 
 
 def kmeans_fixed(
@@ -150,80 +54,31 @@ def kmeans_fixed(
     is (vec_id, cid) against those final centroids.
 
     Init = the codes of the k smallest vec_ids (deterministic,
-    engine-portable; the row_number window input is the k-row
-    sort-limit, never the corpus). Empty clusters keep their previous
-    centroid."""
+    engine-portable). Empty clusters keep their previous centroid.
+    This is PQ's Lloyd loop with one subspace."""
     if iterations < 1 or k < 1:
         raise ValueError("k and iterations must be >= 1")
-    # Arrow quantize (round 14): the interpreted `int8_codes`
-    # expression chain was the K-means path's dominant remaining
-    # stage once the argmin moved to the Arrow kernel. `_int8_coded`
-    # computes the identical formula as one numpy kernel with the
-    # raw-row fan-out built in (bit-parity pinned by the int8
-    # family's value-hash oracles since r13).
-    from .similarity import _int8_coded
-
-    codes = _int8_coded(emb, vec_col).select(
-        "vec_id", F.col("codes").alias("code")
-    ).transform(stage)
-
-    seeds = codes.orderBy("vec_id").limit(k)
-    w = Window.orderBy("vec_id")
-    cent = (
-        seeds.withColumn("cid", F.row_number().over(w) - 1)
-        .select(
-            F.col("cid").cast("bigint").alias("cid"),
-            F.col("code").alias("carr"),
-        )
-        .transform(stage)
+    cent, coded, _ = pq_train_encode(
+        emb, m=1, k=k, iterations=iterations, vec_col=vec_col
     )
-    for _ in range(iterations):
-        asg = _assign(codes, cent)
-        sums = (
-            asg.select(
-                "cid", F.posexplode("code").alias("dim", "val")
-            )
-            .groupBy("cid", "dim")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("cnt"))
-        )
-        cent_flat = cent.select(
-            "cid", F.posexplode("carr").alias("dim", "cval")
-        )
-        new_flat = cent_flat.join(sums, ["cid", "dim"], "left").select(
-            "cid",
-            "dim",
-            F.coalesce(F.expr("s div cnt"), F.col("cval")).alias("cval"),
-        )
-        cent = (
-            new_flat.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim", "cval"))
-                    ),
-                    lambda s: s["cval"],
-                ).alias("carr")
-            )
-            .transform(stage)
-        )
-    final_asg = _assign(codes, cent).select("vec_id", "cid")
-    return cent, final_asg
+    return (
+        cent.select("cid", "carr"),
+        coded.select("vec_id", F.col("pq")[0].alias("cid")),
+    )
 
 
-def extract_centroids(cent: DataFrame) -> list[tuple[int, list[int]]]:
-    """Collect the trained centroids as driver model state —
-    (cid, code array) tuples, K·d ints — the train-offline/
-    serve-online boundary (like `classifier.extract_weights` and the
-    IVF centroid list)."""
-    return [
-        (int(r["cid"]), [int(v) for v in r["carr"]])
-        for r in cent.collect()
-    ]
+def extract_centroids(cent: DataFrame) -> list:
+    """Collect the trained centroids as driver model state — the
+    one-subspace codebook state (`pq.pq_codebook_state`: (0, cid,
+    code array) tuples, K·d ints) that `assign_stream` takes; the
+    train-offline/serve-online boundary (like
+    `classifier.extract_weights` and the IVF centroid list)."""
+    return pq_codebook_state(cent.select(F.lit(0).alias("sub"), "cid", "carr"))
 
 
 def assign_stream(
     emb_sdf: DataFrame,
-    centroids: list[tuple[int, list[int]]],
+    centroids: list,
     out_dir: str,
     checkpoint_dir: str,
     vec_col: str = "embedding",
@@ -231,28 +86,18 @@ def assign_stream(
     """Streaming cluster routing: assign arriving embeddings to their
     nearest frozen centroid and append (vec_id, cid) — how a corpus
     shards new vectors to cluster-partitioned storage at ingest.
-    Centroids embed as a literal array column, so assignment is the
-    same per-row argmin expression as training (stateless, zero shuffle,
-    bit-identical to the batch assignment); recovery is plain
-    source-offset replay. Returns the StreamingQuery."""
+    `centroids` is `extract_centroids`' state; assignment runs the
+    training loop's own Arrow kernel (`pq.nearest_centroids`), so it
+    is stateless, shuffle-free and bit-identical to the batch
+    assignment; recovery is plain source-offset replay. Returns the
+    StreamingQuery."""
     if not centroids:
         raise ValueError("centroids must be non-empty")
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(cid).cast("bigint").alias("cid"),
-                F.array(*[F.lit(v).cast("bigint") for v in arr]).alias(
-                    "carr"
-                ),
-            )
-            for cid, arr in centroids
-        ]
-    )
-    assigned = emb_sdf.select(
+    codes = emb_sdf.select(
         "vec_id", int8_codes(F.col(vec_col)).alias("code")
-    ).select(
-        "vec_id",
-        _argmin_cid(F.col("code"), cents_lit).alias("cid"),
+    )
+    assigned = nearest_centroids(codes, centroids).select(
+        "vec_id", F.col("pq")[0].alias("cid")
     )
     return (
         assigned.writeStream.outputMode("append")

@@ -1,25 +1,33 @@
-"""Product quantization (PQ) over int8-quantized embeddings — the
-compression tier below IVF-SQ8: each vector's code splits into M
-contiguous subvectors, each subspace trains its own tiny K-means
-codebook, and a vector is stored as M sub-centroid ids (M bytes —
-a 64× cut below even SQ8). Queries score candidates with ADC
-(asymmetric distance computation): a per-query lookup table of
-query-subvector ↔ centroid distances, so a candidate's distance is M
-table lookups, never a d-dim dot product.
+"""Vector quantization over int8-quantized embeddings: product
+quantization (PQ) and, as its M=1 case, K-means — one Lloyd loop, one
+nearest-centroid kernel, one ADC serving path.
 
-Spark-first shape (mirrors `clustering.kmeans_fixed`'s discipline,
-jointly over all M subspaces in ONE loop):
+PQ is the compression tier below IVF-SQ8: each vector's code splits
+into M contiguous subvectors, each subspace trains its own K-centroid
+codebook, and a vector is stored as M sub-centroid ids (M bytes — a
+64× cut below even SQ8). K-means is the same computation with one
+subspace (Jégou et al., TPAMI 2011), so `clustering.kmeans_fixed` is
+a thin wrapper over `pq_train_encode` with m=1. Queries score
+candidates with ADC (asymmetric distance computation): a per-query
+lookup table of query-subvector ↔ centroid distances, so a
+candidate's distance is M table lookups, never a d-dim dot product.
 
-- assignment is a pure per-row EXPRESSION over one broadcast row of
-  (sub, cid, carr) structs — the corpus never shuffles for it;
-- the codebook update shuffles only map-side-combined
-  (sub, cid, dim) partial sums — O(partitions · M · K · d/M) rows;
-- one lazy staging cut (io.stage) per iteration (an unexecuted iterative
-  plan otherwise doubles per round — SKILL.md note);
+Shape of one training run (`pq_train_encode_codes`):
+
+- the codebook is driver-side model state, (sub, cid, carr) tuples of
+  M·K·subdim ints in all: it is seeded by ONE collect of the k
+  smallest vec_ids' codes, which also fixes the dimension;
+- assignment is ONE Arrow numpy kernel (`nearest_centroids`) over the
+  staged code table — the corpus never shuffles for it;
+- the update shuffles only map-side-combined (sub, cid, sdim) partial
+  sums — O(partitions · M · K · subdim) rows — collected in the same
+  action, with the means taken on the driver; so a Lloyd round is one
+  action and the plan never grows with the iteration count;
 - everything is exact integer arithmetic on the hash-certified
   absmax/floor int8 codes (squared-L2 ≤ 64·254² per pair, no
-  overflow), truncating-integer centroid means, smallest-cid
-  tiebreaks — so a SQL oracle replays training bit for bit.
+  overflow): int64 squared-L2 sums, ties to the smallest cid,
+  truncating-integer centroid means, and an empty cluster keeps its
+  centroid — so a SQL oracle replays training bit for bit.
 
 Deliberate deviations from production PQ, documented: codebooks are
 K=16 per subspace with 2 Lloyd rounds (the determinism-first audit
@@ -39,38 +47,11 @@ from pyspark.sql import functions as F
 
 from ..io import stage
 
-from .clustering import int8_codes
+from .similarity import _int8_codes_np, int8_codes
 
 PQ_M = 8        # subspaces
 PQ_K = 16       # centroids per subspace (audit scale; prod uses 256)
 PQ_ITERS = 2    # Lloyd rounds
-
-
-def _sub_slice(code, m: int, subdim: int):
-    return F.slice(code, m * subdim + 1, subdim)
-
-
-def _sub_argmin(code, cents, m: int, subdim: int):
-    """cid of the nearest sub-centroid of subspace ``m`` for this
-    row's subvector: transform the broadcast codebook list to
-    (dist, cid) structs — each distance computed ONCE (Spark does
-    not reliably CSE a repeated subexpression inside a fold; the
-    Bloom-probe lesson) — then `array_min`'s lexicographic struct
-    ordering is exactly min-dist-then-smallest-cid."""
-    sub = _sub_slice(code, m, subdim)
-    mine = F.filter(cents, lambda c: c["sub"] == F.lit(m))
-    scored = F.transform(
-        mine,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(sub, c["carr"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            ).alias("d"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return F.array_min(scored)["cid"]
 
 
 def pq_train_encode(
@@ -109,53 +90,37 @@ def pq_train_encode_codes(
     iterations: "int | None" = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """`pq_train_encode` on an ALREADY-BUILT integer code frame
-    (vec_id, code array<bigint>) — the shared core, so the raw tier
-    (codes straight from `int8_codes`) and the residual tier (codes
-    minus the coarse centroid's code) train through the byte-same
-    Lloyd loop."""
+    (vec_id, code array<bigint>) — the one Lloyd loop, so the raw
+    tier (codes straight from `int8_codes`), the residual tier (codes
+    minus the coarse centroid's code) and K-means (m=1) train through
+    the byte-same code."""
     m = PQ_M if m is None else m
     k = PQ_K if k is None else k
     iterations = PQ_ITERS if iterations is None else iterations
-    dim = len(
-        codes.select("code").first()[0]
-    )  # one row — model-state probe, not a collect of data
+
+    codes = codes.transform(stage)
+    seeds = [
+        r["code"]
+        for r in codes.orderBy("vec_id").select("code").limit(k).collect()
+    ]
+    dim = len(seeds[0]) if seeds and seeds[0] is not None else 0
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by {m} subspaces")
     subdim = dim // m
-
-    codes = codes.transform(stage)
-
-    seeds = codes.orderBy("vec_id").limit(k)
-    w = Window.orderBy("vec_id")
-    seeded = seeds.withColumn(
-        "cid", (F.row_number().over(w) - 1).cast("bigint")
-    )
-    cent = seeded.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("bigint").alias("sub"),
-                        F.col("cid"),
-                        _sub_slice(F.col("code"), s, subdim).alias(
-                            "carr"
-                        ),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("c")
-    ).select("c.sub", "c.cid", "c.carr").transform(stage)
+    x = _code_matrix(seeds, dim)
+    book = [
+        (s, cid, x[cid, s * subdim : (s + 1) * subdim].tolist())
+        for cid in range(len(seeds))
+        for s in range(m)
+    ]
 
     for _ in range(iterations):
-        asg = _encode(codes, cent, m, subdim)
         # update: each (dim, val) carries its assigned sub-cid from
         # the pq array — pure expressions, no join; partial sums
         # combine map-side to M·K·subdim rows
-        upd = (
-            asg.select(
-                "pq", F.posexplode("code").alias("dim", "val")
-            )
+        sums = (
+            nearest_centroids(codes, book)
+            .select("pq", F.posexplode("code").alias("dim", "val"))
             .select(
                 (F.col("dim") / subdim).cast("bigint").alias("sub"),
                 F.element_at(
@@ -166,68 +131,73 @@ def pq_train_encode_codes(
             )
             .groupBy("sub", "cid", "sdim")
             .agg(F.sum("val").alias("s"), F.count("*").alias("cnt"))
+            .collect()
         )
-        cent_flat = cent.select(
-            "sub", "cid", F.posexplode("carr").alias("sdim", "cval")
-        )
-        new_flat = cent_flat.join(
-            upd, ["sub", "cid", "sdim"], "left"
-        ).select(
-            "sub",
-            "cid",
-            "sdim",
-            F.coalesce(F.expr("s div cnt"), F.col("cval")).alias(
-                "cval"
-            ),
-        )
-        cent = (
-            new_flat.groupBy("sub", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("sdim", "cval"))
-                    ),
-                    lambda s: s["cval"],
-                ).alias("carr")
-            )
-            .transform(stage)
-        )
+        means = {
+            (r["sub"], r["cid"], r["sdim"]): _trunc_div(r["s"], r["cnt"])
+            for r in sums
+        }
+        book = [
+            (s, cid, [means.get((s, cid, d), v) for d, v in enumerate(carr)])
+            for s, cid, carr in book
+        ]
 
-    coded = _encode(codes, cent, m, subdim)
-    return cent, coded, subdim
+    cent = codes.sparkSession.createDataFrame(
+        book, "sub bigint, cid bigint, carr array<bigint>"
+    )
+    return cent, nearest_centroids(codes, book), subdim
 
 
-def _encode(
-    codes: DataFrame, cent: DataFrame, m: int, subdim: int
-) -> DataFrame:
-    """(vec_id, code, pq): per-subspace nearest sub-centroid ids —
-    zero corpus shuffle, as before, but the argmin runs as ONE Arrow
-    numpy kernel per batch (guide §4.2, the r13 int8-ADC template)
-    instead of the interpreted filter/transform/zip_with fold over
-    the broadcast codebook structs, which was the dominant compute
-    of the PQ family (3 passes × ~25 task-seconds at sf0.1). The
-    codebooks are model state (M·K·subdim ints) collected once per
-    call. Exact: int64 squared-L2 in numpy reproduces the same
-    integers; per-sub rows are sorted by cid so `argmin` (first
-    minimum) is min-dist-then-smallest-cid — the `array_min` struct
-    order (pinned by test_pq_encode_arrow_matches_expression)."""
+def _trunc_div(a: int, b: int) -> int:
+    """Spark's `div` for b > 0: integer division truncating toward
+    zero (DuckDB `//` on integers, the oracles' mean)."""
+    q = abs(a) // b
+    return q if a >= 0 else -q
+
+
+def _code_matrix(codes, dim: int):
+    """int64 (n, dim) matrix of n code arrays. Ragged or NULL codes
+    are malformed input and fail with the named message callers pin
+    (semdedup's contract) instead of a raw numpy error."""
     import numpy as np
 
-    rows = cent.collect()
+    try:
+        return np.asarray(
+            [np.asarray(c, dtype=np.int64) for c in codes], dtype=np.int64
+        ).reshape(len(codes), dim)
+    except (ValueError, TypeError):
+        lens = sorted({"null" if c is None else str(len(c)) for c in codes})
+        raise ValueError(
+            f"ragged embedding lengths {lens} — every code must have "
+            f"the codebook's dimension {dim}"
+        ) from None
+
+
+def nearest_centroids(codes: DataFrame, book: list) -> DataFrame:
+    """(vec_id, code, pq): each code's nearest centroid in every
+    subspace, `pq` the M-array of sub-centroid ids — the ONE
+    assignment kernel of PQ encoding, K-means (M=1) and streaming
+    cluster routing. `book` is driver-side codebook state, (sub, cid,
+    carr) tuples (`pq_codebook_state`). One Arrow numpy pass per
+    batch: no join, no corpus shuffle. Exact: int64 squared-L2 sums,
+    and each subspace's centroids sorted by cid, so `argmin` (first
+    minimum) breaks ties to the smallest cid — the oracles' (dist,
+    cid) order. A row against an empty codebook fails with a named
+    error, as do ragged or NULL codes."""
+    import numpy as np
+
     by_sub: dict[int, list] = {}
-    for r in rows:
-        by_sub.setdefault(int(r["sub"]), []).append(r)
-    subs = []
-    for s in range(m):
-        sr = sorted(by_sub[s], key=lambda r: r["cid"])
-        subs.append(
-            (
-                np.asarray([r["cid"] for r in sr], dtype=np.int64),
-                np.asarray(
-                    [list(r["carr"]) for r in sr], dtype=np.int64
-                ),
-            )
+    for sub, cid, carr in sorted(book):
+        by_sub.setdefault(sub, []).append((cid, carr))
+    subs = [
+        (
+            np.asarray([cid for cid, _ in rows], dtype=np.int64),
+            np.asarray([carr for _, carr in rows], dtype=np.int64),
         )
+        for _, rows in sorted(by_sub.items())
+    ]
+    subdim = subs[0][1].shape[1] if subs else 0
+    dim = len(subs) * subdim
 
     def kernel(batches):
         import pandas as pd
@@ -236,29 +206,13 @@ def _encode(
             if len(pdf) == 0:
                 yield pdf.assign(pq=pd.Series([], dtype="object"))
                 continue
-            # same loud ragged-input contract as clustering._assign
-            try:
-                x = np.asarray(
-                    [
-                        np.asarray(c, dtype=np.int64)
-                        for c in pdf["code"]
-                    ],
-                    dtype=np.int64,
-                )
-            except (ValueError, TypeError):
-                x = None
-            if x is None or x.ndim != 2 or x.shape[1] != m * subdim:
-                lens = sorted(
-                    {
-                        "null" if c is None else str(len(c))
-                        for c in pdf["code"]
-                    }
-                )
+            if not subs:
                 raise ValueError(
-                    f"ragged embedding lengths {lens} — every code "
-                    f"must have dimension {m * subdim}"
+                    "empty codebook: there is no centroid to assign "
+                    "codes to"
                 )
-            pq = np.empty((len(pdf), m), dtype=np.int64)
+            x = _code_matrix(pdf["code"], dim)
+            pq = np.empty((len(pdf), len(subs)), dtype=np.int64)
             for s, (cids, cmat) in enumerate(subs):
                 sub = x[:, s * subdim : (s + 1) * subdim]
                 d2 = ((sub[:, None, :] - cmat[None, :, :]) ** 2).sum(
@@ -277,6 +231,18 @@ def _encode(
         kernel,
         schema="vec_id long, code array<bigint>, pq array<bigint>",
     )
+
+
+def pq_codebook_state(cent: DataFrame) -> list:
+    """Collect a trained codebook frame (sub, cid, carr) as driver
+    model state — (sub, cid, carr) tuples, M·K·subdim ints — the
+    train-offline/serve-online boundary, and the one state form that
+    `nearest_centroids`, the ADC serving tiers and
+    `clustering.assign_stream` take."""
+    return [
+        (int(r["sub"]), int(r["cid"]), [int(v) for v in r["carr"]])
+        for r in cent.collect()
+    ]
 
 
 def adc_topk(
@@ -356,16 +322,6 @@ def adc_topk(
 # ---------------------------------------------------------------------------
 
 
-def pq_codebook_state(cent: DataFrame) -> list:
-    """Collect the trained sub-codebooks as driver model state —
-    (sub, cid, carr) tuples, M·K·subdim ints — the train-offline/
-    serve-online boundary (the PQ analog of `extract_centroids`)."""
-    return [
-        (int(r["sub"]), int(r["cid"]), [int(v) for v in r["carr"]])
-        for r in cent.collect()
-    ]
-
-
 def persist_ivf_pq(
     emb: DataFrame,
     path: str,
@@ -402,40 +358,64 @@ def persist_ivf_pq(
     return pq_codebook_state(cent), subdim
 
 
-def _int8_codes_np(v) -> "object":
-    """numpy replica of `clustering.int8_codes` (absmax/floor) — the
-    driver-side query encoding every serving tier shares."""
-    import numpy as np
-
-    x = np.asarray(v, dtype="float64")
-    scale = max(float(np.abs(x).max()), 1e-12)
-    return np.floor(x * 127.0 / scale).astype("int64")
-
-
-def _lut_from_codes(
-    codes, pq_state: list, m: int, k: int, subdim: int
-) -> list:
+def _lut_from_codes(codes, pq_state: list, subdim: int) -> list:
     """Flattened ADC lookup table for an integer code vector: entry
     [sub·K + cid] = exact integer squared L2 between the code's
-    subvector and that sub-centroid."""
+    subvector and that sub-centroid — the query side of the symmetric
+    code-vs-code distance."""
     import numpy as np
 
-    lut = [0] * (m * k)
+    lut = [0] * (PQ_M * PQ_K)
     for sub, cid, carr in pq_state:
         qsub = codes[sub * subdim : (sub + 1) * subdim]
         diff = qsub - np.asarray(carr, dtype="int64")
-        lut[sub * k + cid] = int((diff * diff).sum())
+        lut[sub * PQ_K + cid] = int((diff * diff).sum())
     return lut
 
 
-def _query_lut(
-    v, pq_state: list, m: int, k: int, subdim: int
-) -> list:
-    """Per-query flattened ADC lookup table: entry [sub·K + cid] =
-    exact integer squared L2 between the query's int8 SUBvector and
-    that sub-centroid — the same `int8_codes` absmax/floor formula
-    as the corpus side (symmetric code-vs-code distance)."""
-    return _lut_from_codes(_int8_codes_np(v), pq_state, m, k, subdim)
+def _adc_candidates(
+    spark, layout_path: str, probes: DataFrame, rename: dict, *keep: str
+) -> DataFrame:
+    """(query_id, cand_id, *keep, adc_dist) for every candidate in a
+    probe row's list: the PARTITION-PRUNED layout scan joined to the
+    broadcast probe frame, self-pairs dropped, and a candidate's
+    distance is M lookups into its probe row's `lut`, never a
+    d-dimensional product."""
+    from .similarity import _pruned_layout
+
+    adc = F.aggregate(
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
+        F.lit(0).cast("bigint"),
+        lambda acc, i: acc
+        + F.element_at(
+            F.col("lut"),
+            (
+                i * PQ_K
+                + F.element_at(F.col("cand_pq"), (i + 1).cast("int"))
+                + 1
+            ).cast("int"),
+        ),
+    )
+    corpus = _pruned_layout(spark, layout_path, probes, rename)
+    return (
+        corpus.join(F.broadcast(probes), "list_id")
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", *keep, adc.alias("adc_dist"))
+    )
+
+
+def _per_query_topk(
+    scored: DataFrame, by: str, k: int, *cols: str
+) -> DataFrame:
+    """Each query's first k rows by (`by`, cand_id), ranked 1..k in a
+    bigint `rnk` column; the one shuffle is this window, with its
+    partial limit applied below the exchange."""
+    w = Window.partitionBy("query_id").orderBy(by, "cand_id")
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rnk") <= k)
+        .select(*cols, "rnk")
+    )
 
 
 def serve_ann_topk_ivf_pq(
@@ -459,61 +439,23 @@ def serve_ann_topk_ivf_pq(
     assignment and the LUT arithmetic each mirror one SQL expression
     in the `ann_ivf_pq_adc` oracle, so the PRUNED result value-hashes
     cross-engine."""
-    import math
+    from .similarity import _query_probes
 
-    import numpy as np
-
-    from pyspark.sql import Window
-
-    from .similarity import (
-        QUANT,
-        _centroid_state,
-        _pruned_layout,
-        _select_probe_lists,
-    )
-
-    m = PQ_M
-    kk = PQ_K
-    cents_state = _centroid_state(coarse_cents)
     rows = []
-    for r in queries_df.select("vec_id", vec_col).collect():
-        v = np.array(list(r[vec_col]), dtype="float64")
-        vq = max(int(np.floor(v * v * QUANT).astype("int64").sum()), 1)
-        lut = _query_lut(v, pq_state, m, kk, subdim)
-        for cid in _select_probe_lists(v, vq, cents_state, n_probe):
-            rows.append((int(r["vec_id"]), int(cid), lut))
+    q_rows = queries_df.select("vec_id", vec_col).collect()
+    for qid, codes, lists in _query_probes(
+        q_rows, coarse_cents, n_probe, vec_col
+    ):
+        lut = _lut_from_codes(codes, pq_state, subdim)
+        rows += [(qid, int(cid), lut) for cid in lists]
     probes = spark.createDataFrame(
         rows, "query_id long, list_id int, lut array<long>"
     )
-    corpus = _pruned_layout(
-        spark,
-        layout_path,
-        probes,
-        {"vec_id": "cand_id", "pq": "cand_pq"},
+    scored = _adc_candidates(
+        spark, layout_path, probes, {"vec_id": "cand_id", "pq": "cand_pq"}
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc
-        + F.element_at(
-            F.col("lut"),
-            (
-                i * kk
-                + F.element_at(F.col("cand_pq"), (i + 1).cast("int"))
-                + 1
-            ).cast("int"),
-        ),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "list_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", adc.alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "adc_dist", "rnk")
+    return _per_query_topk(
+        scored, "adc_dist", k, "query_id", "cand_id", "adc_dist"
     )
 
 
@@ -543,71 +485,32 @@ def serve_ann_topk_ivf_pq_refine(
     nearly all of it at shortlist/corpus of the compute. The exact
     codes are read ONLY for pruned lists (columnar layout — the
     pure-ADC tier's scan never touches that column)."""
-    import numpy as np
+    from .similarity import _query_probes
 
-    from pyspark.sql import Window
-
-    from .similarity import (
-        QUANT,
-        _centroid_state,
-        _pruned_layout,
-        _select_probe_lists,
-    )
-
-    m, kk = PQ_M, PQ_K
-    cents_state = _centroid_state(coarse_cents)
     rows = []
-    for r in queries_df.select("vec_id", vec_col).collect():
-        v = np.array(list(r[vec_col]), dtype="float64")
-        vq = max(int(np.floor(v * v * QUANT).astype("int64").sum()), 1)
-        scale = max(float(np.abs(v).max()), 1e-12)
-        qcodes = [
-            int(x) for x in np.floor(v * 127.0 / scale).astype("int64")
-        ]
-        lut = _query_lut(v, pq_state, m, kk, subdim)
-        for cid in _select_probe_lists(v, vq, cents_state, n_probe):
-            rows.append((int(r["vec_id"]), int(cid), lut, qcodes))
+    q_rows = queries_df.select("vec_id", vec_col).collect()
+    for qid, codes, lists in _query_probes(
+        q_rows, coarse_cents, n_probe, vec_col
+    ):
+        lut = _lut_from_codes(codes, pq_state, subdim)
+        rows += [(qid, int(cid), lut, codes.tolist()) for cid in lists]
     probes = spark.createDataFrame(
         rows,
         "query_id long, list_id int, lut array<long>, "
         "qcode array<long>",
     )
-    corpus = _pruned_layout(
+    scored = _adc_candidates(
         spark,
         layout_path,
         probes,
         {"vec_id": "cand_id", "pq": "cand_pq", "code": "cand_code"},
+        "cand_code",
+        "qcode",
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc
-        + F.element_at(
-            F.col("lut"),
-            (
-                i * kk
-                + F.element_at(F.col("cand_pq"), (i + 1).cast("int"))
-                + 1
-            ).cast("int"),
-        ),
+    short = _per_query_topk(
+        scored, "adc_dist", shortlist,
+        "query_id", "cand_id", "cand_code", "qcode", "adc_dist",
     )
-    scored = (
-        corpus.join(F.broadcast(probes), "list_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            "cand_code",
-            "qcode",
-            adc.alias("adc_dist"),
-        )
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        "adc_dist", "cand_id"
-    )
-    short = scored.withColumn(
-        "srnk", F.row_number().over(w_short)
-    ).filter(F.col("srnk") <= shortlist)
     exact = F.aggregate(
         F.zip_with(
             F.col("qcode"),
@@ -623,13 +526,9 @@ def serve_ann_topk_ivf_pq_refine(
         "adc_dist",
         exact.alias("exact_dist"),
     )
-    w = Window.partitionBy("query_id").orderBy("exact_dist", "cand_id")
-    return (
-        refined.withColumn(
-            "rnk", F.row_number().over(w).cast("bigint")
-        )
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "adc_dist", "exact_dist", "rnk")
+    return _per_query_topk(
+        refined, "exact_dist", k,
+        "query_id", "cand_id", "adc_dist", "exact_dist",
     )
 
 
@@ -727,57 +626,31 @@ def serve_ann_topk_ivf_pq_residual(
     (recall floors pinned side by side in tests/test_ivf_pq.py)."""
     import numpy as np
 
-    from pyspark.sql import Window
+    from .similarity import _query_probes
 
-    from .similarity import (
-        QUANT,
-        _centroid_state,
-        _pruned_layout,
-        _select_probe_lists,
-    )
-
-    m, kk = PQ_M, PQ_K
-    cents_state = _centroid_state(coarse_cents)
-    ccodes = {cid: np.asarray(c, dtype="int64") for cid, c in centroid_codes(coarse_cents)}
+    ccodes = {
+        cid: np.asarray(c, dtype="int64")
+        for cid, c in centroid_codes(coarse_cents)
+    }
     rows = []
-    for r in queries_df.select("vec_id", vec_col).collect():
-        v = np.array(list(r[vec_col]), dtype="float64")
-        vq = max(int(np.floor(v * v * QUANT).astype("int64").sum()), 1)
-        qcodes = _int8_codes_np(v)
-        for cid in _select_probe_lists(v, vq, cents_state, n_probe):
-            rq = qcodes - ccodes[int(cid)]
-            lut = _lut_from_codes(rq, pq_state, m, kk, subdim)
-            rows.append((int(r["vec_id"]), int(cid), lut))
+    q_rows = queries_df.select("vec_id", vec_col).collect()
+    for qid, codes, lists in _query_probes(
+        q_rows, coarse_cents, n_probe, vec_col
+    ):
+        rows += [
+            (
+                qid,
+                int(cid),
+                _lut_from_codes(codes - ccodes[int(cid)], pq_state, subdim),
+            )
+            for cid in lists
+        ]
     probes = spark.createDataFrame(
         rows, "query_id long, list_id int, lut array<long>"
     )
-    corpus = _pruned_layout(
-        spark,
-        layout_path,
-        probes,
-        {"vec_id": "cand_id", "pq": "cand_pq"},
+    scored = _adc_candidates(
+        spark, layout_path, probes, {"vec_id": "cand_id", "pq": "cand_pq"}
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc
-        + F.element_at(
-            F.col("lut"),
-            (
-                i * kk
-                + F.element_at(F.col("cand_pq"), (i + 1).cast("int"))
-                + 1
-            ).cast("int"),
-        ),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "list_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", adc.alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "adc_dist", "rnk")
+    return _per_query_topk(
+        scored, "adc_dist", k, "query_id", "cand_id", "adc_dist"
     )

@@ -1018,6 +1018,16 @@ def int8_codes(vec):
     )
 
 
+def _int8_codes_np(v) -> "object":
+    """numpy replica of `int8_codes` (absmax/floor) for ONE vector —
+    the driver-side query encoding every serving tier shares."""
+    import numpy as np
+
+    x = np.asarray(v, dtype="float64")
+    scale = max(float(np.abs(x).max()), 1e-12)
+    return np.floor(x * 127.0 / scale).astype("int64")
+
+
 def _idot(a, b):
     """Exact integer dot product of two int arrays."""
     return F.aggregate(
@@ -1442,6 +1452,26 @@ def compact_ivf_layout(
     shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
 
 
+def _query_probes(q_rows, cents: list, n_probe: int, vec_col: str):
+    """(query_id, int8 codes, probe list ids) per query row — the one
+    query/probe-list loop of the int8 and PQ serving tiers: probe
+    lists are selected on the FLOAT vector against the float
+    centroids (`_select_probe_lists`, with the norm guarded at 1 like
+    the assignment kernel), while the payload is the query's int8
+    codes (`_int8_codes_np`)."""
+    import numpy as np
+
+    cents_state = _centroid_state(cents)
+    for r in q_rows:
+        v = np.array(list(r[vec_col]), dtype="float64")
+        vq = max(int(np.floor(v * v * QUANT).astype("int64").sum()), 1)
+        yield (
+            int(r["vec_id"]),
+            _int8_codes_np(v),
+            _select_probe_lists(v, vq, cents_state, n_probe),
+        )
+
+
 def _probe_frame_int8(
     spark: SparkSession,
     q_rows,
@@ -1451,40 +1481,24 @@ def _probe_frame_int8(
 ) -> DataFrame:
     """Query rows → int8 probe frame (query_id, query_codes,
     query_qn8, list_id): probe lists are selected on the FLOAT vector
-    against the float centroids (exactly `_probe_frame`'s arithmetic,
-    with the norm guarded at 1 like the assignment kernel), while the
-    shipped payload is the query's int8 codes — candidates are scored
-    code-against-code, never float-against-code (symmetric distance,
-    so the score is bit-identical to the flat ADC tier for the same
-    pair). Queries whose codes are all zero drop (integer norm 0 ⇒
-    cosine undefined, mirroring the layout-side guard).
+    (`_query_probes`), while the shipped payload is the query's int8
+    codes — candidates are scored code-against-code, never
+    float-against-code (symmetric distance, so the score is
+    bit-identical to the flat ADC tier for the same pair). Queries
+    whose codes are all zero drop (integer norm 0 ⇒ cosine undefined,
+    mirroring the layout-side guard).
 
     Every arithmetic step here (absmax scale, floor codes, quantized
     centroid cosine, lexsort tie rule) mirrors one SQL expression in
     the `ann_cosine_ivf_int8` oracle, which is what makes a PRUNED
     (n_probe < n_list) IVF query value-hash-checkable cross-engine.
     Probe selection itself is the shared `_select_probe_lists`."""
-    import numpy as np
-
-    cents_state = _centroid_state(cents)
     rows = []
-    for r in q_rows:
-        v = np.array(list(r[vec_col]), dtype="float64")
-        scale = max(float(np.abs(v).max()), 1e-12)
-        codes = np.floor(v * 127.0 / scale).astype("int64")
+    for qid, codes, lists in _query_probes(q_rows, cents, n_probe, vec_col):
         qn8 = int((codes * codes).sum())
         if qn8 <= 0:
             continue
-        vq = max(int(np.floor(v * v * QUANT).astype("int64").sum()), 1)
-        for cid in _select_probe_lists(v, vq, cents_state, n_probe):
-            rows.append(
-                (
-                    int(r["vec_id"]),
-                    [int(x) for x in codes],
-                    qn8,
-                    int(cid),
-                )
-            )
+        rows += [(qid, codes.tolist(), qn8, int(cid)) for cid in lists]
     return spark.createDataFrame(
         rows,
         "query_id long, query_codes array<long>, query_qn8 long, "

@@ -2729,11 +2729,12 @@ FROM {prev} c LEFT JOIN (
     "embedding_kmeans_clusters",
     oracle=_kmeans_oracle(),
     tags=("curation", "embedding", "clustering", "iterative", "ml"),
-    doc="Distributed K-means over int8-quantized embeddings, fully "
-    "declarative and bit-exact: 3 unrolled Lloyd's rounds where "
-    "assignment is a per-row argmin fold over ONE broadcast row of "
-    "centroid arrays (the corpus never shuffles) and the update "
-    "shuffles only map-side-combined (cid, dim) partial sums — "
+    doc="Distributed K-means over int8-quantized embeddings, "
+    "bit-exact: 3 unrolled Lloyd's rounds (product quantization's "
+    "loop with one subspace) where assignment is an Arrow numpy "
+    "argmin against the driver-side centroids (the corpus never "
+    "shuffles) and the update shuffles only map-side-combined "
+    "(cid, dim) partial sums — "
     "O(partitions × K × d) per round. Integer squared-L2 distances, "
     "truncating-integer means, smallest-cid tiebreaks; every "
     "centroid coordinate + final cluster sizes value-hash against "
@@ -3804,8 +3805,8 @@ ORDER BY adc_dist, vec_id LIMIT 20
     doc="Product quantization end to end, bit-exact: the corpus's "
     "int8 codes split into 4 subspaces, each training its own 8-"
     "centroid codebook — ALL subspaces in ONE joint Lloyd loop "
-    "(assignment is a per-row fold over the broadcast codebook "
-    "list, zero corpus shuffle; updates combine map-side to "
+    "(assignment is an Arrow numpy argmin against the driver-side "
+    "codebooks, zero corpus shuffle; updates combine map-side to "
     "M·K·subdim rows; 2 rounds, integer distances, truncating "
     "means, smallest-cid ties) — then every vector is stored as 4 "
     "sub-centroid ids and served by ADC: the query's distance to a "

@@ -222,21 +222,14 @@ def parse_envelope_json_flagged(
     return flagged
 
 
-def parse_envelope_json_with_quarantine(
-    raw: DataFrame, value_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """Parse with a corrupt-record quarantine: returns (good, bad) —
-    the two-filter view of `parse_envelope_json_flagged`; the
-    streaming job keeps the ONE flagged frame instead so a single
-    parse serves observe() counters, the quarantine write, and the
-    pipeline (no per-epoch re-parse)."""
-    flagged = parse_envelope_json_flagged(raw, value_col)
-    passthrough = [
-        c
-        for c in flagged.columns
-        if c not in ("raw_value", "_is_bad", "op", "ts_ms",
-                     "source_table", "before")
-    ]
+def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(good, bad) view of a `parse_envelope_json_flagged` frame — the
+    one good/bad split of the quarantine path (streaming epochs and
+    the quarantine replay): good rows carry the parsed envelope
+    columns, bad rows the raw line for replay-after-fix; any other
+    input column (e.g. instance_name) passes through both."""
+    parsed = ("raw_value", "_is_bad", "op", "ts_ms", "source_table", "before")
+    passthrough = [c for c in flagged.columns if c not in parsed]
     bad = flagged.filter(F.col("_is_bad")).select(
         *passthrough, "raw_value"
     )

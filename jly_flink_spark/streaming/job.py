@@ -24,6 +24,21 @@ from ..sources.envelopes import parse_envelope_json, read_envelope_stream
 from .sinks import DualSink
 
 
+def _envelope_lines(
+    spark: SparkSession, envelope_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """(instance_name, value) stream of the envelope files, whose
+    lines are `<instance_name>|<envelope json>`."""
+    from pyspark.sql import functions as F
+
+    return read_envelope_stream(
+        spark, envelope_dir, max_files_per_trigger=max_files_per_trigger
+    ).select(
+        F.substring_index("value", "|", 1).alias("instance_name"),
+        F.expr("substring(value, instr(value, '|') + 1)").alias("value"),
+    )
+
+
 def streaming_pipeline(
     spark: SparkSession,
     envelope_dir: str,
@@ -34,17 +49,8 @@ def streaming_pipeline(
     """Streaming envelope source → target rows. The envelope files
     carry `instance_name|json` lines (the harness encoding of the
     per-source streams the reference unions — StartJob.java:52-92)."""
-    from pyspark.sql import functions as F
-
-    raw = read_envelope_stream(
-        spark, envelope_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    # value = "<instance_name>|<envelope json>"
     parsed = parse_envelope_json(
-        raw.select(
-            F.substring_index("value", "|", 1).alias("instance_name"),
-            F.expr("substring(value, instr(value, '|') + 1)").alias("value"),
-        )
+        _envelope_lines(spark, envelope_dir, max_files_per_trigger)
     )
     # T2 log-and-drop observability (StartJob.java:128-151): per-epoch
     # guard-drop counters ride on the stream via observe() and surface
@@ -119,14 +125,9 @@ def start_archival_stream(
         )
 
     from ..pipeline import observe_guard_drops
-    from ..sources.envelopes import parse_envelope_json_flagged
+    from ..sources.envelopes import parse_envelope_json_flagged, split_flagged
 
-    raw = read_envelope_stream(
-        spark, envelope_dir, max_files_per_trigger=max_files_per_trigger
-    ).select(
-        F.substring_index("value", "|", 1).alias("instance_name"),
-        F.expr("substring(value, instr(value, '|') + 1)").alias("value"),
-    )
+    raw = _envelope_lines(spark, envelope_dir, max_files_per_trigger)
     # Parse ONCE in the streaming projection (flag column, no split):
     # the T2 guard counters then ride the stream exactly as in the
     # non-quarantine path (bad rows have NULL op, so the guard
@@ -143,14 +144,9 @@ def start_archival_stream(
     def split_and_sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
-            bad = batch_df.filter(F.col("_is_bad")).select(
-                "instance_name", "raw_value"
-            )
+            good, bad = split_flagged(batch_df)
             if bad.limit(1).count() > 0:
                 bad.write.mode("append").parquet(quarantine_dir)
-            good = batch_df.filter(~F.col("_is_bad")).select(
-                "instance_name", "op", "ts_ms", "source_table", "before"
-            )
             sink(build_pipeline(spark, good, cfg), epoch_id)
         finally:
             batch_df.unpersist()
@@ -212,17 +208,15 @@ def replay_quarantine(
     same rows."""
     from pyspark.sql import functions as F
 
-    from ..sources.envelopes import parse_envelope_json_flagged
+    from ..sources.envelopes import parse_envelope_json_flagged, split_flagged
 
     raw = spark.read.parquet(quarantine_dir).select(
         "instance_name", F.col("raw_value").alias("value")
     )
     flagged = parse_envelope_json_flagged(raw).persist()
     try:
-        still_bad = flagged.filter(F.col("_is_bad")).count()
-        good = flagged.filter(~F.col("_is_bad")).select(
-            "instance_name", "op", "ts_ms", "source_table", "before"
-        )
+        good, bad = split_flagged(flagged)
+        still_bad = bad.count()
         target = build_pipeline(spark, good, cfg).persist()
         try:
             n_archived = target.count()

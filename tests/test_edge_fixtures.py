@@ -282,6 +282,10 @@ def test_near_dup_kernel_zero_norm_engine_consistent(spark, edge_emb_dir):
         # still appearing (undupped) in the output, and the identical
         # seed pair collapses to one cluster via the cid tiebreak
         "dedup_semantic_clusters",
+        # PQ: 6 vectors seed 6 of the 16 centroids per subspace, the
+        # zero vector's all-zero subvectors and the identical pair's
+        # tied subvectors go through the same nearest-centroid kernel
+        "embedding_pq_adc",
     ],
 )
 def test_ann_oracles_agree_on_degenerate_vectors(spark, edge_emb_dir, name):

@@ -284,57 +284,29 @@ class TestResidualPqRecall:
         assert {"vec_id", "pq", "code", "list_id"} <= set(df.columns)
 
 
-def test_pq_encode_arrow_matches_expression(spark):
-    """Round-14 Arrow encode kernel: the numpy argmin must reproduce
-    the interpreted `_sub_argmin` expression bit-for-bit — same int64
-    squared-L2 sums, ties to the smallest cid — on the real sf0.001
-    embeddings and on a crafted exact-tie codebook."""
-    from pyspark.sql import functions as F
-
-    from jly_flink_spark.io import load_table
-    from jly_flink_spark.operators import pq as PQ
-    from jly_flink_spark.operators.clustering import int8_codes
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    codes = emb.select(
-        "vec_id", int8_codes(F.col("embedding")).alias("code")
-    )
-    cent, coded, subdim = PQ.pq_train_encode(emb)
-    # expression path, built from the same final codebooks
-    cents1 = cent.agg(
-        F.collect_list(F.struct("sub", "cid", "carr")).alias("cents")
-    )
-    via_expr = {
-        r["vec_id"]: list(r["pq"])
-        for r in codes.crossJoin(F.broadcast(cents1))
-        .select(
-            "vec_id",
-            F.array(
-                *[
-                    PQ._sub_argmin(
-                        F.col("code"), F.col("cents"), s, subdim
-                    )
-                    for s in range(PQ.PQ_M)
-                ]
-            ).alias("pq"),
-        )
-        .collect()
-    }
-    via_arrow = {r["vec_id"]: list(r["pq"]) for r in coded.collect()}
-    assert via_arrow == via_expr
-
-    # exact tie: two identical sub-centroids -> smallest cid wins
+def test_pq_encode_ties_to_smallest_cid(spark):
+    """The nearest-centroid kernel on a crafted exact-tie codebook:
+    per subspace, the smallest cid among equidistant sub-centroids
+    wins (the oracles' (dist, cid) order; the `embedding_pq_adc`
+    oracle certifies the kernel on real and degenerate corpora)."""
     tie_codes = spark.createDataFrame(
         [(1, [5, 5, 0, 0])], "vec_id long, code array<bigint>"
     )
-    tie_cent = spark.createDataFrame(
-        [
-            (0, 0, [5, 5]),
-            (0, 1, [5, 5]),  # same distance as cid 0
-            (1, 0, [9, 9]),
-            (1, 1, [0, 0]),
-        ],
-        "sub bigint, cid bigint, carr array<bigint>",
-    )
-    got = PQ._encode(tie_codes, tie_cent, 2, 2).collect()[0]
+    tie_book = [
+        (0, 1, [5, 5]),  # same distance as cid 0
+        (0, 0, [5, 5]),
+        (1, 0, [9, 9]),
+        (1, 1, [0, 0]),
+    ]
+    got = PQ.nearest_centroids(tie_codes, tie_book).collect()[0]
     assert list(got["pq"]) == [0, 1]
+
+
+def test_nearest_centroids_rejects_empty_codebook(spark):
+    """Codes against an empty codebook fail with a named error, not
+    a raw numpy/dict exception."""
+    codes = spark.createDataFrame(
+        [(1, [5, 5, 0, 0])], "vec_id long, code array<bigint>"
+    )
+    with pytest.raises(Exception, match="empty codebook"):
+        PQ.nearest_centroids(codes, []).collect()

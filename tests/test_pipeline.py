@@ -142,7 +142,8 @@ def test_enrichment_plan_has_no_join(spark):
 class TestQuarantine:
     def test_corrupt_envelopes_quarantined_not_fatal(self, spark):
         from jly_flink_spark.sources.envelopes import (
-            parse_envelope_json_with_quarantine,
+            parse_envelope_json_flagged,
+            split_flagged,
         )
 
         rows = [
@@ -155,7 +156,7 @@ class TestQuarantine:
         ]
         rows.append(("src-2", None))  # Kafka/Debezium tombstone
         raw = spark.createDataFrame(rows, "instance_name string, value string")
-        good, bad = parse_envelope_json_with_quarantine(raw)
+        good, bad = split_flagged(parse_envelope_json_flagged(raw))
         g = good.collect()
         b = bad.collect()
         assert len(g) == 2 and len(b) == 3
@@ -166,7 +167,8 @@ class TestQuarantine:
     def test_quarantine_empty_on_clean_input(self, spark):
         from jly_flink_spark.sources.envelopes import (
             envelope_json_lines,
-            parse_envelope_json_with_quarantine,
+            parse_envelope_json_flagged,
+            split_flagged,
         )
         from jly_flink_spark.sources.envelopes import synth_envelopes_from_events
 
@@ -175,7 +177,7 @@ class TestQuarantine:
         events = load_table(spark, "/root/testdata/sf0.001", "events")
         env = synth_envelopes_from_events(events, n_instances=2)
         raw = envelope_json_lines(env).withColumnRenamed("value", "value")
-        good, bad = parse_envelope_json_with_quarantine(raw)
+        good, bad = split_flagged(parse_envelope_json_flagged(raw))
         assert bad.count() == 0
         assert good.count() == env.count()
 

@@ -237,11 +237,10 @@ class TestShuffleBudget:
             # gradient agg so the plan stays linear in epochs (a
             # second w reference doubles the subtree per epoch).
             ("quality_classifier_train", 18),
-            # K-means audit tail (post-checkpoint): the (cid,dim)
-            # update sums + the sizes rollup; assignment itself is a
-            # per-row broadcast fold with ZERO corpus shuffle —
-            # per-iteration internals sit behind the centroid
-            # localCheckpoints and shuffle only K*d partial sums
+            # K-means audit tail: the final sizes rollup; assignment
+            # is an Arrow kernel against driver-side centroids with
+            # ZERO corpus shuffle, and each round's K*d partial sums
+            # are collected during the build, not part of this plan
             ("embedding_kmeans_clusters", 4),
             # token-count groupBy + (d,w) counter groupBy (map-side
             # combined to <= D*W partials per partition) + probe
@@ -478,10 +477,10 @@ class TestShuffleBudget:
             # profiling: stack fans the ONE scan into (col, v) rows;
             # two-phase distinct-count partial + per-col final
             ("profile_lineitem_columns", 2),
-            # PQ-ADC: assignments are broadcast-fold expressions
-            # (zero corpus shuffle); the visible exchanges are the
-            # M·K·subdim codebook-update combines behind the
-            # per-iteration checkpoints + the top-k
+            # PQ-ADC: assignment is an Arrow kernel against the
+            # driver-side codebooks (zero corpus shuffle) and each
+            # round's M·K·subdim update sums are collected during the
+            # build; the visible exchange is the one-row LUT collect
             ("embedding_pq_adc", 4),
             # Zipf fit: one (source, term) combine + the per-source
             # head window (WindowGroupLimit) + the |sources|-row
@@ -772,6 +771,30 @@ class TestJobBudget:
             df.write.format("noop").mode("overwrite").save()
 
         assert jobs_run(spark, run) <= 21
+
+    def test_kmeans_job_budget(self, spark):
+        """Building and forcing the K-means audit: 12 jobs (18 when
+        K-means ran its own loop). K-means runs PQ's Lloyd loop with
+        one subspace: one seed collect, which also yields the
+        dimension, then one update action per round against
+        driver-side centroids — no centroid staging cut to force."""
+
+        def run():
+            df = REGISTRY["embedding_kmeans_clusters"].spark_fn(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+
+        assert jobs_run(spark, run) <= 12
+
+    def test_pq_adc_job_budget(self, spark):
+        """Building and forcing the PQ training + ADC audit: 11 jobs
+        (17 with a `first()` probe job for the dimension and a staged
+        codebook per round), the same loop as K-means with M=8."""
+
+        def run():
+            df = REGISTRY["embedding_pq_adc"].spark_fn(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+
+        assert jobs_run(spark, run) <= 11
 
 
 class TestScaleShapes:

@@ -153,42 +153,17 @@ def test_semdedup_ragged_embeddings_fail_loudly(spark, tmp_path):
         semantic_dup_flags(emb, k=1).collect()
 
 
-def test_assign_arrow_matches_expression(spark):
-    """Round-14 Arrow K-means assignment kernel: numpy argmin must
-    reproduce the interpreted `_argmin_cid` expression exactly,
-    including exact-distance ties (smallest cid wins)."""
-    from pyspark.sql import functions as F
+def test_assign_ties_to_smallest_cid(spark):
+    """K-means assignment runs PQ's nearest-centroid kernel with one
+    subspace: equidistant centroids must resolve to the smallest cid,
+    the (dist, cid) order of the `embedding_kmeans_clusters` oracle
+    (which certifies the kernel on the real corpus)."""
+    from jly_flink_spark.operators import pq as PQ
 
-    from jly_flink_spark.io import load_table
-    from jly_flink_spark.operators import clustering as C
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cent, asg = C.kmeans_fixed(emb)
-    codes = emb.select(
-        "vec_id", C.int8_codes(F.col("embedding")).alias("code")
-    )
-    cent1 = cent.agg(
-        F.collect_list(F.struct("cid", "carr")).alias("cents")
-    )
-    via_expr = {
-        r["vec_id"]: r["cid"]
-        for r in codes.crossJoin(F.broadcast(cent1))
-        .select(
-            "vec_id",
-            C._argmin_cid(F.col("code"), F.col("cents")).alias("cid"),
-        )
-        .collect()
-    }
-    via_arrow = {r["vec_id"]: r["cid"] for r in asg.collect()}
-    assert via_arrow == via_expr
-
-    # exact tie: equidistant centroids -> smallest cid
     tie_codes = spark.createDataFrame(
         [(7, [1, 0])], "vec_id long, code array<bigint>"
     )
-    tie_cent = spark.createDataFrame(
-        [(1, [2, 0]), (0, [0, 0])],  # both at squared distance 1
-        "cid bigint, carr array<bigint>",
-    )
-    got = C._assign(tie_codes, tie_cent).collect()[0]
-    assert got["cid"] == 0
+    # both at squared distance 1, listed larger cid first
+    tie_book = [(0, 1, [2, 0]), (0, 0, [0, 0])]
+    got = PQ.nearest_centroids(tie_codes, tie_book).collect()[0]
+    assert list(got["pq"]) == [0]

@@ -57,6 +57,10 @@ LR_NUM, LR_DEN = 8, 1  # learning rate 8 (clamped link tolerates it;
 # picked by simulating the exact integer recurrence on the corpus —
 # boundary false-positives fall 188 → 57 vs lr=1/2)
 EPOCHS = 8  # fixed unroll depth (like PR_ITERS)
+# The decision threshold: a doc is predicted good (and passes the
+# corpus quality gate) iff its hard-sigmoid score p > QUALITY_MIN_P —
+# the midpoint of the 0..S scale.
+QUALITY_MIN_P = 500
 
 # Weak-rule constants (mirror quality_filter_composite's shape).
 MIN_TOKENS = 5
@@ -229,11 +233,17 @@ def train_quality_classifier(
             F.sum(F.expr(f"CASE WHEN y = {S} THEN 1 ELSE 0 END")), F.lit(0)
         ).alias("n_label_pos"),
         F.coalesce(
-            F.sum(F.expr("CASE WHEN p > 500 THEN 1 ELSE 0 END")), F.lit(0)
+            F.sum(
+                F.expr(f"CASE WHEN p > {QUALITY_MIN_P} THEN 1 ELSE 0 END")
+            ),
+            F.lit(0),
         ).alias("n_pred_pos"),
         F.coalesce(
             F.sum(
-                F.expr(f"CASE WHEN p > 500 AND y = {S} THEN 1 ELSE 0 END")
+                F.expr(
+                    f"CASE WHEN p > {QUALITY_MIN_P} AND y = {S}"
+                    " THEN 1 ELSE 0 END"
+                )
             ),
             F.lit(0),
         ).alias("n_true_pos"),
@@ -277,7 +287,7 @@ def score_quality(docs: DataFrame, weights: dict[str, int]) -> DataFrame:
     return feats.select(
         "doc_id",
         F.expr(p).cast("bigint").alias("p"),
-        (F.expr(p) > 500).alias("keep"),
+        (F.expr(p) > QUALITY_MIN_P).alias("keep"),
     )
 
 

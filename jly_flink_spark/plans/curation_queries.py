@@ -508,8 +508,11 @@ def embedding_label_outliers(spark, sf_dir):
 # --------------------------------------------------------------------
 # Cross-source near-dup overlap
 # --------------------------------------------------------------------
-_XSRC_ORACLE = """
-WITH {doc_toks},
+def _xsrc_oracle() -> str:
+    from .northstar_queries import _DOC_TOKS_CTE
+
+    return f"""
+WITH {_DOC_TOKS_CTE},
 df AS (SELECT tok, count(*) AS dfreq FROM doc_toks GROUP BY tok),
 rare AS (SELECT d.doc_id, d.tok FROM doc_toks d
          JOIN df ON df.tok = d.tok AND df.dfreq <= 1000),
@@ -537,7 +540,7 @@ lab AS (
 )
 SELECT least(sa, sb) AS source_a, greatest(sa, sb) AS source_b,
        CAST(count(*) AS BIGINT) AS n_pairs,
-       {sum_jac} AS sum_jaccard
+       {dsum_sql("jaccard")} AS sum_jaccard
 FROM lab
 GROUP BY least(sa, sb), greatest(sa, sb)
 """
@@ -545,7 +548,7 @@ GROUP BY least(sa, sb), greatest(sa, sb)
 
 @register(
     "dedup_cross_source_overlap",
-    oracle=None,  # assembled at import (needs the shared doc_toks CTE)
+    oracle=_xsrc_oracle(),
     tags=("curation", "dedup", "provenance"),
     doc="Cross-source duplication matrix: verified near-dup pairs "
     "(exact token-set Jaccard ≥ 0.5, df-capped skew guard) labeled "
@@ -579,18 +582,6 @@ def dedup_cross_source_overlap(spark, sf_dir):
             dsum(F.col("jaccard"), "sum_jaccard"),
         )
     )
-
-
-def _finalize_xsrc_oracle() -> None:
-    from .northstar_queries import _DOC_TOKS_CTE
-    from .registry import REGISTRY
-
-    REGISTRY["dedup_cross_source_overlap"].oracle = _XSRC_ORACLE.format(
-        doc_toks=_DOC_TOKS_CTE, sum_jac=dsum_sql("jaccard")
-    )
-
-
-_finalize_xsrc_oracle()
 
 
 # --------------------------------------------------------------------
@@ -2575,6 +2566,7 @@ def _qc_oracle() -> str:
     from ..operators import classifier as C
 
     feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
+    cut = C.QUALITY_MIN_P
     weight_rows = "\nUNION ALL ".join(
         f"SELECT '{m}' AS metric, {w} AS value FROM {prev}"
         for m, w in C.WEIGHT_COLS
@@ -2589,10 +2581,10 @@ UNION ALL SELECT 'n_label_pos',
   CAST(coalesce(sum(CASE WHEN y = {C.S} THEN 1 ELSE 0 END), 0)
     AS BIGINT) FROM feats
 UNION ALL SELECT 'n_pred_pos',
-  CAST(coalesce(sum(CASE WHEN p > 500 THEN 1 ELSE 0 END), 0)
+  CAST(coalesce(sum(CASE WHEN p > {cut} THEN 1 ELSE 0 END), 0)
     AS BIGINT) FROM pred
 UNION ALL SELECT 'n_true_pos',
-  CAST(coalesce(sum(CASE WHEN p > 500 AND y = {C.S} THEN 1 ELSE 0 END),
+  CAST(coalesce(sum(CASE WHEN p > {cut} AND y = {C.S} THEN 1 ELSE 0 END),
     0) AS BIGINT) FROM pred
 """
 
@@ -2623,6 +2615,24 @@ def quality_classifier_train(spark, sf_dir):
 # --------------------------------------------------------------------
 # Distributed K-means over embeddings (fixed-point Lloyd's)
 # --------------------------------------------------------------------
+# Symmetric per-vector int8 absmax codes, v → floor(v·127/scale): the
+# head CTEs (q, codes) of the K-means, PQ and residual-PQ oracles.
+_INT8_CODES_CTES = """q AS (
+  SELECT vec_id,
+         greatest(list_max(list_transform(embedding,
+                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale,
+         embedding
+  FROM embeddings
+),
+codes AS (
+  SELECT vec_id,
+         list_transform(embedding, v ->
+           CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale) AS BIGINT))
+           AS code
+  FROM q
+)"""
+
+
 def _kmeans_cte_prefix(k_sql: str | None = None) -> tuple[str, str]:
     """The unrolled fixed-point K-means as a DuckDB WITH-clause
     prefix, shared by the `embedding_kmeans_clusters` oracle and the
@@ -2672,20 +2682,7 @@ cent{t} AS (
 )""")
         prev = f"cent{t}"
     prefix = f"""
-WITH q AS (
-  SELECT vec_id,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale,
-         embedding
-  FROM embeddings
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(embedding, v ->
-           CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale) AS BIGINT))
-           AS code
-  FROM q
-),
+WITH {_INT8_CODES_CTES},
 flat AS (
   SELECT vec_id,
          CAST(unnest(range(len(code))) AS BIGINT) AS dim,
@@ -3710,20 +3707,7 @@ pcent{t} AS MATERIALIZED (
   ) u ON u.sub = c.sub AND u.cid = c.cid AND u.sdim = c.sdim
 )""")
         prev = f"pcent{t}"
-    return f"""q AS (
-  SELECT vec_id,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale,
-         embedding
-  FROM embeddings
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(embedding, v ->
-           CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale) AS BIGINT))
-           AS code
-  FROM q
-),
+    return f"""{_INT8_CODES_CTES},
 sflat AS MATERIALIZED (
   SELECT vec_id,
          CAST(unnest(range(len(code))) AS BIGINT) // {64 // m} AS sub,
@@ -4495,20 +4479,7 @@ rcent{t} AS MATERIALIZED (
   ) u ON u.sub = c.sub AND u.cid = c.cid AND u.sdim = c.sdim
 )""")
         prev = f"rcent{t}"
-    return f"""q AS (
-  SELECT vec_id,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale,
-         embedding
-  FROM embeddings
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(embedding, v ->
-           CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale) AS BIGINT))
-           AS code
-  FROM q
-),
+    return f"""{_INT8_CODES_CTES},
 sflat AS MATERIALIZED (
   SELECT vec_id,
          CAST(unnest(range(len(code))) AS BIGINT) // {sub} AS sub,
@@ -5393,9 +5364,56 @@ DOREMI_MAX_DOMAIN_DOCS = 1_000_000
 DOREMI_ALPHA_DEN = 5  # α = 1/5 uniform smoothing (final = (4w+u)/5)
 
 
+def _doremi_oracle() -> str:
+    return f"""
+WITH {trigram_lm_ctes()},
+{kn_lm_ctes()},
+j AS (
+  SELECT d.source,
+         CAST(k.kn_logppl_micro // 1000 AS BIGINT) AS py,
+         CAST(a.logppl_micro // 1000 AS BIGINT) AS ry
+  FROM kn_docppl k
+  JOIN docppl a USING (doc_id)
+  JOIN documents d USING (doc_id)
+),
+per_src AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(py) AS BIGINT) AS sp,
+         CAST(sum(ry) AS BIGINT) AS sr
+  FROM j GROUP BY 1
+),
+stats AS (
+  SELECT source, n_docs,
+         CAST(sp // n_docs AS BIGINT) AS proxy_mean_milli,
+         CAST(sr // n_docs AS BIGINT) AS ref_mean_milli,
+         least(greatest(CAST(sp // n_docs AS BIGINT)
+                        - CAST(sr // n_docs AS BIGINT), 0),
+               {DOREMI_EXCESS_CAP_MILLI}) AS excess_milli
+  FROM per_src
+),
+num AS (
+  SELECT *, n_docs * CAST(round(exp(CAST(excess_milli AS DOUBLE)
+                / 1000.0) * 1000000) AS BIGINT) AS num
+  FROM stats
+),
+tot AS (
+  SELECT CAST(sum(num) AS BIGINT) AS tot,
+         CAST(count(*) AS BIGINT) AS n_src
+  FROM num
+)
+SELECT n.source, n.n_docs, n.proxy_mean_milli, n.ref_mean_milli,
+       n.excess_milli,
+       CAST((1000000 * n.num) // t.tot AS BIGINT) AS weight_ppm,
+       CAST((({DOREMI_ALPHA_DEN - 1} * ((1000000 * n.num) // t.tot))
+            + (1000000 // t.n_src)) // {DOREMI_ALPHA_DEN} AS BIGINT)
+         AS doremi_ppm
+FROM num n, tot t
+"""
+
+
 @register(
     "mixture_doremi_weights",
-    oracle=None,  # attached below (shares the two LM fragments)
+    oracle=_doremi_oracle(),
     tags=("curation", "mixture", "ml"),
     doc="DoReMi-style domain reweighting: per source, the mean "
     "milli-nat log-perplexity under the interpolated-KN LM (proxy) "
@@ -5494,71 +5512,34 @@ def mixture_doremi_weights(spark, sf_dir):
     )
 
 
-def _doremi_oracle() -> str:
-    return f"""
-WITH {trigram_lm_ctes()},
-{kn_lm_ctes()},
-j AS (
-  SELECT d.source,
-         CAST(k.kn_logppl_micro // 1000 AS BIGINT) AS py,
-         CAST(a.logppl_micro // 1000 AS BIGINT) AS ry
-  FROM kn_docppl k
-  JOIN docppl a USING (doc_id)
-  JOIN documents d USING (doc_id)
-),
-per_src AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(py) AS BIGINT) AS sp,
-         CAST(sum(ry) AS BIGINT) AS sr
-  FROM j GROUP BY 1
-),
-stats AS (
-  SELECT source, n_docs,
-         CAST(sp // n_docs AS BIGINT) AS proxy_mean_milli,
-         CAST(sr // n_docs AS BIGINT) AS ref_mean_milli,
-         least(greatest(CAST(sp // n_docs AS BIGINT)
-                        - CAST(sr // n_docs AS BIGINT), 0),
-               {DOREMI_EXCESS_CAP_MILLI}) AS excess_milli
-  FROM per_src
-),
-num AS (
-  SELECT *, n_docs * CAST(round(exp(CAST(excess_milli AS DOUBLE)
-                / 1000.0) * 1000000) AS BIGINT) AS num
-  FROM stats
-),
-tot AS (
-  SELECT CAST(sum(num) AS BIGINT) AS tot,
-         CAST(count(*) AS BIGINT) AS n_src
-  FROM num
-)
-SELECT n.source, n.n_docs, n.proxy_mean_milli, n.ref_mean_milli,
-       n.excess_milli,
-       CAST((1000000 * n.num) // t.tot AS BIGINT) AS weight_ppm,
-       CAST((({DOREMI_ALPHA_DEN - 1} * ((1000000 * n.num) // t.tot))
-            + (1000000 // t.n_src)) // {DOREMI_ALPHA_DEN} AS BIGINT)
-         AS doremi_ppm
-FROM num n, tot t
-"""
-
-
-from .registry import REGISTRY as _CREG  # noqa: E402
-from .registry import _impl_hash as _cimpl  # noqa: E402
-from .registry import _source_of as _csrc  # noqa: E402
-
-_CREG["mixture_doremi_weights"].oracle = _doremi_oracle()
-_CREG["mixture_doremi_weights"].impl_hash = _cimpl(
-    _csrc(mixture_doremi_weights), _CREG["mixture_doremi_weights"].oracle
-)
-
-
 # ---------------------------------------------------------------------------
 # Curriculum ordering (round 11): easy→hard training order with
 # round-robin source interleaving — the data-ordering op between
 # mixture weighting and sequence packing in a training pipeline.
 # ---------------------------------------------------------------------------
+def _curriculum_oracle() -> str:
+    return f"""
+WITH {kn_lm_ctes()},
+scored AS (
+  SELECT d.doc_id, d.source,
+         CAST(k.kn_logppl_micro // 1000 AS BIGINT) AS kn_milli
+  FROM kn_docppl k JOIN documents d USING (doc_id)
+),
+ranked AS (
+  SELECT *, CAST(row_number() OVER (PARTITION BY source
+              ORDER BY kn_milli, doc_id) AS BIGINT) AS wrank
+  FROM scored
+)
+SELECT doc_id, source, kn_milli, wrank,
+       CAST(row_number() OVER (ORDER BY wrank, source, doc_id)
+            AS BIGINT) AS curriculum_pos
+FROM ranked
+"""
+
+
 @register(
     "training_curriculum_order",
-    oracle=None,  # attached below (shares the KN fragment)
+    oracle=_curriculum_oracle(),
     tags=("curation", "training", "ranking"),
     doc="Curriculum order over the corpus: each document's "
     "difficulty is its interpolated-KN milli-nat log-perplexity "
@@ -5606,33 +5587,6 @@ def training_curriculum_order(spark, sf_dir):
     )
 
 
-def _curriculum_oracle() -> str:
-    return f"""
-WITH {kn_lm_ctes()},
-scored AS (
-  SELECT d.doc_id, d.source,
-         CAST(k.kn_logppl_micro // 1000 AS BIGINT) AS kn_milli
-  FROM kn_docppl k JOIN documents d USING (doc_id)
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY source
-              ORDER BY kn_milli, doc_id) AS BIGINT) AS wrank
-  FROM scored
-)
-SELECT doc_id, source, kn_milli, wrank,
-       CAST(row_number() OVER (ORDER BY wrank, source, doc_id)
-            AS BIGINT) AS curriculum_pos
-FROM ranked
-"""
-
-
-_CREG["training_curriculum_order"].oracle = _curriculum_oracle()
-_CREG["training_curriculum_order"].impl_hash = _cimpl(
-    _csrc(training_curriculum_order),
-    _CREG["training_curriculum_order"].oracle,
-)
-
-
 # ---------------------------------------------------------------------------
 # Heaps'-law vocabulary growth (round 11): V(N) ≈ K·N^β measured at
 # doubling corpus prefixes — the companion to text_zipf_fit (Zipf:
@@ -5643,9 +5597,62 @@ _CREG["training_curriculum_order"].impl_hash = _cimpl(
 HEAPS_MIN_DOCS = 16  # first checkpoint; doubles until the corpus ends
 
 
+def _heaps_oracle() -> str:
+    return f"""
+WITH ranked AS (
+  SELECT doc_id,
+         CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS rnk
+  FROM documents
+),
+tok1 AS (
+  SELECT tok, min(rnk) AS first_rnk FROM (
+    SELECT d.doc_id, unnest(list_filter(string_split(lower(d.text),
+           ' '), t -> t <> '')) AS tok
+    FROM documents d
+  ) t JOIN ranked r USING (doc_id)
+  GROUP BY tok
+),
+nd AS (SELECT max(rnk) AS n FROM ranked),
+cps AS (
+  SELECT CAST(p AS BIGINT) AS n_docs
+  FROM (SELECT {HEAPS_MIN_DOCS} * (1 << g) AS p
+        FROM unnest(generate_series(0, 50)) AS t(g)), nd
+  WHERE p < n
+  UNION
+  SELECT CAST(n AS BIGINT) AS n_docs FROM nd
+),
+curve AS (
+  SELECT c.n_docs,
+         CAST(count(t.first_rnk) AS BIGINT) AS vocab
+  FROM cps c LEFT JOIN tok1 t ON t.first_rnk <= c.n_docs
+  GROUP BY 1
+),
+pts AS (
+  SELECT n_docs, vocab,
+         CAST(round(ln(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT) AS x,
+         CAST(round(ln(CAST(greatest(vocab, 1) AS DOUBLE)) * 1000000)
+           AS BIGINT) AS y
+  FROM curve
+),
+fit AS (
+  SELECT CAST(count(*) AS BIGINT) AS k,
+         CAST(sum(x) AS BIGINT) AS sx,
+         CAST(sum(y) AS BIGINT) AS sy,
+         CAST(sum(x * y // 1000000) AS BIGINT) AS sxy,
+         CAST(sum(x * x // 1000000) AS BIGINT) AS sxx
+  FROM pts
+)
+SELECT p.n_docs, p.vocab, f.k,
+       CAST((1000000 * (f.k * f.sxy - f.sx // 1000 * (f.sy // 1000)))
+            // (f.k * f.sxx - f.sx // 1000 * (f.sx // 1000)) AS BIGINT)
+         AS beta_ppm
+FROM pts p, fit f
+"""
+
+
 @register(
     "text_heaps_fit",
-    oracle=None,  # attached below
+    oracle=_heaps_oracle(),
     tags=("curation", "text", "ml"),
     doc="Heaps'-law fit over doubling corpus prefixes: checkpoints "
     "N ∈ {16, 32, …} docs (doc_id order); V(N) = distinct tokens in "
@@ -5724,62 +5731,3 @@ def text_heaps_fit(spark, sf_dir):
         .select("n_docs", "vocab", "k", "beta_ppm")
         .orderBy("n_docs")
     )
-
-
-def _heaps_oracle() -> str:
-    return f"""
-WITH ranked AS (
-  SELECT doc_id,
-         CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS rnk
-  FROM documents
-),
-tok1 AS (
-  SELECT tok, min(rnk) AS first_rnk FROM (
-    SELECT d.doc_id, unnest(list_filter(string_split(lower(d.text),
-           ' '), t -> t <> '')) AS tok
-    FROM documents d
-  ) t JOIN ranked r USING (doc_id)
-  GROUP BY tok
-),
-nd AS (SELECT max(rnk) AS n FROM ranked),
-cps AS (
-  SELECT CAST(p AS BIGINT) AS n_docs
-  FROM (SELECT {HEAPS_MIN_DOCS} * (1 << g) AS p
-        FROM unnest(generate_series(0, 50)) AS t(g)), nd
-  WHERE p < n
-  UNION
-  SELECT CAST(n AS BIGINT) AS n_docs FROM nd
-),
-curve AS (
-  SELECT c.n_docs,
-         CAST(count(t.first_rnk) AS BIGINT) AS vocab
-  FROM cps c LEFT JOIN tok1 t ON t.first_rnk <= c.n_docs
-  GROUP BY 1
-),
-pts AS (
-  SELECT n_docs, vocab,
-         CAST(round(ln(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT) AS x,
-         CAST(round(ln(CAST(greatest(vocab, 1) AS DOUBLE)) * 1000000)
-           AS BIGINT) AS y
-  FROM curve
-),
-fit AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y // 1000000) AS BIGINT) AS sxy,
-         CAST(sum(x * x // 1000000) AS BIGINT) AS sxx
-  FROM pts
-)
-SELECT p.n_docs, p.vocab, f.k,
-       CAST((1000000 * (f.k * f.sxy - f.sx // 1000 * (f.sy // 1000)))
-            // (f.k * f.sxx - f.sx // 1000 * (f.sx // 1000)) AS BIGINT)
-         AS beta_ppm
-FROM pts p, fit f
-"""
-
-
-_CREG["text_heaps_fit"].oracle = _heaps_oracle()
-_CREG["text_heaps_fit"].impl_hash = _cimpl(
-    _csrc(text_heaps_fit), _CREG["text_heaps_fit"].oracle
-)

@@ -776,63 +776,6 @@ def ann_cosine_lsh(spark, sf_dir):
     )
 
 
-_IVF_INDEX_CACHE: dict[str, list] = {}
-
-
-@register(
-    "ann_cosine_ivf",
-    oracle=None,  # approximate (n_probe < n_list ⇒ recall<1) — rows-only
-    tags=("northstar", "similarity", "approx"),
-    doc="IVF(-Flat) approximate cosine top-k: deterministic seed "
-    "centroids + one distributed Lloyd step, coarse-quantizer "
-    "assignment, n_probe-pruned probing. With n_probe == n_list it "
-    "equals brute force exactly (tested); at n_probe < n_list it is "
-    "the (n_probe/n_list)-cost scale path. Index (centroids) built "
-    "once per corpus and memoized — the build/serve split.",
-)
-def ann_cosine_ivf(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    # The index is deterministic model state per corpus: build once,
-    # serve every query batch (rebuilding per query would charge the
-    # one-time build cost to every probe).
-    cents = _IVF_INDEX_CACHE.get(sf_dir)
-    if cents is None:
-        cents = similarity.build_ivf_centroids(emb)
-        _IVF_INDEX_CACHE[sf_dir] = cents
-    return similarity.cosine_topk_ivf(
-        emb,
-        query_ids=_ANN_QUERY_IDS,
-        k=_ANN_K,
-        centroids=cents,
-    )
-
-
-@register(
-    "ann_cosine_ivf_exact",
-    oracle=_ann_oracle(),
-    tags=("northstar", "similarity"),
-    doc="IVF with n_probe == n_list: every list probed, so the result "
-    "equals brute force EXACTLY and the whole IVF machinery "
-    "(assignment UDF, probe selection, per-list scoring) is "
-    "value-hash-checked against the brute-force oracle — the "
-    "correctness anchor for the pruned ann_cosine_ivf variant.",
-)
-def ann_cosine_ivf_exact(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = _IVF_INDEX_CACHE.get(sf_dir)
-    if cents is None:
-        cents = similarity.build_ivf_centroids(emb)
-        _IVF_INDEX_CACHE[sf_dir] = cents
-    return similarity.cosine_topk_ivf(
-        emb,
-        query_ids=_ANN_QUERY_IDS,
-        k=_ANN_K,
-        n_list=16,
-        n_probe=16,
-        centroids=cents,
-    )
-
-
 _IVF_INT8_N_LIST = 16
 _IVF_INT8_N_PROBE = 4
 _IVF_INT8_LAYOUT_CACHE: dict[str, tuple[str, list]] = {}
@@ -1121,17 +1064,61 @@ SELECT query_id, cand_id, cosine, rnk FROM (
 """
 
 
-# Retire ann_cosine_ivf's rows-only status (round-11): the pruned
-# float serving path now carries the full unrolled-CTE oracle — the
-# int8 sibling proved the pattern; this closes the set to 1.
-from .registry import REGISTRY as _NREG  # noqa: E402
-from .registry import _impl_hash as _nimpl  # noqa: E402
-from .registry import _source_of as _nsrc  # noqa: E402
+_IVF_INDEX_CACHE: dict[str, list] = {}
 
-_NREG["ann_cosine_ivf"].oracle = _ivf_float_oracle()
-_NREG["ann_cosine_ivf"].impl_hash = _nimpl(
-    _nsrc(ann_cosine_ivf), _NREG["ann_cosine_ivf"].oracle
+
+@register(
+    "ann_cosine_ivf",
+    oracle=_ivf_float_oracle(),
+    tags=("northstar", "similarity", "approx"),
+    doc="IVF(-Flat) approximate cosine top-k: deterministic seed "
+    "centroids + one distributed Lloyd step, coarse-quantizer "
+    "assignment, n_probe-pruned probing. With n_probe == n_list it "
+    "equals brute force exactly (tested); at n_probe < n_list it is "
+    "the (n_probe/n_list)-cost scale path. Index (centroids) built "
+    "once per corpus and memoized — the build/serve split.",
 )
+def ann_cosine_ivf(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    # The index is deterministic model state per corpus: build once,
+    # serve every query batch (rebuilding per query would charge the
+    # one-time build cost to every probe).
+    cents = _IVF_INDEX_CACHE.get(sf_dir)
+    if cents is None:
+        cents = similarity.build_ivf_centroids(emb)
+        _IVF_INDEX_CACHE[sf_dir] = cents
+    return similarity.cosine_topk_ivf(
+        emb,
+        query_ids=_ANN_QUERY_IDS,
+        k=_ANN_K,
+        centroids=cents,
+    )
+
+
+@register(
+    "ann_cosine_ivf_exact",
+    oracle=_ann_oracle(),
+    tags=("northstar", "similarity"),
+    doc="IVF with n_probe == n_list: every list probed, so the result "
+    "equals brute force EXACTLY and the whole IVF machinery "
+    "(assignment UDF, probe selection, per-list scoring) is "
+    "value-hash-checked against the brute-force oracle — the "
+    "correctness anchor for the pruned ann_cosine_ivf variant.",
+)
+def ann_cosine_ivf_exact(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = _IVF_INDEX_CACHE.get(sf_dir)
+    if cents is None:
+        cents = similarity.build_ivf_centroids(emb)
+        _IVF_INDEX_CACHE[sf_dir] = cents
+    return similarity.cosine_topk_ivf(
+        emb,
+        query_ids=_ANN_QUERY_IDS,
+        k=_ANN_K,
+        n_list=16,
+        n_probe=16,
+        centroids=cents,
+    )
 
 
 @register(
@@ -3659,6 +3646,13 @@ from ..operators.multimodal import (  # noqa: E402
     DHASH_N_BANDS,
 )
 
+# 2 hex chars of an md5 digest `d` -> 0..255: the planted pixel / PCM
+# sample value of the image, audio and video tiers
+_HEX2_SQL = (
+    "(instr('0123456789abcdef', substring(d, 1, 1)) - 1) * 16 + "
+    "(instr('0123456789abcdef', substring(d, 2, 1)) - 1)"
+)
+
 
 def dhash_pair_ctes(p: str = "") -> str:
     """The planted-pixel → dHash → Hamming-band candidate-pair chain
@@ -3671,11 +3665,6 @@ def dhash_pair_ctes(p: str = "") -> str:
     from ..operators.multimodal import DHASH_GRID, MALFORMED_MOD
 
     g = DHASH_GRID
-    # 2-hex-char -> 0..255 byte value (the md5-prefix pixel)
-    hex2 = (
-        "(instr('0123456789abcdef', substring(d, 1, 1)) - 1) * 16 + "
-        "(instr('0123456789abcdef', substring(d, 2, 1)) - 1)"
-    )
     return f"""{p}toks AS (
   SELECT doc_id, {_TOKS} AS ts FROM documents
   WHERE doc_id % {MALFORMED_MOD} <> 0
@@ -3687,7 +3676,7 @@ def dhash_pair_ctes(p: str = "") -> str:
   WHERE len(ts) >= 1
 ),
 {p}pix AS (
-  SELECT doc_id, idx, CAST({hex2} AS BIGINT) AS px FROM {p}cells
+  SELECT doc_id, idx, CAST({_HEX2_SQL} AS BIGINT) AS px FROM {p}cells
 ),
 {p}bits AS (
   SELECT a.doc_id,
@@ -4193,10 +4182,6 @@ def _crosscheck_oracle() -> str:
     g = DHASH_GRID
     g16 = AHASH_SRC_GRID
     h16 = g16 // 2
-    hex2 = (
-        "(instr('0123456789abcdef', substring(d, 1, 1)) - 1) * 16 + "
-        "(instr('0123456789abcdef', substring(d, 2, 1)) - 1)"
-    )
     return f"""
 WITH toks AS (
   SELECT doc_id, {_TOKS} AS ts FROM documents
@@ -4209,7 +4194,7 @@ cells AS (
   WHERE len(ts) >= 1
 ),
 pix AS (
-  SELECT doc_id, idx, CAST({hex2} AS BIGINT) AS px FROM cells
+  SELECT doc_id, idx, CAST({_HEX2_SQL} AS BIGINT) AS px FROM cells
 ),
 dbits AS (
   SELECT a.doc_id,
@@ -4228,7 +4213,7 @@ cells16 AS (
   WHERE len(ts) >= 1
 ),
 pix16 AS (
-  SELECT doc_id, idx, CAST({hex2} AS BIGINT) AS px FROM cells16
+  SELECT doc_id, idx, CAST({_HEX2_SQL} AS BIGINT) AS px FROM cells16
 ),
 pooled AS (
   SELECT doc_id,
@@ -4385,11 +4370,6 @@ def audio_pair_ctes(p: str = "aud") -> str:
     )
 
     n = AUDIO_FRAMES * AUDIO_FRAME_LEN
-    # 2-hex-char -> 0..255 sample value (the md5-prefix sample)
-    hex2 = (
-        "(instr('0123456789abcdef', substring(d, 1, 1)) - 1) * 16 + "
-        "(instr('0123456789abcdef', substring(d, 2, 1)) - 1)"
-    )
     return f"""{p}toks AS (
   SELECT doc_id, {_TOKS} AS ts FROM documents
   WHERE doc_id % {MALFORMED_MOD} <> 0
@@ -4402,7 +4382,7 @@ def audio_pair_ctes(p: str = "aud") -> str:
   WHERE len(ts) >= 1
 ),
 {p}samp AS (
-  SELECT doc_id, idx, CAST({hex2} AS BIGINT) AS v FROM {p}cells
+  SELECT doc_id, idx, CAST({_HEX2_SQL} AS BIGINT) AS v FROM {p}cells
 ),
 {p}energy AS (
   SELECT doc_id, idx // {AUDIO_FRAME_LEN} AS f,
@@ -4630,10 +4610,6 @@ def video_pair_ctes(p: str = "v") -> str:
 
     g = DHASH_GRID
     n = VIDEO_FRAMES * g * g
-    hex2 = (
-        "(instr('0123456789abcdef', substring(d, 1, 1)) - 1) * 16 + "
-        "(instr('0123456789abcdef', substring(d, 2, 1)) - 1)"
-    )
     return f"""{p}toks AS (
   SELECT doc_id, {_TOKS} AS ts FROM documents
   WHERE doc_id % {MALFORMED_MOD} <> 0
@@ -4647,7 +4623,7 @@ def video_pair_ctes(p: str = "v") -> str:
 ),
 {p}samp AS (
   SELECT doc_id, idx // {g * g} AS f, idx % {g * g} AS cell,
-         CAST({hex2} AS BIGINT) AS v
+         CAST({_HEX2_SQL} AS BIGINT) AS v
   FROM {p}cells
 ),
 {p}hash AS MATERIALIZED (

@@ -13,6 +13,7 @@ Contract per entry:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import inspect
 from dataclasses import dataclass
@@ -23,16 +24,21 @@ from pyspark.sql import DataFrame, SparkSession
 from ..io import register_views
 
 
-@dataclass
+@dataclass(frozen=True)
 class QuerySpec:
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]
     tags: tuple[str, ...] = ()
     doc: str = ""
-    impl_hash: str = ""  # md5(query fn source + oracle SQL) — a green
-    # CORRECTNESS row certifies THIS hash; rewrites re-enter the
-    # unverified-first rotation (see __spark_entry__.queries).
+    impl_hash: str = ""  # md5(undecorated query fn source + oracle
+    # SQL) for `register`, md5(sql + oracle) for `register_sql`,
+    # computed once when the query registers. The spec is frozen and
+    # the oracle is an argument of the decorator, so the hash always
+    # covers the body and the oracle that run (pinned by
+    # tests/test_verified_hashes.py). A green CORRECTNESS row
+    # certifies THIS hash; rewrites re-enter the unverified-first
+    # rotation (see __spark_entry__.queries).
     # LIMITATION: the hash does NOT cover the operators/ helpers the
     # fn calls, so a helper rewrite leaves pins valid — deliberate
     # (hashing helpers would re-queue every query on any edit and
@@ -68,14 +74,13 @@ def register(
     """Decorator: register a (spark, sf_dir) -> DataFrame query."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Oracle comparison requires UTC-naive timestamp parity with
             # DuckDB regardless of how the caller built the session.
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             return fn(spark, sf_dir)
 
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
         REGISTRY[name] = QuerySpec(
             name=name, spark_fn=wrapped, oracle=oracle, tags=tags,
             doc=doc or (fn.__doc__ or ""),
@@ -91,7 +96,6 @@ def register_sql(
     sql: str,
     tags: tuple[str, ...] = (),
     doc: str = "",
-    oracle: Optional[str] = "__same__",
 ):
     """Register a query whose Spark plan and DuckDB oracle are the SAME
     ANSI SQL text (dialect-shared subset). Catalyst still plans it —
@@ -103,14 +107,13 @@ def register_sql(
         return spark.sql(sql)
 
     spark_fn.__name__ = name
-    resolved_oracle = sql if oracle == "__same__" else oracle
     REGISTRY[name] = QuerySpec(
         name=name,
         spark_fn=spark_fn,
-        oracle=resolved_oracle,
+        oracle=sql,
         tags=tags,
         doc=doc,
-        impl_hash=_impl_hash(sql, resolved_oracle),
+        impl_hash=_impl_hash(sql, sql),
     )
     return spark_fn
 

@@ -529,9 +529,73 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 )
 
 
+HLL_M = 64  # registers (p=6): rse ≈ 1.04/sqrt(64) ≈ 13%
+HLL_RANK_CAP = 30  # rank saturates at 30 (P[rank>30] = 2^-29/value):
+# keeps alpha·m²·2^cap inside int64 so the estimator divides in EXACT
+# integer arithmetic — estimates saturate near 2^30 distincts, far
+# beyond any per-group cardinality this sketch would be sized for
+HLL_ALPHA_PPM = 709_340  # alpha_64 = 0.7213/(1 + 1.079/64), in ppm
+_HLL_NUM = HLL_ALPHA_PPM * HLL_M * HLL_M * 2**HLL_RANK_CAP  # ≈3.1e18
+# rank = leading-zeros-of-50-bit-remainder + 1 = 51 - bit_length(rem);
+# bin() is unpadded in BOTH engines, so bit_length = length(bin(x))
+_HLL_RANK_SQL = (
+    f"least(CASE WHEN {{rem}} = 0 THEN 51"
+    f" ELSE 51 - length(bin({{rem}})) END, {HLL_RANK_CAP})"
+)
+# HLL small-range switch threshold, 2.5·m in micro-counts (exact:
+# 2.5·64 = 160) — the classic estimator's linear-counting boundary
+_HLL_LC_THRESH_MICRO = (5 * HLL_M // 2) * 1_000_000
+
+
+def _approx_distinct_oracle() -> str:
+    from ..operators.dedup import _sql_hex_to_int
+
+    rank = _HLL_RANK_SQL.format(rem="h // 64")
+    empty_inv = 2**HLL_RANK_CAP
+    raw_micro = (
+        f"({_HLL_NUM} // (s.present_inv"
+        f" + ({HLL_M} - s.n_present) * {empty_inv}))"
+    )
+    chosen = (
+        f"CASE WHEN {raw_micro} <= {_HLL_LC_THRESH_MICRO}"
+        f" AND s.n_present < {HLL_M}"
+        f" THEN CAST(round({HLL_M} * ln({HLL_M}.0"
+        f" / ({HLL_M} - s.n_present)) * 1000000) AS BIGINT)"
+        f" ELSE {raw_micro} END"
+    )
+    return f"""
+WITH hashed AS (
+  SELECT l_returnflag, ({_sql_hex_to_int(1)}) AS h
+  FROM (SELECT l_returnflag, md5(CAST(l_partkey AS VARCHAR)) AS d
+        FROM lineitem)
+),
+pv AS (
+  SELECT l_returnflag, h % {HLL_M} AS reg, {rank} AS rk FROM hashed
+),
+regs AS (
+  SELECT l_returnflag, reg, max(rk) AS mj FROM pv GROUP BY 1, 2
+),
+sk AS (
+  SELECT l_returnflag,
+         CAST(count(*) AS BIGINT) AS n_present,
+         CAST(sum(CAST(pow(2.0, {HLL_RANK_CAP} - mj) AS BIGINT))
+              AS BIGINT) AS present_inv
+  FROM regs GROUP BY 1
+),
+nrow AS (
+  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n
+  FROM lineitem GROUP BY 1
+)
+SELECT r.l_returnflag,
+       CAST(({chosen}) // 1000000 AS BIGINT) AS approx_parts,
+       r.n
+FROM nrow r JOIN sk s USING (l_returnflag)
+"""
+
+
 @register(
     "agg_approx_distinct",
-    oracle=None,  # attached below (shares the HLL register fragments)
+    oracle=_approx_distinct_oracle(),
     tags=("groupby", "approx"),
     doc="HyperLogLog approximate distinct — the 100-TB path for "
     "distinct counts, now FULLY value-hash-checked (round-11, "
@@ -595,52 +659,6 @@ def agg_approx_distinct(spark, sf_dir):
         ),
         "n",
     )
-
-
-def _approx_distinct_oracle() -> str:
-    from ..operators.dedup import _sql_hex_to_int
-
-    rank = _HLL_RANK_SQL.format(rem="h // 64")
-    empty_inv = 2**HLL_RANK_CAP
-    raw_micro = (
-        f"({_HLL_NUM} // (s.present_inv"
-        f" + ({HLL_M} - s.n_present) * {empty_inv}))"
-    )
-    chosen = (
-        f"CASE WHEN {raw_micro} <= {_HLL_LC_THRESH_MICRO}"
-        f" AND s.n_present < {HLL_M}"
-        f" THEN CAST(round({HLL_M} * ln({HLL_M}.0"
-        f" / ({HLL_M} - s.n_present)) * 1000000) AS BIGINT)"
-        f" ELSE {raw_micro} END"
-    )
-    return f"""
-WITH hashed AS (
-  SELECT l_returnflag, ({_sql_hex_to_int(1)}) AS h
-  FROM (SELECT l_returnflag, md5(CAST(l_partkey AS VARCHAR)) AS d
-        FROM lineitem)
-),
-pv AS (
-  SELECT l_returnflag, h % {HLL_M} AS reg, {rank} AS rk FROM hashed
-),
-regs AS (
-  SELECT l_returnflag, reg, max(rk) AS mj FROM pv GROUP BY 1, 2
-),
-sk AS (
-  SELECT l_returnflag,
-         CAST(count(*) AS BIGINT) AS n_present,
-         CAST(sum(CAST(pow(2.0, {HLL_RANK_CAP} - mj) AS BIGINT))
-              AS BIGINT) AS present_inv
-  FROM regs GROUP BY 1
-),
-nrow AS (
-  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n
-  FROM lineitem GROUP BY 1
-)
-SELECT r.l_returnflag,
-       CAST(({chosen}) // 1000000 AS BIGINT) AS approx_parts,
-       r.n
-FROM nrow r JOIN sk s USING (l_returnflag)
-"""
 
 
 KMV_K = 128  # sketch size: ~1/sqrt(K) ≈ 9% relative error
@@ -722,24 +740,6 @@ def agg_kmv_distinct(spark, sf_dir):
         "n_distinct",
         est.cast("bigint").alias("kmv_estimate"),
     )
-
-
-HLL_M = 64  # registers (p=6): rse ≈ 1.04/sqrt(64) ≈ 13%
-HLL_RANK_CAP = 30  # rank saturates at 30 (P[rank>30] = 2^-29/value):
-# keeps alpha·m²·2^cap inside int64 so the estimator divides in EXACT
-# integer arithmetic — estimates saturate near 2^30 distincts, far
-# beyond any per-group cardinality this sketch would be sized for
-HLL_ALPHA_PPM = 709_340  # alpha_64 = 0.7213/(1 + 1.079/64), in ppm
-_HLL_NUM = HLL_ALPHA_PPM * HLL_M * HLL_M * 2**HLL_RANK_CAP  # ≈3.1e18
-# rank = leading-zeros-of-50-bit-remainder + 1 = 51 - bit_length(rem);
-# bin() is unpadded in BOTH engines, so bit_length = length(bin(x))
-_HLL_RANK_SQL = (
-    f"least(CASE WHEN {{rem}} = 0 THEN 51"
-    f" ELSE 51 - length(bin({{rem}})) END, {HLL_RANK_CAP})"
-)
-# HLL small-range switch threshold, 2.5·m in micro-counts (exact:
-# 2.5·64 = 160) — the classic estimator's linear-counting boundary
-_HLL_LC_THRESH_MICRO = (5 * HLL_M // 2) * 1_000_000
 
 
 def _hll_oracle() -> str:
@@ -2943,18 +2943,3 @@ def orders_runs_test(spark, sf_dir):
         ).alias("mu_ppm"),
         F.expr(_RUNS_Z_EXPR).alias("z_milli"),
     )
-
-
-# Retire agg_approx_distinct's rows-only status (round 11, verdict
-# task 6): the oracle derives from the deterministic HLL register
-# state with the estimator decision rule in both engines — the
-# registry sweep is now 100% value-verified. Attached post-hoc
-# because the oracle shares the HLL constants defined mid-module.
-from .registry import REGISTRY as _RREG  # noqa: E402
-from .registry import _impl_hash as _rimpl  # noqa: E402
-from .registry import _source_of as _rsrc  # noqa: E402
-
-_RREG["agg_approx_distinct"].oracle = _approx_distinct_oracle()
-_RREG["agg_approx_distinct"].impl_hash = _rimpl(
-    _rsrc(agg_approx_distinct), _RREG["agg_approx_distinct"].oracle
-)

@@ -1038,7 +1038,11 @@ def _wp_cte_prefix() -> str:
     weighted symbol counts from the evolving symbol table, the
     quantized likelihood score (the module's WP_SCORE_SQL string,
     verbatim), (score DESC, a, b) winner selection, and the greedy
-    fold with the '##' strip on the right part."""
+    fold with the '##' strip on the right part. Each round's symbol
+    table st{r} and symbol counts sc{r} are read by several CTEs, so
+    they are MATERIALIZED: DuckDB otherwise inlines every reference
+    and the unrolled plan grows ~3^rounds (out of memory even at
+    sf0.001)."""
     from ..operators.wordpiece import WP_ROUNDS, WP_SCORE_SQL
 
     blocks = []
@@ -1053,7 +1057,7 @@ pc{r} AS (
   )
   GROUP BY a, b
 ),
-sc{r} AS (
+sc{r} AS MATERIALIZED (
   SELECT sym, CAST(sum(cnt) AS BIGINT) AS c
   FROM (SELECT cnt, unnest(syms) AS sym FROM {prev})
   GROUP BY sym
@@ -1067,7 +1071,7 @@ top{r} AS (
   )
   ORDER BY score_micro DESC, a, b LIMIT 1
 ),
-st{r} AS (
+st{r} AS MATERIALIZED (
   SELECT s.cnt,
          list_reduce(list_transform(s.syms, x -> [x]),
            (acc, x) -> CASE WHEN acc[-1] = t.a AND x[1] = t.b
@@ -1087,7 +1091,7 @@ vocab AS (
   FROM (SELECT unnest(ts) AS tok FROM toks)
   GROUP BY tok
 ),
-st0 AS (
+st0 AS MATERIALIZED (
   SELECT cnt,
          list_transform(generate_series(1, length(word)),
            i -> CASE WHEN i = 1 THEN word[i]
@@ -1400,44 +1404,6 @@ def unigram_lm_tokenize_stats(spark, sf_dir):
     return unigram_tokenize_stats(load_table(spark, sf_dir, "documents"))
 
 
-@register(
-    "dedup_connected_components",
-    oracle=None,  # set below — built from the shared minhash params
-    tags=("training", "dedup", "iterative"),
-    doc="The full dedup clustering pipeline: MinHash-LSH candidates → "
-    "exact-Jaccard(≥0.8) verification on full token sets → connected "
-    "components by iterative min-label propagation (O(diameter) "
-    "rounds, lineage-truncated, (node,label)-only shuffles). No "
-    "document-frequency heuristics anywhere: LSH already bounds the "
-    "candidate set, so verification is |candidates|·tokens work at "
-    "any corpus size. Oracle computes identical components via "
-    "recursive-CTE transitive closure.",
-)
-def dedup_connected_components(spark, sf_dir):
-    from ..operators import dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    # one staged tokenize pass shared by the signature and the verify
-    # (same discipline as _corpus_through_decontamination)
-    from ..io import ensure_min_parallelism, stage
-
-    toks1 = stage(
-        ensure_min_parallelism(
-            docs.select("doc_id", "text"), keys=["doc_id"]
-        ).select(
-            "doc_id",
-            F.array_distinct(tokens(F.col("text"))).alias("ts"),
-        )
-    )
-    candidates = dedup.minhash_pairs_from_bands(
-        dedup.minhash_bands(dedup.minhash_signature_from_tokens(toks1))
-    )
-    edges = dedup.verify_candidates_jaccard(
-        docs, candidates, min_jaccard=0.8, toks_arr=toks1
-    ).select("doc_a", "doc_b")
-    return dedup.connected_components(edges)
-
-
 def _cc_oracle() -> str:
     from ..operators import dedup
 
@@ -1485,11 +1451,42 @@ SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
 """
 
 
-# late-bind the generated oracle (kept in lockstep with the minhash
-# params so the two sides cannot drift)
-from .registry import REGISTRY as _REG  # noqa: E402
+@register(
+    "dedup_connected_components",
+    oracle=_cc_oracle(),
+    tags=("training", "dedup", "iterative"),
+    doc="The full dedup clustering pipeline: MinHash-LSH candidates → "
+    "exact-Jaccard(≥0.8) verification on full token sets → connected "
+    "components by iterative min-label propagation (O(diameter) "
+    "rounds, lineage-truncated, (node,label)-only shuffles). No "
+    "document-frequency heuristics anywhere: LSH already bounds the "
+    "candidate set, so verification is |candidates|·tokens work at "
+    "any corpus size. Oracle computes identical components via "
+    "recursive-CTE transitive closure.",
+)
+def dedup_connected_components(spark, sf_dir):
+    from ..operators import dedup
 
-_REG["dedup_connected_components"].oracle = _cc_oracle()
+    docs = load_table(spark, sf_dir, "documents")
+    # one staged tokenize pass shared by the signature and the verify
+    # (same discipline as _corpus_through_decontamination)
+    from ..io import ensure_min_parallelism, stage
+
+    toks1 = stage(
+        ensure_min_parallelism(
+            docs.select("doc_id", "text"), keys=["doc_id"]
+        ).select(
+            "doc_id",
+            F.array_distinct(tokens(F.col("text"))).alias("ts"),
+        )
+    )
+    candidates = dedup.minhash_pairs_from_bands(
+        dedup.minhash_bands(dedup.minhash_signature_from_tokens(toks1))
+    )
+    edges = dedup.verify_candidates_jaccard(
+        docs, candidates, min_jaccard=0.8, toks_arr=toks1
+    ).select("doc_a", "doc_b")
+    return dedup.connected_components(edges)
 
 
 CHUNK_TOKENS = 16
@@ -1610,25 +1607,9 @@ def chunk_documents_overlap(spark, sf_dir):
     )
 
 
-_PIPELINE_DECOR = dict(
-    oracle=None,  # generated below from the shared fragments
-    tags=("training", "pipeline", "dedup", "headline"),
-    doc="The whole training-corpus preparation as ONE declarative "
-    "plan: exact dedup (keep canonical fingerprint row) → near-dup "
-    "removal (MinHash-LSH candidates, exact-Jaccard≥0.8 verify, "
-    "greedy keep-smallest — drop every doc_b of a verified pair) → "
-    "benchmark decontamination (no shared 3-gram with the held-out "
-    "set) → quality filter (score ≥ 0.7) → deterministic 90/10 hash "
-    "split → per-(split, lang) corpus stats. Catalyst sees the full "
-    "pipeline and prunes/pushes across stage boundaries; every stage "
-    "is a pure function of the input, so the whole composite is "
-    "value-hash checked against one oracle CTE chain.",
-)
-
-
 def _corpus_through_decontamination(spark, sf_dir):
-    """Stages 1-3 of the corpus pipeline, shared by both quality-gate
-    variants: returns (docs, kept3) — the raw table and the exact-
+    """Stages 1-3 of the corpus pipeline, shared by every quality-gate
+    variant: returns (docs, kept3) — the raw table and the exact-
     deduped → near-dup-pruned → decontaminated survivor frame."""
     from ..operators import dedup
     from ..operators.text import trigram_shingles
@@ -1690,8 +1671,8 @@ def _corpus_through_decontamination(spark, sf_dir):
 
 
 def _split_and_stats(kept4):
-    """Stage 5: deterministic 90/10 hash split + per-(split, lang)
-    corpus stats — shared by both pipeline variants."""
+    """The last stage: deterministic 90/10 hash split + per-(split, lang)
+    corpus stats — shared by every corpus pipeline."""
     from ..operators.text import token_count
 
     split = F.when(_hash_frac(F.col("doc_id")) < 0.9, "train").otherwise(
@@ -1711,22 +1692,9 @@ def _split_and_stats(kept4):
     )
 
 
-@register("pipeline_training_corpus", **_PIPELINE_DECOR)
-def pipeline_training_corpus(spark, sf_dir):
-    from ..operators.text import quality_score
-
-    _, kept3 = _corpus_through_decontamination(spark, sf_dir)
-
-    # 4. quality gate (rule-based heuristic score)
-    kept4 = kept3.filter(quality_score(F.col("text")) >= 0.7)
-
-    # 5. deterministic split + corpus stats
-    return _split_and_stats(kept4)
-
-
 def _pipeline_kept3_ctes() -> str:
     """The stage-1..3 oracle CTE chain (fp → … → kept3), shared by
-    both pipeline-variant oracles."""
+    every corpus-pipeline oracle."""
     from ..operators import dedup
     from .northstar_queries import _FP, _TOKS
 
@@ -1790,9 +1758,9 @@ kept3 AS (
 )"""
 
 
-def _pipeline_final_sql() -> str:
-    """The stage-5 oracle tail (split + stats over kept4), shared by
-    both pipeline-variant oracles."""
+def _pipeline_final_sql(src: str) -> str:
+    """The oracle tail: split + stats over the final survivor CTE
+    `src`, shared by every corpus-pipeline oracle."""
     from ..functions import hash_frac_sql
     from .northstar_queries import _TOKS
 
@@ -1802,7 +1770,7 @@ SELECT CASE WHEN {hash_frac_sql("doc_id")} < 0.9 THEN 'train'
        lang,
        count(*) AS n_docs,
        CAST(sum(len({_TOKS})) AS BIGINT) AS total_tokens
-FROM kept4
+FROM {src}
 GROUP BY 1, 2
 """
 
@@ -1815,12 +1783,255 @@ WITH {_pipeline_kept3_ctes()},
 kept4 AS (
   SELECT doc_id, lang, text FROM kept3 WHERE ({_QUALITY}) >= 0.7
 )
-{_pipeline_final_sql()}"""
+{_pipeline_final_sql("kept4")}"""
+
+
+@register(
+    "pipeline_training_corpus",
+    oracle=_pipeline_oracle(),
+    tags=("training", "pipeline", "dedup", "headline"),
+    doc="The whole training-corpus preparation as ONE declarative "
+    "plan: exact dedup (keep canonical fingerprint row) → near-dup "
+    "removal (MinHash-LSH candidates, exact-Jaccard≥0.8 verify, "
+    "greedy keep-smallest — drop every doc_b of a verified pair) → "
+    "benchmark decontamination (no shared 3-gram with the held-out "
+    "set) → quality filter (score ≥ 0.7) → deterministic 90/10 hash "
+    "split → per-(split, lang) corpus stats. Catalyst sees the full "
+    "pipeline and prunes/pushes across stage boundaries; every stage "
+    "is a pure function of the input, so the whole composite is "
+    "value-hash checked against one oracle CTE chain.",
+)
+def pipeline_training_corpus(spark, sf_dir):
+    from ..operators.text import quality_score
+
+    _, kept3 = _corpus_through_decontamination(spark, sf_dir)
+
+    # 4. quality gate (rule-based heuristic score)
+    kept4 = kept3.filter(quality_score(F.col("text")) >= 0.7)
+
+    # 5. deterministic split + corpus stats
+    return _split_and_stats(kept4)
+
+
+# ---------------------------------------------------------------------------
+# The corpus-curation gates after decontamination, each written once on
+# the Spark side and once as an oracle CTE fragment. Corpus v2-v5 and
+# the two streaming-admission twins compose them.
+# ---------------------------------------------------------------------------
+# Drop docs that are majority duplicated-span mass after all other
+# gates: retention measured AMONG SURVIVORS (a span shared only with
+# already-removed near-dups should not count against a doc).
+RETENTION_MIN_PPM = 500_000
+
+# LM gate: drop stage-4 survivors whose log-perplexity sits more than
+# one corpus standard deviation ABOVE the survivor mean — a pure
+# scalar-statistics rule (n, Σy, Σy² — one 1-row aggregate, no global
+# sort/rank, so it scales to any survivor count), exact in integers
+# via the squared comparison (y−m)² > σ² with y in MILLI-nats
+# (logppl_micro div 1000 keeps Σy² inside int64 at 1e9+ docs).
+LM_GATE_MILLI_DIV = 1000
+
+
+def _learned_quality_gate(docs, survivors):
+    """Stage 4: train the fixed-point classifier on the FULL corpus
+    (the weak rule self-labels it), freeze it, and keep the survivors
+    it scores past the hard-sigmoid midpoint. `feats` is the training
+    feature table reused for serving — doc_id survives it."""
+    from ..operators.classifier import (
+        QUALITY_MIN_P,
+        _p_expr,
+        fit_quality_classifier,
+    )
+
+    feats, w = fit_quality_classifier(docs)
+    keep_ids = (
+        feats.crossJoin(F.broadcast(w))
+        .select("doc_id", F.expr(_p_expr()).alias("p"))
+        .filter(F.col("p") > QUALITY_MIN_P)
+        .select("doc_id")
+    )
+    return survivors.join(keep_ids, "doc_id", "left_semi")
+
+
+def _quality_gate_ctes(src: str) -> str:
+    """Stage-4 oracle: the classifier's unrolled GD chain, then kept4 —
+    the `src` rows the trained model scores past QUALITY_MIN_P.
+    MATERIALIZED: later stages read kept4 several times, and DuckDB
+    would otherwise re-evaluate the whole dedup+GD chain per
+    reference (the covariance-oracle lesson)."""
+    from ..operators.classifier import QUALITY_MIN_P
+    from .curation_queries import qc_oracle_fragments
+
+    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
+    return f"""{feats_ctes},
+{gd_ctes},
+pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
+kept4 AS MATERIALIZED (
+  SELECT k.doc_id, k.lang, k.text FROM {src} k
+  WHERE EXISTS (SELECT 1 FROM pred s
+                WHERE s.doc_id = k.doc_id AND s.p > {QUALITY_MIN_P})
+)"""
+
+
+def lm_milli_y(score_col: str):
+    """A micro-nat log-perplexity column as the σ rule's milli-nat `y`."""
+    return F.expr(f"{score_col} div {LM_GATE_MILLI_DIV}").alias("y")
+
+
+def lm_sigma_drop(scored, prior_y=None):
+    """The σ rule of the LM gates: the doc_ids of `scored` (doc_id, y)
+    whose y sits more than one standard deviation above the mean.
+    Exact integers: truncating mean m = Σy div n, the σ comparison as
+    (y−m)²·n > Σ(y−m)² (≡ (y−m)² > var without a second divide;
+    Σ(y−m)² expands to Σy² − 2mΣy + nm², all int64-safe). `prior_y`
+    (a single `y` column) joins the statistics without being judged —
+    streaming admission pools earlier epochs' scores this way."""
+    ys = scored if prior_y is None else scored.select("y").unionAll(prior_y)
+    stats = ys.agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.expr("y * y")).cast("bigint").alias("syy"),
+    )
+    return (
+        scored.crossJoin(F.broadcast(stats))
+        .withColumn("m", F.expr("sy div n"))
+        .filter(
+            (F.col("y") > F.col("m"))
+            & (
+                F.expr("(y - m) * (y - m) * n")
+                > F.expr("syy - 2 * m * sy + n * m * m")
+            )
+        )
+        .select("doc_id")
+    )
+
+
+def _lm_gate(kept4, ppl, score_col: str):
+    """Stage 4b: the LM perplexity gate. `ppl` is an LM trained on the
+    FULL corpus (the classifier discipline) scoring every doc in
+    `score_col`; survivors more than 1σ above the survivor-mean
+    log-perplexity drop. Unscored (<3-token) docs pass."""
+    sc4 = (
+        kept4.select("doc_id")
+        .join(ppl.select("doc_id", score_col), "doc_id")
+        .select("doc_id", lm_milli_y(score_col))
+    )
+    return kept4.join(lm_sigma_drop(sc4), "doc_id", "left_anti")
+
+
+def _lm_gate_ctes(docppl: str, score_col: str) -> str:
+    """Stage-4b oracle: kept4 → kept4b through the σ rule over
+    `docppl`.`score_col` (the caller binds the LM fragment that
+    defines `docppl`)."""
+    return f"""sc4 AS MATERIALIZED (
+  SELECT k.doc_id,
+         CAST(pp.{score_col} // {LM_GATE_MILLI_DIV} AS BIGINT) AS y
+  FROM kept4 k JOIN {docppl} pp USING (doc_id)
+),
+lm_stats AS (
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(y) AS BIGINT) AS sy,
+         CAST(sum(y * y) AS BIGINT) AS syy
+  FROM sc4
+),
+lm_drop AS (
+  SELECT doc_id FROM sc4, lm_stats
+  WHERE y > sy // n
+    AND (y - sy // n) * (y - sy // n) * n
+        > syy - 2 * (sy // n) * sy + n * (sy // n) * (sy // n)
+),
+kept4b AS MATERIALIZED (
+  SELECT k.* FROM kept4 k
+  WHERE NOT EXISTS (SELECT 1 FROM lm_drop l WHERE l.doc_id = k.doc_id)
+)"""
+
+
+def retention_keep_ids(kept):
+    """The doc_ids of `kept` that pass the ExactSubstr retention gate,
+    with duplicated spans counted among `kept` only."""
+    from ..operators import dedup
+
+    return (
+        dedup.substring_cut_retention(kept)
+        .filter(F.col("retention_ppm") >= RETENTION_MIN_PPM)
+        .select("doc_id")
+    )
+
+
+def source_cap_rank():
+    """The per-source cap's deterministic rank: md5 order within a
+    source."""
+    return F.row_number().over(
+        Window.partitionBy("source").orderBy(
+            F.md5(F.col("doc_id").cast("string")), "doc_id"
+        )
+    )
+
+
+def _retention_and_cap(kept):
+    """Stages 5-6: the retention gate among survivors, then the
+    RefinedWeb per-source cap (relative, deterministic md5 rank). The
+    count is model state over the staged survivor frame; `kept` still
+    carries the original `source` column (the dedup stages semi-join,
+    never project it away)."""
+    from ..io import stage
+    from .curation_queries import SOURCE_CAP_DEN, SOURCE_CAP_MIN
+
+    kept5 = kept.join(
+        retention_keep_ids(kept), "doc_id", "left_semi"
+    ).transform(stage)
+    n5 = kept5.count()
+    cap = max(SOURCE_CAP_MIN, n5 // SOURCE_CAP_DEN)
+    ranked = kept5.withColumn("rnk", source_cap_rank())
+    return ranked.filter(F.col("rnk") <= cap).select("doc_id", "lang", "text")
+
+
+def _retention_cap_ctes(src: str) -> tuple[str, str]:
+    """Stages 5-6 oracle, returned as (ctes, capped): retention over
+    `src` → kept5, its count n5, and `ranked` (kept5 with source and
+    md5 rank); `capped` is the predicate over `ranked, n5` that keeps
+    the rows within the per-source cap."""
+    from ..operators.dedup import substring_retention_sql
+    from .curation_queries import SOURCE_CAP_DEN, SOURCE_CAP_MIN
+
+    ctes = f"""{substring_retention_sql(src)},
+kept5 AS MATERIALIZED (
+  SELECT k.* FROM {src} k
+  JOIN sretention r ON r.doc_id = k.doc_id
+  WHERE r.retention_ppm >= {RETENTION_MIN_PPM}
+),
+n5 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM kept5),
+ranked AS (
+  SELECT k.doc_id, k.lang, k.text, d.source,
+         row_number() OVER (PARTITION BY d.source
+           ORDER BY md5(CAST(k.doc_id AS VARCHAR)), k.doc_id) AS rnk
+  FROM kept5 k JOIN documents d USING (doc_id)
+)"""
+    return ctes, f"rnk <= greatest({SOURCE_CAP_MIN}, n // {SOURCE_CAP_DEN})"
+
+
+def _capped_corpus_sql(src: str) -> str:
+    """The oracle tail of corpus v3-v5: stages 5-6 over `src`, then
+    the split + stats over the capped survivors."""
+    ctes, capped = _retention_cap_ctes(src)
+    return f"""{ctes},
+kept6 AS (
+  SELECT doc_id, lang, text FROM ranked, n5
+  WHERE {capped}
+)
+{_pipeline_final_sql("kept6")}"""
+
+
+def _pipeline_v2_oracle() -> str:
+    return f"""
+WITH {_pipeline_kept3_ctes()},
+{_quality_gate_ctes("kept3")}
+{_pipeline_final_sql("kept4")}"""
 
 
 @register(
     "pipeline_training_corpus_v2",
-    oracle=None,  # generated below from the shared fragments
+    oracle=_pipeline_v2_oracle(),
     tags=("training", "pipeline", "dedup", "ml", "headline"),
     doc="The corpus pipeline with a LEARNED quality gate — the full "
     "train→freeze→apply composition in ONE declarative plan: stages "
@@ -1836,76 +2047,28 @@ kept4 AS (
     "BIGINT, so the whole composite (dedup + decontamination + "
     "training + gating + split stats) is value-hash checked against "
     "one oracle CTE chain that unrolls the identical GD epochs.",
+
 )
 def pipeline_training_corpus_v2(spark, sf_dir):
-    from ..operators.classifier import _p_expr, fit_quality_classifier
-
     docs, kept3 = _corpus_through_decontamination(spark, sf_dir)
-
-    # 4. learned quality gate: train on the full corpus (the weak
-    #    rule self-labels it), freeze, and keep docs the model scores
-    #    past the hard-sigmoid midpoint. `feats` is the training
-    #    feature table reused for serving — doc_id survives it.
-    feats, w = fit_quality_classifier(docs)
-    keep_ids = (
-        feats.crossJoin(F.broadcast(w))
-        .select("doc_id", F.expr(_p_expr()).alias("p"))
-        .filter(F.col("p") > 500)
-        .select("doc_id")
-    )
-    kept4 = kept3.join(keep_ids, "doc_id", "left_semi")
-
-    # 5. deterministic split + corpus stats
+    kept4 = _learned_quality_gate(docs, kept3)
     return _split_and_stats(kept4)
-
-
-def _pipeline_v2_oracle() -> str:
-    from .curation_queries import qc_oracle_fragments
-
-    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
-    return f"""
-WITH {_pipeline_kept3_ctes()},
-{feats_ctes},
-{gd_ctes},
-pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
-kept4 AS (
-  SELECT k.doc_id, k.lang, k.text FROM kept3 k
-  WHERE EXISTS (SELECT 1 FROM pred s
-                WHERE s.doc_id = k.doc_id AND s.p > 500)
-)
-{_pipeline_final_sql()}"""
-
-
-from .registry import REGISTRY as _REG2  # noqa: E402
-from .registry import _impl_hash, _source_of  # noqa: E402
-
-for _name, _fn, _osql in (
-    ("pipeline_training_corpus", pipeline_training_corpus, _pipeline_oracle()),
-    (
-        "pipeline_training_corpus_v2",
-        pipeline_training_corpus_v2,
-        _pipeline_v2_oracle(),
-    ),
-):
-    # The oracle is attached after registration, so refresh the impl
-    # hash to cover the real (source, oracle) pair.
-    _REG2[_name].oracle = _osql
-    _REG2[_name].impl_hash = _impl_hash(_source_of(_fn), _osql)
 
 
 # ---------------------------------------------------------------------------
 # Corpus pipeline v3 (round 9): v2 + the round's curation moves —
 # ExactSubstr retention gate + per-source domain cap
 # ---------------------------------------------------------------------------
-# Drop docs that are majority duplicated-span mass after all other
-# gates: retention measured AMONG SURVIVORS (a span shared only with
-# already-removed near-dups should not count against a doc).
-PIPELINE_RETENTION_MIN_PPM = 500_000
+def _pipeline_v3_oracle() -> str:
+    return f"""
+WITH {_pipeline_kept3_ctes()},
+{_quality_gate_ctes("kept3")},
+{_capped_corpus_sql("kept4")}"""
 
 
 @register(
     "pipeline_training_corpus_v3",
-    oracle=None,  # attached below (shared fragments)
+    oracle=_pipeline_v3_oracle(),
     tags=("training", "pipeline", "dedup", "ml", "curation"),
     doc="The corpus pipeline extended with round-9 curation: stages "
     "1-4 are pipeline_training_corpus_v2 verbatim (exact dedup -> "
@@ -1919,102 +2082,14 @@ PIPELINE_RETENTION_MIN_PPM = 500_000
     "split + stats. Six corpus-curation moves composed in ONE "
     "declarative value-hash-checked plan; each stage's frame is "
     "staged so the learned gate and the span pass each run once.",
+
 )
 def pipeline_training_corpus_v3(spark, sf_dir):
     from ..io import stage
-    from ..operators import dedup
-    from ..operators.classifier import _p_expr, fit_quality_classifier
-    from .curation_queries import SOURCE_CAP_DEN, SOURCE_CAP_MIN
 
     docs, kept3 = _corpus_through_decontamination(spark, sf_dir)
-
-    # 4. learned quality gate (= v2)
-    feats, w = fit_quality_classifier(docs)
-    keep_ids = (
-        feats.crossJoin(F.broadcast(w))
-        .select("doc_id", F.expr(_p_expr()).alias("p"))
-        .filter(F.col("p") > 500)
-        .select("doc_id")
-    )
-    kept4 = kept3.join(keep_ids, "doc_id", "left_semi").transform(stage)
-
-    # 5. ExactSubstr retention gate among survivors
-    ret = dedup.substring_cut_retention(kept4)
-    keep_ret = ret.filter(
-        F.col("retention_ppm") >= PIPELINE_RETENTION_MIN_PPM
-    ).select("doc_id")
-    kept5 = kept4.join(keep_ret, "doc_id", "left_semi").transform(stage)
-
-    # 6. per-source cap (relative, deterministic md5 rank); the
-    #    count is model state over the staged survivor frame. kept5
-    #    still carries the original `source` column (the dedup
-    #    stages semi-join, never project it away)
-    n5 = kept5.count()
-    cap = max(SOURCE_CAP_MIN, n5 // SOURCE_CAP_DEN)
-    ranked = kept5.withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("source").orderBy(
-                F.md5(F.col("doc_id").cast("string")), "doc_id"
-            )
-        ),
-    )
-    kept6 = ranked.filter(F.col("rnk") <= cap).select(
-        "doc_id", "lang", "text"
-    )
-    return _split_and_stats(kept6)
-
-
-def _pipeline_v3_oracle() -> str:
-    from ..operators.dedup import substring_retention_sql
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        qc_oracle_fragments,
-    )
-
-    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
-    final = _pipeline_final_sql().replace("FROM kept4", "FROM kept6")
-    return f"""
-WITH {_pipeline_kept3_ctes()},
-{feats_ctes},
-{gd_ctes},
-pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
-kept4 AS MATERIALIZED (
-  -- MATERIALIZED: referenced multiple times below (retention
-  -- shingles + the kept5 filter); DuckDB would otherwise
-  -- re-evaluate the whole dedup+GD chain per reference -- fine at
-  -- sf0.01, pathological at the x10 corpus (the covariance-oracle
-  -- lesson)
-  SELECT k.doc_id, k.lang, k.text FROM kept3 k
-  WHERE EXISTS (SELECT 1 FROM pred s
-                WHERE s.doc_id = k.doc_id AND s.p > 500)
-),
-{substring_retention_sql("kept4")},
-kept5 AS MATERIALIZED (
-  SELECT k.* FROM kept4 k
-  JOIN sretention r ON r.doc_id = k.doc_id
-  WHERE r.retention_ppm >= {PIPELINE_RETENTION_MIN_PPM}
-),
-n5 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM kept5),
-ranked AS (
-  SELECT k.doc_id, k.lang, k.text,
-         row_number() OVER (PARTITION BY d.source
-           ORDER BY md5(CAST(k.doc_id AS VARCHAR)), k.doc_id) AS rnk
-  FROM kept5 k JOIN documents d USING (doc_id)
-),
-kept6 AS (
-  SELECT doc_id, lang, text FROM ranked, n5
-  WHERE rnk <= greatest({SOURCE_CAP_MIN}, n // {SOURCE_CAP_DEN})
-)
-{final}"""
-
-
-_REG2["pipeline_training_corpus_v3"].oracle = _pipeline_v3_oracle()
-_REG2["pipeline_training_corpus_v3"].impl_hash = _impl_hash(
-    _source_of(pipeline_training_corpus_v3),
-    _REG2["pipeline_training_corpus_v3"].oracle,
-)
+    kept4 = _learned_quality_gate(docs, kept3).transform(stage)
+    return _split_and_stats(_retention_and_cap(kept4))
 
 
 # ---------------------------------------------------------------------------
@@ -2023,9 +2098,39 @@ _REG2["pipeline_training_corpus_v3"].impl_hash = _impl_hash(
 # corpus as ONE batch from empty state — the hash-checked twin the
 # driver contract requires for the streaming capstone.
 # ---------------------------------------------------------------------------
+def _admission_oracle() -> str:
+    from ..operators.multimodal import DHASH_HAM_MAX
+    from .northstar_queries import _TOKS, dhash_pair_ctes
+
+    ret_cap_ctes, capped = _retention_cap_ctes("kept4")
+    return f"""
+WITH {_pipeline_kept3_ctes()},
+{dhash_pair_ctes("img")},
+img_losers AS (
+  -- image near-dup stage: pairs among kept3 survivors, doc_b of
+  -- each Hamming-verified (doc_a < doc_b) pair drops — the text
+  -- near-dup stage's rule one tier down the stack
+  SELECT DISTINCT c.doc_b AS doc_id FROM imgcand c
+  WHERE bit_count(xor(c.ha, c.hb)) <= {DHASH_HAM_MAX}
+    AND EXISTS (SELECT 1 FROM kept3 a WHERE a.doc_id = c.doc_a)
+    AND EXISTS (SELECT 1 FROM kept3 b2 WHERE b2.doc_id = c.doc_b)
+),
+kept3i AS MATERIALIZED (
+  SELECT k.* FROM kept3 k
+  WHERE NOT EXISTS (SELECT 1 FROM img_losers l WHERE l.doc_id = k.doc_id)
+),
+{_quality_gate_ctes("kept3i")},
+{ret_cap_ctes}
+SELECT doc_id, source, lang,
+       CAST(len({_TOKS}) AS BIGINT) AS n_tokens
+FROM ranked, n5
+WHERE {capped}
+"""
+
+
 @register(
     "pipeline_streaming_admission",
-    oracle=None,  # attached below (shared fragments)
+    oracle=_admission_oracle(),
     tags=("training", "pipeline", "streaming", "dedup", "ml", "curation"),
     doc="The streaming corpus-admission gate's batch equivalent: "
     "streaming/admission.py's admission_decisions run with EMPTY "
@@ -2042,6 +2147,7 @@ _REG2["pipeline_training_corpus_v3"].impl_hash = _impl_hash(
     "state (trained on the full corpus, the v3 discipline), and the "
     "oracle replays training, every dedup tier, the planted-pixel "
     "dHash chain, retention, and the cap end to end.",
+
 )
 def pipeline_streaming_admission(spark, sf_dir):
     from ..operators.classifier import WEIGHT_COLS, fit_quality_classifier
@@ -2075,85 +2181,25 @@ def pipeline_streaming_admission(spark, sf_dir):
     )
 
 
-def _admission_oracle() -> str:
-    from ..operators.dedup import substring_retention_sql
-    from ..operators.multimodal import DHASH_HAM_MAX
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        qc_oracle_fragments,
-    )
-    from .northstar_queries import _TOKS, dhash_pair_ctes
-
-    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
-    return f"""
-WITH {_pipeline_kept3_ctes()},
-{dhash_pair_ctes("img")},
-img_losers AS (
-  -- image near-dup stage: pairs among kept3 survivors, doc_b of
-  -- each Hamming-verified (doc_a < doc_b) pair drops — the text
-  -- near-dup stage's rule one tier down the stack
-  SELECT DISTINCT c.doc_b AS doc_id FROM imgcand c
-  WHERE bit_count(xor(c.ha, c.hb)) <= {DHASH_HAM_MAX}
-    AND EXISTS (SELECT 1 FROM kept3 a WHERE a.doc_id = c.doc_a)
-    AND EXISTS (SELECT 1 FROM kept3 b2 WHERE b2.doc_id = c.doc_b)
-),
-kept3i AS MATERIALIZED (
-  SELECT k.* FROM kept3 k
-  WHERE NOT EXISTS (SELECT 1 FROM img_losers l WHERE l.doc_id = k.doc_id)
-),
-{feats_ctes},
-{gd_ctes},
-pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
-kept4 AS MATERIALIZED (
-  SELECT k.doc_id, k.lang, k.text FROM kept3i k
-  WHERE EXISTS (SELECT 1 FROM pred s
-                WHERE s.doc_id = k.doc_id AND s.p > 500)
-),
-{substring_retention_sql("kept4")},
-kept5 AS MATERIALIZED (
-  SELECT k.* FROM kept4 k
-  JOIN sretention r ON r.doc_id = k.doc_id
-  WHERE r.retention_ppm >= {PIPELINE_RETENTION_MIN_PPM}
-),
-n5 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM kept5),
-ranked AS (
-  SELECT k.doc_id, k.lang, k.text, d.source,
-         row_number() OVER (PARTITION BY d.source
-           ORDER BY md5(CAST(k.doc_id AS VARCHAR)), k.doc_id) AS rnk
-  FROM kept5 k JOIN documents d USING (doc_id)
-)
-SELECT doc_id, source, lang,
-       CAST(len({_TOKS}) AS BIGINT) AS n_tokens
-FROM ranked, n5
-WHERE rnk <= greatest({SOURCE_CAP_MIN}, n // {SOURCE_CAP_DEN})
-"""
-
-
-_REG2["pipeline_streaming_admission"].oracle = _admission_oracle()
-_REG2["pipeline_streaming_admission"].impl_hash = _impl_hash(
-    _source_of(pipeline_streaming_admission),
-    _REG2["pipeline_streaming_admission"].oracle,
-)
-
-
 # ---------------------------------------------------------------------------
 # Pipeline v4 (round 10): v3 + the trigram-LM perplexity gate — the
 # model-based quality cut (CCNet's perplexity filter) composed into
 # the curation chain
 # ---------------------------------------------------------------------------
-# LM gate: drop stage-4 survivors whose log-perplexity sits more than
-# one corpus standard deviation ABOVE the survivor mean — a pure
-# scalar-statistics rule (n, Σy, Σy² — one 1-row aggregate, no global
-# sort/rank, so it scales to any survivor count), exact in integers
-# via the squared comparison (y−m)² > σ² with y in MILLI-nats
-# (logppl_micro div 1000 keeps Σy² inside int64 at 1e9+ docs).
-LM_GATE_MILLI_DIV = 1000
+def _pipeline_v4_oracle() -> str:
+    from .curation_queries import trigram_lm_ctes
+
+    return f"""
+WITH {_pipeline_kept3_ctes()},
+{_quality_gate_ctes("kept3")},
+{trigram_lm_ctes(score_rel="kept4")},
+{_lm_gate_ctes("docppl", "logppl_micro")},
+{_capped_corpus_sql("kept4b")}"""
 
 
 @register(
     "pipeline_training_corpus_v4",
-    oracle=None,  # attached below (shared fragments)
+    oracle=_pipeline_v4_oracle(),
     tags=("training", "pipeline", "dedup", "ml", "curation"),
     doc="The corpus pipeline extended with the model-based quality "
     "cut: stages 1-4 are pipeline_training_corpus_v3 verbatim (exact "
@@ -2169,161 +2215,33 @@ LM_GATE_MILLI_DIV = 1000
     "as in v3. Docs too short to score (< 3 tokens) pass the LM gate "
     "untouched. Seven curation moves in ONE declarative "
     "value-hash-checked plan.",
+
 )
 def pipeline_training_corpus_v4(spark, sf_dir):
     from ..io import stage
-    from ..operators import dedup
-    from ..operators.classifier import _p_expr, fit_quality_classifier
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        _trigram_perplexity_frame,
-    )
+    from .curation_queries import _trigram_perplexity_frame
 
     docs, kept3 = _corpus_through_decontamination(spark, sf_dir)
-
-    # 4. learned quality gate (= v3)
-    feats, w = fit_quality_classifier(docs)
-    keep_ids = (
-        feats.crossJoin(F.broadcast(w))
-        .select("doc_id", F.expr(_p_expr()).alias("p"))
-        .filter(F.col("p") > 500)
-        .select("doc_id")
-    )
-    kept4 = kept3.join(keep_ids, "doc_id", "left_semi").transform(stage)
-
-    # 4b. trigram-LM perplexity gate: LM trained on the FULL corpus
-    # (the classifier discipline); survivors more than 1σ above the
-    # survivor-mean log-perplexity drop. Exact integers: milli-nat
-    # scores, truncating mean m = Σy div n, the σ comparison as
-    # (y−m)²·n > Σ(y−m)² (≡ (y−m)² > var without a second divide;
-    # Σ(y−m)² expands to Σy² − 2mΣy + nm², all int64-safe).
-    # Unscored (<3-token) docs pass.
+    kept4 = _learned_quality_gate(docs, kept3).transform(stage)
     ppl = _trigram_perplexity_frame(docs)
-    sc4 = (
-        kept4.select("doc_id")
-        .join(ppl.select("doc_id", "logppl_micro"), "doc_id")
-        .select(
-            "doc_id",
-            F.expr(f"logppl_micro div {LM_GATE_MILLI_DIV}").alias("y"),
-        )
-    )
-    lm_stats = sc4.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.expr("y * y")).cast("bigint").alias("syy"),
-    )
-    lm_drop = (
-        sc4.crossJoin(F.broadcast(lm_stats))
-        .withColumn("m", F.expr("sy div n"))
-        .filter(
-            (F.col("y") > F.col("m"))
-            & (
-                F.expr("(y - m) * (y - m) * n")
-                > F.expr("syy - 2 * m * sy + n * m * m")
-            )
-        )
-        .select("doc_id")
-    )
-    kept4b = kept4.join(lm_drop, "doc_id", "left_anti").transform(stage)
-
-    # 5. ExactSubstr retention gate among survivors (= v3)
-    ret = dedup.substring_cut_retention(kept4b)
-    keep_ret = ret.filter(
-        F.col("retention_ppm") >= PIPELINE_RETENTION_MIN_PPM
-    ).select("doc_id")
-    kept5 = kept4b.join(keep_ret, "doc_id", "left_semi").transform(stage)
-
-    # 6. per-source cap (= v3)
-    n5 = kept5.count()
-    cap = max(SOURCE_CAP_MIN, n5 // SOURCE_CAP_DEN)
-    ranked = kept5.withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("source").orderBy(
-                F.md5(F.col("doc_id").cast("string")), "doc_id"
-            )
-        ),
-    )
-    kept6 = ranked.filter(F.col("rnk") <= cap).select(
-        "doc_id", "lang", "text"
-    )
-    return _split_and_stats(kept6)
+    kept4b = _lm_gate(kept4, ppl, "logppl_micro").transform(stage)
+    return _split_and_stats(_retention_and_cap(kept4b))
 
 
-def _pipeline_v4_oracle() -> str:
-    from ..operators.dedup import substring_retention_sql
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        qc_oracle_fragments,
-        trigram_lm_ctes,
-    )
+def _pipeline_v5_oracle() -> str:
+    from .curation_queries import kn_lm_ctes
 
-    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
-    final = _pipeline_final_sql().replace("FROM kept4", "FROM kept6")
     return f"""
 WITH {_pipeline_kept3_ctes()},
-{feats_ctes},
-{gd_ctes},
-pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
-kept4 AS MATERIALIZED (
-  SELECT k.doc_id, k.lang, k.text FROM kept3 k
-  WHERE EXISTS (SELECT 1 FROM pred s
-                WHERE s.doc_id = k.doc_id AND s.p > 500)
-),
-{trigram_lm_ctes(score_rel="kept4")},
-sc4 AS MATERIALIZED (
-  SELECT k.doc_id,
-         CAST(pp.logppl_micro // {LM_GATE_MILLI_DIV} AS BIGINT) AS y
-  FROM kept4 k JOIN docppl pp USING (doc_id)
-),
-lm_stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM sc4
-),
-lm_drop AS (
-  SELECT doc_id FROM sc4, lm_stats
-  WHERE y > sy // n
-    AND (y - sy // n) * (y - sy // n) * n
-        > syy - 2 * (sy // n) * sy + n * (sy // n) * (sy // n)
-),
-kept4b AS MATERIALIZED (
-  SELECT k.* FROM kept4 k
-  WHERE NOT EXISTS (SELECT 1 FROM lm_drop l WHERE l.doc_id = k.doc_id)
-),
-{substring_retention_sql("kept4b")},
-kept5 AS MATERIALIZED (
-  SELECT k.* FROM kept4b k
-  JOIN sretention r ON r.doc_id = k.doc_id
-  WHERE r.retention_ppm >= {PIPELINE_RETENTION_MIN_PPM}
-),
-n5 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM kept5),
-ranked AS (
-  SELECT k.doc_id, k.lang, k.text,
-         row_number() OVER (PARTITION BY d.source
-           ORDER BY md5(CAST(k.doc_id AS VARCHAR)), k.doc_id) AS rnk
-  FROM kept5 k JOIN documents d USING (doc_id)
-),
-kept6 AS (
-  SELECT doc_id, lang, text FROM ranked, n5
-  WHERE rnk <= greatest({SOURCE_CAP_MIN}, n // {SOURCE_CAP_DEN})
-)
-{final}"""
-
-
-_REG2["pipeline_training_corpus_v4"].oracle = _pipeline_v4_oracle()
-_REG2["pipeline_training_corpus_v4"].impl_hash = _impl_hash(
-    _source_of(pipeline_training_corpus_v4),
-    _REG2["pipeline_training_corpus_v4"].oracle,
-)
+{_quality_gate_ctes("kept3")},
+{kn_lm_ctes(score_rel="kept4")},
+{_lm_gate_ctes("kn_docppl", "kn_logppl_micro")},
+{_capped_corpus_sql("kept4b")}"""
 
 
 @register(
     "pipeline_training_corpus_v5",
-    oracle=None,  # attached below (shared fragments)
+    oracle=_pipeline_v5_oracle(),
     tags=("training", "pipeline", "dedup", "ml", "curation"),
     doc="Pipeline v4 with the LM gate upgraded from add-1 to "
     "INTERPOLATED KNESER-NEY smoothing (text_trigram_kn_perplexity's "
@@ -2342,150 +2260,17 @@ _REG2["pipeline_training_corpus_v4"].impl_hash = _impl_hash(
     "docs don't survive the upstream stages, so outputs coincide. "
     "Same scale shape as v4: the gate is one 1-row scalar aggregate "
     "over milli-nat integer scores, no global rank anywhere.",
+
 )
 def pipeline_training_corpus_v5(spark, sf_dir):
     from ..io import stage
-    from ..operators import dedup
-    from ..operators.classifier import _p_expr, fit_quality_classifier
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        _kn_perplexity_frame,
-    )
+    from .curation_queries import _kn_perplexity_frame
 
     docs, kept3 = _corpus_through_decontamination(spark, sf_dir)
-
-    # 4. learned quality gate (= v3/v4)
-    feats, w = fit_quality_classifier(docs)
-    keep_ids = (
-        feats.crossJoin(F.broadcast(w))
-        .select("doc_id", F.expr(_p_expr()).alias("p"))
-        .filter(F.col("p") > 500)
-        .select("doc_id")
-    )
-    kept4 = kept3.join(keep_ids, "doc_id", "left_semi").transform(stage)
-
-    # 4b. the KN-LM perplexity gate (v4's σ rule over KN scores)
+    kept4 = _learned_quality_gate(docs, kept3).transform(stage)
     ppl = _kn_perplexity_frame(docs)
-    sc4 = (
-        kept4.select("doc_id")
-        .join(ppl.select("doc_id", "kn_logppl_micro"), "doc_id")
-        .select(
-            "doc_id",
-            F.expr(f"kn_logppl_micro div {LM_GATE_MILLI_DIV}").alias("y"),
-        )
-    )
-    lm_stats = sc4.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.expr("y * y")).cast("bigint").alias("syy"),
-    )
-    lm_drop = (
-        sc4.crossJoin(F.broadcast(lm_stats))
-        .withColumn("m", F.expr("sy div n"))
-        .filter(
-            (F.col("y") > F.col("m"))
-            & (
-                F.expr("(y - m) * (y - m) * n")
-                > F.expr("syy - 2 * m * sy + n * m * m")
-            )
-        )
-        .select("doc_id")
-    )
-    kept4b = kept4.join(lm_drop, "doc_id", "left_anti").transform(stage)
-
-    # 5. ExactSubstr retention gate among survivors (= v3/v4)
-    ret = dedup.substring_cut_retention(kept4b)
-    keep_ret = ret.filter(
-        F.col("retention_ppm") >= PIPELINE_RETENTION_MIN_PPM
-    ).select("doc_id")
-    kept5 = kept4b.join(keep_ret, "doc_id", "left_semi").transform(stage)
-
-    # 6. per-source cap (= v3/v4)
-    n5 = kept5.count()
-    cap = max(SOURCE_CAP_MIN, n5 // SOURCE_CAP_DEN)
-    ranked = kept5.withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("source").orderBy(
-                F.md5(F.col("doc_id").cast("string")), "doc_id"
-            )
-        ),
-    )
-    kept6 = ranked.filter(F.col("rnk") <= cap).select(
-        "doc_id", "lang", "text"
-    )
-    return _split_and_stats(kept6)
-
-
-def _pipeline_v5_oracle() -> str:
-    from ..operators.dedup import substring_retention_sql
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        kn_lm_ctes,
-        qc_oracle_fragments,
-    )
-
-    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
-    final = _pipeline_final_sql().replace("FROM kept4", "FROM kept6")
-    return f"""
-WITH {_pipeline_kept3_ctes()},
-{feats_ctes},
-{gd_ctes},
-pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
-kept4 AS MATERIALIZED (
-  SELECT k.doc_id, k.lang, k.text FROM kept3 k
-  WHERE EXISTS (SELECT 1 FROM pred s
-                WHERE s.doc_id = k.doc_id AND s.p > 500)
-),
-{kn_lm_ctes(score_rel="kept4")},
-sc4 AS MATERIALIZED (
-  SELECT k.doc_id,
-         CAST(pp.kn_logppl_micro // {LM_GATE_MILLI_DIV} AS BIGINT) AS y
-  FROM kept4 k JOIN kn_docppl pp USING (doc_id)
-),
-lm_stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM sc4
-),
-lm_drop AS (
-  SELECT doc_id FROM sc4, lm_stats
-  WHERE y > sy // n
-    AND (y - sy // n) * (y - sy // n) * n
-        > syy - 2 * (sy // n) * sy + n * (sy // n) * (sy // n)
-),
-kept4b AS MATERIALIZED (
-  SELECT k.* FROM kept4 k
-  WHERE NOT EXISTS (SELECT 1 FROM lm_drop l WHERE l.doc_id = k.doc_id)
-),
-{substring_retention_sql("kept4b")},
-kept5 AS MATERIALIZED (
-  SELECT k.* FROM kept4b k
-  JOIN sretention r ON r.doc_id = k.doc_id
-  WHERE r.retention_ppm >= {PIPELINE_RETENTION_MIN_PPM}
-),
-n5 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM kept5),
-ranked AS (
-  SELECT k.doc_id, k.lang, k.text,
-         row_number() OVER (PARTITION BY d.source
-           ORDER BY md5(CAST(k.doc_id AS VARCHAR)), k.doc_id) AS rnk
-  FROM kept5 k JOIN documents d USING (doc_id)
-),
-kept6 AS (
-  SELECT doc_id, lang, text FROM ranked, n5
-  WHERE rnk <= greatest({SOURCE_CAP_MIN}, n // {SOURCE_CAP_DEN})
-)
-{final}"""
-
-
-_REG2["pipeline_training_corpus_v5"].oracle = _pipeline_v5_oracle()
-_REG2["pipeline_training_corpus_v5"].impl_hash = _impl_hash(
-    _source_of(pipeline_training_corpus_v5),
-    _REG2["pipeline_training_corpus_v5"].oracle,
-)
+    kept4b = _lm_gate(kept4, ppl, "kn_logppl_micro").transform(stage)
+    return _split_and_stats(_retention_and_cap(kept4b))
 
 
 # ---------------------------------------------------------------------------
@@ -2685,9 +2470,41 @@ def train_test_split_by_group(spark, sf_dir):
 # Canonical representatives (round 9): the ACTION on the dedup
 # clusters — per component, keep one document
 # --------------------------------------------------------------------
+def _canonical_oracle() -> str:
+    base = _cc_oracle()
+    tail = (
+        "SELECT a AS doc_id, min(b) AS component_id "
+        "FROM reach GROUP BY a"
+    )
+    assert base.count(tail) == 1, "CC oracle tail drifted"
+    return base.replace(
+        tail,
+        """, comp AS (
+  SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
+),
+ntok AS (
+  SELECT doc_id,
+         CAST(len(list_filter(string_split(lower(text), ' '),
+                              t -> t <> '')) AS BIGINT) AS n_tokens
+  FROM documents
+),
+picked AS (
+  SELECT c.component_id, c.doc_id, n.n_tokens,
+         row_number() OVER (PARTITION BY c.component_id
+             ORDER BY n.n_tokens DESC, c.doc_id) AS rn,
+         CAST(count(*) OVER (PARTITION BY c.component_id)
+              AS BIGINT) AS n_members
+  FROM comp c JOIN ntok n USING (doc_id)
+)
+SELECT component_id, doc_id AS canonical_doc_id, n_members,
+       n_tokens AS canonical_tokens
+FROM picked WHERE rn = 1""",
+    )
+
+
 @register(
     "dedup_canonical_representatives",
-    oracle=None,  # late-bound below from the CC oracle text
+    oracle=_canonical_oracle(),
     tags=("training", "dedup", "iterative"),
     doc="Canonical-representative selection over the near-dup "
     "components — the step that turns clustering into dedup policy: "
@@ -2747,45 +2564,6 @@ def dedup_canonical_representatives(spark, sf_dir):
         "n_members",
         F.col("n_tokens").alias("canonical_tokens"),
     )
-
-
-def _canonical_oracle() -> str:
-    base = _cc_oracle()
-    tail = (
-        "SELECT a AS doc_id, min(b) AS component_id "
-        "FROM reach GROUP BY a"
-    )
-    assert base.count(tail) == 1, "CC oracle tail drifted"
-    return base.replace(
-        tail,
-        """, comp AS (
-  SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
-),
-ntok AS (
-  SELECT doc_id,
-         CAST(len(list_filter(string_split(lower(text), ' '),
-                              t -> t <> '')) AS BIGINT) AS n_tokens
-  FROM documents
-),
-picked AS (
-  SELECT c.component_id, c.doc_id, n.n_tokens,
-         row_number() OVER (PARTITION BY c.component_id
-             ORDER BY n.n_tokens DESC, c.doc_id) AS rn,
-         CAST(count(*) OVER (PARTITION BY c.component_id)
-              AS BIGINT) AS n_members
-  FROM comp c JOIN ntok n USING (doc_id)
-)
-SELECT component_id, doc_id AS canonical_doc_id, n_members,
-       n_tokens AS canonical_tokens
-FROM picked WHERE rn = 1""",
-    )
-
-
-_REG["dedup_canonical_representatives"].oracle = _canonical_oracle()
-_REG["dedup_canonical_representatives"].impl_hash = _impl_hash(
-    _source_of(dedup_canonical_representatives),
-    _REG["dedup_canonical_representatives"].oracle,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2932,9 +2710,61 @@ def selection_greedy_coverage(spark, sf_dir):
 # decon-survivor pair universe, then the Kneser-Ney σ-gate with the
 # cost table frozen from the corpus (broadcast model state).
 # ---------------------------------------------------------------------------
+def _admission_v5_oracle() -> str:
+    from ..operators.multimodal import (
+        AUDIO_HAM_MAX,
+        DHASH_HAM_MAX,
+        VIDEO_MIN_CLOSE,
+    )
+    from .curation_queries import kn_lm_ctes
+    from .northstar_queries import (
+        _TOKS,
+        audio_pair_ctes,
+        dhash_pair_ctes,
+        video_pair_ctes,
+    )
+
+    ret_cap_ctes, capped = _retention_cap_ctes("kept4b")
+    return f"""
+WITH {_pipeline_kept3_ctes()},
+{dhash_pair_ctes("img")},
+{audio_pair_ctes("au")},
+{video_pair_ctes("vd")},
+media_losers AS (
+  -- three perceptual tiers over the SAME kept3 pair universe:
+  -- doc_b of each verified (doc_a < doc_b) pair drops (min-id wins)
+  SELECT doc_id FROM (
+    SELECT c.doc_a, c.doc_b FROM imgcand c
+    WHERE bit_count(xor(c.ha, c.hb)) <= {DHASH_HAM_MAX}
+    UNION
+    SELECT c.doc_a, c.doc_b FROM aucand c
+    WHERE bit_count(xor(c.fa, c.fb)) <= {AUDIO_HAM_MAX}
+    UNION
+    SELECT c.doc_a, c.doc_b FROM vdclose c
+    WHERE c.n_close_frames >= {VIDEO_MIN_CLOSE}
+  ) pairs(doc_a, doc_id)
+  WHERE EXISTS (SELECT 1 FROM kept3 a WHERE a.doc_id = pairs.doc_a)
+    AND EXISTS (SELECT 1 FROM kept3 b2 WHERE b2.doc_id = pairs.doc_id)
+),
+kept3m AS MATERIALIZED (
+  SELECT k.* FROM kept3 k
+  WHERE NOT EXISTS (SELECT 1 FROM media_losers l
+                    WHERE l.doc_id = k.doc_id)
+),
+{_quality_gate_ctes("kept3m")},
+{kn_lm_ctes(score_rel="kept4")},
+{_lm_gate_ctes("kn_docppl", "kn_logppl_micro")},
+{ret_cap_ctes}
+SELECT doc_id, source, lang,
+       CAST(len({_TOKS}) AS BIGINT) AS n_tokens
+FROM ranked, n5
+WHERE {capped}
+"""
+
+
 @register(
     "pipeline_streaming_admission_v5",
-    oracle=None,  # attached below (shared fragments)
+    oracle=_admission_v5_oracle(),
     tags=("training", "pipeline", "streaming", "dedup", "multimodal"),
     doc="The streaming corpus-admission gate at v5 policy parity — "
     "the ingest path finally tracks the best batch policy (round-10 "
@@ -2989,107 +2819,3 @@ def pipeline_streaming_admission_v5(spark, sf_dir):
         "lang",
         token_count(F.col("text")).cast("bigint").alias("n_tokens"),
     )
-
-
-def _admission_v5_oracle() -> str:
-    from ..operators.dedup import substring_retention_sql
-    from ..operators.multimodal import (
-        AUDIO_HAM_MAX,
-        DHASH_HAM_MAX,
-        VIDEO_MIN_CLOSE,
-    )
-    from .curation_queries import (
-        SOURCE_CAP_DEN,
-        SOURCE_CAP_MIN,
-        kn_lm_ctes,
-        qc_oracle_fragments,
-    )
-    from .northstar_queries import (
-        _TOKS,
-        audio_pair_ctes,
-        dhash_pair_ctes,
-        video_pair_ctes,
-    )
-
-    feats_ctes, gd_ctes, p, prev = qc_oracle_fragments()
-    return f"""
-WITH {_pipeline_kept3_ctes()},
-{dhash_pair_ctes("img")},
-{audio_pair_ctes("au")},
-{video_pair_ctes("vd")},
-media_losers AS (
-  -- three perceptual tiers over the SAME kept3 pair universe:
-  -- doc_b of each verified (doc_a < doc_b) pair drops (min-id wins)
-  SELECT doc_id FROM (
-    SELECT c.doc_a, c.doc_b FROM imgcand c
-    WHERE bit_count(xor(c.ha, c.hb)) <= {DHASH_HAM_MAX}
-    UNION
-    SELECT c.doc_a, c.doc_b FROM aucand c
-    WHERE bit_count(xor(c.fa, c.fb)) <= {AUDIO_HAM_MAX}
-    UNION
-    SELECT c.doc_a, c.doc_b FROM vdclose c
-    WHERE c.n_close_frames >= {VIDEO_MIN_CLOSE}
-  ) pairs(doc_a, doc_id)
-  WHERE EXISTS (SELECT 1 FROM kept3 a WHERE a.doc_id = pairs.doc_a)
-    AND EXISTS (SELECT 1 FROM kept3 b2 WHERE b2.doc_id = pairs.doc_id)
-),
-kept3m AS MATERIALIZED (
-  SELECT k.* FROM kept3 k
-  WHERE NOT EXISTS (SELECT 1 FROM media_losers l
-                    WHERE l.doc_id = k.doc_id)
-),
-{feats_ctes},
-{gd_ctes},
-pred AS (SELECT doc_id, {p} AS p FROM feats f, {prev}),
-kept4 AS MATERIALIZED (
-  SELECT k.doc_id, k.lang, k.text FROM kept3m k
-  WHERE EXISTS (SELECT 1 FROM pred s
-                WHERE s.doc_id = k.doc_id AND s.p > 500)
-),
-{kn_lm_ctes(score_rel="kept4")},
-sc4 AS MATERIALIZED (
-  SELECT k.doc_id,
-         CAST(pp.kn_logppl_micro // {LM_GATE_MILLI_DIV} AS BIGINT) AS y
-  FROM kept4 k JOIN kn_docppl pp USING (doc_id)
-),
-lm_stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM sc4
-),
-lm_drop AS (
-  SELECT doc_id FROM sc4, lm_stats
-  WHERE y > sy // n
-    AND (y - sy // n) * (y - sy // n) * n
-        > syy - 2 * (sy // n) * sy + n * (sy // n) * (sy // n)
-),
-kept4b AS MATERIALIZED (
-  SELECT k.* FROM kept4 k
-  WHERE NOT EXISTS (SELECT 1 FROM lm_drop l WHERE l.doc_id = k.doc_id)
-),
-{substring_retention_sql("kept4b")},
-kept5 AS MATERIALIZED (
-  SELECT k.* FROM kept4b k
-  JOIN sretention r ON r.doc_id = k.doc_id
-  WHERE r.retention_ppm >= {PIPELINE_RETENTION_MIN_PPM}
-),
-n5 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM kept5),
-ranked AS (
-  SELECT k.doc_id, k.lang, k.text, d.source,
-         row_number() OVER (PARTITION BY d.source
-           ORDER BY md5(CAST(k.doc_id AS VARCHAR)), k.doc_id) AS rnk
-  FROM kept5 k JOIN documents d USING (doc_id)
-)
-SELECT doc_id, source, lang,
-       CAST(len({_TOKS}) AS BIGINT) AS n_tokens
-FROM ranked, n5
-WHERE rnk <= greatest({SOURCE_CAP_MIN}, n // {SOURCE_CAP_DEN})
-"""
-
-
-_REG2["pipeline_streaming_admission_v5"].oracle = _admission_v5_oracle()
-_REG2["pipeline_streaming_admission_v5"].impl_hash = _impl_hash(
-    _source_of(pipeline_streaming_admission_v5),
-    _REG2["pipeline_streaming_admission_v5"].oracle,
-)

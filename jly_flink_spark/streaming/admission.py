@@ -73,24 +73,22 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import stage
 from ..operators import dedup
 from ..operators import multimodal as mm
 from ..operators.bloom import bloom_probe_expr, build_bloom_words
-from ..operators.classifier import with_quality_p
+from ..operators.classifier import QUALITY_MIN_P, with_quality_p
 from ..operators.text import fingerprint, tokens, trigram_shingles
 
 # admission thresholds — shared with the batch pipeline
 MIN_JACCARD = 0.8
 BENCH_MAX_DOC = 20
-QUALITY_MIN_P = 500  # exclusive, = pipeline v2/v3's p > 500
-# a doc whose duplicated span mass exceeds half is cut (batch stage 5
-# keeps retention_ppm >= RETENTION_MIN_PPM; the cross-batch winnow
-# containment mirrors the same half-mass boundary)
-RETENTION_MIN_PPM = 500_000
+# a doc whose duplicated span mass exceeds half is cut (stage 5 keeps
+# retention_ppm >= the batch pipeline's RETENTION_MIN_PPM; the
+# cross-batch winnow containment mirrors the same half-mass boundary)
 CONTAIN_CUT_PPM = 500_000
 WINNOW_MAX_DF = 50
 
@@ -536,6 +534,12 @@ def admission_decisions(
     `pipeline_streaming_admission_v5` hash contract.
     """
     from ..plans.curation_queries import SOURCE_CAP_DEN, SOURCE_CAP_MIN
+    from ..plans.training_queries import (
+        lm_milli_y,
+        lm_sigma_drop,
+        retention_keep_ids,
+        source_cap_rank,
+    )
 
     if policy not in ("v3", "v5"):
         raise ValueError(f"unknown admission policy {policy!r}")
@@ -756,37 +760,23 @@ def admission_decisions(
     # ---- stage 4b (v5): Kneser-Ney σ-gate — score quality
     # survivors against the FROZEN cost table, pool σ statistics
     # with prior quality-survivors' stored scores (ledger kn_y),
-    # drop docs > 1σ above the mean. Exact integers: milli-nat
-    # scores, truncating mean, squared comparison (the batch
-    # pipeline's LM_GATE arithmetic verbatim). Unscored docs pass.
+    # drop docs > 1σ above the mean — the batch pipeline's σ rule
+    # (lm_sigma_drop). Unscored docs pass.
     batch_kn = None
     if v5:
         from ..plans.curation_queries import (
             doc_trigrams_frame,
             kn_score_frame,
         )
-        from ..plans.training_queries import LM_GATE_MILLI_DIV
 
         batch_kn = stage(
             kn_score_frame(
                 doc_trigrams_frame(kept4), state.kn_cost
-            ).select(
-                "doc_id",
-                F.expr(
-                    f"kn_logppl_micro div {LM_GATE_MILLI_DIV}"
-                ).alias("y"),
-            ),
+            ).select("doc_id", lm_milli_y("kn_logppl_micro")),
             eager=True,
         )
         prior_y = ledger.filter(F.col("kn_y").isNotNull()).select(
             F.col("kn_y").alias("y")
-        )
-        lm_stats = (
-            batch_kn.select("y").unionAll(prior_y).agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.sum("y").cast("bigint").alias("sy"),
-                F.sum(F.expr("y * y")).cast("bigint").alias("syy"),
-            )
         )
         # Stage the SLIM dropped-id set, not a second full-payload
         # checkpoint of kept4: the post-gate frame's four consumers
@@ -795,28 +785,14 @@ def admission_decisions(
         # recompute — and the text column is materialized once
         # instead of twice (r13 verdict task 3: narrow the survivor
         # payload through the staged checkpoints).
-        lm_drop = stage(
-            batch_kn.crossJoin(F.broadcast(lm_stats))
-            .withColumn("m", F.expr("sy div n"))
-            .filter(
-                (F.col("y") > F.col("m"))
-                & (
-                    F.expr("(y - m) * (y - m) * n")
-                    > F.expr("syy - 2 * m * sy + n * m * m")
-                )
-            )
-            .select("doc_id")
-        )
+        lm_drop = stage(lm_sigma_drop(batch_kn, prior_y))
         # no broadcast hint: the dropped-id set is corpus-bounded in
         # the batch twin — AQE picks broadcast when it actually fits
         kept4 = kept4.join(lm_drop, "doc_id", "left_anti")
 
     # ---- stage 5: ExactSubstr retention (intra-batch exact) AND
     # winnow containment vs the indexed corpus (cross-batch)
-    ret = dedup.substring_cut_retention(kept4)
-    keep_ret = ret.filter(
-        F.col("retention_ppm") >= RETENTION_MIN_PPM
-    ).select("doc_id")
+    keep_ret = retention_keep_ids(kept4)
     contain = dedup.winnow_containment_vs_index(
         kept4, win_idx, max_df=WINNOW_MAX_DF
     )
@@ -862,14 +838,7 @@ def admission_decisions(
         .withColumn(
             "n_admitted", F.coalesce("n_admitted", F.lit(0))
         )
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("source").orderBy(
-                    F.md5(F.col("doc_id").cast("string")), "doc_id"
-                )
-            ),
-        )
+        .withColumn("rnk", source_cap_rank())
     )
     admitted_ids = ranked.filter(
         F.col("n_admitted") + F.col("rnk") <= F.lit(cap)

@@ -143,3 +143,47 @@ def test_re_exclusion_resets_the_bar():
     assert active == {"q1"} and ledger == {"q1": 2}
     active2, _ = apply_persistent_excludes(ledger, set(), rounds)
     assert active2 == {"q1"}
+
+
+def _registered_source(spec):
+    """What a spec's hash must cover besides its oracle: the source of
+    the undecorated query function (`register`), or the SQL text
+    (`register_sql`) — read from the registry wrapper's closure."""
+    import inspect
+
+    closure = inspect.getclosurevars(spec.spark_fn).nonlocals
+    if "fn" in closure:
+        return inspect.getsource(closure["fn"])
+    return closure["sql"]
+
+
+def test_impl_hash_covers_the_body_and_oracle_that_run():
+    """A pin certifies what runs only if the hash is taken over the
+    query's own body and its final oracle. An oracle attached after
+    registration, or a hash of the registry wrapper's source, would
+    let a rewrite keep its old pin."""
+    from jly_flink_spark.plans import REGISTRY
+    from jly_flink_spark.plans.registry import _impl_hash
+
+    stale = sorted(
+        name
+        for name, spec in REGISTRY.items()
+        if spec.impl_hash != _impl_hash(_registered_source(spec), spec.oracle)
+    )
+    assert stale == []
+
+
+def test_query_spec_is_frozen():
+    """Specs cannot be edited after registration, so an oracle can only
+    be bound by the decorator that also hashes it."""
+    import dataclasses
+
+    import pytest
+
+    from jly_flink_spark.plans import REGISTRY
+
+    spec = REGISTRY["pipeline_training_corpus_v5"]
+    with pytest.raises(dataclasses.FrozenInstanceError):
+        spec.oracle = "SELECT 1"
+    with pytest.raises(dataclasses.FrozenInstanceError):
+        spec.impl_hash = ""

@@ -5,10 +5,16 @@ BPE, '##' marker semantics, tie-breaks, and exhaustion."""
 import math
 from collections import Counter
 
+import pytest
+
 from jly_flink_spark.operators.wordpiece import (
     wordpiece_tokenize_stats,
     wordpiece_train_merges,
 )
+
+from .oracle_harness import _frame_to_rows, duckdb_connect
+
+SF = "/root/testdata/sf0.001"
 
 
 def _init_syms(word: str) -> list[str]:
@@ -153,3 +159,28 @@ def test_wordpiece_tokenize_matches_reference_apply(spark):
         # piece counts bounded: between 1 and len(word) per word
         assert rows[i][1] <= sum(len(w) for w in ws)
         assert rows[i][1] >= len(ws)
+
+
+@pytest.mark.parametrize(
+    "name", ["wordpiece_train_merges", "wordpiece_tokenize_corpus"]
+)
+def test_registered_oracle_fits_a_memory_cap(spark, name):
+    """The unrolled WordPiece oracles run under a 2 GB DuckDB cap and
+    agree with the Spark side. With every st{r}/sc{r} reference
+    inlined, the plan grows ~3^rounds and runs out of memory."""
+    from jly_flink_spark.plans import REGISTRY
+
+    spec = REGISTRY[name]
+    con = duckdb_connect(SF)
+    try:
+        con.execute("SET memory_limit = '2GB'")
+        con.execute("SET threads = 4")
+        oracle = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    spark_side = spec.spark_fn(spark, SF).toPandas()
+    cols = sorted(spark_side.columns)
+    assert sorted(oracle.columns) == cols
+    want, _ = _frame_to_rows(spark_side, cols)
+    got, _ = _frame_to_rows(oracle, cols)
+    assert got == want and len(want) > 0

@@ -18,6 +18,12 @@ from pyspark.sql import SparkSession
 REFERENCE_TZ = "Asia/Shanghai"
 
 
+def local_cpus() -> int:
+    """Cores for ``local[n]``: ``SPARK_GRAFT_CPUS`` when set, else the
+    CPUs this process may run on — never more task slots than cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "jly_flink_spark",
     *,
@@ -32,7 +38,7 @@ def get_spark(
     partitions are re-planned at runtime — this is the 100-TB path:
     static shuffle-partition counts never fit every stage.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

@@ -1,13 +1,28 @@
 """Dual sinks reproducing the reference's delivery semantics
 (SURVEY.md K1–K6) on the micro-batch model.
 
+A partition-writing sink has three parts:
+
+- a driver-side epoch **open**, which says whether the epoch still
+  needs writing and prepares its target;
+- an executor-side **table writer**, called as `(db_tb_name, rows)`
+  once per destination table with that table's rows of the epoch;
+- a driver-side **commit**, run after the Spark action succeeded.
+
+`write_epoch` runs one `route(batch).foreachPartition(...)` that hands
+each table's rows to every open sink's table writer, so `DualSink`
+feeds both sinks from a single pass, as the reference's Flink job fans
+each record out to both sink operators (StartJob.java:94-104).
+
 - AdbStyleSink ≈ the buffered JDBC batch-insert sink
-  (reference: sink/AdbSink.java:30-146). Here the write target is
-  parquet partitioned by the routing key; for a real
-  AnalyticDB/MySQL target, swap `_write` for `df.write.jdbc(...)`
-  with the reference's URL params (`rewriteBatchedStatements=true`,
-  server-side prepared statements, `serverTimezone=Asia/Shanghai` —
-  AdbSink.java:63,73-77); the epoch/ledger logic is unchanged.
+  (reference: sink/AdbSink.java:30-146). Here the write target is one
+  parquet file per (epoch, table) under
+  `data/epoch_id=<n>/db_tb_name=<t>/`, written with pyarrow. For a
+  real AnalyticDB/MySQL target, `JdbcAdbSink` writes through Spark's
+  JDBC writer with the reference's URL params
+  (`rewriteBatchedStatements=true`, server-side prepared statements,
+  `serverTimezone=Asia/Shanghai` — AdbSink.java:63,73-77). It is a
+  standalone foreachBatch sink, not a partition writer.
 - SrStyleSink ≈ the StarRocks Stream Load sink
   (reference: sink/SrSink.java:31-203 + utils/SrStreamLoadClient.java).
   It reproduces the contract pieces that carry semantics: fixed-size
@@ -28,8 +43,10 @@ documented in SURVEY.md §7)."""
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import shutil
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -42,11 +59,8 @@ SINK_COLUMNS = ("db_tb_name", "id", "fb_no", "record_del_time", "data_json")
 def route(df: DataFrame) -> DataFrame:
     """Group an epoch's rows by destination table (SrSink.java:93): each
     table's rows share one hash partition, sorted on the full row so
-    chunk contents are replay-deterministic. Over a cached routed frame
-    this is a plain cache scan, since the cache reports its partitioning
-    and order (while Spark's default
-    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false
-    holds)."""
+    chunk contents are replay-deterministic and each table's rows are
+    contiguous within its partition."""
     return (
         df.select(*SINK_COLUMNS)
         .repartition("db_tb_name")
@@ -67,6 +81,31 @@ def _job_description(sc, text: str):
         sc.setLocalProperty("spark.job.description", prev)
 
 
+def write_epoch(batch_df: DataFrame, epoch_id: int, query_id: str, sinks) -> None:
+    """Write one epoch to partition-writing sinks in one Spark action.
+
+    Opens every sink on the driver; runs one `route(batch_df)
+    .foreachPartition` that hands each table's rows, as
+    `SINK_COLUMNS`-ordered tuples, to the table writer of every sink
+    that still needs the epoch; then commits those sinks. A failed
+    action commits nothing, so a replay writes the epoch again."""
+    live = [s for s in sinks if s.open(epoch_id, query_id)]
+    if not live:
+        return
+    writers = [s.table_writer(epoch_id, query_id) for s in live]
+
+    def write_partition(rows):
+        # route sorts on db_tb_name first: a table's rows are contiguous
+        for tbl, group in itertools.groupby(map(tuple, rows), key=lambda r: r[0]):
+            group = list(group)
+            for w in writers:
+                w(tbl, group)
+
+    route(batch_df).foreachPartition(write_partition)
+    for s in live:
+        s.commit(epoch_id, query_id)
+
+
 class LabelLedger:
     """Filesystem ledger of committed load labels — the replay-dedup
     that StarRocks provides server-side via label registration
@@ -85,36 +124,98 @@ class LabelLedger:
             pass
 
 
+# Characters Spark escapes as %XX in a partition directory's value
+# (ExternalCatalogUtils.charToEscape), so the layout matches a
+# `partitionBy("db_tb_name")` write.
+_PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^') | {
+    chr(c) for c in range(1, 32)
+}
+
+
+def _partition_value(v: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in v)
+
+
 @dataclass
 class AdbStyleSink:
     """Parquet archival keyed by epoch, standing in for the JDBC
-    batch sink. Epoch idempotency: an epoch already in the ledger is
-    skipped wholesale; an epoch NOT in the ledger overwrites its own
-    `epoch_id=<n>` partition directory, so a crash between a partial
-    write and the ledger commit replays clean instead of appending
-    duplicates — the parquet analog of the JDBC sink's
-    DELETE-then-INSERT (the reference instead relies on MySQL
-    transaction-per-flush, AdbSink.java:104-127)."""
+    batch sink. Layout: `data/epoch_id=<n>/db_tb_name=<t>/
+    part-<t>.parquet`, one file per (epoch, table).
+
+    Epoch idempotency: an epoch already in the ledger is skipped
+    wholesale; opening an epoch NOT in the ledger wipes its own
+    `epoch_id=<n>` directory, so a crash between a partial write and
+    the ledger commit replays clean instead of appending duplicates —
+    the parquet analog of the JDBC sink's DELETE-then-INSERT (the
+    reference instead relies on MySQL transaction-per-flush,
+    AdbSink.java:104-127). Within an epoch, the file name is fixed per
+    table and each table lands in one partition (`route`), so a
+    retried or speculative task replaces the same file: it writes a
+    `.`-prefixed temp file (which Spark's reader skips) and renames
+    it into place."""
 
     out_dir: str
 
     def __post_init__(self):
         self.ledger = LabelLedger(os.path.join(self.out_dir, "_ledger"))
 
+    def _epoch_dir(self, epoch_id: int) -> str:
+        return os.path.join(self.out_dir, "data", f"epoch_id={int(epoch_id)}")
+
+    def open(self, epoch_id: int, query_id: str = "q") -> bool:
+        if self.ledger.seen(f"adb_{query_id}_{epoch_id}"):
+            return False  # replayed epoch — already committed
+        epoch_dir = self._epoch_dir(epoch_id)
+        shutil.rmtree(epoch_dir, ignore_errors=True)
+        os.makedirs(epoch_dir)
+        return True
+
+    def table_writer(self, epoch_id: int, query_id: str = "q"):
+        epoch_dir = self._epoch_dir(epoch_id)
+
+        def write_table(db_tb_name, rows):
+            import uuid
+            from datetime import timezone
+
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            # PySpark hands timestamps over as naive datetimes in the
+            # worker's local time; astimezone reads them as such.
+            table = pa.table(
+                {
+                    "id": pa.array([r[1] for r in rows], pa.string()),
+                    "fb_no": pa.array([r[2] for r in rows], pa.string()),
+                    "record_del_time": pa.array(
+                        [
+                            None if r[3] is None else r[3].astimezone(timezone.utc)
+                            for r in rows
+                        ],
+                        pa.timestamp("us", tz="UTC"),
+                    ),
+                    "data_json": pa.array([r[4] for r in rows], pa.string()),
+                }
+            )
+            value = _partition_value(db_tb_name)
+            tdir = os.path.join(epoch_dir, f"db_tb_name={value}")
+            os.makedirs(tdir, exist_ok=True)
+            tmp = os.path.join(tdir, f".part-{uuid.uuid4().hex}.tmp")
+            # fb_no repeats per source instance; id and data_json are
+            # unique per row, where a dictionary only adds bytes. The
+            # parquet types alone read back as this schema, so the
+            # serialized Arrow schema is left out of every footer.
+            pq.write_table(
+                table, tmp, use_dictionary=["fb_no"], store_schema=False
+            )
+            os.replace(tmp, os.path.join(tdir, f"part-{value}.parquet"))
+
+        return write_table
+
+    def commit(self, epoch_id: int, query_id: str = "q") -> None:
+        self.ledger.commit(f"adb_{query_id}_{epoch_id}")
+
     def write(self, batch_df: DataFrame, epoch_id: int, query_id: str = "q") -> None:
-        label = f"adb_{query_id}_{epoch_id}"
-        if self.ledger.seen(label):
-            return  # replayed epoch — already committed
-        epoch_dir = os.path.join(
-            self.out_dir, "data", f"epoch_id={int(epoch_id)}"
-        )
-        (
-            batch_df.select(*SINK_COLUMNS)
-            .write.mode("overwrite")
-            .partitionBy("db_tb_name")
-            .parquet(epoch_dir)
-        )
-        self.ledger.commit(label)
+        write_epoch(batch_df, epoch_id, query_id, [self])
 
 
 # Table-missing SQLStates across the dialects the sink targets:
@@ -166,11 +267,20 @@ class JdbcAdbSink:
     on (query_id, epoch_id) — a replayed or half-written epoch is
     wiped and rewritten, the transactional analog of the reference's
     transaction-per-flush. The epoch/query columns ride along in the
-    target table, so the cleanup is a single indexed DELETE."""
+    target table, so the cleanup is a single indexed DELETE.
+
+    Spark's JDBC writer is its own action, so this sink is not a
+    partition writer and does not go into `DualSink`: it is a
+    standalone foreachBatch sink (`__call__`), namespaced by
+    `query_id` like `DualSink`."""
 
     url: str
     table: str = "delete_archive"
     driver: str = "org.apache.derby.jdbc.EmbeddedDriver"
+    query_id: str = "q"
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self.write(batch_df, epoch_id, self.query_id)
 
     def _execute(self, spark, sql: str) -> None:
         """Run one DDL/DML statement over the JVM's DriverManager —
@@ -362,80 +472,80 @@ class SrStyleSink:
     transport: object  # LocalDirTransport | HttpStreamLoadTransport
     batch_size: int = 100  # SinkConfig.java:20 default
 
-    def write(self, batch_df: DataFrame, epoch_id: int, query_id: str = "q") -> None:
+    def open(self, epoch_id: int, query_id: str = "q") -> bool:
+        return True  # dedup is per label, at the transport
+
+    def table_writer(self, epoch_id: int, query_id: str = "q"):
+        # Chunk indices restart per table, so a table split across
+        # partitions would reuse labels: `route` keeps each table in
+        # one partition. Partitions still load in parallel (bag +
+        # labels make order irrelevant), where the reference runs at
+        # parallelism 1.
         size = self.batch_size
-
-        def load_partition(rows):
-            # Executor-side: group rows of this partition by routing
-            # key, chunk, and send one labelled request per chunk.
-            import collections
-
-            by_table = collections.defaultdict(list)
-            for row in rows:
-                by_table[row["db_tb_name"]].append(
-                    {
-                        "id": row["id"],
-                        "record_del_time": str(row["record_del_time"]),
-                        "fb_no": row["fb_no"],
-                        "data_json": row["data_json"],
-                    }
-                )
-            for tbl, items in by_table.items():
-                for ci in range(0, len(items), size):
-                    chunk = items[ci : ci + size]
-                    label = (
-                        f"sink_sr_{query_id}_{epoch_id}_{tbl}_{ci // size}"
-                    )
-                    resp = transport.put(tbl, label, json.dumps(chunk))
-                    status = resp.get("Status")
-                    if status == "Label Already Exists":
-                        continue  # replayed chunk — already loaded
-                    if status != "Success":
-                        raise RuntimeError(f"stream load failed: {resp}")
-
         transport = self.transport
-        # One partition per destination table (chunk indices restart
-        # per table, so a table split across partitions would reuse
-        # labels). coalesce(1) per epoch would serialize like the
-        # reference's parallelism-1; we keep it parallel (bag + labels
-        # make order irrelevant).
-        route(batch_df).foreachPartition(load_partition)
+
+        def write_table(db_tb_name, rows):
+            items = [
+                {
+                    "id": r[1],
+                    "record_del_time": str(r[3]),
+                    "fb_no": r[2],
+                    "data_json": r[4],
+                }
+                for r in rows
+            ]
+            for ci in range(0, len(items), size):
+                label = f"sink_sr_{query_id}_{epoch_id}_{db_tb_name}_{ci // size}"
+                resp = transport.put(
+                    db_tb_name, label, json.dumps(items[ci : ci + size])
+                )
+                status = resp.get("Status")
+                if status == "Label Already Exists":
+                    continue  # replayed chunk — already loaded
+                if status != "Success":
+                    raise RuntimeError(f"stream load failed: {resp}")
+
+        return write_table
+
+    def commit(self, epoch_id: int, query_id: str = "q") -> None:
+        pass  # each chunk's label commits with its request
+
+    def write(self, batch_df: DataFrame, epoch_id: int, query_id: str = "q") -> None:
+        write_epoch(batch_df, epoch_id, query_id, [self])
 
 
 @dataclass
 class DualSink:
     """Fan out every micro-batch to both sinks — the reference wires
     AdbSink always and SrSink behind --sink_to_sr (StartJob.java:
-    94-104; C3). One source read, two writes, exactly as the Flink
-    job replicates records to both sink operators.
-
-    The batch is routed once (`route`) and cached; both sinks read the
-    cache, so the ADB write makes one parquet file per table per epoch
-    and the SR load needs no second shuffle. Trade-off: ADB write
+    94-104; C3). The Flink job replicates each record to both sink
+    operators in one pipelined dataflow; here one Spark action does
+    the same: `write_epoch` routes the batch once and each table's
+    rows go to both sinks' table writers in the task that holds them.
+    No frame is persisted and no second action runs, so an epoch costs
+    the route's shuffle-map job and one result job, described
+    `sink.dual epoch=<n>`. At small batch sizes that per-action
+    scheduling is most of an epoch's cost. Trade-off: write
     parallelism per epoch is bounded by the number of distinct tables
-    in it, as SR's already was; the reference runs both sinks at
-    parallelism 1 (StartJob.java:39). Sink jobs are described
-    `sink.adb epoch=<n>` / `sink.sr epoch=<n>`.
+    in it; the reference runs both sinks at parallelism 1
+    (StartJob.java:39).
 
-    `query_id` is the idempotency namespace: labels and the JDBC
-    cleanup key are (query_id, epoch_id, ...)-scoped, so TWO
-    independent streaming queries sharing one sink target MUST use
-    distinct query_ids — otherwise query B's epoch 0 collides with
-    query A's already-committed epoch 0 label and is silently
-    skipped. The job wiring passes the task's db alias."""
+    Both sinks must be partition writers (`open` / `table_writer` /
+    `commit`); `JdbcAdbSink` runs standalone instead.
+
+    `query_id` is the idempotency namespace: labels are
+    (query_id, epoch_id, ...)-scoped, so TWO independent streaming
+    queries sharing one sink target MUST use distinct query_ids —
+    otherwise query B's epoch 0 collides with query A's
+    already-committed epoch 0 label and is silently skipped. The job
+    wiring passes the task's db alias."""
 
     adb: AdbStyleSink
     sr: SrStyleSink | None = None
     query_id: str = "q"
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        sinks = [self.adb] if self.sr is None else [self.adb, self.sr]
         sc = batch_df.sparkSession.sparkContext
-        routed = route(batch_df).persist()
-        try:
-            with _job_description(sc, f"sink.adb epoch={epoch_id}"):
-                self.adb.write(routed, epoch_id, self.query_id)
-            if self.sr is not None:
-                with _job_description(sc, f"sink.sr epoch={epoch_id}"):
-                    self.sr.write(routed, epoch_id, self.query_id)
-        finally:
-            routed.unpersist()
+        with _job_description(sc, f"sink.dual epoch={epoch_id}"):
+            write_epoch(batch_df, epoch_id, self.query_id, sinks)

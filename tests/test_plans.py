@@ -742,9 +742,11 @@ class TestJobBudget:
         assert n == 1
 
     def test_dual_sink_call_job_budget(self, spark, tmp_path):
-        """One DualSink call: the route's shuffle-map stage, the cache
-        build and the ADB write, then the SR load straight off the
-        cache (no second shuffle) — 4 jobs."""
+        """One DualSink call: the route's shuffle-map stage, then one
+        foreachPartition job that writes each table's ADB parquet
+        file and sends its SR chunks in the same task — 2 jobs (4
+        when the routed frame was persisted and each sink ran its
+        own action)."""
         from jly_flink_spark.streaming.sinks import (
             AdbStyleSink,
             DualSink,
@@ -757,7 +759,7 @@ class TestJobBudget:
             AdbStyleSink(str(tmp_path / "adb")),
             SrStyleSink(LocalDirTransport(str(tmp_path / "sr")), batch_size=20),
         )
-        assert jobs_run(spark, lambda: sink(df, 0)) <= 4
+        assert jobs_run(spark, lambda: sink(df, 0)) <= 2
 
     def test_pagerank_dup_chunks_job_budget(self, spark):
         """Building and forcing PageRank over the duplicate-chunk

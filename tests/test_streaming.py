@@ -12,11 +12,13 @@ from pyspark.sql import functions as F
 
 from jly_flink_spark.config import demo_task_config
 from jly_flink_spark.pipeline import build_pipeline
+from jly_flink_spark.session import REFERENCE_TZ
 from jly_flink_spark.streaming.job import (
     run_archival_once,
     start_archival_stream,
 )
 from jly_flink_spark.streaming.sinks import (
+    SINK_COLUMNS,
     AdbStyleSink,
     DualSink,
     LocalDirTransport,
@@ -448,8 +450,8 @@ def test_sink_crash_mid_epoch_recovers_exactly_once(spark, tmp_path):
     from the checkpoint. Deterministic labels + sorted-before-chunk
     contents must yield exactly-once table contents: committed chunks
     dedup byte-identically, the crashed chunk commits on replay, and
-    the ADB side (whose epoch completed before the SR crash) skips
-    wholesale via its ledger."""
+    the ADB side (whose ledger label the failed pass never wrote)
+    wipes and rewrites its epoch."""
     env_dir = str(tmp_path / "env")
     # one epoch: 4 t_orders deletes (2 chunks at batch_size=2) + 2
     # t_items deletes (1 chunk) — crash on the orders SECOND chunk,
@@ -640,9 +642,8 @@ def test_stream_end_to_end_through_jdbc(spark, stream_dirs, tmp_path):
 
     url = f"jdbc:derby:{tmp_path}/stream_derby;create=true"
     jdbc_sink = JdbcAdbSink(url=url, table="delete_archive")
-    sink = DualSink(adb=jdbc_sink)
     run_archival_once(
-        spark, stream_dirs["env"], CFG, sink, stream_dirs["ckpt"]
+        spark, stream_dirs["env"], CFG, jdbc_sink, stream_dirs["ckpt"]
     )
     read = lambda: (  # noqa: E731
         spark.read.option("driver", jdbc_sink.driver)
@@ -660,7 +661,7 @@ def test_stream_end_to_end_through_jdbc(spark, stream_dirs, tmp_path):
             + "\n"
         )
     run_archival_once(
-        spark, stream_dirs["env"], CFG, sink, stream_dirs["ckpt"]
+        spark, stream_dirs["env"], CFG, jdbc_sink, stream_dirs["ckpt"]
     )
     assert sorted(r["id"] for r in read().collect()) == sorted(
         EXPECTED_IDS | {"99"}
@@ -1286,10 +1287,10 @@ def _label_files(root):
 
 
 def test_dual_sink_routes_once_for_both_sinks(spark, tmp_path):
-    """DualSink routes the batch once and hands the cached routed
-    frame to both sinks: the SR side writes the same labels with the
-    same bytes as a standalone SrStyleSink.write of the same frame and
-    epoch, and the ADB side writes one parquet file per table."""
+    """DualSink routes the batch once and feeds both sinks from one
+    pass: the SR side writes the same labels with the same bytes as a
+    standalone SrStyleSink.write of the same frame and epoch, and the
+    ADB side writes one parquet file per table."""
     target = _routing_frame(spark)
     DualSink(
         AdbStyleSink(str(tmp_path / "adb")),
@@ -1309,30 +1310,10 @@ def test_dual_sink_routes_once_for_both_sinks(spark, tmp_path):
         assert len(list((epoch_dir / t).glob("*.parquet"))) == 1, t
 
 
-def test_route_over_routed_cache_has_no_exchange(spark):
-    """The SR sink's own route over DualSink's cached routed frame
-    must not shuffle again: the cache reports the hash partitioning
-    on db_tb_name, so Catalyst drops the repeated exchange."""
-    import contextlib
-    import io
-
-    from jly_flink_spark.streaming.sinks import route
-
-    routed = route(_routing_frame(spark)).persist()
-    try:
-        routed.count()
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            route(routed).explain()
-        top = buf.getvalue().split("InMemoryRelation")[0]
-        assert "Exchange" not in top and "Sort" not in top, buf.getvalue()
-    finally:
-        routed.unpersist()
-
-
 def test_dual_sink_names_its_jobs(spark, tmp_path):
-    """Each sink's Spark jobs carry `sink.<name> epoch=<n>` as their
-    description, and the caller's description is restored after."""
+    """The DualSink call's Spark jobs carry `sink.dual epoch=<n>` as
+    their description, and the caller's description is restored
+    after."""
     sc = spark.sparkContext
     group = "dual-sink-job-descriptions"
     sc.setJobGroup(group, "outer")
@@ -1350,4 +1331,90 @@ def test_dual_sink_names_its_jobs(spark, tmp_path):
         store.job(j).description().getOrElse(None)
         for j in sc.statusTracker().getJobIdsForGroup(group)
     }
-    assert descriptions == {"sink.adb epoch=7", "sink.sr epoch=7"}
+    assert descriptions == {"sink.dual epoch=7"}
+
+
+@pytest.mark.parametrize("tz", ["UTC", REFERENCE_TZ])
+def test_dual_sink_adb_parity(spark, tmp_path, tz):
+    """A DualSink epoch read back with Spark holds the input rows: all
+    five sink columns, `record_del_time` as the same instant, whatever
+    the session time zone."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        target = _routing_frame(spark)
+        DualSink(AdbStyleSink(str(tmp_path / "adb")))(target, 2)
+        back = spark.read.parquet(str(tmp_path / "adb" / "data" / "epoch_id=2"))
+        assert dict(back.dtypes)["record_del_time"] == "timestamp"
+
+        def rows(df):
+            return sorted(
+                df.select(
+                    *SINK_COLUMNS[:3],
+                    F.unix_micros("record_del_time").alias("t"),
+                    "data_json",
+                ).collect()
+            )
+
+        assert rows(back) == rows(target)
+        assert len(rows(target)) == 30
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def _adb_rows(n):
+    from datetime import datetime
+
+    return [
+        ("demo_t_0", str(i), "FB0", datetime(2025, 8, 1, 0, 0, i), "{}")
+        for i in range(n)
+    ]
+
+
+def test_adb_table_writer_retry_converges(tmp_path):
+    """A retried (or speculative) task writes the same (epoch, table)
+    file again: one parquet file remains, holding the retry's rows, and
+    no temp file is left."""
+    import pyarrow.parquet as pq
+
+    sink = AdbStyleSink(str(tmp_path / "adb"))
+    assert sink.open(4)
+    write = sink.table_writer(4)
+    write("demo_t_0", _adb_rows(3))
+    write("demo_t_0", _adb_rows(2))
+    tdir = tmp_path / "adb" / "data" / "epoch_id=4" / "db_tb_name=demo_t_0"
+    assert sorted(os.listdir(tdir)) == ["part-demo_t_0.parquet"]
+    assert pq.read_table(tdir / "part-demo_t_0.parquet").num_rows == 2
+
+
+def test_adb_replay_wipes_stale_temp_file(spark, tmp_path):
+    """A temp file left by a task that died mid-write in an uncommitted
+    epoch is gone after the replayed epoch."""
+    tdir = tmp_path / "adb" / "data" / "epoch_id=6" / "db_tb_name=demo_t_0"
+    tdir.mkdir(parents=True)
+    stale = tdir / ".part-dead.tmp"
+    stale.write_bytes(b"half a parquet file")
+    AdbStyleSink(str(tmp_path / "adb")).write(_routing_frame(spark), epoch_id=6)
+    assert not stale.exists()
+    assert sorted(os.listdir(tdir)) == ["part-demo_t_0.parquet"]
+
+
+def test_adb_table_dir_escapes_like_spark(spark, tmp_path):
+    """A table name with path or partition syntax in it gets the
+    directory name Spark's partitioned writer gives it, and reads back
+    as itself."""
+    name = "demo_a/b=c%d"
+    sink = AdbStyleSink(str(tmp_path / "adb"))
+    assert sink.open(1)
+    sink.table_writer(1)(name, [(name,) + r[1:] for r in _adb_rows(2)])
+    epoch_dir = tmp_path / "adb" / "data" / "epoch_id=1"
+    assert os.listdir(epoch_dir) == ["db_tb_name=demo_a%2Fb%3Dc%25d"]
+    by_spark = str(tmp_path / "by_spark")
+    spark.createDataFrame([(name, 1)], "db_tb_name string, x int").write.partitionBy(
+        "db_tb_name"
+    ).parquet(by_spark)
+    assert os.listdir(epoch_dir) == [
+        d for d in os.listdir(by_spark) if d.startswith("db_tb_name=")
+    ]
+    back = spark.read.parquet(str(epoch_dir)).select("db_tb_name").collect()
+    assert [r[0] for r in back] == [name, name]

@@ -106,8 +106,15 @@ def main() -> None:
     if bool(args.queries) != bool(args.out):
         ap.error("--queries and --out go together")
 
-    # the package from --root; bench.HEADLINE from this checkout
-    sys.path[:0] = [os.path.abspath(args.root), REPO]
+    # the package from --root; bench.HEADLINE from this checkout. The
+    # Python workers import the package too (staged UDFs run while a
+    # plan is built), and the JVM started below hands its environment's
+    # PYTHONPATH to them.
+    root = os.path.abspath(args.root)
+    sys.path[:0] = [root, REPO]
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     from jly_flink_spark.plans import REGISTRY
     from jly_flink_spark.session import get_spark
 

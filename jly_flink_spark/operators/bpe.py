@@ -3,34 +3,13 @@ apply one (text_token_bpe in plans/ tokenizes with a fixed regex —
 this operator learns data-driven merges, the Sennrich et al. 2016
 subword algorithm every modern LLM tokenizer descends from).
 
-Declarative fixed-point shape, like the classifier GD epochs and the
-K-means rounds: BPE_ROUNDS unrolled merge rounds, each fully inside
-the DataFrame plan and value-hash oracle-checkable.
-
-Scale shape (the 100-TB argument — the reason BPE training is
-feasible at corpus scale at all):
-- The corpus is touched ONCE: a single map-side-combined word-count
-  aggregation down to the (word, cnt) vocabulary. Every merge round
-  thereafter operates on the VOCAB table — |V| rows regardless of
-  corpus size (this is also how reference implementations train:
-  on word frequencies, never on the raw stream).
-- Per round, the only shuffles are the (a, b) pair-count partials
-  (map-side combined, bounded by distinct adjacent pairs per
-  partition) and a 1-row sort-limit for the winning pair. The merge
-  rewrite is a per-row greedy fold over the symbol array — zero
-  shuffle, broadcast of the single winner row.
-- The symbol-state frame is staged (io.stage) per round, keeping the
-  lazy plan linear in rounds (the K-means/classifier lesson: a
-  twice-referenced round frame doubles the subtree per round).
-
-Bit-exactness: counts are exact integers; the winning pair breaks
-ties by (count DESC, a, b) string order; the greedy left-to-right
-merge is a fold both engines express identically (Spark `aggregate`
-with an empty init + null-safe `get`; DuckDB `list_reduce` over
-singleton-wrapped symbols, whose first-element init is equivalent).
-A merged token never string-equals its own left part (concat(a,b)=a
-iff b=''), so a single pass can never cascade — the fold and the
-oracle agree on every corpus.
+BPE is the frequency member of the merge learner in
+operators/subword.py (scale shape and bit-exactness argument there):
+a word starts as its characters, a merge concatenates the pair
+(concat(a, b) = a iff b = '', so a merge never cascades), and the
+winner is the most frequent adjacent pair, (count DESC, a, b). The
+score needs no symbol counts, so a round shuffles only the pair
+counts and the 1-row winner.
 """
 
 from __future__ import annotations
@@ -38,149 +17,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import stage
+from .subword import (
+    MergeScheme,
+    extract_merges,
+    pieces_expr,
+    tokenize_projection,
+    train_merges,
+)
 
 BPE_ROUNDS = 8
 
-_PAIR_EXPR = (
-    "CASE WHEN size(syms) >= 2 THEN transform(sequence(1, size(syms)-1),"
-    " i -> struct(element_at(syms, i) AS a, element_at(syms, i+1) AS b))"
-    " ELSE CAST(array() AS array<struct<a:string,b:string>>) END"
+BPE = MergeScheme(
+    rounds=BPE_ROUNDS,
+    symbol=lambda c, i: c,
+    symbol_sql="{c}",
+    merged=F.concat,
+    merged_sql="{a} || {b}",
 )
-
-
-def _merge_fold(syms, ta, tb):
-    """Greedy left-to-right merge of adjacent (ta, tb) in the symbol
-    array: one pass, merged tokens don't re-combine within the pass.
-    `F.get` (0-based, NULL out of range) keeps the empty-accumulator
-    probe ANSI-safe."""
-
-    def step(acc, s):
-        return F.when(
-            (F.get(acc, F.size(acc) - 1) == ta) & (s == tb),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1),
-                F.array(F.concat(ta, tb)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s)))
-
-    return F.aggregate(syms, F.array().cast("array<string>"), step)
 
 
 def bpe_train_merges(
     docs: DataFrame, rounds: int = BPE_ROUNDS
 ) -> DataFrame:
-    """(round, merge_a, merge_b, pair_count): the learned merge table
-    — round r's winning adjacent symbol pair over the whole vocabulary
-    (weighted by word count) after applying rounds 1..r-1."""
-    from .text import tokens
-
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    vocab = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    st = vocab.select(
-        "cnt",
-        F.expr(
-            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-        ).alias("syms"),
-    ).transform(stage)
-
-    merge_rows = []
-    for r in range(1, rounds + 1):
-        pc = (
-            st.select("cnt", F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-            .select("cnt", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .groupBy("a", "b")
-            .agg(F.sum("cnt").cast("bigint").alias("pair_count"))
-        )
-        top1 = (
-            pc.orderBy(F.col("pair_count").desc(), "a", "b")
-            .limit(1)
-            .transform(stage)
-        )
-        merge_rows.append(
-            top1.select(
-                F.lit(r).cast("bigint").alias("round"),
-                F.col("a").alias("merge_a"),
-                F.col("b").alias("merge_b"),
-                "pair_count",
-            )
-        )
-        st = (
-            st.crossJoin(
-                F.broadcast(
-                    top1.select(
-                        F.col("a").alias("ta"), F.col("b").alias("tb")
-                    )
-                )
-            )
-            .select(
-                "cnt",
-                _merge_fold(
-                    F.col("syms"), F.col("ta"), F.col("tb")
-                ).alias("syms"),
-            )
-            .transform(stage)
-        )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionAll(m)
-    return out
-
-
-def extract_merges(merges_df: DataFrame) -> list[tuple[str, str]]:
-    """Collect the learned merge table as driver model state — the
-    train-offline/serve-online boundary (like classifier weights and
-    K-means centroids): BPE_ROUNDS (a, b) pairs in rank order."""
-    rows = sorted(merges_df.collect(), key=lambda r: r["round"])
-    return [(r["merge_a"], r["merge_b"]) for r in rows]
+    """(round, merge_a, merge_b, pair_count): the learned merge table."""
+    return train_merges(docs, BPE, rounds)
 
 
 def bpe_tokenize_expr(words, merges: list[tuple[str, str]]):
     """bigint Column: BPE token count of a word-array column under
-    the frozen rank-ordered merge list — a pure per-row expression
-    (nested higher-order functions, zero shuffle, no model join):
-    each word splits to characters, each merge applies as one greedy
-    fold in rank order, counts sum across words."""
-
-    def chars(w):
-        return F.transform(
-            F.sequence(F.lit(1), F.length(w)),
-            lambda i: F.substr(w, i, F.lit(1)),
-        )
-
-    def word_syms(w):
-        syms = chars(w)
-        for a, b in merges:
-            syms = _merge_fold(syms, F.lit(a), F.lit(b))
-        return F.size(syms)
-
-    return F.aggregate(
-        F.transform(words, word_syms),
-        F.lit(0).cast("bigint"),
-        lambda acc, n: acc + n,
-    )
+    the frozen rank-ordered merge list."""
+    return pieces_expr(BPE, words, merges)
 
 
 def _tokenize_projection(
     docs: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
-    """The stateless scoring projection shared by batch and stream:
-    (doc_id, n_ws_tokens, n_bpe_tokens) per token-bearing doc."""
-    from .text import tokens
-
-    toks = docs.select(
-        "doc_id", tokens(F.col("text")).alias("ws")
-    ).filter(F.size("ws") > 0)
-    return toks.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.size("ws").cast("bigint").alias("n_ws_tokens"),
-        bpe_tokenize_expr(F.col("ws"), merges).alias("n_bpe_tokens"),
-    )
+    """(doc_id, n_ws_tokens, n_bpe_tokens) per token-bearing doc —
+    the projection batch and stream share."""
+    return tokenize_projection(docs, BPE, merges, "n_bpe_tokens")
 
 
 def bpe_tokenize_stats(
@@ -190,9 +64,7 @@ def bpe_tokenize_stats(
     a merge table trained on it — the train→serve pair in one query.
     The train phase runs the unrolled rounds; the learned merges
     freeze into the per-row tokenize expression, so the apply scan
-    is single-pass with zero shuffle (the per-doc output needs no
-    aggregation at all). Documents with no tokens are dropped, like
-    the training vocabulary drops them."""
+    is single-pass with zero shuffle."""
     merges = extract_merges(bpe_train_merges(docs, rounds=rounds))
     return _tokenize_projection(docs, merges)
 

@@ -8,7 +8,7 @@ Declarative fixed-point shape, like the BPE merges / classifier GD /
 K-means rounds: UNI_ROUNDS unrolled EM rounds, each fully inside the
 DataFrame plan and value-hash oracle-checkable.
 
-Scale shape (the BPE argument verbatim):
+Scale shape (the merge learner's argument in `subword.py`, verbatim):
 - The corpus is touched ONCE — one map-side-combined word-count
   aggregation to the (word, cnt) vocabulary; seeding and every EM
   round operate on |V| rows regardless of corpus size (SentencePiece

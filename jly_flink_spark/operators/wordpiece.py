@@ -7,31 +7,22 @@ tokenizer: merge the adjacent pair maximizing
     score(a, b) = count(ab) / (count(a) · count(b))
 
 i.e. the pair whose merge most increases corpus likelihood under a
-unigram model, not merely the most frequent pair. Continuation
-symbols carry the canonical '##' prefix; merging a + '##x' yields
-'a##x'-without-the-marker (a || x), keeping word-initial vs
-continuation pieces distinct end to end.
+unigram model, not merely the most frequent pair.
 
-Declarative fixed-point shape, exactly the BPE discipline: WP_ROUNDS
-unrolled rounds, each fully inside the DataFrame plan and value-hash
-oracle-checkable.
-
-Scale shape (identical argument to BPE training): the corpus is
-aggregated ONCE to the (word, cnt) vocabulary; every round then
-operates on |V| rows regardless of corpus size. Per round the only
-shuffles are the pair-count and symbol-count partials (both map-side
-combined, both bounded by distinct symbols/pairs); winner selection
-is a 1-row sort-limit; the merge rewrite is a zero-shuffle per-row
-fold over the broadcast winner.
-
-Bit-exactness: counts are exact integers; the likelihood score
-quantizes as round((ln c_ab − ln c_a − ln c_b)·1e6) — ONE expression
-string evaluated by both engines (identical IEEE order, micro-round
-absorbing last-ulp libm noise, the trigram-LM discipline) — with
-(score DESC, a, b) tie-breaks; the greedy left-to-right merge fold
-is the BPE fold with the '##' strip on the right part. A merged
-token never equals its own left part (the stripped right part is
-non-empty), so a single pass cannot cascade.
+WordPiece is a scheme of the merge learner in operators/subword.py
+(scale shape and bit-exactness argument there):
+- Continuation symbols carry the canonical '##' prefix, so a word
+  starts as its bare first character plus '##'-marked characters,
+  keeping word-initial vs continuation pieces distinct end to end.
+- Merging a + '##x' yields a || x: the right part is always a
+  continuation symbol, so the marker is structurally present and the
+  stripped part is non-empty (no cascade within a pass).
+- The score quantizes as round((ln c_ab − ln c_a − ln c_b)·1e6) —
+  ONE expression string evaluated by both engines (identical IEEE
+  order, micro-round absorbing last-ulp libm noise, the trigram-LM
+  discipline) — with (score DESC, a, b) tie-breaks. It needs the
+  weighted symbol counts, so each round shuffles a symbol-count
+  aggregate beside the pair counts.
 """
 
 from __future__ import annotations
@@ -39,15 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import stage
+from .subword import (
+    MergeScheme,
+    extract_merges,
+    pieces_expr,
+    tokenize_projection,
+    train_merges,
+)
 
 WP_ROUNDS = 6
-
-_PAIR_EXPR = (
-    "CASE WHEN size(syms) >= 2 THEN transform(sequence(1, size(syms)-1),"
-    " i -> struct(element_at(syms, i) AS a, element_at(syms, i+1) AS b))"
-    " ELSE CAST(array() AS array<struct<a:string,b:string>>) END"
-)
 
 # score(a,b) in integer micro-log-units — shared verbatim with the
 # DuckDB oracle (columns pair_count / ca / cb must be in scope)
@@ -57,149 +48,30 @@ WP_SCORE_SQL = (
     " * 1000000) AS BIGINT)"
 )
 
-# word → WordPiece initial symbols: first char bare, rest '##'-marked
-_INIT_SYMS_EXPR = (
-    "transform(sequence(1, length(word)), i -> CASE WHEN i = 1"
-    " THEN substring(word, i, 1)"
-    " ELSE '##' || substring(word, i, 1) END)"
+WORDPIECE = MergeScheme(
+    rounds=WP_ROUNDS,
+    symbol=lambda c, i: F.when(i == 1, c).otherwise(
+        F.concat(F.lit("##"), c)
+    ),
+    symbol_sql="CASE WHEN {i} = 1 THEN {c} ELSE '##' || {c} END",
+    merged=lambda a, b: F.concat(a, F.substr(b, F.lit(3))),
+    merged_sql="{a} || {b}[3:]",
+    score_sql=WP_SCORE_SQL,
 )
-
-
-def _wp_merged(ta, tb):
-    """The merged token: left part + right part sans '##' marker.
-    Every right part is a continuation symbol (position ≥ 2), so the
-    marker is structurally present."""
-    return F.concat(ta, F.substr(tb, F.lit(3)))
-
-
-def _wp_merge_fold(syms, ta, tb):
-    """Greedy left-to-right merge of adjacent (ta, tb): one pass,
-    merged tokens don't re-combine within the pass (BPE's fold with
-    the WordPiece merged-token form)."""
-
-    def step(acc, s):
-        return F.when(
-            (F.get(acc, F.size(acc) - 1) == ta) & (s == tb),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1),
-                F.array(_wp_merged(ta, tb)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s)))
-
-    return F.aggregate(syms, F.array().cast("array<string>"), step)
 
 
 def wordpiece_train_merges(
     docs: DataFrame, rounds: int = WP_ROUNDS
 ) -> DataFrame:
     """(round, merge_a, merge_b, pair_count, score_micro): the
-    learned merge table — round r's likelihood-maximizing adjacent
-    symbol pair over the whole vocabulary after applying rounds
-    1..r-1."""
-    from .text import tokens
-
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    vocab = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    st = vocab.select(
-        "cnt", F.expr(_INIT_SYMS_EXPR).alias("syms")
-    ).transform(stage)
-
-    merge_rows = []
-    for r in range(1, rounds + 1):
-        pc = (
-            st.select("cnt", F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-            .select("cnt", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .groupBy("a", "b")
-            .agg(F.sum("cnt").cast("bigint").alias("pair_count"))
-        )
-        sc = (
-            st.select("cnt", F.explode("syms").alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("cnt").cast("bigint").alias("c"))
-        )
-        top1 = (
-            pc.join(
-                sc.select(F.col("sym").alias("a"), F.col("c").alias("ca")),
-                "a",
-            )
-            .join(
-                sc.select(F.col("sym").alias("b"), F.col("c").alias("cb")),
-                "b",
-            )
-            .select(
-                "a",
-                "b",
-                "pair_count",
-                F.expr(WP_SCORE_SQL).alias("score_micro"),
-            )
-            .orderBy(F.col("score_micro").desc(), "a", "b")
-            .limit(1)
-            .transform(stage)
-        )
-        merge_rows.append(
-            top1.select(
-                F.lit(r).cast("bigint").alias("round"),
-                F.col("a").alias("merge_a"),
-                F.col("b").alias("merge_b"),
-                "pair_count",
-                "score_micro",
-            )
-        )
-        st = (
-            st.crossJoin(
-                F.broadcast(
-                    top1.select(
-                        F.col("a").alias("ta"), F.col("b").alias("tb")
-                    )
-                )
-            )
-            .select(
-                "cnt",
-                _wp_merge_fold(
-                    F.col("syms"), F.col("ta"), F.col("tb")
-                ).alias("syms"),
-            )
-            .transform(stage)
-        )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionAll(m)
-    return out
-
-
-def extract_merges(merges_df: DataFrame) -> list[tuple[str, str]]:
-    """Collect the learned merge table as driver model state — the
-    train-offline/serve-online boundary, like BPE's."""
-    rows = sorted(merges_df.collect(), key=lambda r: r["round"])
-    return [(r["merge_a"], r["merge_b"]) for r in rows]
+    learned merge table."""
+    return train_merges(docs, WORDPIECE, rounds)
 
 
 def wordpiece_pieces_expr(words, merges: list[tuple[str, str]]):
     """bigint Column: WordPiece piece count of a word-array column
-    under the frozen rank-ordered merge list — a pure per-row
-    expression (nested higher-order functions, zero shuffle)."""
-
-    def word_syms(w):
-        syms = F.transform(
-            F.sequence(F.lit(1), F.length(w)),
-            lambda i: F.when(i == 1, F.substr(w, i, F.lit(1))).otherwise(
-                F.concat(F.lit("##"), F.substr(w, i, F.lit(1)))
-            ),
-        )
-        for a, b in merges:
-            syms = _wp_merge_fold(syms, F.lit(a), F.lit(b))
-        return F.size(syms)
-
-    return F.aggregate(
-        F.transform(words, word_syms),
-        F.lit(0).cast("bigint"),
-        lambda acc, n: acc + n,
-    )
+    under the frozen rank-ordered merge list."""
+    return pieces_expr(WORDPIECE, words, merges)
 
 
 def wordpiece_tokenize_stats(
@@ -209,14 +81,5 @@ def wordpiece_tokenize_stats(
     merge table trained on it — the train→serve pair in one query.
     Continuation pieces are n_wp_pieces − n_ws_tokens by the '##'
     invariant (every non-initial piece carries the marker)."""
-    from .text import tokens
-
     merges = extract_merges(wordpiece_train_merges(docs, rounds=rounds))
-    toks = docs.select(
-        "doc_id", tokens(F.col("text")).alias("ws")
-    ).filter(F.size("ws") > 0)
-    return toks.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.size("ws").cast("bigint").alias("n_ws_tokens"),
-        wordpiece_pieces_expr(F.col("ws"), merges).alias("n_wp_pieces"),
-    )
+    return tokenize_projection(docs, WORDPIECE, merges, "n_wp_pieces")

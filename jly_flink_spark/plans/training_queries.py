@@ -21,7 +21,9 @@ from pyspark.sql import Window
 
 from ..functions import dsum
 from ..io import load_table
+from ..operators.bpe import BPE
 from ..operators.text import token_count, tokens
+from ..operators.wordpiece import WORDPIECE
 from .registry import register
 
 # Single parity-critical definition in jly_flink_spark.functions.
@@ -872,22 +874,45 @@ def contamination_bloom_prefilter(spark, sf_dir):
     return bloom_contamination(load_table(spark, sf_dir, "documents"))
 
 
-def _bpe_cte_prefix() -> str:
-    """The unrolled BPE training as a DuckDB WITH-clause prefix
-    (toks → vocab → st0 → [pc{r}, top{r}, st{r}] per round), shared
-    by the train oracle and the tokenize oracle, which continues the
-    chain with the per-document apply. Mirrors operators/bpe.py
-    round for round: pair counts from the evolving vocabulary symbol
-    table, (count DESC, a, b) winner selection, and the greedy
-    left-to-right merge as a `list_reduce` over singleton-wrapped
-    symbols (first-element init ≡ Spark's empty-init `aggregate`
-    with a null-safe last-element probe)."""
-    from ..operators.bpe import BPE_ROUNDS
+def _merge_fold_sql(scheme) -> str:
+    """The greedy left-to-right merge of the winner (t.a, t.b) over
+    `s.syms`: a `list_reduce` over singleton-wrapped symbols
+    (first-element init ≡ Spark's empty-init `aggregate` with a
+    null-safe last-element probe)."""
+    merged = scheme.merged_sql.format(a="t.a", b="t.b")
+    return f"""list_reduce(list_transform(s.syms, x -> [x]),
+           (acc, x) -> CASE WHEN acc[-1] = t.a AND x[1] = t.b
+                       THEN acc[1:len(acc)-1] || [{merged}]
+                       ELSE acc || x END)"""
 
-    blocks = []
+
+def _initial_symbols_sql(scheme) -> str:
+    """`word` split into the scheme's initial symbols."""
+    sym = scheme.symbol_sql.format(c="word[i]", i="i")
+    return f"list_transform(generate_series(1, length(word)), i -> {sym})"
+
+
+def _merge_cte_prefix(scheme) -> str:
+    """The unrolled merge-learner training as a DuckDB WITH-clause
+    prefix (toks → vocab → st0 → [pc{r}, sc{r}, top{r}, st{r}] per
+    round, sc{r} only when the score reads symbol counts), shared by
+    the train oracle and the tokenize oracle, which continues the
+    chain with the per-document apply. Mirrors operators/subword.py
+    round for round: pair counts (and weighted symbol counts) from
+    the evolving vocabulary symbol table, the scheme's score string
+    verbatim, (score DESC, a, b) winner selection and the scheme's
+    greedy fold. Each round's symbol table st{r} feeds the next
+    round's pair count, symbol count and fold, and sc{r} both sides
+    of the score join, so both are MATERIALIZED: DuckDB otherwise
+    inlines every reference and the unrolled plan grows ~2^rounds
+    for BPE and ~3^rounds for WordPiece (out of memory even at
+    sf0.001)."""
+    from .northstar_queries import _TOKS
+
+    ctes = []
     prev = "st0"
-    for r in range(1, BPE_ROUNDS + 1):
-        blocks.append(f"""
+    for r in range(1, scheme.rounds + 1):
+        ctes.append(f"""
 pc{r} AS (
   SELECT a, b, CAST(sum(cnt) AS BIGINT) AS pair_count
   FROM (
@@ -895,91 +920,92 @@ pc{r} AS (
     FROM {prev}, unnest(range(len(syms)-1)) u(i)
   )
   GROUP BY a, b
-),
+)""")
+        if scheme.score_sql is None:
+            ranked = f"SELECT a, b, pair_count FROM pc{r}"
+        else:
+            ctes.append(f"""
+sc{r} AS MATERIALIZED (
+  SELECT sym, CAST(sum(cnt) AS BIGINT) AS c
+  FROM (SELECT cnt, unnest(syms) AS sym FROM {prev})
+  GROUP BY sym
+)""")
+            ranked = f"""SELECT a, b, pair_count,
+         {scheme.score_sql} AS score_micro
+  FROM (
+    SELECT p.a, p.b, p.pair_count, ca.c AS ca, cb.c AS cb
+    FROM pc{r} p
+    JOIN sc{r} ca ON ca.sym = p.a
+    JOIN sc{r} cb ON cb.sym = p.b
+  )"""
+        ctes.append(f"""
 top{r} AS (
-  SELECT a, b, pair_count FROM pc{r}
-  ORDER BY pair_count DESC, a, b LIMIT 1
-),
-st{r} AS (
-  SELECT s.cnt,
-         list_reduce(list_transform(s.syms, x -> [x]),
-           (acc, x) -> CASE WHEN acc[-1] = t.a AND x[1] = t.b
-                       THEN acc[1:len(acc)-1] || [t.a || t.b]
-                       ELSE acc || x END) AS syms
+  {ranked}
+  ORDER BY {scheme.merge_cols[-1]} DESC, a, b LIMIT 1
+)""")
+        ctes.append(f"""
+st{r} AS MATERIALIZED (
+  SELECT s.cnt, {_merge_fold_sql(scheme)} AS syms
   FROM {prev} s CROSS JOIN top{r} t
 )""")
         prev = f"st{r}"
     return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
-  FROM documents
-),
+WITH toks AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
 vocab AS (
   SELECT tok AS word, CAST(count(*) AS BIGINT) AS cnt
   FROM (SELECT unnest(ts) AS tok FROM toks)
   GROUP BY tok
 ),
-st0 AS (
-  SELECT cnt,
-         list_transform(generate_series(1, length(word)), i -> word[i])
-           AS syms
-  FROM vocab
+st0 AS MATERIALIZED (
+  SELECT cnt, {_initial_symbols_sql(scheme)} AS syms FROM vocab
 ),
-{",".join(blocks)}"""
+{",".join(ctes)}"""
 
 
-def _bpe_oracle() -> str:
-    from ..operators.bpe import BPE_ROUNDS
-
+def _merge_table_oracle(scheme) -> str:
+    """The learned merge table: one row per non-empty top{r}."""
+    cols = ", ".join(scheme.merge_cols)
     union = "\nUNION ALL ".join(
         f"SELECT CAST({r} AS BIGINT) AS round, a AS merge_a,"
-        f" b AS merge_b, pair_count FROM top{r}"
-        for r in range(1, BPE_ROUNDS + 1)
+        f" b AS merge_b, {cols} FROM top{r}"
+        for r in range(1, scheme.rounds + 1)
     )
-    return f"""{_bpe_cte_prefix()}
+    return f"""{_merge_cte_prefix(scheme)}
 {union}
 """
 
 
-def _bpe_apply_oracle() -> str:
+def _merge_apply_oracle(scheme, out_col: str) -> str:
     """Continues the training CTE chain with the per-document apply:
-    each token instance splits to characters and every learned merge
-    applies as one greedy fold in rank order. LEFT JOIN ON TRUE (not
-    CROSS JOIN) so an exhausted round — empty top{r} — passes
-    symbols through unchanged, matching the engine's collected-model
-    apply of however many merges were actually learned."""
-    from ..operators.bpe import BPE_ROUNDS
-
+    each token instance splits to the initial symbols and every
+    learned merge applies as one greedy fold in rank order. LEFT JOIN
+    ON TRUE (not CROSS JOIN) so an exhausted round — empty top{r} —
+    passes symbols through unchanged, matching the engine's
+    collected-model apply of however many merges were actually
+    learned."""
     blocks = []
     prev = "ap0"
-    for r in range(1, BPE_ROUNDS + 1):
+    for r in range(1, scheme.rounds + 1):
         blocks.append(f"""
 ap{r} AS (
   SELECT s.doc_id, s.word,
          CASE WHEN t.a IS NULL THEN s.syms
-              ELSE list_reduce(list_transform(s.syms, x -> [x]),
-                (acc, x) -> CASE WHEN acc[-1] = t.a AND x[1] = t.b
-                            THEN acc[1:len(acc)-1] || [t.a || t.b]
-                            ELSE acc || x END)
+              ELSE {_merge_fold_sql(scheme)}
          END AS syms
   FROM {prev} s LEFT JOIN top{r} t ON TRUE
 )""")
         prev = f"ap{r}"
-    return f"""{_bpe_cte_prefix()},
+    return f"""{_merge_cte_prefix(scheme)},
 docw AS (
   SELECT doc_id, unnest(ts) AS word FROM toks
 ),
 ap0 AS (
-  SELECT doc_id, word,
-         list_transform(generate_series(1, length(word)), i -> word[i])
-           AS syms
-  FROM docw
+  SELECT doc_id, word, {_initial_symbols_sql(scheme)} AS syms FROM docw
 ),
 {",".join(blocks)}
 SELECT doc_id,
        CAST(count(*) AS BIGINT) AS n_ws_tokens,
-       CAST(sum(len(syms)) AS BIGINT) AS n_bpe_tokens
+       CAST(sum(len(syms)) AS BIGINT) AS {out_col}
 FROM {prev}
 GROUP BY doc_id
 """
@@ -987,7 +1013,7 @@ GROUP BY doc_id
 
 @register(
     "bpe_train_merges",
-    oracle=_bpe_oracle(),
+    oracle=_merge_table_oracle(BPE),
     tags=("training", "tokenizer", "text", "iterative", "ml"),
     doc="BPE tokenizer TRAINING (Sennrich et al. 2016): 8 unrolled "
     "merge rounds learning the data-driven merge table — the "
@@ -1008,7 +1034,7 @@ def bpe_train_merges(spark, sf_dir):
 
 @register(
     "bpe_tokenize_corpus",
-    oracle=_bpe_apply_oracle(),
+    oracle=_merge_apply_oracle(BPE, "n_bpe_tokens"),
     tags=("training", "tokenizer", "text", "iterative", "ml"),
     doc="BPE train→serve in one query: tokenize every document with "
     "the merge table learned on the corpus. The learned merges "
@@ -1031,133 +1057,9 @@ def bpe_tokenize_corpus(spark, sf_dir):
 # tokenizer trio (BPE = frequency, unigram LM = EM-pruned) — see
 # operators/wordpiece.py
 # ---------------------------------------------------------------------------
-def _wp_cte_prefix() -> str:
-    """The unrolled WordPiece training as a DuckDB WITH-clause prefix
-    (toks → vocab → st0 → [pc{r}, sc{r}, top{r}, st{r}] per round).
-    Mirrors operators/wordpiece.py round for round: pair counts AND
-    weighted symbol counts from the evolving symbol table, the
-    quantized likelihood score (the module's WP_SCORE_SQL string,
-    verbatim), (score DESC, a, b) winner selection, and the greedy
-    fold with the '##' strip on the right part. Each round's symbol
-    table st{r} and symbol counts sc{r} are read by several CTEs, so
-    they are MATERIALIZED: DuckDB otherwise inlines every reference
-    and the unrolled plan grows ~3^rounds (out of memory even at
-    sf0.001)."""
-    from ..operators.wordpiece import WP_ROUNDS, WP_SCORE_SQL
-
-    blocks = []
-    prev = "st0"
-    for r in range(1, WP_ROUNDS + 1):
-        blocks.append(f"""
-pc{r} AS (
-  SELECT a, b, CAST(sum(cnt) AS BIGINT) AS pair_count
-  FROM (
-    SELECT cnt, syms[i+1] AS a, syms[i+2] AS b
-    FROM {prev}, unnest(range(len(syms)-1)) u(i)
-  )
-  GROUP BY a, b
-),
-sc{r} AS MATERIALIZED (
-  SELECT sym, CAST(sum(cnt) AS BIGINT) AS c
-  FROM (SELECT cnt, unnest(syms) AS sym FROM {prev})
-  GROUP BY sym
-),
-top{r} AS (
-  SELECT a, b, pair_count, {WP_SCORE_SQL} AS score_micro FROM (
-    SELECT p.a, p.b, p.pair_count, ca.c AS ca, cb.c AS cb
-    FROM pc{r} p
-    JOIN sc{r} ca ON ca.sym = p.a
-    JOIN sc{r} cb ON cb.sym = p.b
-  )
-  ORDER BY score_micro DESC, a, b LIMIT 1
-),
-st{r} AS MATERIALIZED (
-  SELECT s.cnt,
-         list_reduce(list_transform(s.syms, x -> [x]),
-           (acc, x) -> CASE WHEN acc[-1] = t.a AND x[1] = t.b
-                       THEN acc[1:len(acc)-1] || [t.a || t.b[3:]]
-                       ELSE acc || x END) AS syms
-  FROM {prev} s CROSS JOIN top{r} t
-)""")
-        prev = f"st{r}"
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
-  FROM documents
-),
-vocab AS (
-  SELECT tok AS word, CAST(count(*) AS BIGINT) AS cnt
-  FROM (SELECT unnest(ts) AS tok FROM toks)
-  GROUP BY tok
-),
-st0 AS MATERIALIZED (
-  SELECT cnt,
-         list_transform(generate_series(1, length(word)),
-           i -> CASE WHEN i = 1 THEN word[i]
-                ELSE '##' || word[i] END) AS syms
-  FROM vocab
-),
-{",".join(blocks)}"""
-
-
-def _wp_oracle() -> str:
-    from ..operators.wordpiece import WP_ROUNDS
-
-    union = "\nUNION ALL ".join(
-        f"SELECT CAST({r} AS BIGINT) AS round, a AS merge_a,"
-        f" b AS merge_b, pair_count, score_micro FROM top{r}"
-        for r in range(1, WP_ROUNDS + 1)
-    )
-    return f"""{_wp_cte_prefix()}
-{union}
-"""
-
-
-def _wp_apply_oracle() -> str:
-    """Continues the training CTE chain with the per-document apply
-    (the BPE apply-oracle shape: LEFT JOIN ON TRUE so an exhausted
-    round passes symbols through unchanged)."""
-    from ..operators.wordpiece import WP_ROUNDS
-
-    blocks = []
-    prev = "ap0"
-    for r in range(1, WP_ROUNDS + 1):
-        blocks.append(f"""
-ap{r} AS (
-  SELECT s.doc_id, s.word,
-         CASE WHEN t.a IS NULL THEN s.syms
-              ELSE list_reduce(list_transform(s.syms, x -> [x]),
-                (acc, x) -> CASE WHEN acc[-1] = t.a AND x[1] = t.b
-                            THEN acc[1:len(acc)-1] || [t.a || t.b[3:]]
-                            ELSE acc || x END)
-         END AS syms
-  FROM {prev} s LEFT JOIN top{r} t ON TRUE
-)""")
-        prev = f"ap{r}"
-    return f"""{_wp_cte_prefix()},
-docw AS (
-  SELECT doc_id, unnest(ts) AS word FROM toks
-),
-ap0 AS (
-  SELECT doc_id, word,
-         list_transform(generate_series(1, length(word)),
-           i -> CASE WHEN i = 1 THEN word[i]
-                ELSE '##' || word[i] END) AS syms
-  FROM docw
-),
-{",".join(blocks)}
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_ws_tokens,
-       CAST(sum(len(syms)) AS BIGINT) AS n_wp_pieces
-FROM {prev}
-GROUP BY doc_id
-"""
-
-
 @register(
     "wordpiece_train_merges",
-    oracle=_wp_oracle(),
+    oracle=_merge_table_oracle(WORDPIECE),
     tags=("training", "tokenizer", "text", "iterative", "ml"),
     doc="WordPiece tokenizer TRAINING (Schuster & Nakajima 2012): 6 "
     "unrolled rounds learning likelihood-scored merges — score(a,b) "
@@ -1181,7 +1083,7 @@ def wordpiece_train_merges(spark, sf_dir):
 
 @register(
     "wordpiece_tokenize_corpus",
-    oracle=_wp_apply_oracle(),
+    oracle=_merge_apply_oracle(WORDPIECE, "n_wp_pieces"),
     tags=("training", "tokenizer", "text", "iterative", "ml"),
     doc="WordPiece train→serve in one query: tokenize every document "
     "with the merge table learned on the corpus. The 6 learned "

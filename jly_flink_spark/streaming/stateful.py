@@ -589,6 +589,31 @@ def ewma_fold(vals: list) -> int:
     return ew
 
 
+def _merge_tail(state, rows, tail: int, coerce):
+    """The bounded-tail merge behind `ewma_step` and `pattern_step`:
+    fold the (ts, id, value) `rows` into the (ks, ids, values)
+    `state` (or None), last write winning per (ts, id), and keep the
+    (ts, id)-sorted last `tail` entries. Returns the new state, or
+    None when the tail's MEMBERSHIP and VALUES are unchanged — a
+    re-delivered (ts, id) carrying a rewritten value must update
+    state and re-emit, not be silently dropped because the key set
+    is unchanged."""
+    seen = {}
+    if state is not None:
+        seen = {(int(k), int(i)): coerce(v) for k, i, v in zip(*state)}
+    before = [(t, seen[t]) for t in sorted(seen)]
+    for k, i, v in rows:
+        seen[(int(k), int(i))] = coerce(v)
+    kept = [(t, seen[t]) for t in sorted(seen)[-tail:]]
+    if kept == before:
+        return None
+    return (
+        [k for (k, _), _ in kept],
+        [i for (_, i), _ in kept],
+        [v for _, v in kept],
+    )
+
+
 def ewma_step(state, rows, tail: int = 64):
     """Pure per-batch state transition of `ewma_stream` for one key:
     `state` is the (ks, ids, vqs) tuple (or None), `rows` an iterable
@@ -596,32 +621,10 @@ def ewma_step(state, rows, tail: int = 64):
     (ewma, n_tail) when the tail changed, else None and the state is
     unchanged. Extracted so the schedule-fuzz property test drives
     the EXACT operator logic without streaming machinery."""
-    if state is not None:
-        ks, ids, vqs = state
-        seen = {
-            (int(k), int(i)): int(v) for k, i, v in zip(ks, ids, vqs)
-        }
-    else:
-        seen = {}
-    before = sorted(seen)
-    before_vals = {t: seen[t] for t in before}
-    for k, i, v in rows:
-        seen[(int(k), int(i))] = int(v)
-    order = sorted(seen)[-tail:]
-    # Emit when the tail's MEMBERSHIP or its VALUES changed: a
-    # re-delivered (ts, id) carrying a rewritten vq must update
-    # state and re-emit (last-write-wins), not be silently dropped
-    # because the key set is unchanged.
-    if order == before and all(
-        seen[t] == before_vals[t] for t in order
-    ):
+    new_state = _merge_tail(state, rows, tail, int)
+    if new_state is None:
         return state, None
-    new_state = (
-        [k for k, _ in order],
-        [i for _, i in order],
-        [seen[t] for t in order],
-    )
-    vals = [seen[t] for t in order]
+    vals = new_state[2]
     return new_state, (ewma_fold(vals), len(vals))
 
 
@@ -880,29 +883,11 @@ def pattern_step(state, rows, tail: int = 256):
     the tail changed. Same bounded-(ts, id)-sorted-tail merge as
     `ewma_step`, so replays/out-of-order deliveries converge to the
     batch answer over the retained window."""
-    if state is not None:
-        ks, ids, tps = state
-        seen = {
-            (int(k), int(i)): str(t) for k, i, t in zip(ks, ids, tps)
-        }
-    else:
-        seen = {}
-    before = sorted(seen)
-    before_vals = {t: seen[t] for t in before}
-    for k, i, t in rows:
-        seen[(int(k), int(i))] = str(t)
-    order = sorted(seen)[-tail:]
-    if order == before and all(
-        seen[t] == before_vals[t] for t in order
-    ):
+    new_state = _merge_tail(state, rows, tail, str)
+    if new_state is None:
         return state, None
-    new_state = (
-        [k for k, _ in order],
-        [i for _, i in order],
-        [seen[t] for t in order],
-    )
-    n_m, n_v, n_c = pattern_count_runs([seen[t] for t in order])
-    return new_state, (n_m, n_v, n_c, len(order))
+    tps = new_state[2]
+    return new_state, (*pattern_count_runs(tps), len(tps))
 
 
 def pattern_quantified_stream(

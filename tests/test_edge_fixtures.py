@@ -162,6 +162,14 @@ def edge_sf_dir(tmp_path_factory):
         "graph_kcore_peel",
         # the same chunk grid without the df cap
         "text_boilerplate_chunks",
+        # the merge learner: token-less docs drop from the vocabulary
+        # and the apply, tab/newline characters are symbols, the
+        # one-character words "a"/"b"/"c" have no pairs, and the
+        # shared "t0 t1 ..." prefixes make dense tied pair counts
+        "bpe_train_merges",
+        "bpe_tokenize_corpus",
+        "wordpiece_train_merges",
+        "wordpiece_tokenize_corpus",
     ],
 )
 def test_boundary_shapes_match_oracle(spark, edge_sf_dir, name):

@@ -732,6 +732,16 @@ class TestJobBudget:
     epochs each Spark job is a fixed scheduling cost, so the CDC
     path's job counts are pinned like its exchange counts."""
 
+    def _forced_jobs(self, spark, name):
+        """Jobs to build the registered query and force it through a
+        noop write, plan-time jobs included."""
+
+        def run():
+            df = REGISTRY[name].spark_fn(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+
+        return jobs_run(spark, run)
+
     def test_build_pipeline_forces_in_one_job(self, spark):
         """The enrichment adds no job: no broadcast of the sources
         dim, one job for the scan-filter-project stage."""
@@ -767,12 +777,7 @@ class TestJobBudget:
         schema read, the eager chunk cut, the staged frames). The
         chunk-graph builder takes the caller's `documents` frame; one
         that loaded the table again would add a schema job."""
-
-        def run():
-            df = REGISTRY["graph_pagerank_dup_chunks"].spark_fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-
-        assert jobs_run(spark, run) <= 21
+        assert self._forced_jobs(spark, "graph_pagerank_dup_chunks") <= 21
 
     def test_kmeans_job_budget(self, spark):
         """Building and forcing the K-means audit: 12 jobs (18 when
@@ -780,23 +785,29 @@ class TestJobBudget:
         one subspace: one seed collect, which also yields the
         dimension, then one update action per round against
         driver-side centroids — no centroid staging cut to force."""
-
-        def run():
-            df = REGISTRY["embedding_kmeans_clusters"].spark_fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-
-        assert jobs_run(spark, run) <= 12
+        assert self._forced_jobs(spark, "embedding_kmeans_clusters") <= 12
 
     def test_pq_adc_job_budget(self, spark):
         """Building and forcing the PQ training + ADC audit: 11 jobs
         (17 with a `first()` probe job for the dimension and a staged
         codebook per round), the same loop as K-means with M=8."""
+        assert self._forced_jobs(spark, "embedding_pq_adc") <= 11
 
-        def run():
-            df = REGISTRY["embedding_pq_adc"].spark_fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
+    def test_bpe_train_merges_job_budget(self, spark):
+        """Building and forcing 8 BPE rounds: 19 jobs. The score
+        reads no symbol counts, so no round aggregates them."""
+        assert self._forced_jobs(spark, "bpe_train_merges") <= 19
 
-        assert jobs_run(spark, run) <= 11
+    def test_bpe_tokenize_corpus_job_budget(self, spark):
+        """Training, the merge-table collect and the forced per-row
+        apply: 20 jobs — the apply scan itself adds no shuffle."""
+        assert self._forced_jobs(spark, "bpe_tokenize_corpus") <= 20
+
+    def test_wordpiece_train_merges_job_budget(self, spark):
+        """Building and forcing 6 WordPiece rounds: at most 30 jobs.
+        The count varies between identical runs (27-30) because of
+        AQE's run-time re-planning."""
+        assert self._forced_jobs(spark, "wordpiece_train_merges") <= 30
 
 
 class TestScaleShapes:

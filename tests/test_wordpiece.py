@@ -162,12 +162,19 @@ def test_wordpiece_tokenize_matches_reference_apply(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["wordpiece_train_merges", "wordpiece_tokenize_corpus"]
+    "name",
+    [
+        "wordpiece_train_merges",
+        "wordpiece_tokenize_corpus",
+        "bpe_train_merges",
+        "bpe_tokenize_corpus",
+    ],
 )
 def test_registered_oracle_fits_a_memory_cap(spark, name):
-    """The unrolled WordPiece oracles run under a 2 GB DuckDB cap and
-    agree with the Spark side. With every st{r}/sc{r} reference
-    inlined, the plan grows ~3^rounds and runs out of memory."""
+    """The unrolled merge-learner oracles run under a 2 GB DuckDB cap
+    and agree with the Spark side. With every st{r}/sc{r} reference
+    inlined, the WordPiece plan grows ~3^rounds and runs out of
+    memory; the BPE plan grows ~2^rounds."""
     from jly_flink_spark.plans import REGISTRY
 
     spec = REGISTRY[name]

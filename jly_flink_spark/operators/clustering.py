@@ -6,15 +6,16 @@ subspace, so `kmeans_fixed` runs PQ's Lloyd loop with m=1
 kernel (`pq.nearest_centroids`) for training, the final assignment
 and streaming routing (`assign_stream`).
 
-Bit-exactness: vectors are int8-quantized with the hash-verified
-absmax/floor formula (`int8_codes`, mirrored by the
-`embedding_quantize_int8` oracle), distances are exact int64 sums of
-squared differences, centroid updates are truncating integer means
-(`sum div count` — Spark `div` and DuckDB `//` both truncate toward
-zero), empty clusters keep their centroid, and argmin ties break to
-the smallest centroid id. A fixed iteration count (like PageRank's
-PR_ITERS) makes the unrolled computation identical on any engine, so
-the `embedding_kmeans_clusters` oracle replays it bit for bit.
+Bit-exactness: vectors are int8-quantized by the one absmax/floor
+code kernel (`similarity._int8_coded`, the hash-verified formula the
+`embedding_quantize_int8` oracle audits), distances are exact int64
+sums of squared differences, centroid updates are truncating integer
+means (`sum div count` — Spark `div` and DuckDB `//` both truncate
+toward zero), empty clusters keep their centroid, and argmin ties
+break to the smallest centroid id. A fixed iteration count (like
+PageRank's PR_ITERS) makes the unrolled computation identical on any
+engine, so the `embedding_kmeans_clusters` oracle replays it bit for
+bit.
 
 Scale shape (the 100-TB argument):
 - The K centroids are driver-side model state (K·d ints). Assignment
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .pq import nearest_centroids, pq_codebook_state, pq_train_encode
-from .similarity import int8_codes
+from .similarity import _int8_coded
 
 KM_K = 8  # clusters
 KM_ITERS = 3  # fixed unroll depth
@@ -86,15 +87,15 @@ def assign_stream(
     """Streaming cluster routing: assign arriving embeddings to their
     nearest frozen centroid and append (vec_id, cid) — how a corpus
     shards new vectors to cluster-partitioned storage at ingest.
-    `centroids` is `extract_centroids`' state; assignment runs the
-    training loop's own Arrow kernel (`pq.nearest_centroids`), so it
-    is stateless, shuffle-free and bit-identical to the batch
-    assignment; recovery is plain source-offset replay. Returns the
-    StreamingQuery."""
+    `centroids` is `extract_centroids`' state; quantization and
+    assignment run the training loop's own Arrow kernels
+    (`_int8_coded`, `pq.nearest_centroids`), so routing is stateless,
+    shuffle-free and bit-identical to the batch assignment; recovery
+    is plain source-offset replay. Returns the StreamingQuery."""
     if not centroids:
         raise ValueError("centroids must be non-empty")
-    codes = emb_sdf.select(
-        "vec_id", int8_codes(F.col(vec_col)).alias("code")
+    codes = _int8_coded(emb_sdf.select("vec_id", vec_col), vec_col).select(
+        "vec_id", F.col("codes").alias("code")
     )
     assigned = nearest_centroids(codes, centroids).select(
         "vec_id", F.col("pq")[0].alias("cid")

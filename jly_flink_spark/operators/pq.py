@@ -44,10 +44,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..io import stage
 
-from .similarity import _int8_codes_np, int8_codes
+from .similarity import _int8_coded, _int8_codes_np
 
 PQ_M = 8        # subspaces
 PQ_K = 16       # centroids per subspace (audit scale; prod uses 256)
@@ -68,16 +69,7 @@ def pq_train_encode(
     codebooks. Init: subvectors of the k smallest vec_ids. Size
     parameters default to the module constants AT CALL TIME (so
     audits can sweep them)."""
-    # Arrow quantize (round 14): `int8_codes` is an interpreted
-    # aggregate/transform/zip_with chain — with the Lloyd argmin now
-    # an Arrow kernel it was the PQ path's dominant remaining stage
-    # (92 task-seconds cold at sf0.1). `_int8_coded` is the same
-    # formula as ONE numpy kernel with the raw-row fan-out built in
-    # (bit-parity pinned by the int8 family's value-hash oracles
-    # since r13).
-    from .similarity import _int8_coded
-
-    codes = _int8_coded(emb, vec_col).select(
+    codes = _int8_coded(emb.select("vec_id", vec_col), vec_col).select(
         "vec_id", F.col("codes").alias("code")
     )
     return pq_train_encode_codes(codes, m, k, iterations)
@@ -90,10 +82,11 @@ def pq_train_encode_codes(
     iterations: "int | None" = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """`pq_train_encode` on an ALREADY-BUILT integer code frame
-    (vec_id, code array<bigint>) — the one Lloyd loop, so the raw
-    tier (codes straight from `int8_codes`), the residual tier (codes
-    minus the coarse centroid's code) and K-means (m=1) train through
-    the byte-same code."""
+    (vec_id, code array<bigint>, any other columns riding along into
+    `coded`) — the one Lloyd loop, so the raw tier (codes straight
+    from `_int8_coded`), the residual tier (codes minus the coarse
+    centroid's code) and K-means (m=1) train through the byte-same
+    code."""
     m = PQ_M if m is None else m
     k = PQ_K if k is None else k
     iterations = PQ_ITERS if iterations is None else iterations
@@ -174,8 +167,9 @@ def _code_matrix(codes, dim: int):
 
 
 def nearest_centroids(codes: DataFrame, book: list) -> DataFrame:
-    """(vec_id, code, pq): each code's nearest centroid in every
-    subspace, `pq` the M-array of sub-centroid ids — the ONE
+    """`codes` plus `pq`: each code's nearest centroid in every
+    subspace, the M-array of sub-centroid ids, with every input column
+    carried through — the ONE
     assignment kernel of PQ encoding, K-means (M=1) and streaming
     cluster routing. `book` is driver-side codebook state, (sub, cid,
     carr) tuples (`pq_codebook_state`). One Arrow numpy pass per
@@ -219,18 +213,12 @@ def nearest_centroids(codes: DataFrame, book: list) -> DataFrame:
                     axis=2
                 )
                 pq[:, s] = cids[d2.argmin(axis=1)]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "code": pdf["code"],
-                    "pq": list(pq),
-                }
-            )
+            yield pdf.assign(pq=list(pq))
 
-    return codes.mapInPandas(
-        kernel,
-        schema="vec_id long, code array<bigint>, pq array<bigint>",
+    schema = StructType(
+        [*codes.schema.fields, StructField("pq", ArrayType(LongType()))]
     )
+    return codes.mapInPandas(kernel, schema)
 
 
 def pq_codebook_state(cent: DataFrame) -> list:
@@ -544,8 +532,9 @@ def serve_ann_topk_ivf_pq_refine(
 
 def centroid_codes(coarse_cents: list) -> list:
     """int8 codes of the coarse centroids under each centroid's OWN
-    absmax scale — the `int8_codes` formula applied to model state
-    (n_list tiny vectors, driver-side). Returns [(list_id, [code])]."""
+    absmax scale — the one quantizer (`_int8_codes_np`) applied to
+    model state (n_list tiny vectors, driver-side). Returns
+    [(list_id, [code])]."""
     return [
         (int(cid), [int(x) for x in _int8_codes_np(v)])
         for cid, v in coarse_cents
@@ -564,38 +553,42 @@ def persist_ivf_pq_residual(
     code — a pure `zip_with` against one broadcast n_list-row frame,
     no corpus shuffle — train the M sub-codebooks on those residual
     codes (`pq_train_encode_codes`, the byte-same Lloyd loop as the
-    raw tier), and persist (vec_id, pq, code, list_id)
-    hive-partitioned by list_id. `pq` indexes RESIDUAL sub-centroids;
-    `code` keeps the full int8 codes in their own column for the
-    refine tier (the ADC scan column-prunes it away). Returns
-    (pq_codebook_state, subdim)."""
+    raw tier), and persist its final assignment as (vec_id, pq, code,
+    list_id) hive-partitioned by list_id. `pq` indexes RESIDUAL
+    sub-centroids; `code` keeps the full int8 codes in their own
+    column for the refine tier (the ADC scan column-prunes it away).
+    Returns (pq_codebook_state, subdim)."""
     from ..io import ensure_min_parallelism, write_partitioned
     from .similarity import _assign_udf
 
     spark = emb.sparkSession
     assign = _assign_udf(spark, coarse_cents)
-    base = ensure_min_parallelism(
+    # the list is assigned on the float vector ahead of the fan-out;
+    # the code kernel then runs behind that exchange
+    lists = ensure_min_parallelism(
         emb.select(
-            "vec_id",
-            int8_codes(F.col(vec_col)).alias("code"),
-            assign(F.col(vec_col)).alias("list_id"),
+            "vec_id", vec_col, assign(F.col(vec_col)).alias("list_id")
         )
-    ).transform(stage)
+    )
     ccodes = spark.createDataFrame(
         centroid_codes(coarse_cents),
         "list_id int, ccode array<bigint>",
     )
-    resid = base.join(F.broadcast(ccodes), "list_id").select(
-        "vec_id",
-        "list_id",
-        "code",
-        F.zip_with("code", "ccode", lambda a, b: a - b).alias("rcode"),
+    # the Lloyd loop trains on the residual `code`; the list and the
+    # full code ride through it, so the layout rows need no join back
+    resid = (
+        _int8_coded(lists, vec_col, fan_out=False)
+        .join(F.broadcast(ccodes), "list_id")
+        .select(
+            "vec_id",
+            "list_id",
+            F.col("codes").alias("full_code"),
+            F.zip_with("codes", "ccode", lambda a, b: a - b).alias("code"),
+        )
     )
-    cent, coded, subdim = pq_train_encode_codes(
-        resid.select("vec_id", F.col("rcode").alias("code"))
-    )
-    rows = resid.select("vec_id", "list_id", "code").join(
-        coded.select("vec_id", "pq"), "vec_id"
+    cent, coded, subdim = pq_train_encode_codes(resid)
+    rows = coded.select(
+        "vec_id", "list_id", F.col("full_code").alias("code"), "pq"
     )
     write_partitioned(rows, path, ["list_id"])
     return pq_codebook_state(cent), subdim

@@ -508,6 +508,22 @@ def _select_probe_lists(v, vq_g: int, cents_state, n_probe: int):
     return ids_c[order[:n_probe]]
 
 
+def _query_vector(r, vec_col: str, cents_state):
+    """A query row's float64 vector. A NULL, empty or wrongly-sized
+    query has no probe lists, so it fails with one named error that
+    gives its vec_id and the centroids' dimension."""
+    import numpy as np
+
+    v, dim = r[vec_col], cents_state[1].shape[1]
+    if v is None or len(v) != dim:
+        got = "NULL" if v is None else f"{len(v)}-d"
+        raise ValueError(
+            f"query vec_id {r['vec_id']}: {got} query vector, "
+            f"expected dimension {dim}"
+        )
+    return np.array(list(v), dtype="float64")
+
+
 def _probe_frame(
     spark: SparkSession,
     q_rows,
@@ -527,7 +543,7 @@ def _probe_frame(
     cents_state = _centroid_state(cents)
     probe_rows = []
     for r in q_rows:
-        v = np.array(list(r[vec_col]), dtype="float64")
+        v = _query_vector(r, vec_col, cents_state)
         vq = int(np.floor(v * v * QUANT).astype("int64").sum())
         if vq <= 0:
             continue
@@ -554,16 +570,6 @@ def _float_cos_score():
     ) / (
         F.sqrt(F.col("query_norm2").cast("double"))
         * F.sqrt(F.col("cand_norm2").cast("double"))
-    )
-
-
-def _int8_cos_score():
-    """Exact-integer int8 cosine over a joined probe/candidate row."""
-    return _idot(F.col("query_codes"), F.col("cand_codes")).cast(
-        "double"
-    ) / (
-        F.sqrt(F.col("query_qn8").cast("double"))
-        * F.sqrt(F.col("cand_qn8").cast("double"))
     )
 
 
@@ -995,36 +1001,23 @@ def embedding_near_dup_pairs(
     )
 
 
-def int8_codes(vec):
-    """Symmetric per-vector absmax int8 quantization of a float array:
-    scale = max(|x_i|) guarded at 1e-12, code_i = floor(x_i·127/scale).
+def _int8_codes_np(x) -> "object":
+    """The symmetric per-vector absmax int8 quantizer — the ONE
+    definition of the int8 code formula on the Spark side. Rows of a
+    float matrix (or one vector) → int64 codes: scale = max(|x_i|)
+    guarded at 1e-12, code_i = floor(x_i·127/scale).
 
     Same formula as the `embedding_quantize_int8` audit query (already
     cross-engine hash-verified), so the codes — and everything computed
-    from them — are bit-identical on any engine that mirrors the
-    expression. Codes are exact small integers; all downstream scoring
-    is integer arithmetic, fold-order independent by construction."""
-    absmax = F.aggregate(
-        vec,
-        F.lit(0.0),
-        lambda acc, v: F.greatest(acc, F.abs(v.cast("double"))),
-    )
-    scale = F.greatest(absmax, F.lit(1e-12))
-    return F.transform(
-        vec,
-        lambda v: F.floor(v.cast("double") * F.lit(127.0) / scale).cast(
-            "long"
-        ),
-    )
-
-
-def _int8_codes_np(v) -> "object":
-    """numpy replica of `int8_codes` (absmax/floor) for ONE vector —
-    the driver-side query encoding every serving tier shares."""
+    from them — are bit-identical to the DuckDB oracles: float32 →
+    float64 widening is exact, `x·127.0` then `/scale` is the oracles'
+    IEEE double sequence, and floor/int64 match. Codes are exact small
+    integers; all downstream scoring is integer arithmetic, fold-order
+    independent by construction."""
     import numpy as np
 
-    x = np.asarray(v, dtype="float64")
-    scale = max(float(np.abs(x).max()), 1e-12)
+    x = np.asarray(x, dtype="float64")
+    scale = np.maximum(np.abs(x).max(axis=-1, keepdims=True), 1e-12)
     return np.floor(x * 127.0 / scale).astype("int64")
 
 
@@ -1037,83 +1030,73 @@ def _idot(a, b):
     )
 
 
+def _int8_cosine(codes_a, qn_a, codes_b, qn_b):
+    """Exact-integer int8 cosine of two (codes, qn) column pairs: the
+    integer dot over the roots of the integer self-dots."""
+    return _idot(codes_a, codes_b).cast("double") / (
+        F.sqrt(qn_a.cast("double")) * F.sqrt(qn_b.cast("double"))
+    )
+
+
 def _int8_coded(
     emb: DataFrame, vec_col: str = "embedding", fan_out: bool = True
 ) -> DataFrame:
-    """(vec_id, codes, qn) int8 code table — `int8_codes`' formula as
-    a frame, shared by the ADC scan and the MMR re-ranker.
+    """The int8 code table: `emb` with `vec_col` replaced by (codes,
+    qn) — `_int8_codes_np`'s codes and their integer self-dot — every
+    other input column carried through. The one code-table frame of
+    the flat ADC scan, the MMR re-ranker, the IVF-SQ8 and residual
+    IVF-PQ layouts, PQ/K-means training and streaming cluster routing.
 
-    Round 13: ONE Arrow-batched mapInPandas kernel computes the
-    absmax scale, the codes, and the integer self-dot qn in a single
-    numpy pass — the same pandas_udf-pipelining fix as `ivf_refine`
-    (the round-12 fusion template). The previous interpreted-lambda
-    projection (aggregate fold + transform + zip_with per row) ran
-    BEFORE the fan-out exchange, i.e. inside the single-split scan
-    stage: measured ×10 it was ONE 16.6 s task feeding a 4.1 MB
-    exchange — the whole `ann_cosine_int8_adc` 7.4× decade ratio was
-    this stage. The fan-out now happens on the RAW float rows, so
-    the kernel runs at session parallelism; no-op on real
-    many-split scans (the 100 TB case).
+    ONE Arrow-batched mapInPandas kernel: a batch of equal-length
+    vectors quantizes as one matrix. The fan-out happens on the RAW
+    float rows, ahead of the kernel, so quantization runs at session
+    parallelism (measured ×10, quantizing inside the single-split
+    scan stage was ONE 16.6 s task — the whole `ann_cosine_int8_adc`
+    7.4× decade ratio); it is a no-op on real many-split scans (the
+    100 TB case).
 
-    Bit-parity with the expression form (and the DuckDB oracles):
-    float32→float64 widening is exact, numpy's `M·127.0` then
-    `/scale` is the same IEEE double sequence as the lambda's
-    `v·127.0/scale`, and floor/int64 match — verified by the int8
-    family's value-hash oracles. Null embedding → (NULL, NULL) and
-    empty → ([], 0), mirroring the aggregate/transform null
-    semantics the expression form had."""
+    A batch holding NULL, empty or ragged vectors takes the row path
+    through the same formula: NULL → (NULL, NULL), empty → ([], 0)."""
     import numpy as np
+    from pyspark.sql.types import ArrayType, LongType, StructType
 
     from ..io import ensure_min_parallelism
+
+    def codes_and_norms(vecs):
+        if all(v is not None for v in vecs) and (
+            len({len(v) for v in vecs}) == 1 and len(vecs[0]) > 0
+        ):
+            C = _int8_codes_np(np.array(vecs, dtype="float64"))
+            return list(C), (C * C).sum(axis=1)
+        codes, qn = [], []
+        for v in vecs:
+            c = None if v is None else (
+                _int8_codes_np(v) if len(v) else np.zeros(0, "int64")
+            )
+            codes.append(c)
+            qn.append(None if c is None else int((c * c).sum()))
+        return codes, np.array(qn, dtype="object")
 
     def batches(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy()
-            vecs = list(pdf[vec_col])
-            if all(v is not None for v in vecs) and (
-                len({len(v) for v in vecs}) == 1 and len(vecs[0]) > 0
-            ):
-                M = np.array(vecs, dtype="float64")
-                scale = np.maximum(np.abs(M).max(axis=1), 1e-12)
-                C = np.floor(M * 127.0 / scale[:, None]).astype(
-                    "int64"
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": ids,
-                        "codes": list(C),
-                        "qn": (C * C).sum(axis=1),
-                    }
-                )
-                continue
-            rows = []
-            for i, v in zip(ids, vecs):
-                if v is None:
-                    rows.append((int(i), None, None))
-                    continue
-                a = np.asarray(v, dtype="float64")
-                if a.size == 0:
-                    rows.append((int(i), [], 0))
-                    continue
-                s = max(float(np.abs(a).max()), 1e-12)
-                c = np.floor(a * 127.0 / s).astype("int64")
-                rows.append((int(i), c.tolist(), int((c * c).sum())))
-            yield pd.DataFrame(
-                rows, columns=["vec_id", "codes", "qn"]
-            )
+            codes, qn = codes_and_norms(list(pdf[vec_col]))
+            yield pdf.drop(columns=[vec_col]).assign(codes=codes, qn=qn)
 
-    # fan_out=False: callers quantizing a HANDFUL of pre-filtered
-    # rows (the query side of a serving pair) skip the repartition —
-    # spreading 5 rows over 32 tasks just pays 32 cold Python-worker
-    # launches for nothing.
-    src = emb.select("vec_id", vec_col)
-    if fan_out:
-        src = ensure_min_parallelism(src, keys=["vec_id"])
-    return src.mapInPandas(
-        batches, "vec_id long, codes array<long>, qn long"
+    schema = (
+        StructType([f for f in emb.schema.fields if f.name != vec_col])
+        .add("codes", ArrayType(LongType()))
+        .add("qn", LongType())
     )
+    # fan_out=False: callers quantizing a HANDFUL of pre-filtered
+    # rows (the query side of a serving pair), or whose rows an
+    # exchange of their own spreads, skip the repartition — spreading
+    # 5 rows over 32 tasks just pays 32 cold Python-worker launches
+    # for nothing.
+    if fan_out:
+        emb = ensure_min_parallelism(emb, keys=["vec_id"])
+    return emb.mapInPandas(batches, schema)
 
 
 def cosine_topk_int8(
@@ -1136,16 +1119,17 @@ def cosine_topk_int8(
     Plan shape mirrors `cosine_topk_bruteforce`: broadcast(query
     codes) × streamed corpus codes, per-query partial top-k via
     window; only slim (query_id, cand_id, score) rows shuffle. At
-    scale the code column is materialized with the corpus (write
-    `int8_codes` at ingest) rather than recomputed per query — this
-    operator recomputes it inline only because the test corpus ships
-    floats.
+    scale the code column is materialized with the corpus (write the
+    `_int8_coded` table at ingest) rather than recomputed per query —
+    this operator recomputes it inline only because the test corpus
+    ships floats.
 
     Vectors whose codes are all zero (every |x| under the quantization
     unit) are dropped on both sides — integer norm 0, cosine
     undefined; same guard class as `drop_zero_norm`."""
+    vecs = emb.select("vec_id", vec_col)
     corpus = (
-        _int8_coded(emb, vec_col)
+        _int8_coded(vecs, vec_col)
         .filter(F.col("qn") > 0)
         .select(
             F.col("vec_id").alias("cand_id"),
@@ -1159,7 +1143,7 @@ def cosine_topk_int8(
     # just to keep |query_ids| rows
     queries = (
         _int8_coded(
-            emb.filter(F.col("vec_id").isin(query_ids)),
+            vecs.filter(F.col("vec_id").isin(query_ids)),
             vec_col,
             fan_out=False,
         )
@@ -1170,11 +1154,11 @@ def cosine_topk_int8(
             F.col("qn").alias("query_qn"),
         )
     )
-    cos = _idot(F.col("query_codes"), F.col("cand_codes")).cast(
-        "double"
-    ) / (
-        F.sqrt(F.col("query_qn").cast("double"))
-        * F.sqrt(F.col("cand_qn").cast("double"))
+    cos = _int8_cosine(
+        F.col("query_codes"),
+        F.col("query_qn"),
+        F.col("cand_codes"),
+        F.col("cand_qn"),
     )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
@@ -1245,7 +1229,7 @@ def mmr_rerank_int8(
             .alias("rel"),
         )
     )
-    coded = _int8_coded(emb, vec_col)
+    coded = _int8_coded(emb.select("vec_id", vec_col), vec_col)
     a = rel.select("query_id", "cand_id").join(
         coded.select(
             F.col("vec_id").alias("cand_id"),
@@ -1266,14 +1250,9 @@ def mmr_rerank_int8(
         F.col("codes").alias("cb"),
         F.col("qn").alias("nb"),
     )
-    sim = (
-        _idot(F.col("ca"), F.col("cb")).cast("double")
-        / (
-            F.sqrt(F.col("na").cast("double"))
-            * F.sqrt(F.col("nb").cast("double"))
-        )
-        * F.lit(1_000_000.0)
-    )
+    sim = _int8_cosine(
+        F.col("ca"), F.col("na"), F.col("cb"), F.col("nb")
+    ) * F.lit(1_000_000.0)
     sims = (
         xa.join(xb, "query_id")
         .filter(F.col("aid") != F.col("bid"))
@@ -1345,11 +1324,10 @@ def persist_ivf_int8(
     living inside the partition-pruned lists, the serving scan is
     corpus-fraction, not corpus.
 
-    Quantization is the audited absmax formula (`int8_codes`), with
-    the scale hoisted into its own projection column (Catalyst does
-    no CSE inside lambda bodies — see `cosine_topk_int8`). All-zero
-    code vectors (exactly-zero inputs) are dropped at build time:
-    integer norm 0 ⇒ cosine undefined, same guard as the flat path.
+    Quantization is the audited absmax formula through the one code
+    kernel (`_int8_coded`). All-zero code vectors (exactly-zero
+    inputs) are dropped at build time: integer norm 0 ⇒ cosine
+    undefined, same guard as the flat path.
     """
     from ..io import write_partitioned
 
@@ -1364,32 +1342,17 @@ def _ivf_int8_rows(
     """(vec_id, codes, qn8, list_id) rows of the IVF-SQ8 layout —
     the ONE definition of the stored-row derivation, shared by the
     initial build and incremental appends so the two can never
-    drift."""
+    drift. The list is assigned on the float vector, then the code
+    kernel replaces the vector; the layout write's list_id exchange
+    spreads the rows, so the kernel adds no fan-out of its own."""
     assign = _assign_udf(emb.sparkSession, centroids)
-    absmax = F.aggregate(
-        F.col(vec_col),
-        F.lit(0.0),
-        lambda acc, v: F.greatest(acc, F.abs(v.cast("double"))),
+    lists = emb.select(
+        "vec_id", vec_col, assign(F.col(vec_col)).alias("list_id")
     )
     return (
-        emb.select("vec_id", vec_col)
-        .withColumn("scale", F.greatest(absmax, F.lit(1e-12)))
-        .withColumn(
-            "codes",
-            F.transform(
-                F.col(vec_col),
-                lambda v: F.floor(
-                    v.cast("double") * F.lit(127.0) / F.col("scale")
-                ).cast("long"),
-            ),
-        )
-        .select(
-            "vec_id",
-            "codes",
-            _idot(F.col("codes"), F.col("codes")).alias("qn8"),
-            assign(F.col(vec_col)).alias("list_id"),
-        )
-        .filter(F.col("qn8") > 0)
+        _int8_coded(lists, vec_col, fan_out=False)
+        .filter(F.col("qn") > 0)
+        .select("vec_id", "codes", F.col("qn").alias("qn8"), "list_id")
     )
 
 
@@ -1463,7 +1426,7 @@ def _query_probes(q_rows, cents: list, n_probe: int, vec_col: str):
 
     cents_state = _centroid_state(cents)
     for r in q_rows:
-        v = np.array(list(r[vec_col]), dtype="float64")
+        v = _query_vector(r, vec_col, cents_state)
         vq = max(int(np.floor(v * v * QUANT).astype("int64").sum()), 1)
         yield (
             int(r["vec_id"]),
@@ -1534,9 +1497,13 @@ def serve_ann_topk_int8(
         probes,
         {"vec_id": "cand_id", "codes": "cand_codes", "qn8": "cand_qn8"},
     )
-    return _topk_from_probes(
-        corpus, probes, k, _int8_cos_score(), "cosine_q8"
+    score = _int8_cosine(
+        F.col("query_codes"),
+        F.col("query_qn8"),
+        F.col("cand_codes"),
+        F.col("cand_qn8"),
     )
+    return _topk_from_probes(corpus, probes, k, score, "cosine_q8")
 
 
 def embedding_norm_stats(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:

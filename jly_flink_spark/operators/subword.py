@@ -23,10 +23,11 @@ at corpus scale at all):
   the raw stream).
 - Per round, the only shuffles are the (a, b) pair-count partials
   (map-side combined, bounded by distinct adjacent pairs per
-  partition), the symbol-count partials when the score needs them,
-  and a 1-row sort-limit for the winning pair. The merge rewrite is
-  a per-row greedy fold over the symbol array — zero shuffle,
-  broadcast of the single winner row.
+  partition), the symbol-count partials when the score needs them
+  (broadcast into the score join, so the plan and its job count are
+  fixed at plan time), and a 1-row sort-limit for the winning pair.
+  The merge rewrite is a per-row greedy fold over the symbol array —
+  zero shuffle, broadcast of the single winner row.
 - The symbol-state frame is staged (io.stage) per round, keeping the
   lazy plan linear in rounds (the K-means/classifier lesson: a
   twice-referenced round frame doubles the subtree per round).
@@ -148,9 +149,13 @@ def train_merges(
                 .agg(F.sum("cnt").cast("bigint").alias("c"))
             )
 
+            # broadcast at plan time: the symbol table is
+            # vocabulary-sized, and a join strategy left to AQE's
+            # run-time re-planning varies the job count between
+            # identical runs
             def side(sym, c):
-                return sc.select(
-                    F.col("sym").alias(sym), F.col("c").alias(c)
+                return F.broadcast(
+                    sc.select(F.col("sym").alias(sym), F.col("c").alias(c))
                 )
 
             pc = (

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..functions import dsum, dsum_sql, hash_frac, hash_frac_sql
 from ..io import ensure_min_parallelism, load_table, stage, stage_eager
 from ..operators.text import STOPWORDS_EN, tokens
+from .northstar_queries import int8_code_ctes
 from .registry import register
 
 # --------------------------------------------------------------------
@@ -2615,22 +2616,9 @@ def quality_classifier_train(spark, sf_dir):
 # --------------------------------------------------------------------
 # Distributed K-means over embeddings (fixed-point Lloyd's)
 # --------------------------------------------------------------------
-# Symmetric per-vector int8 absmax codes, v → floor(v·127/scale): the
-# head CTEs (q, codes) of the K-means, PQ and residual-PQ oracles.
-_INT8_CODES_CTES = """q AS (
-  SELECT vec_id,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale,
-         embedding
-  FROM embeddings
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(embedding, v ->
-           CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale) AS BIGINT))
-           AS code
-  FROM q
-)"""
+# The corpus's int8 codes: the head CTEs (q, codes) of the K-means,
+# PQ and residual-PQ oracles.
+_INT8_CODES_CTES = int8_code_ctes()
 
 
 def _kmeans_cte_prefix(k_sql: str | None = None) -> tuple[str, str]:
@@ -4487,26 +4475,13 @@ sflat AS MATERIALIZED (
          unnest(code) AS val
   FROM codes
 ),
-ccq AS (
-  SELECT ccid,
-         greatest(list_max(list_transform(cvec,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS cscale,
-         cvec
-  FROM ccents
-),
-ccodef AS (
-  SELECT ccid,
-         list_transform(cvec, v ->
-           CAST(floor(CAST(v AS DOUBLE) * 127.0 / cscale) AS BIGINT))
-           AS ccode
-  FROM ccq
-),
+{int8_code_ctes("ccents", key="ccid", vec="cvec", prefix="cc")},
 ccflat AS MATERIALIZED (
   SELECT ccid,
-         CAST(unnest(range(len(ccode))) AS BIGINT) // {sub} AS sub,
-         CAST(unnest(range(len(ccode))) AS BIGINT) % {sub} AS sdim,
-         unnest(ccode) AS cval
-  FROM ccodef
+         CAST(unnest(range(len(code))) AS BIGINT) // {sub} AS sub,
+         CAST(unnest(range(len(code))) AS BIGINT) % {sub} AS sdim,
+         unnest(code) AS cval
+  FROM cccodes
 ),
 rflat AS MATERIALIZED (
   SELECT f.vec_id, f.sub, f.sdim, f.val - cc.cval AS val
@@ -5089,17 +5064,18 @@ FROM sil GROUP BY cid
     "oracle replays training AND the audit bit for bit.",
 )
 def embedding_silhouette_by_cluster(spark, sf_dir):
-    from ..operators.clustering import int8_codes, kmeans_fixed
+    from ..operators.clustering import KM_ITERS, KM_K
+    from ..operators.pq import pq_train_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cent, asg = kmeans_fixed(emb)
-    codes = emb.select(
-        "vec_id", int8_codes(F.col("embedding")).alias("code")
-    ).transform(stage)
-    flat = codes.select(
+    # K-means is PQ with one subspace: its coded frame carries both
+    # the int8 codes and the final assignment, quantized once
+    _, coded, _ = pq_train_encode(emb, m=1, k=KM_K, iterations=KM_ITERS)
+    coded = coded.transform(stage)
+    flat = coded.select(
         "vec_id", F.posexplode("code").alias("dim", "val")
     )
-    vq2 = codes.select(
+    vq2 = coded.select(
         "vec_id",
         F.aggregate(
             "code",
@@ -5107,7 +5083,7 @@ def embedding_silhouette_by_cluster(spark, sf_dir):
             lambda acc, v: acc + v * v,
         ).alias("m2"),
     )
-    a = asg.select("vec_id", "cid")
+    a = coded.select("vec_id", F.col("pq")[0].alias("cid"))
     cn = a.groupBy("cid").agg(F.count("*").cast("bigint").alias("n"))
     cs2 = a.join(vq2, "vec_id").groupBy("cid").agg(
         F.sum("m2").cast("bigint").alias("s2")

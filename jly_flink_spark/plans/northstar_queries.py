@@ -448,35 +448,50 @@ def ann_cosine_topk(spark, sf_dir):
     )
 
 
-def _int8_adc_oracle() -> str:
-    """DuckDB mirror of the int8 ADC path: the same absmax/floor
-    quantization formula as the hash-verified `embedding_quantize_int8`
-    oracle, then exact integer dots/norms — bit-identical on both
-    engines because every post-quantization value is an integer."""
+def int8_code_ctes(
+    src: str = "embeddings",
+    key: str = "vec_id",
+    vec: str = "embedding",
+    prefix: str = "",
+) -> str:
+    """Symmetric per-vector int8 absmax codes, v → floor(v·127/scale),
+    over `src`'s `vec` column as two CTEs — `{prefix}q` (key, scale,
+    vec), then `{prefix}codes` (key, code) — with no leading WITH and
+    no trailing comma: the ONE SQL spelling of the quantizer that
+    `similarity._int8_codes_np` computes on the Spark side, the same
+    formula the `embedding_quantize_int8` audit checks."""
+    return f"""{prefix}q AS (
+  SELECT {key},
+         greatest(list_max(list_transform({vec},
+                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale,
+         {vec}
+  FROM {src}
+),
+{prefix}codes AS (
+  SELECT {key},
+         list_transform({vec}, v ->
+           CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale) AS BIGINT))
+           AS code
+  FROM {prefix}q
+)"""
+
+
+def _int8_adc_ctes() -> str:
+    """The DuckDB int8 ADC scan as a CTE chain — q → codes → norms →
+    dots → scored (every query × every other vector, cosine_q8) —
+    shared by the ADC and MMR oracles. Exact integer dots/norms after
+    the one quantizer, so bit-identical on both engines."""
     ids = ", ".join(str(i) for i in _ANN_QUERY_IDS)
-    return f"""
-WITH scaled AS (
-  SELECT vec_id, embedding,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale
-  FROM embeddings
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           v -> CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale)
-                     AS BIGINT)) AS q
-  FROM scaled
-),
-norms AS (
-  SELECT vec_id, CAST(list_sum(list_transform(q, v -> v * v)) AS BIGINT) AS qn
+    return f"""{int8_code_ctes()},
+norms AS MATERIALIZED (
+  SELECT vec_id, CAST(list_sum(list_transform(code, v -> v * v)) AS BIGINT) AS qn
   FROM codes
 ),
 prods AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         unnest(q.q) AS qa, unnest(c.q) AS qb
-  FROM codes q, codes c
-  WHERE q.vec_id IN ({ids}) AND c.vec_id <> q.vec_id
+  SELECT cq.vec_id AS query_id, cc.vec_id AS cand_id,
+         unnest(cq.code) AS qa, unnest(cc.code) AS qb
+  FROM codes cq, codes cc
+  WHERE cq.vec_id IN ({ids}) AND cc.vec_id <> cq.vec_id
 ),
 dots AS (
   SELECT query_id, cand_id, CAST(sum(qa * qb) AS BIGINT) AS qdot
@@ -493,7 +508,14 @@ scored AS (
   JOIN norms nq ON nq.vec_id = d.query_id
   JOIN norms nc ON nc.vec_id = d.cand_id
   WHERE nq.qn > 0 AND nc.qn > 0
-)
+)"""
+
+
+def _int8_adc_oracle() -> str:
+    """DuckDB mirror of the int8 ADC path: the shared ADC scan, then
+    each query's top-k."""
+    return f"""
+WITH {_int8_adc_ctes()}
 SELECT query_id, cand_id, cosine_q8, rnk FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id
                                ORDER BY cosine_q8 DESC, cand_id) AS rnk
@@ -524,14 +546,13 @@ def ann_cosine_int8_adc(spark, sf_dir):
 
 def _mmr_oracle(n_candidates: int = 20, k: int = 8) -> str:
     """Unrolled greedy MMR over the int8-ADC candidate chain: the
-    `_int8_adc_oracle` prefix (scaled → codes → norms → dots →
+    shared ADC scan (`_int8_adc_ctes`: q → codes → norms → dots →
     scored) feeds a top-n_candidates CTE, pairwise candidate sims
     reuse the same codes, then k unrolled selection rounds — round t
     anti-joins the running pick set, takes max sim to it, and argmaxes
     7·rel − 3·maxsim with (score DESC, cand_id) ties. MATERIALIZED
-    marks on the shared CTEs keep DuckDB from re-inlining the code
-    table into every round (the iterative-oracle discipline)."""
-    ids = ", ".join(str(i) for i in _ANN_QUERY_IDS)
+    marks on the shared CTEs keep DuckDB from re-inlining them into
+    every round (the iterative-oracle discipline)."""
     rounds = []
     for t in range(2, k + 1):
         prev = f"selu{t - 1}"
@@ -559,43 +580,7 @@ selu{t} AS MATERIALIZED (
 )""")
     rounds_sql = ",\n".join(rounds)
     return f"""
-WITH scaled AS (
-  SELECT vec_id, embedding,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale
-  FROM embeddings
-),
-codes AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding,
-           v -> CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale)
-                     AS BIGINT)) AS q
-  FROM scaled
-),
-norms AS MATERIALIZED (
-  SELECT vec_id, CAST(list_sum(list_transform(q, v -> v * v)) AS BIGINT) AS qn
-  FROM codes
-),
-prods AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         unnest(q.q) AS qa, unnest(c.q) AS qb
-  FROM codes q, codes c
-  WHERE q.vec_id IN ({ids}) AND c.vec_id <> q.vec_id
-),
-dots AS (
-  SELECT query_id, cand_id, CAST(sum(qa * qb) AS BIGINT) AS qdot
-  FROM prods GROUP BY query_id, cand_id
-),
-scored AS (
-  SELECT d.query_id, d.cand_id,
-         CAST(d.qdot AS DOUBLE)
-           / (sqrt(CAST(nq.qn AS DOUBLE)) * sqrt(CAST(nc.qn AS DOUBLE)))
-           AS cosine_q8
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms nc ON nc.vec_id = d.cand_id
-  WHERE nq.qn > 0 AND nc.qn > 0
-),
+WITH {_int8_adc_ctes()},
 mmr_cands AS MATERIALIZED (
   SELECT query_id, cand_id,
          CAST(round(cosine_q8 * 1000000) AS BIGINT) AS rel
@@ -606,7 +591,7 @@ mmr_cands AS MATERIALIZED (
 ),
 pprod AS (
   SELECT a.query_id, a.cand_id AS aid, b.cand_id AS bid,
-         unnest(ca.q) AS xa, unnest(cb.q) AS xb
+         unnest(ca.code) AS xa, unnest(cb.code) AS xb
   FROM mmr_cands a
   JOIN mmr_cands b ON b.query_id = a.query_id
                   AND b.cand_id <> a.cand_id
@@ -950,21 +935,9 @@ def _ivf_int8_oracle(
     floor."""
     return f"""
 WITH {ivf_assign_probe_ctes(n_list, n_probe)},
-scaled AS (
-  SELECT vec_id, embedding,
-         greatest(list_max(list_transform(embedding,
-                  v -> abs(CAST(v AS DOUBLE)))), 1e-12) AS scale
-  FROM embeddings
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           v -> CAST(floor(CAST(v AS DOUBLE) * 127.0 / scale)
-                     AS BIGINT)) AS q
-  FROM scaled
-),
+{int8_code_ctes()},
 qnorm8 AS (
-  SELECT vec_id, CAST(list_sum(list_transform(q, v -> v * v)) AS BIGINT) AS qn8
+  SELECT vec_id, CAST(list_sum(list_transform(code, v -> v * v)) AS BIGINT) AS qn8
   FROM codes
 ),
 pairs AS (
@@ -974,7 +947,7 @@ pairs AS (
   JOIN assign a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
 ),
 pprod AS (
-  SELECT pr.query_id, pr.cand_id, unnest(cq.q) AS qa, unnest(cc.q) AS qb
+  SELECT pr.query_id, pr.cand_id, unnest(cq.code) AS qa, unnest(cc.code) AS qb
   FROM pairs pr
   JOIN codes cq ON cq.vec_id = pr.query_id
   JOIN codes cc ON cc.vec_id = pr.cand_id

@@ -977,8 +977,9 @@ def _merge_table_oracle(scheme) -> str:
 
 def _merge_apply_oracle(scheme, out_col: str) -> str:
     """Continues the training CTE chain with the per-document apply:
-    each token instance splits to the initial symbols and every
-    learned merge applies as one greedy fold in rank order. LEFT JOIN
+    each distinct `vocab` word splits to the initial symbols and
+    every learned merge applies as one greedy fold in rank order;
+    the token instances then join their word's piece count. LEFT JOIN
     ON TRUE (not CROSS JOIN) so an exhausted round — empty top{r} —
     passes symbols through unchanged, matching the engine's
     collected-model apply of however many merges were actually
@@ -988,7 +989,7 @@ def _merge_apply_oracle(scheme, out_col: str) -> str:
     for r in range(1, scheme.rounds + 1):
         blocks.append(f"""
 ap{r} AS (
-  SELECT s.doc_id, s.word,
+  SELECT s.word,
          CASE WHEN t.a IS NULL THEN s.syms
               ELSE {_merge_fold_sql(scheme)}
          END AS syms
@@ -1000,14 +1001,14 @@ docw AS (
   SELECT doc_id, unnest(ts) AS word FROM toks
 ),
 ap0 AS (
-  SELECT doc_id, word, {_initial_symbols_sql(scheme)} AS syms FROM docw
+  SELECT word, {_initial_symbols_sql(scheme)} AS syms FROM vocab
 ),
 {",".join(blocks)}
-SELECT doc_id,
+SELECT d.doc_id,
        CAST(count(*) AS BIGINT) AS n_ws_tokens,
-       CAST(sum(len(syms)) AS BIGINT) AS {out_col}
-FROM {prev}
-GROUP BY doc_id
+       CAST(sum(len(p.syms)) AS BIGINT) AS {out_col}
+FROM docw d JOIN {prev} p ON p.word = d.word
+GROUP BY d.doc_id
 """
 
 

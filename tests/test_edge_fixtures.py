@@ -294,6 +294,17 @@ def test_near_dup_kernel_zero_norm_engine_consistent(spark, edge_emb_dir):
         # zero vector's all-zero subvectors and the identical pair's
         # tied subvectors go through the same nearest-centroid kernel
         "embedding_pq_adc",
+        # MMR: the int8 ADC candidates of each query, then the greedy
+        # picks over their pairwise code cosines
+        "ann_mmr_rerank",
+        # silhouette: codes and assignment from one K-means coded
+        # frame, with an empty cluster and the zero vector's m2 = 0
+        "embedding_silhouette_by_cluster",
+        # IVF-PQ layouts: coarse assignment, PQ codes (raw and
+        # residual) and the exact-refine rescore on the same corpus
+        "ann_ivf_pq_adc",
+        "ann_ivf_pq_refine",
+        "ann_ivf_pq_residual",
     ],
 )
 def test_ann_oracles_agree_on_degenerate_vectors(spark, edge_emb_dir, name):

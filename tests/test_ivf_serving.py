@@ -400,3 +400,34 @@ class TestClusteredRegime:
             )
         assert sum(fractions) / len(fractions) <= 0.28, fractions
         assert max(fractions) <= 0.40, fractions
+
+
+@pytest.mark.parametrize("tier", ["float", "int8", "pq"])
+@pytest.mark.parametrize(
+    "vec", [[], None, [1.0, 2.0]], ids=["empty", "null", "2-d"]
+)
+def test_degenerate_query_vector_named_error(spark, tier, vec):
+    """A query vector with no probe lists — empty, NULL, or of another
+    dimension than the centroids — fails every serving tier with one
+    named error before any layout is read."""
+    from jly_flink_spark.operators import pq
+
+    cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
+    queries = spark.createDataFrame(
+        [(41, vec)], "vec_id long, embedding array<float>"
+    )
+    serve = {
+        "float": lambda: similarity.serve_ann_topk(
+            spark, queries, "/nonexistent", cents
+        ),
+        "int8": lambda: similarity.serve_ann_topk_int8(
+            spark, queries, "/nonexistent", cents
+        ),
+        "pq": lambda: pq.serve_ann_topk_ivf_pq(
+            spark, queries, "/nonexistent", cents, [], 1
+        ),
+    }[tier]
+    with pytest.raises(
+        ValueError, match=r"query vec_id 41: .* expected dimension 3"
+    ):
+        serve()

@@ -742,6 +742,17 @@ class TestJobBudget:
 
         return jobs_run(spark, run)
 
+    def _forced_build_jobs(self, spark, name):
+        """`_forced_jobs` with the in-process layout caches cleared, so
+        the count covers the layout build as well as the serve."""
+        from jly_flink_spark.plans import curation_queries, northstar_queries
+
+        for mod in (northstar_queries, curation_queries):
+            for attr, cache in vars(mod).items():
+                if attr.endswith("_LAYOUT_CACHE"):
+                    cache.clear()
+        return self._forced_jobs(spark, name)
+
     def test_build_pipeline_forces_in_one_job(self, spark):
         """The enrichment adds no job: no broadcast of the sources
         dim, one job for the scan-filter-project stage."""
@@ -793,6 +804,26 @@ class TestJobBudget:
         codebook per round), the same loop as K-means with M=8."""
         assert self._forced_jobs(spark, "embedding_pq_adc") <= 11
 
+    def test_ivf_int8_build_job_budget(self, spark):
+        """Building the IVF-SQ8 layout (centroids, then one write whose
+        code kernel runs in the scan stage ahead of the list_id
+        exchange) and serving it: 14 jobs."""
+        assert self._forced_build_jobs(spark, "ann_cosine_ivf_int8") <= 14
+
+    def test_ivf_pq_residual_build_job_budget(self, spark):
+        """Building the residual IVF-PQ layout and serving it: 22 jobs.
+        The list and the full code ride through the residual Lloyd
+        loop, so the layout write joins nothing back; with that join,
+        whose strategy AQE picked at run time, it took 25 or 26."""
+        assert self._forced_build_jobs(spark, "ann_ivf_pq_residual") <= 22
+
+    def test_silhouette_job_budget(self, spark):
+        """K-means and the silhouette audit over one coded frame, its
+        codes quantized once: 25 jobs."""
+        assert (
+            self._forced_jobs(spark, "embedding_silhouette_by_cluster") <= 25
+        )
+
     def test_bpe_train_merges_job_budget(self, spark):
         """Building and forcing 8 BPE rounds: 19 jobs. The score
         reads no symbol counts, so no round aggregates them."""
@@ -804,10 +835,11 @@ class TestJobBudget:
         assert self._forced_jobs(spark, "bpe_tokenize_corpus") <= 20
 
     def test_wordpiece_train_merges_job_budget(self, spark):
-        """Building and forcing 6 WordPiece rounds: at most 30 jobs.
-        The count varies between identical runs (27-30) because of
-        AQE's run-time re-planning."""
-        assert self._forced_jobs(spark, "wordpiece_train_merges") <= 30
+        """Building and forcing 6 WordPiece rounds: exactly 27 jobs.
+        Both symbol-count sides of each round's score join are
+        broadcast at plan time; left to AQE's run-time re-planning,
+        identical runs took 27 to 31 jobs."""
+        assert self._forced_jobs(spark, "wordpiece_train_merges") == 27
 
 
 class TestScaleShapes:

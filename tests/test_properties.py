@@ -378,16 +378,16 @@ def test_int8_codes_bounded_and_scale_invariant(spark, vecs):
     of the vector (absmax normalization cancels the scalar) — the
     property that makes SQ8 cosine insensitive to embedding norm
     conventions."""
-    from jly_flink_spark.operators.similarity import int8_codes
+    from jly_flink_spark.operators.similarity import _int8_coded
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     schema = "vec_id long, embedding array<float>"
     df = spark.createDataFrame(rows, schema)
     codes = {
         r["vec_id"]: r["c"]
-        for r in df.select(
-            "vec_id", int8_codes(F.col("embedding")).alias("c")
-        ).collect()
+        for r in _int8_coded(df)
+        .select("vec_id", F.col("codes").alias("c"))
+        .collect()
     }
     for c in codes.values():
         assert all(-127 <= v <= 127 for v in c), c
@@ -401,9 +401,9 @@ def test_int8_codes_bounded_and_scale_invariant(spark, vecs):
     df2 = spark.createDataFrame(scaled, schema)
     codes2 = {
         r["vec_id"]: r["c"]
-        for r in df2.select(
-            "vec_id", int8_codes(F.col("embedding")).alias("c")
-        ).collect()
+        for r in _int8_coded(df2)
+        .select("vec_id", F.col("codes").alias("c"))
+        .collect()
     }
     for i, v in enumerate(vecs):
         if max(abs(float(x)) for x in v) > 1e-12:

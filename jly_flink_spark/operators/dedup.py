@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..io import ensure_min_parallelism, stage, stage_eager
+from ..sources.layout import IndexSpec, read_index, write_index
 from .text import fingerprint, normalized_text, tokens
 
 # MinHash parameters: K hashes in B bands of R rows (K = B*R).
@@ -276,6 +277,12 @@ def minhash_signature_from_tokens(toks: DataFrame) -> DataFrame:
     return staged.select("doc_id", *sig_cols)
 
 
+# The LSH index's compaction spec: (band_key, doc_id) rows sorted on
+# the probe key (sources.layout owns the append/delete/read/compact
+# lifecycle every persisted index shares).
+LSH_INDEX = IndexSpec(sort_cols=("band_key",))
+
+
 def persist_lsh_index(
     docs: DataFrame, path: str, text_col: str = "text"
 ) -> None:
@@ -285,9 +292,7 @@ def persist_lsh_index(
     per corpus version; at 100 TB sort by band_key at write time so
     per-file min/max statistics prune the probe join's scan."""
     bands = minhash_bands(minhash_signatures(docs, text_col))
-    bands.sortWithinPartitions("band_key").write.mode(
-        "overwrite"
-    ).parquet(path)
+    write_index(bands, path, LSH_INDEX, "overwrite")
 
 
 def append_to_lsh_index(
@@ -299,96 +304,10 @@ def append_to_lsh_index(
     Uses the stateless row-wise signature (same values as the batch
     pipeline), so it can run inside a foreachBatch alongside the
     probe. Appends are per-batch atomic in parquet; compact the
-    accumulated small files on a cadence with `compact_lsh_index`."""
+    accumulated small files on a cadence with
+    `compact_index(spark, path, LSH_INDEX)`."""
     bands = minhash_bands(minhash_signature_rowwise(new_docs, text_col))
-    bands.sortWithinPartitions("band_key").write.mode("append").parquet(
-        path
-    )
-
-
-def delete_from_lsh_index(spark, path: str, doc_ids) -> None:
-    """Logical deletion from the persisted LSH index — the dedup-side
-    twin of `similarity.delete_from_ivf` (same tombstone files, same
-    LSM delete→compact contract): documents removed from the corpus
-    stop surfacing as candidates immediately via `read_lsh_index`'s
-    anti-join; the next `compact_lsh_index` applies the tombstones
-    physically and drains them. Serialize with appends/compaction on
-    the one maintenance timeline."""
-    from pyspark.sql import DataFrame as _DF
-
-    from .similarity import _tombstone_dir
-
-    df = (
-        doc_ids
-        if isinstance(doc_ids, _DF)
-        else spark.createDataFrame(
-            [(int(v),) for v in doc_ids], "doc_id long"
-        )
-    )
-    df.select("doc_id").write.mode("append").parquet(
-        _tombstone_dir(path)
-    )
-
-
-def read_lsh_index(spark, path: str) -> DataFrame:
-    """The compaction-safe index read for probe joins: re-resolve the
-    layout (fresh file listing — see `compact_lsh_index`'s
-    live-consumer note) and anti-join any pending deletion tombstones
-    out. Serving paths should read the index through this instead of
-    a bare `spark.read.parquet(path)`."""
-    from .similarity import _without_tombstones
-
-    return _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    )
-
-
-def compact_lsh_index(
-    spark, path: str, target_rows_per_file: int = 4_000_000
-) -> int:
-    """Maintenance pass for the incremental LSH index: every
-    `append_to_lsh_index` micro-batch adds one small file, so a
-    long-running ingest degrades the probe join into thousands of
-    file opens. Rewrite the index into ~equal files range-sharded and
-    sorted on `band_key` (restoring the tight per-file min/max stats
-    the probe's scan prunes on), then swap the layout in. Returns the
-    file count written. Run it on a cadence (files per partition
-    threshold or N appends), like any LSM-ish index maintenance, but
-    SERIALIZED with the appends on one maintenance timeline — an
-    `append_to_lsh_index` committed between the compaction's read
-    snapshot and the swap would be deleted silently (see
-    `swap_layout` for the full write/read contract).
-    Probe/candidate results are layout-invariant
-    (tests/test_layout_compaction.py).
-
-    Interaction with live consumers: the swap DELETES the old files,
-    and a long-lived static DataFrame (e.g. the `index_bands` side of
-    a stream-static probe join, resolved once at stream start) pins
-    the old file listing — its next micro-batch would read files that
-    no longer exist. The compaction-safe serving pattern is to
-    re-resolve the index per epoch (`spark.read.parquet(path)` inside
-    foreachBatch — what `serve_ann_topk` does by taking a path, and
-    what `tests/test_layout_compaction.py::
-    test_stream_probe_survives_mid_stream_compaction` pins); then
-    maintenance between epochs is invisible to the stream."""
-    import shutil
-
-    from ..sources.layout import compact_sorted, swap_layout
-    from .similarity import _tombstone_dir, _without_tombstones
-
-    tmp = path.rstrip("/") + ".compacting"
-    n_files = compact_sorted(
-        _without_tombstones(
-            spark, path, spark.read.parquet(path), "doc_id"
-        ),
-        tmp,
-        ["band_key"],
-        target_rows_per_file,
-    )
-    swap_layout(path, tmp)
-    # deletes are applied physically — drain the tombstone set
-    shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
-    return n_files
+    write_index(bands, path, LSH_INDEX)
 
 
 def stream_near_dup_candidates(
@@ -1055,21 +974,32 @@ def winnow_fingerprints_rowwise(
     )
 
 
-def persist_winnow_index(
-    docs: DataFrame, path: str, text_col: str = "text"
-) -> None:
-    """Persist the corpus's fingerprint table (h, doc_id, n_fp) —
-    n_fp (the doc's selected-set size) is denormalized onto every
-    row so probe-time containment needs no second index read. Sorted
-    by h at write time for per-file min/max pruning of the probe
-    join's scan."""
+# The winnowing index's compaction spec: (doc_id, h, n_fp) rows
+# sorted on h; n_fp is one value per doc (a changed re-append without
+# a tombstone raises at compaction).
+WINNOW_INDEX = IndexSpec(sort_cols=("h",), value_col="n_fp")
+
+
+def _winnow_index_rows(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, h, n_fp) rows — n_fp (the doc's selected-set size) is
+    denormalized onto every row so probe-time containment needs no
+    second index read."""
     fp = winnow_fingerprints_rowwise(docs, text_col)
     sizes = fp.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_fp")
     )
-    fp.join(sizes, "doc_id").sortWithinPartitions("h").write.mode(
-        "overwrite"
-    ).parquet(path)
+    return fp.join(sizes, "doc_id")
+
+
+def persist_winnow_index(
+    docs: DataFrame, path: str, text_col: str = "text"
+) -> None:
+    """Persist the corpus's fingerprint table (h, doc_id, n_fp),
+    sorted by h at write time for per-file min/max pruning of the
+    probe join's scan."""
+    write_index(
+        _winnow_index_rows(docs, text_col), path, WINNOW_INDEX, "overwrite"
+    )
 
 
 def append_to_winnow_index(
@@ -1079,33 +1009,25 @@ def append_to_winnow_index(
     fingerprints so FUTURE arrivals dedup against them (the
     write-back half; runs inside foreachBatch beside the probe, like
     `append_to_lsh_index`). Compact the accumulated small files on a
-    cadence with `sources.layout.compact_sorted` + `swap_layout` —
-    the LSH index's maintenance contract applies verbatim.
+    cadence with `compact_index(spark, path, WINNOW_INDEX)`.
 
     At-least-once safety: a foreachBatch replay after a mid-append
     failure re-appends the SAME (doc_id, h, n_fp) rows. The probe is
     duplicate-insensitive by construction (`probe_winnow_index`
-    counts distinct hashes and docs, never raw rows), and
-    `compact_winnow_index` drops the physical duplicates — so a
-    checkpoint-recovered stream cannot corrupt containment scores,
-    it only carries redundant bytes until the next compaction.
+    counts distinct hashes and docs, never raw rows), and compaction
+    drops the physical duplicates — so a checkpoint-recovered stream
+    cannot corrupt containment scores, it only carries redundant
+    bytes until the next compaction.
 
     Tombstone-before-reappend contract: re-appending a doc_id whose
-    TEXT changed (not a bit-identical replay) requires
-    `delete_from_winnow_index` + `compact_winnow_index` first —
-    otherwise old and new fingerprints coexist under one doc_id and
-    compaction fails loudly on the conflicting n_fp (it cannot tell
-    which set is current). Note the guard sees only n_fp: a changed
-    text that happens to select the SAME number of fingerprints
-    slips past it, so the contract is on the caller, not merely on
-    the guard."""
-    fp = winnow_fingerprints_rowwise(new_docs, text_col)
-    sizes = fp.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_fp")
-    )
-    fp.join(sizes, "doc_id").sortWithinPartitions("h").write.mode(
-        "append"
-    ).parquet(path)
+    TEXT changed (not a bit-identical replay) requires `delete_ids`
+    + `compact_index` first — otherwise old and new fingerprints
+    coexist under one doc_id and compaction fails loudly on the
+    conflicting n_fp (it cannot tell which set is current). Note the
+    guard sees only n_fp: a changed text that happens to select the
+    SAME number of fingerprints slips past it, so the contract is on
+    the caller, not merely on the guard."""
+    write_index(_winnow_index_rows(new_docs, text_col), path, WINNOW_INDEX)
 
 
 def probe_winnow_index(
@@ -1131,7 +1053,7 @@ def probe_winnow_index(
     probe = fp.join(nsz, "doc_id").select(
         F.col("doc_id").alias("new_doc_id"), "h", "n_new"
     )
-    idx = read_winnow_index(spark, path)
+    idx = read_index(spark, path)
     # Both aggregates count DISTINCT, not raw rows, so physically
     # duplicated index rows (an at-least-once foreachBatch replay of
     # `append_to_winnow_index` before compaction) cannot inflate df
@@ -1218,99 +1140,6 @@ def winnow_containment_vs_index(
             .cast("bigint"),
         )
     )
-
-
-def delete_from_winnow_index(spark, path: str, doc_ids) -> None:
-    """Logical deletion from the winnowing index — same tombstone
-    files and LSM delete→compact contract as `delete_from_lsh_index`
-    (removed docs stop surfacing as probe candidates immediately;
-    compaction applies the tombstones physically). Serialize with
-    appends/compaction on the one maintenance timeline."""
-    from pyspark.sql import DataFrame as _DF
-
-    from .similarity import _tombstone_dir
-
-    df = (
-        doc_ids
-        if isinstance(doc_ids, _DF)
-        else spark.createDataFrame(
-            [(int(v),) for v in doc_ids], "doc_id long"
-        )
-    )
-    df.select("doc_id").write.mode("append").parquet(
-        _tombstone_dir(path)
-    )
-
-
-def read_winnow_index(spark, path: str) -> DataFrame:
-    """Compaction-safe, tombstone-aware index read (the winnowing
-    twin of `read_lsh_index`)."""
-    from .similarity import _without_tombstones
-
-    return _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    )
-
-
-def compact_winnow_index(
-    spark, path: str, target_rows_per_file: int = 4_000_000
-) -> int:
-    """Maintenance pass for the incremental winnowing index —
-    verbatim the `compact_lsh_index` contract (rewrite h-sorted,
-    atomic write-then-swap, tombstones applied and drained; serialize
-    with appends; consumers re-resolve per epoch) — plus physical
-    (doc_id, h, n_fp) dedup, which drains any rows duplicated by an
-    at-least-once replay of `append_to_winnow_index` (replayed rows
-    are bit-identical, so the triple collapses to one copy).
-
-    Loud conflict guard (round-9 ADVICE): dedup on ALL THREE columns
-    is exact only for bit-identical replays. A doc re-appended with
-    CHANGED text and no prior tombstone leaves rows with two
-    different n_fp values under one doc_id — compaction must not
-    silently keep a stale/mixed fingerprint set, so any doc whose
-    rows disagree on n_fp raises at execution time (tombstone the
-    doc, compact, then re-append — see `append_to_winnow_index`)."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    from ..sources.layout import compact_sorted, swap_layout
-    from .similarity import _tombstone_dir, _without_tombstones
-
-    live = _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    ).dropDuplicates(["doc_id", "h", "n_fp"])
-    w = Window.partitionBy("doc_id")
-    live = live.withColumn(
-        "n_fp",
-        F.when(
-            F.min("n_fp").over(w) == F.max("n_fp").over(w),
-            F.col("n_fp"),
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("compact_winnow_index: doc_id "),
-                    F.col("doc_id").cast("string"),
-                    F.lit(
-                        " has conflicting n_fp values — it was "
-                        "re-appended with changed text without a "
-                        "prior tombstone; delete_from_winnow_index "
-                        "it, compact, then re-append"
-                    ),
-                )
-            ).cast("bigint")
-        ),
-    )
-    tmp = path.rstrip("/") + ".compacting"
-    n_files = compact_sorted(
-        live,
-        tmp,
-        ["h"],
-        target_rows_per_file,
-    )
-    swap_layout(path, tmp)
-    shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
-    return n_files
 
 
 # ---------------------------------------------------------------------------

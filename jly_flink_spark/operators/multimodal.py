@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import ensure_min_parallelism
+from ..sources.layout import IndexSpec, hamming_bands, read_index, write_index
 
 # Schema of the decoded-header output: metadata carried through,
 # parsed container fields appended (NULL where the modality lacks
@@ -878,54 +879,31 @@ def pixel_dhash_frame(media: DataFrame) -> DataFrame:
 # the LSH/winnowing indexes in operators/dedup.py — persist the
 # corpus's Hamming-LSH bands once; each ingest micro-batch PROBES for
 # near-dup images against the whole history and APPENDS its own
-# bands. Same LSM maintenance contract (tombstone delete → compact →
-# swap; serialize appends/compaction on one timeline).
+# bands. Same LSM maintenance contract (sources.layout: tombstone
+# delete → compact → swap; serialize appends/compaction on one
+# timeline). Bands are `hamming_bands` (4 x 14-bit over the 56-bit
+# hash).
 # ---------------------------------------------------------------------------
-DHASH_BAND_BITS = 14   # 4 x 14-bit bands over the 56-bit hash
-DHASH_N_BANDS = 4
 DHASH_HAM_MAX = 6      # verified near-dup threshold (of 56 bits)
+# the dHash index's compaction spec: (doc_id, dhash, b, bkey) rows
+# sorted on the probe key; one dhash per doc
+DHASH_INDEX = IndexSpec(sort_cols=("b", "bkey"), value_col="dhash")
 
 
-def dhash_bands(hashes: DataFrame) -> DataFrame:
-    """(doc_id, dhash, b, bkey) band rows for a (doc_id, dhash)
-    frame — a pair of images collides iff SOME band matches. One
-    row-local explode; the hash rides along so probes verify Hamming
-    distance without a second index read."""
-    mask = (1 << DHASH_BAND_BITS) - 1
-    return hashes.select(
-        "doc_id",
+def _dhash_index_rows(media: DataFrame) -> DataFrame:
+    """Band rows of the parseable payloads (NULL dhash never enters
+    the index)."""
+    return hamming_bands(
+        pixel_dhash_frame(media).filter(F.col("dhash").isNotNull()),
         "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.shiftright(F.col("dhash"), DHASH_BAND_BITS * b)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bkey"),
-                    )
-                    for b in range(DHASH_N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
         "doc_id",
-        "dhash",
-        F.col("bb.b").alias("b"),
-        F.col("bb.bkey").alias("bkey"),
     )
 
 
 def persist_dhash_index(media: DataFrame, path: str) -> None:
     """Persist the corpus's dHash band table, sorted by (b, bkey) for
-    per-file min/max pruning of the probe join's scan. Unparseable
-    payloads (NULL dhash) never enter the index."""
-    bands = dhash_bands(
-        pixel_dhash_frame(media).filter(F.col("dhash").isNotNull())
-    )
-    bands.sortWithinPartitions("b", "bkey").write.mode(
-        "overwrite"
-    ).parquet(path)
+    per-file min/max pruning of the probe join's scan."""
+    write_index(_dhash_index_rows(media), path, DHASH_INDEX, "overwrite")
 
 
 def append_to_dhash_index(new_media: DataFrame, path: str) -> None:
@@ -936,15 +914,10 @@ def append_to_dhash_index(new_media: DataFrame, path: str) -> None:
     duplicates — the winnowing index's replay contract.
 
     Tombstone-before-reappend: re-appending a doc_id whose PIXELS
-    changed requires `delete_from_dhash_index` + compaction first;
-    otherwise two dhash values coexist under one doc_id and
-    `compact_dhash_index` fails loudly on the conflict."""
-    bands = dhash_bands(
-        pixel_dhash_frame(new_media).filter(F.col("dhash").isNotNull())
-    )
-    bands.sortWithinPartitions("b", "bkey").write.mode(
-        "append"
-    ).parquet(path)
+    changed requires `delete_ids` + `compact_index` first; otherwise
+    two dhash values coexist under one doc_id and compaction fails
+    loudly on the conflict."""
+    write_index(_dhash_index_rows(new_media), path, DHASH_INDEX)
 
 
 def probe_dhash_index(
@@ -954,129 +927,15 @@ def probe_dhash_index(
     ham_max: int = DHASH_HAM_MAX,
 ) -> DataFrame:
     """Near-dup image candidates of a new batch against the INDEXED
-    corpus: (new_doc_id, index_doc_id, hamming) for pairs sharing a
-    band with bit_count(xor) <= ham_max. Hashes ride inside the band
-    rows, so verification needs no extra index read; the distinct
-    collapses multi-band collisions AND any replay-duplicated index
-    rows (same values either way)."""
-    probe = dhash_bands(
-        pixel_dhash_frame(new_media).filter(F.col("dhash").isNotNull())
-    ).select(
-        F.col("doc_id").alias("new_doc_id"),
-        F.col("dhash").alias("hn"),
-        "b",
-        "bkey",
-    )
-    idx = read_dhash_index(spark, path).select(
-        F.col("doc_id").alias("index_doc_id"),
-        F.col("dhash").alias("hi"),
-        "b",
-        "bkey",
-    )
-    cand = (
-        probe.join(idx, ["b", "bkey"])
-        .filter(F.col("new_doc_id") != F.col("index_doc_id"))
-        .select("new_doc_id", "index_doc_id", "hn", "hi")
+    corpus: (new_doc_id, index_doc_id, hamming) — the batch form of
+    `stream_image_near_dups` over the tombstone-aware index read; the
+    distinct collapses multi-band collisions AND any replay-duplicated
+    index rows (same values either way)."""
+    return (
+        stream_image_near_dups(new_media, read_index(spark, path), ham_max)
+        .drop("b")
         .distinct()
     )
-    ham = F.bit_count(F.col("hn").bitwiseXOR(F.col("hi"))).cast(
-        "bigint"
-    )
-    return cand.select(
-        "new_doc_id", "index_doc_id", ham.alias("hamming")
-    ).filter(F.col("hamming") <= ham_max)
-
-
-def _append_doc_tombstones(spark, path: str, doc_ids) -> None:
-    """Shared tombstone write for every doc-keyed media index
-    (dhash / audio bands / video bands)."""
-    from pyspark.sql import DataFrame as _DF
-
-    from .similarity import _tombstone_dir
-
-    df = (
-        doc_ids
-        if isinstance(doc_ids, _DF)
-        else spark.createDataFrame(
-            [(int(v),) for v in doc_ids], "doc_id long"
-        )
-    )
-    df.select("doc_id").write.mode("append").parquet(
-        _tombstone_dir(path)
-    )
-
-
-def delete_from_dhash_index(spark, path: str, doc_ids) -> None:
-    """Logical deletion — the shared tombstone contract (removed
-    images stop surfacing immediately; compaction applies
-    physically)."""
-    _append_doc_tombstones(spark, path, doc_ids)
-
-
-def read_dhash_index(spark, path: str) -> DataFrame:
-    """Compaction-safe, tombstone-aware index read."""
-    from .similarity import _without_tombstones
-
-    return _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    )
-
-
-def compact_dhash_index(
-    spark, path: str, target_rows_per_file: int = 4_000_000
-) -> int:
-    """Maintenance pass — the compact_lsh_index contract verbatim
-    ((b, bkey)-sorted rewrite, atomic write-then-swap, tombstones
-    applied and drained, replay-duplicated rows dropped; serialize
-    with appends; consumers re-resolve per epoch).
-
-    Loud conflict guard (round-9 ADVICE, winnow twin): the dedup on
-    (doc_id, dhash, b, bkey) is exact only for bit-identical
-    replays. A doc re-appended with CHANGED pixels and no prior
-    tombstone leaves two dhash values under one doc_id — raise at
-    execution time instead of silently keeping a stale/mixed band
-    set (tombstone the doc, compact, then re-append)."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    from ..sources.layout import compact_sorted, swap_layout
-    from .similarity import _tombstone_dir, _without_tombstones
-
-    live = _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    ).dropDuplicates(["doc_id", "dhash", "b", "bkey"])
-    w = Window.partitionBy("doc_id")
-    live = live.withColumn(
-        "dhash",
-        F.when(
-            F.min("dhash").over(w) == F.max("dhash").over(w),
-            F.col("dhash"),
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("compact_dhash_index: doc_id "),
-                    F.col("doc_id").cast("string"),
-                    F.lit(
-                        " has conflicting dhash values — it was "
-                        "re-appended with changed pixels without a "
-                        "prior tombstone; delete_from_dhash_index "
-                        "it, compact, then re-append"
-                    ),
-                )
-            ).cast("bigint")
-        ),
-    )
-    tmp = path.rstrip("/") + ".compacting"
-    n_files = compact_sorted(
-        live,
-        tmp,
-        ["b", "bkey"],
-        target_rows_per_file,
-    )
-    swap_layout(path, tmp)
-    shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
-    return n_files
 
 
 def stream_image_near_dups(
@@ -1094,9 +953,7 @@ def stream_image_near_dups(
     candidates is the consumer's choice (watermarked dropDuplicates
     in streaming, distinct in batch — `probe_dhash_index` is that
     batch form)."""
-    probe = dhash_bands(
-        pixel_dhash_frame(new_media).filter(F.col("dhash").isNotNull())
-    ).select(
+    probe = _dhash_index_rows(new_media).select(
         F.col("doc_id").alias("new_doc_id"),
         F.col("dhash").alias("hn"),
         "b",
@@ -1282,8 +1139,6 @@ AUDIO_PREFIX_TOKENS = 64  # samples derive from the first 64 tokens —
 #                           the same prefix window the pixel grids
 #                           sample, so audio near-dups track the
 #                           corpus's text near-dup structure
-AUDIO_N_BANDS = 4        # 4 x 14-bit Hamming-LSH bands (= dHash)
-AUDIO_BAND_BITS = 14
 AUDIO_HAM_MAX = 6        # verified near-dup threshold (of 56 bits)
 
 
@@ -1455,34 +1310,6 @@ def audio_fingerprint_frame(media: DataFrame) -> DataFrame:
     )
 
 
-def audio_bands(hashes: DataFrame) -> DataFrame:
-    """(doc_id, afp, b, bkey) band rows — the dHash banding one
-    modality over; a clip pair collides iff SOME band matches."""
-    mask = (1 << AUDIO_BAND_BITS) - 1
-    return hashes.select(
-        "doc_id",
-        "afp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.shiftright(F.col("afp"), AUDIO_BAND_BITS * b)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bkey"),
-                    )
-                    for b in range(AUDIO_N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_id",
-        "afp",
-        F.col("bb.b").alias("b"),
-        F.col("bb.bkey").alias("bkey"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Video perceptual near-dup (round 10): the third modality tier —
 # plant REAL YUV4MPEG2 (Y4M) containers whose frame luma derives
@@ -1501,8 +1328,6 @@ VIDEO_PREFIX_TOKENS = 64  # luma derives from the first 64 tokens —
 #                           the shared prefix window of all 3 tiers
 VIDEO_FRAME_HAM_MAX = 6   # per-frame close threshold (of 56 bits)
 VIDEO_MIN_CLOSE = 12      # near-dup iff ≥ 12 of 16 aligned frames close
-VIDEO_N_BANDS = 4         # 4 x 14-bit bands per frame (dHash discipline)
-VIDEO_BAND_BITS = 14
 # Perceptual band-bucket cap (round 11): a 14-bit band key space
 # saturates with corpus size (birthday effect — at 10x sf0.1, 83% of
 # video candidate pairs came from buckets >8 members while TRUE
@@ -1691,37 +1516,6 @@ def video_dhash_frames(media: DataFrame) -> DataFrame:
     )
 
 
-def video_bands(hashes: DataFrame) -> DataFrame:
-    """(doc_id, f, vh, b, bkey) band rows — TEMPORALLY ALIGNED: the
-    collision key is (frame position, band index, band bits), so two
-    clips become candidates only when the same frame slot matches."""
-    mask = (1 << VIDEO_BAND_BITS) - 1
-    return hashes.select(
-        "doc_id",
-        "f",
-        "vh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.shiftright(F.col("vh"), VIDEO_BAND_BITS * b)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bkey"),
-                    )
-                    for b in range(VIDEO_N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_id",
-        "f",
-        "vh",
-        F.col("bb.b").alias("b"),
-        F.col("bb.bkey").alias("bkey"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental audio / video band indexes (round 11): the dHash band
 # index's LSM contract extended to the other two perceptual tiers,
@@ -1729,150 +1523,29 @@ def video_bands(hashes: DataFrame) -> DataFrame:
 # near-dups the way it already probes images. Same replay rules:
 # appends are at-least-once (probes are distinct-based, duplicates
 # physically drain at compaction), re-appending changed content
-# without a prior tombstone fails loudly at compaction.
+# without a prior tombstone fails loudly at compaction. The video
+# index is TEMPORALLY ALIGNED: the frame slot rides in every row and
+# leads the probe key, so collisions require the same (f, b, bkey).
 # ---------------------------------------------------------------------------
+AUDIO_INDEX = IndexSpec(sort_cols=("b", "bkey"), value_col="afp")
+VIDEO_INDEX = IndexSpec(
+    sort_cols=("f", "b", "bkey"), value_col="vh", key=("doc_id", "f")
+)
 
 
 def append_to_audio_index(new_media: DataFrame, path: str) -> None:
     """Append a batch's audio fingerprint bands (doc_id, afp, b,
     bkey) — `append_to_dhash_index` one modality over."""
-    bands = audio_bands(
-        audio_fingerprint_frame(new_media).filter(
-            F.col("afp").isNotNull()
-        )
+    hashes = audio_fingerprint_frame(new_media).filter(
+        F.col("afp").isNotNull()
     )
-    bands.sortWithinPartitions("b", "bkey").write.mode(
-        "append"
-    ).parquet(path)
-
-
-def read_audio_index(spark, path: str) -> DataFrame:
-    """Compaction-safe, tombstone-aware audio index read."""
-    from .similarity import _without_tombstones
-
-    return _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    )
-
-
-def delete_from_audio_index(spark, path: str, doc_ids) -> None:
-    """Logical deletion — the shared tombstone contract (removed
-    clips stop surfacing immediately; compaction applies
-    physically)."""
-    _append_doc_tombstones(spark, path, doc_ids)
-
-
-def compact_audio_index(
-    spark, path: str, target_rows_per_file: int = 4_000_000
-) -> int:
-    """Maintenance pass — the compact_dhash_index contract with afp
-    as the hash column (loud conflict guard on a changed-fingerprint
-    re-append without a tombstone)."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    from ..sources.layout import compact_sorted, swap_layout
-    from .similarity import _tombstone_dir, _without_tombstones
-
-    live = _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    ).dropDuplicates(["doc_id", "afp", "b", "bkey"])
-    w = Window.partitionBy("doc_id")
-    live = live.withColumn(
-        "afp",
-        F.when(
-            F.min("afp").over(w) == F.max("afp").over(w),
-            F.col("afp"),
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("compact_audio_index: doc_id "),
-                    F.col("doc_id").cast("string"),
-                    F.lit(
-                        " has conflicting afp values — re-appended "
-                        "with changed samples without a prior "
-                        "tombstone; delete, compact, re-append"
-                    ),
-                )
-            ).cast("bigint")
-        ),
-    )
-    tmp = path.rstrip("/") + ".compacting"
-    n_files = compact_sorted(live, tmp, ["b", "bkey"], target_rows_per_file)
-    swap_layout(path, tmp)
-    shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
-    return n_files
+    write_index(hamming_bands(hashes, "afp", "doc_id"), path, AUDIO_INDEX)
 
 
 def append_to_video_index(new_media: DataFrame, path: str) -> None:
     """Append a batch's per-frame video dHash bands (doc_id, f, vh,
-    b, bkey). The frame slot rides in every row, so probes stay
-    TEMPORALLY ALIGNED: collisions require the same (f, b, bkey)."""
-    bands = video_bands(video_dhash_frames(new_media))
-    bands.sortWithinPartitions("f", "b", "bkey").write.mode(
-        "append"
-    ).parquet(path)
-
-
-def read_video_index(spark, path: str) -> DataFrame:
-    """Compaction-safe, tombstone-aware video index read."""
-    from .similarity import _without_tombstones
-
-    return _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
+    b, bkey)."""
+    hashes = video_dhash_frames(new_media)
+    write_index(
+        hamming_bands(hashes, "vh", "doc_id", "f"), path, VIDEO_INDEX
     )
-
-
-def delete_from_video_index(spark, path: str, doc_ids) -> None:
-    """Logical deletion — the shared tombstone contract (removed
-    clips stop surfacing immediately; compaction applies
-    physically)."""
-    _append_doc_tombstones(spark, path, doc_ids)
-
-
-def compact_video_index(
-    spark, path: str, target_rows_per_file: int = 4_000_000
-) -> int:
-    """Maintenance pass — the dHash compaction contract per (doc_id,
-    frame): conflicting vh under one (doc_id, f) without a tombstone
-    raises loudly; files rewrite sorted by the probe key
-    (f, b, bkey) for min/max pruning."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    from ..sources.layout import compact_sorted, swap_layout
-    from .similarity import _tombstone_dir, _without_tombstones
-
-    live = _without_tombstones(
-        spark, path, spark.read.parquet(path), "doc_id"
-    ).dropDuplicates(["doc_id", "f", "vh", "b", "bkey"])
-    w = Window.partitionBy("doc_id", "f")
-    live = live.withColumn(
-        "vh",
-        F.when(
-            F.min("vh").over(w) == F.max("vh").over(w), F.col("vh")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("compact_video_index: doc_id "),
-                    F.col("doc_id").cast("string"),
-                    F.lit(" frame "),
-                    F.col("f").cast("string"),
-                    F.lit(
-                        " has conflicting vh values — re-appended "
-                        "with changed frames without a prior "
-                        "tombstone; delete, compact, re-append"
-                    ),
-                )
-            ).cast("bigint")
-        ),
-    )
-    tmp = path.rstrip("/") + ".compacting"
-    n_files = compact_sorted(
-        live, tmp, ["f", "b", "bkey"], target_rows_per_file
-    )
-    swap_layout(path, tmp)
-    shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
-    return n_files

@@ -316,32 +316,36 @@ def persist_ivf_pq(
     coarse_cents: list,
     vec_col: str = "embedding",
 ) -> tuple[list, int]:
-    """Build the IVF-PQ serving layout: train the global sub-codebooks
-    (`pq_train_encode` — one joint Lloyd loop), coarse-assign every
-    vector to its IVF list on the FLOAT vector (the same quantizer as
-    every other layout builder), and persist (vec_id, pq, list_id)
-    hive-partitioned by list_id. Returns (pq_codebook_state, subdim)
-    — the model state a server needs. The stored row is M small ints:
-    the compression floor below IVF-SQ8 (M bytes vs d bytes), which
-    at 100 TB is the difference between an index that fits hot
-    storage and one that doesn't."""
-    from ..io import write_partitioned
+    """Build the IVF-PQ serving layout: coarse-assign every vector to
+    its IVF list on the FLOAT vector (the same quantizer as every
+    other layout builder), train the global sub-codebooks on the int8
+    codes (`pq_train_encode_codes` — one joint Lloyd loop) and
+    persist (vec_id, pq, code, list_id) hive-partitioned by list_id.
+    Returns (pq_codebook_state, subdim) — the model state a server
+    needs. The stored row is M small ints: the compression floor
+    below IVF-SQ8 (M bytes vs d bytes), which at 100 TB is the
+    difference between an index that fits hot storage and one that
+    doesn't."""
+    from ..io import ensure_min_parallelism, write_partitioned
     from .similarity import _assign_udf
 
-    cent, coded, subdim = pq_train_encode(emb, vec_col=vec_col)
     assign = _assign_udf(emb.sparkSession, coarse_cents)
-    rows = coded.join(
-        emb.select("vec_id", vec_col), "vec_id"
-    ).select(
-        "vec_id",
-        "pq",
-        # the full int8 codes ride in their own parquet COLUMN: the
-        # pure-ADC tier never reads it (column pruning keeps its
-        # scan M bytes/vector), the refine tier reads it only for
-        # its pruned lists — one layout, two serving costs
-        "code",
-        assign(F.col(vec_col)).alias("list_id"),
+    # the list is assigned ahead of the fan-out and rides through the
+    # Lloyd loop with the code, so the layout rows need no join back
+    lists = ensure_min_parallelism(
+        emb.select(
+            "vec_id", vec_col, assign(F.col(vec_col)).alias("list_id")
+        )
     )
+    codes = _int8_coded(lists, vec_col, fan_out=False).select(
+        "vec_id", "list_id", F.col("codes").alias("code")
+    )
+    cent, coded, subdim = pq_train_encode_codes(codes)
+    # the full int8 codes ride in their own parquet COLUMN: the
+    # pure-ADC tier never reads it (column pruning keeps its scan M
+    # bytes/vector), the refine tier reads it only for its pruned
+    # lists — one layout, two serving costs
+    rows = coded.select("vec_id", "pq", "code", "list_id")
     write_partitioned(rows, path, ["list_id"])
     return pq_codebook_state(cent), subdim
 

@@ -21,13 +21,13 @@ arithmetic on those exact sums.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+
+from ..sources.layout import read_index, rewrite_index, write_sorted_layout
 
 QUANT = 100_000_000  # 1e8: quantization scale for dot/norm sums
 
@@ -607,87 +607,21 @@ def _topk_from_probes(
     )
 
 
-def _tombstone_dir(layout_path: str) -> str:
-    _require_local_layout(layout_path)
-    return layout_path.rstrip("/") + ".tombstones"
-
-
-def _require_local_layout(path: str) -> None:
-    """The tombstone presence check (`os.path.isdir`) and compaction
-    drain (`shutil.rmtree`) are driver-local filesystem operations.
-    On a remote layout (s3a://, hdfs://) the isdir probe would read
-    False and pending deletes would keep serving SILENTLY — the one
-    failure mode worse than not supporting remote layouts at all —
-    so refuse loudly. (`swap_layout` is also local-FS-only but
-    already fails loudly on rename.) Remote support means resolving
-    through the Hadoop FileSystem API instead of os/shutil."""
-    scheme = path.split("://", 1)[0] if "://" in path else ""
-    if scheme not in ("", "file"):
-        raise ValueError(
-            "IVF/LSH layout tombstones require a driver-local layout "
-            f"path (got scheme {scheme!r} in {path!r}); remote "
-            "filesystems would silently skip pending deletes"
-        )
-
-
-def delete_from_ivf(spark: SparkSession, layout_path: str, vec_ids) -> None:
-    """Logical deletion from a persisted IVF layout (float or SQ8):
-    append the ids as TOMBSTONES beside the layout; every serving
-    probe anti-joins them out and the next `compact_ivf_layout`
-    applies them physically and drains the tombstone set. O(deletes)
-    per call — no partition rewrite on the delete path, mirroring the
-    LSM delete→compact pattern (and the CDC tombstone semantics of
-    `latest_state_stream`). Contract: a tombstone suppresses EVERY
-    row of that vec_id until a compaction clears it, so re-ingesting
-    a deleted id only takes effect after the compaction that applies
-    the delete; like appends, deletes share the single maintenance
-    timeline with compaction (`swap_layout`'s contract)."""
-    df = (
-        vec_ids
-        if isinstance(vec_ids, DataFrame)
-        else spark.createDataFrame(
-            [(int(v),) for v in vec_ids], "vec_id long"
-        )
-    )
-    df.select("vec_id").write.mode("append").parquet(
-        _tombstone_dir(layout_path)
-    )
-
-
-def _without_tombstones(
-    spark: SparkSession, layout_path: str, rows: DataFrame, id_col: str
-) -> DataFrame:
-    """Anti-join the layout's tombstone set (if any) out of a serving
-    scan. The set is bounded by the compaction cadence (it drains on
-    every compaction), so the broadcast anti-join stays model-sized."""
-    tomb_dir = _tombstone_dir(layout_path)
-    if not os.path.isdir(tomb_dir):
-        return rows
-    tombs = spark.read.parquet(tomb_dir)
-    # single-column id file; alias whatever the writer named it
-    # (vec_id for IVF layouts, doc_id for the LSH index)
-    tombs = tombs.select(F.col(tombs.columns[0]).alias(id_col))
-    return rows.join(F.broadcast(tombs), id_col, "left_anti")
-
-
 def _pruned_layout(
     spark: SparkSession, layout_path: str, probes: DataFrame, rename: dict
 ) -> DataFrame:
     """Partition-pruned read of a persisted IVF layout restricted to
     the probe frame's lists (the `lists` collect is
     |batch|·n_probe-sized model state, not data); tombstoned ids are
-    anti-joined out (`delete_from_ivf`)."""
+    anti-joined out (`sources.layout.read_index`)."""
     lists = [
         r["list_id"] for r in probes.select("list_id").distinct().collect()
     ]
     cols = [F.col(src).alias(dst) for src, dst in rename.items()]
-    pruned = (
-        spark.read.parquet(layout_path)
+    return (
+        read_index(spark, layout_path, "vec_id")
         .filter(F.col("list_id").isin(lists))
         .select(*cols, "list_id")
-    )
-    return _without_tombstones(
-        spark, layout_path, pruned, rename.get("vec_id", "vec_id")
     )
 
 
@@ -1386,33 +1320,21 @@ def compact_ivf_layout(
     """Maintenance pass for a persisted IVF layout (float or SQ8):
     incremental corpus additions appended into the hive partitions
     accumulate small files per list; rewrite each `list_id` partition
-    into `files_per_list` vec_id-sorted files and swap the layout in,
-    applying any pending tombstones (`delete_from_ivf`) physically
-    and draining the tombstone set. The hive partitioning — and with
-    it the probe's partition pruning — is preserved; served scores
-    are layout-invariant (tests/test_layout_compaction.py).
-    Serialize with `append_to_ivf_int8`/`delete_from_ivf` on one
-    maintenance timeline — an append or delete committed between the
-    compaction's read snapshot and the swap is lost silently (see
-    `swap_layout` for the full contract)."""
-    import shutil
-
-    from ..sources.layout import swap_layout, write_sorted_layout
-
-    tmp = path.rstrip("/") + ".compacting"
-    write_sorted_layout(
-        _without_tombstones(
-            spark, path, spark.read.parquet(path), "vec_id"
+    into `files_per_list` vec_id-sorted files over the live rows and
+    swap the layout in — the shared lifecycle of `sources.layout`
+    (`read_index` applies pending `delete_ids(..., "vec_id")`
+    tombstones, `rewrite_index` swaps and drains them). The hive
+    partitioning — and with it the probe's partition pruning — is
+    preserved; served scores are layout-invariant
+    (tests/test_layout_compaction.py). Serialize with appends and
+    deletes on one maintenance timeline (`swap_layout`)."""
+    live = read_index(spark, path, "vec_id")
+    rewrite_index(
+        path,
+        lambda tmp: write_sorted_layout(
+            live, tmp, ["list_id"], ["vec_id"], files_per_list
         ),
-        tmp,
-        ["list_id"],
-        ["vec_id"],
-        files_per_partition=files_per_list,
     )
-    swap_layout(path, tmp)
-    # tombstones are now applied physically; drain them so the
-    # serving-side anti-join set stays bounded by compaction cadence
-    shutil.rmtree(_tombstone_dir(path), ignore_errors=True)
 
 
 def _query_probes(q_rows, cents: list, n_probe: int, vec_col: str):

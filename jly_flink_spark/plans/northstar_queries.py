@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table, stage
 from ..operators import dedup, multimodal, similarity, text
+from ..sources.layout import HAMMING_BAND_BITS, HAMMING_N_BANDS, hamming_bands
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -3611,13 +3612,9 @@ def dedup_substring_spans(spark, sf_dir):
 # Pixel-level multimodal near-dup (round 9): integer dHash over the
 # planted pixel grids + Hamming-LSH banding
 # --------------------------------------------------------------------
-# one definition in the operator module (the incremental index and
-# this batch query must bucket identically for batch↔stream parity)
-from ..operators.multimodal import (  # noqa: E402
-    DHASH_BAND_BITS,
-    DHASH_HAM_MAX,
-    DHASH_N_BANDS,
-)
+# one banding (`hamming_bands`) for the incremental index and this
+# batch query: they must bucket identically for batch↔stream parity
+from ..operators.multimodal import DHASH_HAM_MAX  # noqa: E402
 
 # 2 hex chars of an md5 digest `d` -> 0..255: the planted pixel / PCM
 # sample value of the image, audio and video tiers
@@ -3663,9 +3660,9 @@ def dhash_pair_ctes(p: str = "") -> str:
 ),
 {p}bands AS (
   SELECT doc_id, dhash, b,
-         (dhash >> ({DHASH_BAND_BITS} * b)) & {(1 << DHASH_BAND_BITS) - 1}
+         (dhash >> ({HAMMING_BAND_BITS} * b)) & {(1 << HAMMING_BAND_BITS) - 1}
            AS bkey
-  FROM {p}bits, unnest(generate_series(0, {DHASH_N_BANDS - 1})) AS t(b)
+  FROM {p}bits, unnest(generate_series(0, {HAMMING_N_BANDS - 1})) AS t(b)
 ),
 {p}cand AS (
   SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
@@ -3721,9 +3718,7 @@ def multimodal_phash_near_dups(spark, sf_dir):
         .filter(F.col("dhash").isNotNull())
         .transform(stage)
     )
-    from ..operators.multimodal import dhash_bands
-
-    bands = dhash_bands(hashes)
+    bands = hamming_bands(hashes, "dhash", "doc_id")
     x = bands.select(
         F.col("doc_id").alias("doc_a"), F.col("dhash").alias("ha"),
         "b", "bkey",
@@ -4209,9 +4204,9 @@ abits AS (
 ),
 bands AS (
   SELECT doc_id, dhash, b,
-         (dhash >> ({DHASH_BAND_BITS} * b))
-           & {(1 << DHASH_BAND_BITS) - 1} AS bkey
-  FROM dbits, unnest(generate_series(0, {DHASH_N_BANDS - 1})) AS t(b)
+         (dhash >> ({HAMMING_BAND_BITS} * b))
+           & {(1 << HAMMING_BAND_BITS) - 1} AS bkey
+  FROM dbits, unnest(generate_series(0, {HAMMING_N_BANDS - 1})) AS t(b)
 ),
 cand AS (
   SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
@@ -4255,7 +4250,6 @@ WHERE bit_count(xor(c.ha, c.hb)) <= {DHASH_HAM_MAX}
 )
 def multimodal_perceptual_crosscheck(spark, sf_dir):
     from ..operators.multimodal import (
-        dhash_bands,
         documents_as_pixel_media,
         documents_as_pixel_media16,
         pixel_ahash_pooled_frame,
@@ -4273,7 +4267,7 @@ def multimodal_perceptual_crosscheck(spark, sf_dir):
         .filter(F.col("ahash").isNotNull())
         .transform(stage)
     )
-    bands = dhash_bands(dh)
+    bands = hamming_bands(dh, "dhash", "doc_id")
     x = bands.select(
         F.col("doc_id").alias("doc_a"), F.col("dhash").alias("ha"),
         "b", "bkey",
@@ -4333,10 +4327,8 @@ def audio_pair_ctes(p: str = "aud") -> str:
     size while true near-dup families stay small, so an over-cap
     bucket is noise; a true pair keeps its other bands' chances."""
     from ..operators.multimodal import (
-        AUDIO_BAND_BITS,
         AUDIO_FRAME_LEN,
         AUDIO_FRAMES,
-        AUDIO_N_BANDS,
         AUDIO_PREFIX_TOKENS,
         MALFORMED_MOD,
         PERCEPTUAL_MAX_BAND_BUCKET,
@@ -4376,9 +4368,9 @@ def audio_pair_ctes(p: str = "aud") -> str:
 ),
 {p}bands AS (
   SELECT doc_id, afp, b,
-         (afp >> ({AUDIO_BAND_BITS} * b))
-           & {(1 << AUDIO_BAND_BITS) - 1} AS bkey
-  FROM {p}fp, unnest(generate_series(0, {AUDIO_N_BANDS - 1})) AS t(b)
+         (afp >> ({HAMMING_BAND_BITS} * b))
+           & {(1 << HAMMING_BAND_BITS) - 1} AS bkey
+  FROM {p}fp, unnest(generate_series(0, {HAMMING_N_BANDS - 1})) AS t(b)
 ),
 {p}ok AS (
   SELECT b, bkey FROM {p}bands
@@ -4456,7 +4448,6 @@ LEFT JOIN shared s ON s.doc_a = p.doc_a AND s.doc_b = p.doc_b
 def multimodal_audio_near_dups(spark, sf_dir):
     from ..operators.multimodal import (
         AUDIO_HAM_MAX,
-        audio_bands,
         audio_fingerprint_frame,
         documents_as_audio_media,
     )
@@ -4469,7 +4460,7 @@ def multimodal_audio_near_dups(spark, sf_dir):
         .filter(F.col("afp").isNotNull())
         .transform(stage)
     )
-    bands = audio_bands(hashes)
+    bands = hamming_bands(hashes, "afp", "doc_id")
     # bucket cap (the video tier's rule, ported round 12): 14-bit
     # band keys saturate quadratically with corpus size; buckets
     # past the cap are skipped — a true pair keeps its other 3
@@ -4574,10 +4565,8 @@ def video_pair_ctes(p: str = "v") -> str:
         DHASH_GRID,
         MALFORMED_MOD,
         PERCEPTUAL_MAX_BAND_BUCKET,
-        VIDEO_BAND_BITS,
         VIDEO_FRAME_HAM_MAX,
         VIDEO_FRAMES,
-        VIDEO_N_BANDS,
         VIDEO_PREFIX_TOKENS,
     )
 
@@ -4613,9 +4602,9 @@ def video_pair_ctes(p: str = "v") -> str:
 ),
 {p}bands AS (
   SELECT doc_id, f, vh, b,
-         (vh >> ({VIDEO_BAND_BITS} * b))
-           & {(1 << VIDEO_BAND_BITS) - 1} AS bkey
-  FROM {p}hash, unnest(generate_series(0, {VIDEO_N_BANDS - 1})) AS t(b)
+         (vh >> ({HAMMING_BAND_BITS} * b))
+           & {(1 << HAMMING_BAND_BITS) - 1} AS bkey
+  FROM {p}hash, unnest(generate_series(0, {HAMMING_N_BANDS - 1})) AS t(b)
 ),
 {p}ok AS (
   SELECT f, b, bkey FROM {p}bands
@@ -4702,7 +4691,6 @@ def multimodal_video_near_dups(spark, sf_dir):
         VIDEO_FRAME_HAM_MAX,
         VIDEO_MIN_CLOSE,
         documents_as_video_media,
-        video_bands,
         video_dhash_frames,
     )
     from ..operators.text import trigram_shingles
@@ -4712,7 +4700,7 @@ def multimodal_video_near_dups(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     media = documents_as_video_media(docs)
     hashes = video_dhash_frames(media).transform(stage)
-    bands = video_bands(hashes)
+    bands = hamming_bands(hashes, "vh", "doc_id", "f")
     # bucket cap: 14-bit band keys saturate with corpus size (random
     # collisions grow quadratically); buckets past the cap are
     # skipped — true pairs keep their other 63 collision chances

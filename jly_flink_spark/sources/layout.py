@@ -4,7 +4,7 @@ At 100 TB the dominant cost of a table is how it is laid out, not how
 it is computed: a partition with 50k tiny files pays 50k open/seek
 round-trips per scan, and an unsorted layout turns every selective
 scan into a full read because min/max footer stats prune nothing.
-These helpers are the two standard maintenance passes:
+These helpers are the standard maintenance passes:
 
 - `compact_parquet`: rewrite a directory into ~target-row files
   (repartition to the computed file count; `maxRecordsPerFile` caps
@@ -17,6 +17,13 @@ These helpers are the two standard maintenance passes:
 
 Both are pure Spark writers — no custom file management; the
 atomicity story is the standard write-to-new-dir-then-swap.
+
+The module also owns the incremental-index lifecycle every persisted
+probe index shares (MinHash-LSH, winnowing, the dHash/audio/video
+band indexes, the IVF layouts): append, tombstoned delete
+(`delete_ids`), tombstone-aware read (`read_index`) and compaction
+that applies and drains the tombstones (`compact_index`), plus the
+one per-key conflict guard and the one Hamming banding.
 """
 
 from __future__ import annotations
@@ -24,8 +31,10 @@ from __future__ import annotations
 import math
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -82,6 +91,12 @@ def compact_sorted(
     return n_files
 
 
+def _local(path: str) -> str:
+    """`path` for os/shutil calls (a `file://` URI names a local
+    path that `os.path` does not resolve)."""
+    return path[len("file://"):] if path.startswith("file://") else path
+
+
 def swap_layout(path: str, new_path: str) -> None:
     """Promote a freshly rewritten layout: replace the live directory
     at `path` with `new_path` (two local-FS renames, then drop the
@@ -104,12 +119,223 @@ def swap_layout(path: str, new_path: str) -> None:
     On an object store this whole step is a table-format commit
     (Iceberg/Delta snapshot swap), which removes both caveats — the
     write-compacted-then-swap protocol is the same."""
+    path, new_path = _local(path), _local(new_path)
     old = path.rstrip("/") + ".old"
     if os.path.exists(old):
         shutil.rmtree(old)
     os.rename(path, old)
     os.rename(new_path, path)
     shutil.rmtree(old)
+
+
+# ---------------------------------------------------------------------------
+# Incremental-index lifecycle: an LSM contract. Appends are per-batch
+# parquet appends, deletes are tombstone files beside the index, every
+# probe reads through `read_index` (tombstones anti-joined out), and
+# compaction rewrites the live rows sorted on the probe key, swaps the
+# layout in and drains the tombstones. Appends, deletes and
+# compaction share one maintenance timeline (`swap_layout`).
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class IndexSpec:
+    """How one doc-keyed index compacts: `sort_cols` is the probe key
+    the rewrite range-shards and sorts on (tight per-file min/max
+    stats); `value_col`, when set, must hold ONE value per `key` — a
+    re-append of changed content without a prior tombstone leaves
+    two, and compaction cannot tell which is current."""
+
+    sort_cols: tuple[str, ...]
+    value_col: str | None = None
+    key: tuple[str, ...] = ("doc_id",)
+
+
+def tombstone_dir(path: str) -> str:
+    """`<path>.tombstones`: the index's pending deletes, a parquet
+    directory of one id column. The presence check (`os.path.isdir`)
+    and the compaction drain (`shutil.rmtree`) are driver-local
+    filesystem operations; on a remote path (s3a://, hdfs://) the
+    isdir probe would read False and pending deletes would keep
+    serving SILENTLY, so refuse loudly. Remote support means
+    resolving through the Hadoop FileSystem API instead."""
+    scheme = path.split("://", 1)[0] if "://" in path else ""
+    if scheme not in ("", "file"):
+        raise ValueError(
+            "index tombstones (sources.layout) require a driver-local "
+            f"index path (got scheme {scheme!r} in {path!r}); remote "
+            "filesystems would silently skip pending deletes"
+        )
+    return path.rstrip("/") + ".tombstones"
+
+
+def delete_ids(spark, path: str, ids, id_col: str = "doc_id") -> None:
+    """Logical deletion: append `ids` (a DataFrame with `id_col`, or
+    an iterable of ints) as tombstones beside the index. O(deletes) —
+    no rewrite on the delete path. A tombstone suppresses EVERY row
+    of its id in `read_index` until the compaction that applies it,
+    so re-appending a deleted id only takes effect after that
+    compaction."""
+    df = (
+        ids
+        if isinstance(ids, DataFrame)
+        else spark.createDataFrame(
+            [(int(v),) for v in ids], f"{id_col} long"
+        )
+    )
+    df.select(id_col).write.mode("append").parquet(tombstone_dir(path))
+
+
+def read_index(spark, path: str, id_col: str = "doc_id") -> DataFrame:
+    """The compaction-safe, tombstone-aware index read: a fresh file
+    listing of `path` with any pending tombstones anti-joined out on
+    `id_col`. The tombstone set drains at every compaction, so the
+    broadcast anti-join stays bounded by the compaction cadence.
+
+    Resolve it per epoch: compaction's swap DELETES the old files,
+    and a long-lived static DataFrame (the static side of a
+    stream-static probe join resolved once at stream start) pins the
+    old listing — its next micro-batch would read files that no
+    longer exist."""
+    rows = spark.read.parquet(path)
+    tomb = tombstone_dir(path)
+    if not os.path.isdir(_local(tomb)):
+        return rows
+    tombs = spark.read.parquet(tomb)
+    # one id column; alias whatever the writer named it
+    tombs = tombs.select(F.col(tombs.columns[0]).alias(id_col))
+    return rows.join(F.broadcast(tombs), id_col, "left_anti")
+
+
+def conflict_guard(
+    key: tuple[str, ...], value_col: str, lo: Column, hi: Column
+) -> Column:
+    """`lo` where the key's smallest and largest `value_col` agree,
+    else a named error: the key's content was re-appended CHANGED
+    without a prior tombstone. `lo`/`hi` are the key's min and max —
+    window functions in compaction, aggregates in the admission
+    probes."""
+    where = []
+    for k in key:
+        where += [F.lit(f" {'frame' if k == 'f' else k} "), F.col(k)]
+    return F.when(lo == hi, lo).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("incremental index:"),
+                *[c.cast("string") for c in where],
+                F.lit(
+                    f" has conflicting {value_col} values — it was "
+                    "re-appended with changed content without a prior "
+                    "tombstone; delete_ids it, compact_index, then "
+                    "re-append"
+                ),
+            )
+        )
+    )
+
+
+def one_value_per_key(
+    rows: DataFrame, key: tuple[str, ...], value_col: str
+) -> DataFrame:
+    """(*key, value_col), one row per key: replayed rows (the same
+    value) collapse, conflicting values raise `conflict_guard`."""
+    return (
+        rows.groupBy(*key)
+        .agg(F.min(value_col).alias("_lo"), F.max(value_col).alias("_hi"))
+        .select(
+            *key,
+            conflict_guard(key, value_col, F.col("_lo"), F.col("_hi"))
+            .alias(value_col),
+        )
+    )
+
+
+T = TypeVar("T")
+
+
+def rewrite_index(path: str, write: Callable[[str], T]) -> T:
+    """The compaction protocol's tail: `write` the live rows to a
+    sibling directory, swap it in (`swap_layout`'s contract) and
+    drain the now physically applied tombstones."""
+    tmp = path.rstrip("/") + ".compacting"
+    out = write(tmp)
+    swap_layout(path, tmp)
+    shutil.rmtree(_local(tombstone_dir(path)), ignore_errors=True)
+    return out
+
+
+def write_index(
+    rows: DataFrame, path: str, spec: IndexSpec, mode: str = "append"
+) -> None:
+    """Persist (`mode="overwrite"`) or append index rows, sorted
+    within each file on the probe key for footer-stat pruning."""
+    rows.sortWithinPartitions(*spec.sort_cols).write.mode(mode).parquet(
+        path
+    )
+
+
+def compact_index(
+    spark, path: str, spec: IndexSpec, target_rows_per_file: int = 4_000_000
+) -> int:
+    """Maintenance pass for a doc-keyed index: every append adds one
+    small file, so a long-running ingest degrades the probe into
+    thousands of file opens. Reads the live rows (`read_index`),
+    drops exact duplicate rows (an at-least-once replay re-appends
+    bit-identical rows), raises `conflict_guard` where `spec.value_col`
+    disagrees within a key, rewrites range-sharded and sorted on
+    `spec.sort_cols` (`compact_sorted`), swaps the layout in and
+    drains the tombstones. Returns the file count written. Probe
+    results are layout-invariant (tests/test_layout_compaction.py)."""
+    live = read_index(spark, path, spec.key[0]).dropDuplicates()
+    v = spec.value_col
+    if v is not None:
+        w = Window.partitionBy(*spec.key)
+        live = live.withColumn(
+            v,
+            conflict_guard(spec.key, v, F.min(v).over(w), F.max(v).over(w)),
+        )
+    return rewrite_index(
+        path,
+        lambda tmp: compact_sorted(
+            live, tmp, list(spec.sort_cols), target_rows_per_file
+        ),
+    )
+
+
+HAMMING_BAND_BITS = 14  # 4 x 14-bit bands over a 56-bit hash
+HAMMING_N_BANDS = 4
+
+
+def hamming_bands(hashes: DataFrame, hash_col: str, *keep: str) -> DataFrame:
+    """(*keep, hash_col, b, bkey) band rows of a perceptual-hash
+    frame (image dHash, audio energy fingerprint, per-frame video
+    dHash): a pair collides iff SOME band matches, so two hashes
+    within Hamming distance < HAMMING_N_BANDS always collide. One
+    row-local explode; the hash rides along so probes verify the
+    Hamming distance without a second index read."""
+    mask = (1 << HAMMING_BAND_BITS) - 1
+    return hashes.select(
+        *keep,
+        hash_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("b"),
+                        F.shiftright(F.col(hash_col), HAMMING_BAND_BITS * b)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("bkey"),
+                    )
+                    for b in range(HAMMING_N_BANDS)
+                ]
+            )
+        ).alias("bb"),
+    ).select(
+        *keep,
+        hash_col,
+        F.col("bb.b").alias("b"),
+        F.col("bb.bkey").alias("bkey"),
+    )
 
 
 def write_sorted_layout(

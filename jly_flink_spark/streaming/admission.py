@@ -49,9 +49,9 @@ CURRENT batch's doc_ids out of the state it reads, so a foreachBatch
 epoch replayed after a mid-epoch failure sees exactly the pre-epoch
 state and reproduces its decisions bit-for-bit; the replayed appends
 duplicate rows physically, which the probes ignore (distinct-based)
-and the next compaction drains — the LSM contract shared by all
-three indexes (`compact_lsh_index` / `compact_winnow_index` /
-`compact_dhash_index`).
+and the next compaction drains — the LSM contract every index shares
+through `sources.layout` (`delete_ids` / `read_index` /
+`compact_index` with each index's spec).
 
 Scale shape at 100 TB ingest: per micro-batch, every probe is an
 equijoin of the (small) batch against an index pruned by sorted-file
@@ -82,6 +82,14 @@ from ..operators import multimodal as mm
 from ..operators.bloom import bloom_probe_expr, build_bloom_words
 from ..operators.classifier import QUALITY_MIN_P, with_quality_p
 from ..operators.text import fingerprint, tokens, trigram_shingles
+from ..sources.layout import (
+    compact_index,
+    compact_sorted,
+    hamming_bands,
+    one_value_per_key,
+    read_index,
+    swap_layout,
+)
 
 # admission thresholds — shared with the batch pipeline
 MIN_JACCARD = 0.8
@@ -234,13 +242,16 @@ def init_admission_state(
 
 
 def load_state(spark, paths: AdmissionPaths) -> AdmissionState:
-    """Read the persisted state, tombstone-aware where the index
-    supports deletion. Missing index dirs (nothing appended yet)
-    load as empty frames."""
+    """Read the persisted state; every index reads through
+    `read_index`, so a pending tombstone stops blocking arrivals
+    before the compaction that applies it. Missing index dirs
+    (nothing appended yet) load as empty frames."""
     s = empty_state(spark)
 
-    def _read(path, fallback):
+    def _read(path, fallback, index=False):
         try:
+            if index:
+                return read_index(spark, path)
             return spark.read.parquet(path)
         except Exception:  # noqa: BLE001 — fresh path, no files yet
             return fallback
@@ -248,11 +259,11 @@ def load_state(spark, paths: AdmissionPaths) -> AdmissionState:
     ledger = _read(paths.ledger, s.ledger)
     if "kn_y" not in ledger.columns:  # pre-round-11 ledger layout
         ledger = ledger.withColumn("kn_y", F.lit(None).cast("bigint"))
-    lsh = _read(paths.lsh, s.lsh_bands)
-    win = _read(paths.winnow, s.winnow_fps)
-    dh = _read(paths.dhash, s.dhash_bands)
-    au = _read(paths.audio, s.audio_bands)
-    vi = _read(paths.video, s.video_bands)
+    lsh = _read(paths.lsh, s.lsh_bands, index=True)
+    win = _read(paths.winnow, s.winnow_fps, index=True)
+    dh = _read(paths.dhash, s.dhash_bands, index=True)
+    au = _read(paths.audio, s.audio_bands, index=True)
+    vi = _read(paths.video, s.video_bands, index=True)
     kn = _read(paths.kn_cost, s.kn_cost)
     bench = stage(_read(paths.bench, s.bench_shingles), eager=True)
     words = build_bloom_words(bench)
@@ -273,7 +284,7 @@ def _audio_tier_losers(kept3: DataFrame, au_idx: DataFrame) -> DataFrame:
         .filter(F.col("afp").isNotNull())
         .transform(stage)
     )
-    bands = mm.audio_bands(hashes)
+    bands = hamming_bands(hashes, "afp", "doc_id")
     # Band-bucket cap over batch ∪ index rows (the registered audio
     # query's PERCEPTUAL_MAX_BAND_BUCKET rule, ported from the video
     # tier round 12): 14-bit band keys saturate with corpus size.
@@ -314,32 +325,13 @@ def _audio_tier_losers(kept3: DataFrame, au_idx: DataFrame) -> DataFrame:
     # One afp per doc over batch ∪ index rows BEFORE the verify
     # joins: replayed index rows (same afp) collapse silently;
     # conflicting afp — content re-appended without a tombstone —
-    # raises the same named cause as compact_audio_index.
-    a_all = hashes.select("doc_id", "afp").unionAll(
-        au_idx.select("doc_id", "afp")
-    )
-    fp = (
-        a_all.groupBy("doc_id")
-        .agg(F.min("afp").alias("a_min"), F.max("afp").alias("a_max"))
-        .select(
-            "doc_id",
-            F.when(F.col("a_min") == F.col("a_max"), F.col("a_min"))
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("admission audio probe: doc_id "),
-                        F.col("doc_id").cast("string"),
-                        F.lit(
-                            " has conflicting afp values — "
-                            "re-appended with changed samples "
-                            "without a prior tombstone; delete, "
-                            "compact, re-append"
-                        ),
-                    )
-                ).cast("bigint")
-            )
-            .alias("afp"),
-        )
+    # raises the compaction guard's named cause.
+    fp = one_value_per_key(
+        hashes.select("doc_id", "afp").unionAll(
+            au_idx.select("doc_id", "afp")
+        ),
+        mm.AUDIO_INDEX.key,
+        "afp",
     )
     ham = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
     return (
@@ -373,7 +365,7 @@ def _video_tier_losers(kept3: DataFrame, vi_idx: DataFrame) -> DataFrame:
     corpus. doc_b of each verified (a < b) pair drops."""
     media = mm.documents_as_video_media(kept3)
     hashes = mm.video_dhash_frames(media).transform(stage)
-    bands = mm.video_bands(hashes)
+    bands = hamming_bands(hashes, "vh", "doc_id", "f")
     # Band-bucket cap over batch ∪ index rows (the registered video
     # query's PERCEPTUAL_MAX_BAND_BUCKET rule): 14-bit band keys
     # saturate with corpus size; with an empty index this is exactly
@@ -421,41 +413,17 @@ def _video_tier_losers(kept3: DataFrame, vi_idx: DataFrame) -> DataFrame:
     # aligned-slot expression instead of a |cand|·16-row join):
     # batch side from this batch's hashes, index side from the
     # (distinct) index band rows.
-    h_all = hashes.select("doc_id", "f", "vh").unionAll(
-        vi_idx.select("doc_id", "f", "vh")
-    )
     # One vh per (doc_id, f) BEFORE map_from_entries: replayed rows
     # (same vh) collapse silently; CONFLICTING vh under one frame —
-    # content re-appended without a tombstone — raises with the same
-    # named cause as compact_video_index instead of Spark's opaque
-    # "duplicate map key" error.
-    per_frame = (
-        h_all.groupBy("doc_id", "f")
-        .agg(F.min("vh").alias("vh_min"), F.max("vh").alias("vh_max"))
-        .select(
-            "doc_id",
-            "f",
-            F.when(
-                F.col("vh_min") == F.col("vh_max"), F.col("vh_min")
-            )
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("admission video probe: doc_id "),
-                        F.col("doc_id").cast("string"),
-                        F.lit(" frame "),
-                        F.col("f").cast("string"),
-                        F.lit(
-                            " has conflicting vh values — "
-                            "re-appended with changed frames "
-                            "without a prior tombstone; delete, "
-                            "compact, re-append"
-                        ),
-                    )
-                ).cast("bigint")
-            )
-            .alias("vh"),
-        )
+    # content re-appended without a tombstone — raises the compaction
+    # guard's named cause instead of Spark's opaque "duplicate map
+    # key" error.
+    per_frame = one_value_per_key(
+        hashes.select("doc_id", "f", "vh").unionAll(
+            vi_idx.select("doc_id", "f", "vh")
+        ),
+        mm.VIDEO_INDEX.key,
+        "vh",
     )
     fmap = per_frame.groupBy("doc_id").agg(
         F.map_from_entries(F.collect_list(F.struct("f", "vh"))).alias(
@@ -685,7 +653,7 @@ def admission_decisions(
         hashes = mm.pixel_dhash_frame(media).filter(
             F.col("dhash").isNotNull()
         )
-        bands = mm.dhash_bands(hashes).transform(stage)
+        bands = hamming_bands(hashes, "dhash", "doc_id").transform(stage)
         x = bands.select(
             F.col("doc_id").alias("doc_a"),
             F.col("dhash").alias("ha"),
@@ -949,19 +917,21 @@ def admit_batch(
 
 
 def compact_admission_state(spark, paths: AdmissionPaths) -> None:
-    """Maintenance pass over all four artifacts — the shared LSM
-    compaction contract (serialize with appends on one timeline).
+    """Maintenance pass over the ledger and every index — the shared
+    LSM compaction contract (serialize with appends on one timeline).
     The ledger dedups whole rows: replays append bit-identical rows,
     and one row per kept1 doc is the invariant."""
-    from ..sources.layout import compact_sorted, swap_layout
-
-    dedup.compact_lsh_index(spark, paths.lsh)
-    dedup.compact_winnow_index(spark, paths.winnow)
-    mm.compact_dhash_index(spark, paths.dhash)
-    if os.path.exists(paths.audio):
-        mm.compact_audio_index(spark, paths.audio)
-    if os.path.exists(paths.video):
-        mm.compact_video_index(spark, paths.video)
+    for path, spec in (
+        (paths.lsh, dedup.LSH_INDEX),
+        (paths.winnow, dedup.WINNOW_INDEX),
+        (paths.dhash, mm.DHASH_INDEX),
+        (paths.audio, mm.AUDIO_INDEX),
+        (paths.video, mm.VIDEO_INDEX),
+    ):
+        # an index no batch has appended to yet (a fresh state, the
+        # image gate off, the v3 policy's audio/video) has no files
+        if os.path.exists(path):
+            compact_index(spark, path, spec)
     tmp = paths.ledger.rstrip("/") + ".compacting"
     compact_sorted(
         spark.read.parquet(paths.ledger).dropDuplicates(["doc_id"]),

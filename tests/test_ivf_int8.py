@@ -156,7 +156,7 @@ def test_layout_drops_zero_norm_codes(spark, served):
 
 
 class TestIvfDeletes:
-    """Tombstoned deletion (`delete_from_ivf`): serving excludes
+    """Tombstoned deletion (`delete_ids(..., "vec_id")`): serving excludes
     deleted ids immediately (O(deletes) write, no partition rewrite),
     compaction applies deletes physically and drains the tombstone
     set, and a pending tombstone suppresses even a re-appended id
@@ -180,17 +180,14 @@ class TestIvfDeletes:
         }
 
     def test_delete_then_compact(self, spark, tmp_path):
-        from jly_flink_spark.operators.similarity import (
-            _tombstone_dir,
-            compact_ivf_layout,
-            delete_from_ivf,
-        )
+        from jly_flink_spark.operators.similarity import compact_ivf_layout
+        from jly_flink_spark.sources.layout import delete_ids, tombstone_dir
 
         emb, cents, path = self._fresh(spark, tmp_path)
         before = self._topk(spark, emb, cents, path)
         # delete a candidate that actually appears in the results
         victim = next(c for (q, c) in before if c not in QIDS)
-        delete_from_ivf(spark, path, [victim])
+        delete_ids(spark, path, [victim], "vec_id")
 
         after = self._topk(spark, emb, cents, path)
         assert all(c != victim for (_, c) in after)
@@ -204,9 +201,9 @@ class TestIvfDeletes:
 
         import os as _os
 
-        assert _os.path.isdir(_tombstone_dir(path))
+        assert _os.path.isdir(tombstone_dir(path))
         compact_ivf_layout(spark, path)
-        assert not _os.path.isdir(_tombstone_dir(path))
+        assert not _os.path.isdir(tombstone_dir(path))
         # physically gone, serving unchanged vs the tombstoned view
         layout_ids = {
             r["vec_id"] for r in spark.read.parquet(path).collect()
@@ -218,13 +215,13 @@ class TestIvfDeletes:
         from jly_flink_spark.operators.similarity import (
             append_to_ivf_int8,
             compact_ivf_layout,
-            delete_from_ivf,
         )
+        from jly_flink_spark.sources.layout import delete_ids
 
         emb, cents, path = self._fresh(spark, tmp_path)
         before = self._topk(spark, emb, cents, path)
         victim = next(c for (q, c) in before if c not in QIDS)
-        delete_from_ivf(spark, path, [victim])
+        delete_ids(spark, path, [victim], "vec_id")
         # re-append the same id while its tombstone is pending:
         # still suppressed (tombstones win until compaction)
         append_to_ivf_int8(
@@ -243,10 +240,10 @@ class TestIvfDeletes:
 
     def test_float_tier_shares_tombstones(self, spark, tmp_path):
         from jly_flink_spark.operators.similarity import (
-            delete_from_ivf,
             persist_ivf_corpus,
             serve_ann_topk,
         )
+        from jly_flink_spark.sources.layout import delete_ids
 
         emb = load_table(spark, SF_DIR, "embeddings")
         cents = build_ivf_centroids(emb, n_list=N_LIST, refine=False)
@@ -260,7 +257,7 @@ class TestIvfDeletes:
             ).collect()
         }
         victim = next(c for c in got if c not in QIDS)
-        delete_from_ivf(spark, path, [victim])
+        delete_ids(spark, path, [victim], "vec_id")
         got2 = {
             r["cand_id"]
             for r in serve_ann_topk(
@@ -277,10 +274,10 @@ class TestIvfDeletes:
         still prunes on list_id and the tombstone side joins as a
         BROADCAST anti-join (model-state, never a shuffle of the
         pruned corpus)."""
-        from jly_flink_spark.operators.similarity import delete_from_ivf
+        from jly_flink_spark.sources.layout import delete_ids
 
         emb, cents, path = self._fresh(spark, tmp_path)
-        delete_from_ivf(spark, path, [1, 2])
+        delete_ids(spark, path, [1, 2], "vec_id")
         queries = emb.filter(F.col("vec_id").isin(QIDS))
         plan = _plan(
             serve_ann_topk_int8(
@@ -300,11 +297,11 @@ def test_tombstones_refuse_remote_layout_paths():
     non-local scheme instead."""
     import pytest
 
-    from jly_flink_spark.operators.similarity import _tombstone_dir
+    from jly_flink_spark.sources.layout import tombstone_dir
 
     for bad in ("s3a://bucket/ivf_layout", "hdfs://nn:8020/ivf"):
         with pytest.raises(ValueError, match="driver-local"):
-            _tombstone_dir(bad)
+            tombstone_dir(bad)
     # local forms still fine
-    assert _tombstone_dir("/tmp/x").endswith(".tombstones")
-    assert _tombstone_dir("file:///tmp/x").endswith(".tombstones")
+    assert tombstone_dir("/tmp/x").endswith(".tombstones")
+    assert tombstone_dir("file:///tmp/x").endswith(".tombstones")

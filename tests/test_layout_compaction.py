@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from jly_flink_spark.io import load_table
 from jly_flink_spark.operators import dedup, similarity
+from jly_flink_spark.sources.layout import compact_index
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,8 +59,8 @@ class TestLshIndexCompaction:
         want = probe_set()
         assert want  # the probe test must test something
 
-        n_files = dedup.compact_lsh_index(
-            spark, path, target_rows_per_file=10_000_000
+        n_files = compact_index(
+            spark, path, dedup.LSH_INDEX, target_rows_per_file=10_000_000
         )
         assert n_files == 1
         assert len(_parquet_files(path)) == 1 < n_before_files
@@ -75,7 +76,7 @@ class TestLshIndexCompaction:
         micro-batches — candidates across the swap equal the batch-
         mode probe of all arrivals. (A static DataFrame resolved once
         at stream start would instead pin the deleted pre-swap file
-        listing; the docstring of compact_lsh_index spells this
+        listing; the docstring of read_index spells this
         out.)"""
         import glob as _glob
         import shutil
@@ -108,8 +109,9 @@ class TestLshIndexCompaction:
                 ).collect()
             )
             if not state["compacted"]:
-                dedup.compact_lsh_index(
-                    spark, path, target_rows_per_file=10_000_000
+                compact_index(
+                    spark, path, dedup.LSH_INDEX,
+                    target_rows_per_file=10_000_000,
                 )
                 state["compacted"] = True
 
@@ -143,7 +145,9 @@ class TestLshIndexCompaction:
         band_key-ordered (that is what makes per-file min/max prune
         the probe join's scan)."""
         _, path = fragmented_index
-        dedup.compact_lsh_index(spark, path, target_rows_per_file=10_000_000)
+        compact_index(
+            spark, path, dedup.LSH_INDEX, target_rows_per_file=10_000_000
+        )
         for f in _parquet_files(path):
             keys = [
                 r["band_key"]

@@ -1203,11 +1203,17 @@ class TestAudioTier:
         h = multimodal.audio_fingerprint_frame(
             multimodal.documents_as_audio_media(df)
         )
-        rows = multimodal.audio_bands(h).collect()
-        assert len(rows) == multimodal.AUDIO_N_BANDS
+        from jly_flink_spark.sources.layout import (
+            HAMMING_BAND_BITS,
+            HAMMING_N_BANDS,
+            hamming_bands,
+        )
+
+        rows = hamming_bands(h, "afp", "doc_id").collect()
+        assert len(rows) == HAMMING_N_BANDS
         rebuilt = 0
         for r in rows:
-            rebuilt |= r["bkey"] << (multimodal.AUDIO_BAND_BITS * r["b"])
+            rebuilt |= r["bkey"] << (HAMMING_BAND_BITS * r["b"])
         assert rebuilt == rows[0]["afp"]
 
 
@@ -1968,7 +1974,7 @@ class TestVideoTier:
 
     def test_video_bands_are_frame_aligned(self, spark):
         """The banding key carries the frame position: band rows per
-        clip = VIDEO_FRAMES x VIDEO_N_BANDS, and reassembling any
+        clip = VIDEO_FRAMES x HAMMING_N_BANDS, and reassembling any
         frame's band keys recovers that frame's hash."""
         df = spark.createDataFrame(
             [(1, "a few words make a tiny document here")],
@@ -1977,15 +1983,21 @@ class TestVideoTier:
         h = multimodal.video_dhash_frames(
             multimodal.documents_as_video_media(df)
         )
-        rows = multimodal.video_bands(h).collect()
+        from jly_flink_spark.sources.layout import (
+            HAMMING_BAND_BITS,
+            HAMMING_N_BANDS,
+            hamming_bands,
+        )
+
+        rows = hamming_bands(h, "vh", "doc_id", "f").collect()
         assert len(rows) == (
-            multimodal.VIDEO_FRAMES * multimodal.VIDEO_N_BANDS
+            multimodal.VIDEO_FRAMES * HAMMING_N_BANDS
         )
         by_f = {}
         for r in rows:
             by_f.setdefault(r["f"], [0, None])
             by_f[r["f"]][0] |= r["bkey"] << (
-                multimodal.VIDEO_BAND_BITS * r["b"]
+                HAMMING_BAND_BITS * r["b"]
             )
             by_f[r["f"]][1] = r["vh"]
         for rebuilt, vh in by_f.values():

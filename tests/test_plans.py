@@ -810,6 +810,13 @@ class TestJobBudget:
         exchange) and serving it: 14 jobs."""
         assert self._forced_build_jobs(spark, "ann_cosine_ivf_int8") <= 14
 
+    def test_ivf_pq_build_job_budget(self, spark):
+        """Building the raw IVF-PQ layout and serving it: 21 jobs. The
+        list is assigned ahead of the Lloyd loop and rides through it
+        with the code, so the layout write joins nothing back onto the
+        corpus; with that join it took 22."""
+        assert self._forced_build_jobs(spark, "ann_ivf_pq_adc") <= 21
+
     def test_ivf_pq_residual_build_job_budget(self, spark):
         """Building the residual IVF-PQ layout and serving it: 22 jobs.
         The list and the full code ride through the residual Lloyd

@@ -6,14 +6,17 @@ north-star set: corpus-level graph analytics a training-data pipeline
 runs over its duplication structure (e.g. centrality of documents in
 the near-dup graph when choosing canonical representatives).
 
-Spark-first iteration pattern: a FIXED number of iterations is
-unrolled into one declarative plan — each step is a (dst, contrib)
-shuffle with map-side combine plus a slim rank join, so Catalyst sees
-the whole pipeline and AQE sizes every exchange. For variable
-iteration counts, loop in the driver over the same step function and
-a staging cut (io.stage) every few steps to bound lineage (the
-connected-components operator in `dedup.py` does exactly that); the
-fixed form here is what makes the result SQL-oracle-checkable.
+Spark-first iteration pattern: a FIXED number of iterations (PageRank
+rounds, BFS levels) is unrolled into one declarative plan in which
+each step reads only the step before it — a PageRank round is one
+(dst, contrib) shuffle with map-side combine, a BFS level one frontier
+join plus a min-depth fold — so Catalyst sees the whole pipeline, AQE
+sizes every exchange, and the plan grows linearly with the step
+count. For variable iteration counts, loop in the driver over the
+same step function and a staging cut (io.stage) every few steps to
+bound lineage (the connected-components operator in `dedup.py` does
+exactly that); the fixed form here is what makes the result
+SQL-oracle-checkable.
 
 Cross-engine determinism: ranks live entirely in INTEGER space —
 initial mass `quant // n`, per-edge contribution `rank // outdeg`,
@@ -25,7 +28,7 @@ quantized-sum pattern makes the dot-product operators engine-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..io import stage
@@ -52,65 +55,139 @@ def pagerank_fixed(
         r_t+1(v) = ((den-num)*quant) // (den*n)
                    + (num * Σ_{u→v} (r_t(u) // outdeg(u))) // den
 
-    Scale shape per iteration: one shuffle of slim (dst, contrib)
-    longs with map-side partial sums, plus a slim rank join against
-    the cached degree-annotated edge list; the edge list AND the slim
-    node projection are computed ONCE and staged, so a
-    (potentially expensive) edge or node derivation upstream never
-    re-executes per iteration — the init and every one of the
-    iterations+1 rank rebuilds read the node list from its
-    checkpoint.
+    Only edge sources need a rank inside the loop, so no iteration
+    rebuilds the node table: iteration 1 ranks every source
+    `quant // n`, iteration t ranks each source from iteration t-1's
+    per-destination sums (`edges_deg ⟕ sums` on src), and `nodes` is
+    read once, for the final `nodes ⟕ sums`. Per iteration that is
+    one slim (dst, contrib) shuffle with map-side partial sums; the
+    staged edge list's exchange by src is shared by every iteration.
+    Out-degree counts every edge; edges whose source is not a node
+    are dropped after counting, so they contribute nothing, as when
+    every round joined ranks per node.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    # slim (node) projection checkpointed once: the init and every
-    # iteration rebuild ranks from it, so a non-trivial node
-    # derivation executes one time, not iterations+1 times
-    nodes = nodes.select("node").transform(stage)
+    nodes = nodes.select("node")
     # one row; checkpointed so the scalar-N count subtree runs once,
-    # not once per crossJoin (init + 2 per unrolled iteration)
+    # not once per crossJoin (iteration 1, every base rank, the end)
     n_df = nodes.agg(F.count("*").alias("_n")).transform(stage)
     # out-degree as a WINDOW count, not a groupBy + self-join: the
     # join form read `edges` from two concurrent subtrees, so an
-    # expensive unstaged edge derivation executed twice (r14 profile
-    # on the chunk graph: twin single-task build stages). One pass,
-    # one exchange by src, identical (src, dst, deg) rows.
-    from pyspark.sql import Window as _W
-
-    edges_deg = edges.withColumn(
-        "deg", F.count("*").over(_W.partitionBy("src"))
-    ).transform(stage)
+    # expensive unstaged edge derivation executed twice. The edge
+    # list is staged once; every iteration reads the checkpoint.
+    # shuffle_hash hints (here and on the sums below) keep the joins
+    # on the shuffled data: the window's src partitioning already
+    # serves the semi join, and the sums are partitioned by node from
+    # their aggregate, so AQE's broadcast conversions would only add
+    # a broadcast job per join (20 jobs instead of 16 for the
+    # registered query at sf0.01) — and at scale would collect an
+    # O(nodes) frame on the driver.
+    edges_deg = (
+        edges.withColumn("deg", F.count("*").over(Window.partitionBy("src")))
+        .join(
+            nodes.hint("shuffle_hash"),
+            F.col("src") == F.col("node"),
+            "left_semi",
+        )
+        .transform(stage)
+    )
 
     base = F.expr(
         f"CAST({(DAMP_DEN - DAMP_NUM) * quant} AS BIGINT)"
         f" div ({DAMP_DEN} * _n)"
     )
-    ranks = nodes.crossJoin(F.broadcast(n_df)).select(
-        "node", F.expr(f"CAST({quant} AS BIGINT) div _n").alias("rank_q")
+    damped = base + F.expr(
+        f"({DAMP_NUM} * coalesce(s, CAST(0 AS BIGINT))) div {DAMP_DEN}"
     )
-    for _ in range(iterations):
-        contrib = edges_deg.join(
-            ranks, edges_deg["src"] == ranks["node"]
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr("rank_q div deg").alias("c"),
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.crossJoin(F.broadcast(n_df))
-            .join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    base
-                    + F.expr(
-                        f"({DAMP_NUM} * coalesce(s, CAST(0 AS BIGINT)))"
-                        f" div {DAMP_DEN}"
-                    )
-                ).alias("rank_q"),
+    ranked = edges_deg.crossJoin(F.broadcast(n_df)).withColumn(
+        "rank_q", F.expr(f"CAST({quant} AS BIGINT) div _n")
+    )
+    for t in range(iterations):
+        if t:
+            ranked = (
+                edges_deg.join(
+                    sums.hint("shuffle_hash"),
+                    F.col("src") == F.col("node"),
+                    "left",
+                )
+                .crossJoin(F.broadcast(n_df))
+                .withColumn("rank_q", damped)
             )
+        sums = ranked.groupBy(F.col("dst").alias("node")).agg(
+            F.sum(F.expr("rank_q div deg")).alias("s")
         )
-    return ranks
+    return (
+        nodes.join(sums.hint("shuffle_hash"), "node", "left")
+        .crossJoin(F.broadcast(n_df))
+        .select("node", damped.alias("rank_q"))
+    )
+
+
+def bfs_fixed(
+    seeds: DataFrame, edges: DataFrame, max_hops: int
+) -> DataFrame:
+    """Multi-source bounded BFS over (src) seeds and (src, dst) edges
+    → (seed_id, node, hops): each seed reaches itself at hop 0 and
+    every node within ``max_hops`` edges at its shortest hop count.
+
+    One declarative plan, one frontier step per level: the running
+    (seed_id, node, depth) frame left-joins the edge list on
+    `node = src AND depth = level - 1` (only the last level's
+    nodes expand), every joined row explodes into itself plus its
+    expansion (dst, level), and `min(depth)` per (seed_id, node)
+    folds revisits. Each level reads only the level before it, so
+    the plan grows linearly with ``max_hops`` and no subtree is
+    duplicated; per level that is one join and one aggregate
+    exchange of slim longs, bounded by seeds × nodes. Min-depth
+    folding per level equals the recursive-CTE form's per-walk
+    levels: a node first reached at level L has shortest distance L,
+    and only those nodes can reach new nodes at L + 1.
+
+    The edges are read once per level; stage them first when their
+    derivation is expensive. While the edge list is small, AQE
+    broadcasts it, and the frontier then stays in the partition the
+    seeds arrive in (a few seeds from a sort-limit: one task, no
+    per-level exchange) — or, when the seeds' exchange finishes
+    before the edges' size is known, keeps one aggregate exchange
+    per level (10 or 15 jobs for the registered query at sf0.01).
+    Either way AQE sizes the frontier by its bytes, not by the
+    out-degree fan-out of the next join, so a larger graph runs each
+    level's expansion on one task (sf0.1: 0.9 s for level 3).
+    """
+    if max_hops < 1:
+        raise ValueError("max_hops must be >= 1")
+    frame = seeds.select(
+        F.col("src").alias("seed_id"),
+        F.col("src").alias("node"),
+        F.lit(0).alias("depth"),
+    )
+    for level in range(1, max_hops + 1):
+        hop = frame.join(
+            edges.select("src", "dst"),
+            (F.col("node") == F.col("src"))
+            & (F.col("depth") == level - 1),
+            "left",
+        )
+        expansion = F.when(
+            F.col("dst").isNotNull(),
+            F.struct(F.col("dst").alias("node"), F.lit(level).alias("depth")),
+        )
+        frame = (
+            hop.select(
+                "seed_id",
+                F.inline(
+                    F.array_compact(
+                        F.array(F.struct("node", "depth"), expansion)
+                    )
+                ),
+            )
+            .groupBy("seed_id", "node")
+            .agg(F.min("depth").alias("depth"))
+        )
+    return frame.select(
+        "seed_id", "node", F.col("depth").cast("bigint").alias("hops")
+    )
 
 
 def triangle_counts(und: DataFrame) -> DataFrame:

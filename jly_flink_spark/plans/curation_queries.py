@@ -1175,11 +1175,13 @@ SELECT node AS doc_id, rank_q, rnk FROM (
     "boilerplate chunks, like the LSH bucket cap): centrality in the "
     "duplication graph, the canonical-representative signal for "
     "cluster-level dedup. Iterative dataflow unrolled declaratively: "
-    f"{PR_ITERS} rounds, each one slim (dst, contrib) shuffle with "
-    "map-side combine plus a rank join against the ONCE-computed, "
-    "staged degree-annotated edge list; ranks are exact "
-    "integer micro-units (`div`/`//`) so both engines agree "
-    "bit-for-bit. Top-20 via sort-limit, never a global window.",
+    f"{PR_ITERS} rounds over the ONCE-computed, staged "
+    "degree-annotated edge list, each ranking the edge sources from "
+    "the previous round's per-node sums and emitting one slim (dst, "
+    "contrib) shuffle with map-side combine; the node list is read "
+    "once, for the final ranks. Ranks are exact integer micro-units "
+    "(`div`/`//`) so both engines agree bit-for-bit. Top-20 via "
+    "sort-limit, never a global window.",
 )
 def graph_pagerank_dup_chunks(spark, sf_dir):
     from ..operators.graph import pagerank_fixed
@@ -1267,19 +1269,17 @@ def graph_triangles_dup_chunks(spark, sf_dir):
 BFS_MAX_HOPS = 4  # bounded frontier expansion (depth < cap per step)
 BFS_N_SEEDS = 3  # multi-source BFS from the 3 smallest edge sources
 
-# One recursive-CTE text shared verbatim by BOTH engines (modulo the
-# edge/seed relations): anchor = seeds at depth 0; step = previous
-# frontier joined to the edge list, DISTINCT per level so a dense
-# bucket-clique cannot explode into per-path rows; min(depth) per
-# reached node afterwards. Spark 4 executes this with the new
-# UnionLoop recursion operator — each level is ONE join shuffle of
-# slim (seed, node, depth) longs against the staged edge list.
+# The oracle's recursive CTE (DuckDB only; the Spark side is the
+# frontier plan `operators.graph.bfs_fixed`): anchor = seeds at depth
+# 0; step = previous level joined to the edge list, DISTINCT per level
+# so a dense bucket-clique cannot explode into per-path rows;
+# min(depth) per reached node afterwards.
 _BFS_RECURSIVE_SQL = f"""
 r(seed_id, node, depth) AS (
-  SELECT src, src, 0 FROM {{seeds}}
+  SELECT src, src, 0 FROM seeds
   UNION ALL
   SELECT DISTINCT r.seed_id, e.dst, r.depth + 1
-  FROM r JOIN {{edges}} e ON e.src = r.node
+  FROM r JOIN edges e ON e.src = r.node
   WHERE r.depth < {BFS_MAX_HOPS}
 )
 SELECT seed_id, node AS doc_id, CAST(min(depth) AS BIGINT) AS hops
@@ -1294,45 +1294,41 @@ def _bfs_oracle() -> str:
     return f"""{prefix}, seeds AS (
   SELECT DISTINCT src FROM edges ORDER BY src LIMIT {BFS_N_SEEDS}
 ),
-{_BFS_RECURSIVE_SQL.format(seeds="seeds", edges="edges")}
+{_BFS_RECURSIVE_SQL}
 """
 
 
 @register(
     "graph_bfs_reachability",
     oracle=_bfs_oracle(),
-    tags=("curation", "graph", "iterative", "recursive"),
+    tags=("curation", "graph", "iterative"),
     doc="Multi-source BFS hop distance over the duplicate-chunk graph "
-    "via a RECURSIVE CTE — Spark 4's recursive-CTE execution "
-    "(UnionLoop) driving the same bounded frontier expansion DuckDB "
-    "runs, from the 3 smallest edge sources: 'how far does "
-    "duplication influence propagate from this document' — the "
-    "radius companion to the component/PageRank views of the same "
-    f"graph. Depth bounded at {BFS_MAX_HOPS}; each level dedupes "
-    "(DISTINCT) before recursing so a dense shared-chunk clique "
-    "contributes one row per reached node per level, never one row "
-    "per PATH; min(depth) per node folds revisits afterwards. Scale "
-    "shape: the edge list is derived once and localCheckpoint-staged "
-    "(the recursion re-reads it per level without re-deriving the "
-    "chunk joins); each level is one join shuffle of slim (seed, "
-    "node, depth) longs bounded by seeds x nodes.",
+    "from the 3 smallest edge sources: 'how far does duplication "
+    "influence propagate from this document' — the radius companion "
+    "to the component/PageRank views of the same graph. Depth "
+    f"bounded at {BFS_MAX_HOPS}, unrolled as one declarative plan of "
+    "frontier levels: each level left-joins the running (seed, node, "
+    "depth) frame to the edge list on the last level's nodes, "
+    "explodes each row into itself plus its expansion and keeps "
+    "min(depth) per (seed, node), so a dense shared-chunk clique "
+    "contributes one row per reached node, never one row per PATH. "
+    "The oracle runs the same bounded expansion as a recursive CTE. "
+    "Scale shape: the edge list is derived once and "
+    "localCheckpoint-staged (every level re-reads it without "
+    "re-deriving the chunk joins); each level is one join and one "
+    "aggregate exchange of slim (seed, node, depth) longs bounded by "
+    "seeds x nodes, and the plan grows linearly with the depth cap.",
 )
 def graph_bfs_reachability(spark, sf_dir):
+    from ..operators.graph import bfs_fixed
+
     docs = load_table(spark, sf_dir, "documents")
     edges = _dup_chunk_edges(docs).transform(stage)
     seeds = (
         edges.select("src").distinct().orderBy("src").limit(BFS_N_SEEDS)
     )
-    # Re-entrancy: the frames are passed as spark.sql DataFrame
-    # parameters (Spark binds each to a uniquely-named internal
-    # view), so two concurrent builds in one SparkSession can never
-    # clobber each other's edge list — no session-global temp-view
-    # side effects (round-10 ADVICE).
-    return spark.sql(
-        "WITH RECURSIVE "
-        + _BFS_RECURSIVE_SQL.format(seeds="{seeds}", edges="{edges}"),
-        seeds=seeds,
-        edges=edges,
+    return bfs_fixed(seeds, edges, BFS_MAX_HOPS).select(
+        "seed_id", F.col("node").alias("doc_id"), "hops"
     )
 
 

@@ -638,7 +638,9 @@ def test_pagerank_fixed_matches_python_reference(spark):
         pagerank_fixed,
     )
 
-    edge_list = [(0, 1), (1, 0), (2, 0), (2, 1), (3, 0)]
+    # 9 is not a node: its edge into 0 counts toward nothing (no rank
+    # flows from a source outside the node list)
+    edge_list = [(0, 1), (1, 0), (2, 0), (2, 1), (3, 0), (9, 0)]
     node_ids = [0, 1, 2, 3, 4]  # 4 is isolated; 3 links out only
     n = len(node_ids)
     ranks = {v: PR_QUANT // n for v in node_ids}
@@ -649,7 +651,8 @@ def test_pagerank_fixed_matches_python_reference(spark):
     for _ in range(3):
         sums = {v: 0 for v in node_ids}
         for s, d in edge_list:
-            sums[d] += ranks[s] // outdeg[s]
+            if s in ranks:
+                sums[d] += ranks[s] // outdeg[s]
         ranks = {
             v: base + DAMP_NUM * sums[v] // DAMP_DEN for v in node_ids
         }
@@ -664,6 +667,58 @@ def test_pagerank_fixed_matches_python_reference(spark):
     # structural sanity: 0 (most in-links) outranks 1 outranks the
     # no-inlink nodes, which sit at the base rank
     assert got[0] > got[1] > got[2] == got[3] == got[4] == base
+
+
+# (seeds, edges) hand-built graphs for bfs_fixed, each checked against
+# DuckDB running the oracle's recursive CTE on the same rows
+_BFS_CASES = {
+    # 0→1→…→7: nodes past the hop cap stay unreached
+    "chain": ([0], [(i, i + 1) for i in range(7)]),
+    # a cycle back to the seed keeps the seed at hop 0
+    "cycle": ([0], [(0, 1), (1, 2), (2, 3), (3, 0)]),
+    "clique": ([0], [(a, b) for a in range(5) for b in range(5) if a != b]),
+    # 5 sits 3 hops from seed 0 and 1 hop from seed 10
+    "two_seeds": ([0, 10], [(0, 1), (1, 2), (2, 5), (10, 5), (5, 6)]),
+    # 20 has no out-edges: it reaches only itself
+    "no_out_edges": ([0, 20], [(0, 1), (1, 0)]),
+    "no_edges": ([3, 4], []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BFS_CASES))
+def test_bfs_fixed_matches_recursive_cte(spark, case):
+    """bfs_fixed's frontier levels must give the recursive CTE's
+    (seed, node, shortest hops) rows on graphs that exercise the hop
+    cap, revisits, several seeds, and missing edges."""
+    import duckdb
+    import pandas as pd
+
+    from jly_flink_spark.operators.graph import bfs_fixed
+    from jly_flink_spark.plans.curation_queries import (
+        _BFS_RECURSIVE_SQL,
+        BFS_MAX_HOPS,
+    )
+
+    seed_ids, edge_list = _BFS_CASES[case]
+    con = duckdb.connect()
+    seeds_pd = pd.DataFrame({"src": seed_ids}, dtype="int64")
+    edges_pd = pd.DataFrame(
+        edge_list or None, columns=["src", "dst"], dtype="int64"
+    )
+    con.register("seeds", seeds_pd)
+    con.register("edges", edges_pd)
+    want = set(
+        con.execute("WITH RECURSIVE " + _BFS_RECURSIVE_SQL).fetchall()
+    )
+
+    seeds = spark.createDataFrame([(v,) for v in seed_ids], "src long")
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    got = {
+        tuple(r)
+        for r in bfs_fixed(seeds, edges, BFS_MAX_HOPS).collect()
+    }
+    assert got == want
+    assert {(s, s, 0) for s in seed_ids} <= got
 
 
 def test_kmv_sketch_merge_equals_direct(spark, sf_dir):

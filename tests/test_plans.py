@@ -201,10 +201,12 @@ class TestShuffleBudget:
             # the cost join back + per-doc agg; the staged type
             # table cuts the five consumers' upstream lineage
             ("text_trigram_kn_perplexity", 7),
-            # recursion runs inside UnionLoop (per-level joins are
-            # loop-internal); the one visible exchange is the
-            # min-hop fold — the edge derivation is checkpointed
-            ("graph_bfs_reachability", 1),
+            # the levels are unrolled, so their exchanges are visible:
+            # seed distinct + 4 levels × (frame and edge-list sides of
+            # the frontier join + the min-depth fold); the edge list's
+            # exchange is one reused stage at run time, and the edge
+            # derivation is checkpointed
+            ("graph_bfs_reachability", 13),
             # 1-row bounds aggregate + the bucket rollup; the
             # 16-level xy2d fold is a pure per-row expression
             ("events_hilbert_locality", 2),
@@ -215,11 +217,12 @@ class TestShuffleBudget:
             # variant parse/extract are per-row; one 2-phase
             # distinct-shape rollup
             ("events_variant_props", 2),
-            # 3 unrolled iterations × (rank-join + contrib-sum
-            # shuffles) + init partitioning; the scalar-N count and
-            # the edge list are checkpointed (no per-iteration
-            # subtrees); every exchanged row is a pair of longs
-            ("graph_pagerank_dup_chunks", 9),
+            # 3 contrib-sum shuffles + the edge list by src for the
+            # 2 source-rank joins (one reused stage at run time) +
+            # the node list for the final join; the sums arrive
+            # partitioned by node, the scalar-N count and the edge
+            # list are checkpointed; every exchanged row is longs
+            ("graph_pagerank_dup_chunks", 6),
             # static plan duplicates the vocab subtree (tok groupBy ×2
             # + scalar-total SinglePartition ×2 + doc agg); AQE's
             # ReusedExchange collapses the duplicates at runtime —
@@ -784,11 +787,21 @@ class TestJobBudget:
 
     def test_pagerank_dup_chunks_job_budget(self, spark):
         """Building and forcing PageRank over the duplicate-chunk
-        graph: 21 jobs, counting the plan-time ones (the `documents`
+        graph: 16 jobs, counting the plan-time ones (the `documents`
         schema read, the eager chunk cut, the staged frames). The
         chunk-graph builder takes the caller's `documents` frame; one
-        that loaded the table again would add a schema job."""
-        assert self._forced_jobs(spark, "graph_pagerank_dup_chunks") <= 21
+        that loaded the table again would add a schema job. 21 when
+        every round rebuilt all node ranks; 20 when AQE broadcast the
+        per-node sums into each join."""
+        assert self._forced_jobs(spark, "graph_pagerank_dup_chunks") <= 16
+
+    def test_bfs_reachability_job_budget(self, spark):
+        """Building and forcing the 4-level BFS: 10 or 15 jobs — 15
+        when the seeds' exchange finishes before AQE has seen the
+        edge list's size and chosen to broadcast it, so every level
+        keeps its min-depth exchange. 41 to 43 when a recursive CTE
+        ran each level as its own round of jobs."""
+        assert self._forced_jobs(spark, "graph_bfs_reachability") <= 15
 
     def test_kmeans_job_budget(self, spark):
         """Building and forcing the K-means audit: 12 jobs (18 when
@@ -1041,17 +1054,19 @@ class TestScaleShapes:
     def test_pagerank_edges_checkpointed_once(self, spark):
         """The 3 unrolled PageRank iterations must all read the edge
         list from its localCheckpoint (`Scan ExistingRDD`) — never
-        re-derive the chunk self-join per iteration. 3 contrib joins
-        + 1 is the degree-annotation reuse ceiling."""
+        re-derive the chunk self-join per iteration — and the node
+        list is read once, for the final ranks."""
         plan = plan_of(spark, "graph_pagerank_dup_chunks", mode="simple")
-        # 3 contrib joins read the checkpointed edge list; the 4
-        # crossJoins read the checkpointed 1-row scalar-N frame; the
-        # init + 3 per-iteration rank rebuilds read the checkpointed
-        # slim node projection (a non-trivial node derivation runs
-        # once, not iterations+1 times)
+        # each iteration ranks the sources of the checkpointed edge
+        # list; the 4 crossJoins (iteration 1, two source re-ranks,
+        # the final ranks) read the checkpointed 1-row scalar-N frame
         assert plan.count("Scan ExistingRDD[src") == 3, plan
         assert plan.count("Scan ExistingRDD[_n") == 4, plan
-        assert plan.count("Scan ExistingRDD[node") == 4, plan
+        # no iteration rebuilds the node table: `documents` is
+        # scanned once, for the final nodes ⟕ sums, and no staged
+        # node projection exists to re-read
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Scan ExistingRDD[node" not in plan, plan
         # the chunk derivation (md5 over token slices) is absent from
         # the final plan entirely — it ran once inside the checkpoint
         assert "md5" not in plan, plan

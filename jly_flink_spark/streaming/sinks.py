@@ -1,18 +1,23 @@
 """Dual sinks reproducing the reference's delivery semantics
 (SURVEY.md K1–K6) on the micro-batch model.
 
-A partition-writing sink has three parts:
+An epoch-writing sink has three parts, all run on the driver:
 
-- a driver-side epoch **open**, which says whether the epoch still
-  needs writing and prepares its target;
-- an executor-side **table writer**, called as `(db_tb_name, rows)`
-  once per destination table with that table's rows of the epoch;
-- a driver-side **commit**, run after the Spark action succeeded.
+- an epoch **open**, which says whether the epoch still needs writing
+  and prepares its target;
+- a **table writer**, called as `(db_tb_name, rows)` once per
+  destination table, `rows` being that table's slice of the epoch as a
+  pyarrow Table of `SINK_COLUMNS`;
+- a **commit**, run after every table writer returned.
 
-`write_epoch` runs one `route(batch).foreachPartition(...)` that hands
-each table's rows to every open sink's table writer, so `DualSink`
-feeds both sinks from a single pass, as the reference's Flink job fans
-each record out to both sink operators (StartJob.java:94-104).
+`write_epoch` collects the epoch with one `toArrow()` — one Spark job
+with no exchange, and no Python-worker stage of the sinks' own — sorts
+and slices it by table on the driver, and hands each slice to every
+open sink's table writer.
+`DualSink` therefore feeds both sinks from a single pass, as the
+reference's Flink job fans each record out to both sink operators
+(StartJob.java:94-104), and writes at parallelism 1, as the reference
+runs both sinks (StartJob.java:39).
 
 - AdbStyleSink ≈ the buffered JDBC batch-insert sink
   (reference: sink/AdbSink.java:30-146). Here the write target is one
@@ -22,7 +27,7 @@ each record out to both sink operators (StartJob.java:94-104).
   JDBC writer with the reference's URL params
   (`rewriteBatchedStatements=true`, server-side prepared statements,
   `serverTimezone=Asia/Shanghai` — AdbSink.java:63,73-77). It is a
-  standalone foreachBatch sink, not a partition writer.
+  standalone foreachBatch sink, not an epoch writer.
 - SrStyleSink ≈ the StarRocks Stream Load sink
   (reference: sink/SrSink.java:31-203 + utils/SrStreamLoadClient.java).
   It reproduces the contract pieces that carry semantics: fixed-size
@@ -43,29 +48,21 @@ documented in SURVEY.md §7)."""
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import shutil
+import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql.types import TimestampType
 
 # Sink column order matches the ADB INSERT list (AdbSink.java:111).
 SINK_COLUMNS = ("db_tb_name", "id", "fb_no", "record_del_time", "data_json")
-
-
-def route(df: DataFrame) -> DataFrame:
-    """Group an epoch's rows by destination table (SrSink.java:93): each
-    table's rows share one hash partition, sorted on the full row so
-    chunk contents are replay-deterministic and each table's rows are
-    contiguous within its partition."""
-    return (
-        df.select(*SINK_COLUMNS)
-        .repartition("db_tb_name")
-        .sortWithinPartitions(*SINK_COLUMNS)
-    )
 
 
 @contextmanager
@@ -81,27 +78,42 @@ def _job_description(sc, text: str):
         sc.setLocalProperty("spark.job.description", prev)
 
 
-def write_epoch(batch_df: DataFrame, epoch_id: int, query_id: str, sinks) -> None:
-    """Write one epoch to partition-writing sinks in one Spark action.
+def _table_slices(rows: pa.Table):
+    """Yield `(db_tb_name, slice)` per destination table (SrSink.java:93).
 
-    Opens every sink on the driver; runs one `route(batch_df)
-    .foreachPartition` that hands each table's rows, as
-    `SINK_COLUMNS`-ordered tuples, to the table writer of every sink
-    that still needs the epoch; then commits those sinks. A failed
-    action commits nothing, so a replay writes the epoch again."""
+    The rows are sorted on the full row first — ascending, nulls first,
+    strings in binary order, as Spark's `sortWithinPartitions` orders
+    them — so chunk contents are replay-deterministic whatever the
+    input's partitioning, and each table's rows are contiguous."""
+    rows = rows.sort_by(
+        [(c, "ascending") for c in SINK_COLUMNS], null_placement="at_start"
+    )
+    runs = pc.run_end_encode(rows.column("db_tb_name").combine_chunks())
+    start = 0
+    for end, tbl in zip(runs.run_ends.to_pylist(), runs.values.to_pylist()):
+        yield tbl, rows.slice(start, end - start)
+        start = end
+
+
+def write_epoch(batch_df: DataFrame, epoch_id: int, query_id: str, sinks) -> None:
+    """Write one epoch to epoch-writing sinks from one Spark action.
+
+    Opens every sink; collects the epoch's `SINK_COLUMNS` to the driver
+    with one `toArrow()`; hands each table's sorted slice to the table
+    writer of every sink that still needs the epoch; then commits those
+    sinks. A failed collect or write commits nothing, so a replay writes
+    the epoch again.
+
+    The driver holds one epoch's archived rows. On the file source
+    `maxFilesPerTrigger` bounds an epoch; the binlog tailer has no read
+    cap, so a long outage's backlog arrives as one epoch."""
     live = [s for s in sinks if s.open(epoch_id, query_id)]
     if not live:
         return
     writers = [s.table_writer(epoch_id, query_id) for s in live]
-
-    def write_partition(rows):
-        # route sorts on db_tb_name first: a table's rows are contiguous
-        for tbl, group in itertools.groupby(map(tuple, rows), key=lambda r: r[0]):
-            group = list(group)
-            for w in writers:
-                w(tbl, group)
-
-    route(batch_df).foreachPartition(write_partition)
+    for tbl, part in _table_slices(batch_df.select(*SINK_COLUMNS).toArrow()):
+        for w in writers:
+            w(tbl, part)
     for s in live:
         s.commit(epoch_id, query_id)
 
@@ -136,6 +148,18 @@ def _partition_value(v: str) -> str:
     return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in v)
 
 
+# The ADB parquet file schema: the partition directory carries
+# db_tb_name, the file the other four columns.
+_ADB_SCHEMA = pa.schema(
+    [
+        ("id", pa.string()),
+        ("fb_no", pa.string()),
+        ("record_del_time", pa.timestamp("us", tz="UTC")),
+        ("data_json", pa.string()),
+    ]
+)
+
+
 @dataclass
 class AdbStyleSink:
     """Parquet archival keyed by epoch, standing in for the JDBC
@@ -149,10 +173,9 @@ class AdbStyleSink:
     the parquet analog of the JDBC sink's DELETE-then-INSERT (the
     reference instead relies on MySQL transaction-per-flush,
     AdbSink.java:104-127). Within an epoch, the file name is fixed per
-    table and each table lands in one partition (`route`), so a
-    retried or speculative task replaces the same file: it writes a
-    `.`-prefixed temp file (which Spark's reader skips) and renames
-    it into place."""
+    table, so writing a table again replaces the same file: the writer
+    writes a `.`-prefixed temp file (which Spark's reader skips) and
+    renames it into place."""
 
     out_dir: str
 
@@ -174,28 +197,9 @@ class AdbStyleSink:
         epoch_dir = self._epoch_dir(epoch_id)
 
         def write_table(db_tb_name, rows):
-            import uuid
-            from datetime import timezone
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            # PySpark hands timestamps over as naive datetimes in the
-            # worker's local time; astimezone reads them as such.
-            table = pa.table(
-                {
-                    "id": pa.array([r[1] for r in rows], pa.string()),
-                    "fb_no": pa.array([r[2] for r in rows], pa.string()),
-                    "record_del_time": pa.array(
-                        [
-                            None if r[3] is None else r[3].astimezone(timezone.utc)
-                            for r in rows
-                        ],
-                        pa.timestamp("us", tz="UTC"),
-                    ),
-                    "data_json": pa.array([r[4] for r in rows], pa.string()),
-                }
-            )
+            # A cast, not a rebuild: whatever string or timestamp
+            # flavour the collect returned, the file keeps one schema.
+            table = rows.select(_ADB_SCHEMA.names).cast(_ADB_SCHEMA)
             value = _partition_value(db_tb_name)
             tdir = os.path.join(epoch_dir, f"db_tb_name={value}")
             os.makedirs(tdir, exist_ok=True)
@@ -269,8 +273,8 @@ class JdbcAdbSink:
     transaction-per-flush. The epoch/query columns ride along in the
     target table, so the cleanup is a single indexed DELETE.
 
-    Spark's JDBC writer is its own action, so this sink is not a
-    partition writer and does not go into `DualSink`: it is a
+    Spark's JDBC writer is its own action, so this sink is not an
+    epoch writer and does not go into `DualSink`: it is a
     standalone foreachBatch sink (`__call__`), namespaced by
     `query_id` like `DualSink`."""
 
@@ -462,10 +466,10 @@ class SrStyleSink:
     only within a single attempt.
 
     Chunk CONTENTS are deterministic too, not just labels: rows are
-    sorted by the full row key before chunking (`route`), so a
+    sorted by the full row key before chunking (`write_epoch`), so a
     replayed epoch re-produces byte-identical chunks under the same
-    labels. Without the sort, shuffle row order could
-    differ across task retries and a replayed chunk would carry
+    labels. Without the sort, row order could differ across replays
+    with the input's partitioning, and a replayed chunk would carry
     different rows under an already-committed label — silent row
     loss masked by the 'Label Already Exists' skip."""
 
@@ -476,23 +480,27 @@ class SrStyleSink:
         return True  # dedup is per label, at the transport
 
     def table_writer(self, epoch_id: int, query_id: str = "q"):
-        # Chunk indices restart per table, so a table split across
-        # partitions would reuse labels: `route` keeps each table in
-        # one partition. Partitions still load in parallel (bag +
-        # labels make order irrelevant), where the reference runs at
-        # parallelism 1.
+        # Chunk indices restart per table: `write_epoch` hands each
+        # table's rows over as one slice, so labels never repeat.
         size = self.batch_size
         transport = self.transport
+        # the datetime a Python row of the epoch would carry, so the
+        # payload renders `record_del_time` as str() of it
+        to_datetime = TimestampType().fromInternal
 
         def write_table(db_tb_name, rows):
+            cols = [
+                rows.column(c) for c in ("id", "record_del_time", "fb_no", "data_json")
+            ]
+            cols[1] = cols[1].cast(pa.int64())
             items = [
                 {
-                    "id": r[1],
-                    "record_del_time": str(r[3]),
-                    "fb_no": r[2],
-                    "data_json": r[4],
+                    "id": i,
+                    "record_del_time": str(to_datetime(t)),
+                    "fb_no": fb,
+                    "data_json": d,
                 }
-                for r in rows
+                for i, t, fb, d in zip(*(c.to_pylist() for c in cols))
             ]
             for ci in range(0, len(items), size):
                 label = f"sink_sr_{query_id}_{epoch_id}_{db_tb_name}_{ci // size}"
@@ -520,17 +528,15 @@ class DualSink:
     AdbSink always and SrSink behind --sink_to_sr (StartJob.java:
     94-104; C3). The Flink job replicates each record to both sink
     operators in one pipelined dataflow; here one Spark action does
-    the same: `write_epoch` routes the batch once and each table's
-    rows go to both sinks' table writers in the task that holds them.
-    No frame is persisted and no second action runs, so an epoch costs
-    the route's shuffle-map job and one result job, described
-    `sink.dual epoch=<n>`. At small batch sizes that per-action
-    scheduling is most of an epoch's cost. Trade-off: write
-    parallelism per epoch is bounded by the number of distinct tables
-    in it; the reference runs both sinks at parallelism 1
-    (StartJob.java:39).
+    the same: `write_epoch` collects the batch once, as Arrow, and
+    each table's rows go to both sinks' table writers on the driver.
+    No frame is persisted, nothing is shuffled and the sinks add no
+    Python-worker stage, so an epoch costs one Spark job of one stage,
+    described `sink.dual epoch=<n>`. The writes run at parallelism 1,
+    as the reference runs both sinks (StartJob.java:39), and the
+    driver holds one epoch's archived rows (see `write_epoch`).
 
-    Both sinks must be partition writers (`open` / `table_writer` /
+    Both sinks must be epoch writers (`open` / `table_writer` /
     `commit`); `JdbcAdbSink` runs standalone instead.
 
     `query_id` is the idempotency namespace: labels are

@@ -717,8 +717,8 @@ class TestShuffleBudget:
         assert n_exchanges(plan) <= budget, plan
 
 
-def jobs_run(spark, action) -> int:
-    """Spark jobs `action()` runs, counted through a fresh job group."""
+def job_ids_run(spark, action) -> list[int]:
+    """Ids of the Spark jobs `action()` runs, through a fresh job group."""
     sc = spark.sparkContext
     group = f"job-budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -727,7 +727,12 @@ def jobs_run(spark, action) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def jobs_run(spark, action) -> int:
+    """Spark jobs `action()` runs."""
+    return len(job_ids_run(spark, action))
 
 
 class TestJobBudget:
@@ -766,11 +771,12 @@ class TestJobBudget:
         assert n == 1
 
     def test_dual_sink_call_job_budget(self, spark, tmp_path):
-        """One DualSink call: the route's shuffle-map stage, then one
-        foreachPartition job that writes each table's ADB parquet
-        file and sends its SR chunks in the same task — 2 jobs (4
-        when the routed frame was persisted and each sink ran its
-        own action)."""
+        """One DualSink call: exactly 1 job of 1 stage — the Arrow
+        collect of the scan-filter-project stage. Sorting by table and
+        both sinks' writes run on the driver. 2 jobs when a shuffle
+        grouped the rows by table and a Python-worker stage wrote
+        them; 4 when the routed frame was persisted and each sink ran
+        its own action."""
         from jly_flink_spark.streaming.sinks import (
             AdbStyleSink,
             DualSink,
@@ -783,7 +789,10 @@ class TestJobBudget:
             AdbStyleSink(str(tmp_path / "adb")),
             SrStyleSink(LocalDirTransport(str(tmp_path / "sr")), batch_size=20),
         )
-        assert jobs_run(spark, lambda: sink(df, 0)) <= 2
+        jobs = job_ids_run(spark, lambda: sink(df, 0))
+        assert len(jobs) == 1, jobs
+        info = spark.sparkContext.statusTracker().getJobInfo(jobs[0])
+        assert len(info.stageIds) == 1, info
 
     def test_pagerank_dup_chunks_job_budget(self, spark):
         """Building and forcing PageRank over the duplicate-chunk

@@ -357,7 +357,8 @@ def test_observe_guard_drop_counters(spark, stream_dirs):
     """T2 log-and-drop observability (StartJob.java:128-151): the
     archival stream exposes per-epoch guard-drop counters via
     observe(); summed over epochs they reconcile exactly with the
-    fixture's known violations and archived rows."""
+    fixture's known violations and archived rows. The DualSink's Arrow
+    collect is each epoch's only action, so the counters fire on it."""
     from jly_flink_spark.streaming.job import start_archival_stream
 
     sink = _make_sink(stream_dirs, spark)
@@ -1362,13 +1363,135 @@ def test_dual_sink_adb_parity(spark, tmp_path, tz):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
-def _adb_rows(n):
-    from datetime import datetime
+def _adb_files(root):
+    import pyarrow.parquet as pq
 
-    return [
-        ("demo_t_0", str(i), "FB0", datetime(2025, 8, 1, 0, 0, i), "{}")
-        for i in range(n)
+    return {
+        os.path.relpath(f, root): pq.read_table(f)
+        for f in glob.glob(os.path.join(root, "data", "*", "*", "*.parquet"))
+    }
+
+
+def test_sink_output_independent_of_partitioning(spark, tmp_path):
+    """The same target rows in two partition layouts give byte-identical
+    SR label files and equal ADB tables: the rows are sorted on the
+    full row before they are chunked, so a replayed epoch re-sends the
+    same chunks under the same labels whatever its partitioning. The
+    rows tie on the leading sort columns, some repeat whole, some carry
+    a NULL fb_no, and the ids are non-ASCII."""
+    import random
+
+    rows = [
+        (f"src-{i % 4}", "d", 1754000000000 + (i % 5) * 1000, f"t_{i % 3}",
+         json.dumps({"id": ["a", "é", "Z", "中", "\U0001F600"][i % 5], "n": i % 7}))
+        for i in range(60)
     ]
+    rows += rows[:6]
+    random.Random(7).shuffle(rows)
+    env = spark.createDataFrame(
+        rows,
+        "instance_name string, op string, ts_ms long, "
+        "source_table string, before string",
+    )
+    target = build_pipeline(spark, env, CFG)
+    out = {}
+    for name, layout in [("seven", target.repartition(7)), ("one", target.coalesce(1))]:
+        root = tmp_path / name
+        DualSink(
+            AdbStyleSink(str(root / "adb")),
+            SrStyleSink(LocalDirTransport(str(root / "sr")), batch_size=4),
+        )(layout, 0)
+        out[name] = (
+            _label_files(str(root / "sr")),
+            _adb_files(str(root / "adb")),
+        )
+    (sr7, adb7), (sr1, adb1) = out["seven"], out["one"]
+    assert len(sr7) == 3 * 6  # 3 tables x ceil(22 / 4) chunks
+    assert sr7 == sr1
+    assert sorted(adb7) == sorted(adb1) and len(adb7) == 3
+    for f, table in adb7.items():
+        assert table.equals(adb1[f]), f
+
+
+@pytest.mark.parametrize("tz", ["UTC", REFERENCE_TZ])
+def test_sink_formats_pinned(spark, tmp_path, tz):
+    """What both sinks write, under either session time zone: the SR
+    payload renders `record_del_time` as the `str()` of the datetime a
+    Python row of the epoch carries; a row from an instance missing
+    from the config has a JSON null fb_no in SR and a NULL in the
+    parquet; the ADB file schema is string columns and a UTC
+    microsecond timestamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    ts = {"1": 1754000000123, "2": 1754000001000, "3": 1754000002500}
+    rows = [
+        ("src-0", "d", ts["1"], "t_orders", '{"id":"1"}'),
+        ("src-1", "d", ts["2"], "t_orders", '{"id":"2"}'),
+        ("src-9", "d", ts["3"], "t_orders", '{"id":"3"}'),
+    ]
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        env = spark.createDataFrame(
+            rows,
+            "instance_name string, op string, ts_ms long, "
+            "source_table string, before string",
+        )
+        DualSink(
+            AdbStyleSink(str(tmp_path / "adb")),
+            SrStyleSink(LocalDirTransport(str(tmp_path / "sr")), batch_size=10),
+        )(build_pipeline(spark, env, CFG), 0)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+    (label, blob), = _label_files(str(tmp_path / "sr")).items()
+    assert label == os.path.join("demo_t_orders", "sink_sr_q_0_demo_t_orders_0.json")
+    items = json.loads(blob)
+    assert [r["id"] for r in items] == ["1", "2", "3"]
+    for r in items:
+        assert r["record_del_time"] == str(
+            TimestampType().fromInternal(ts[r["id"]] * 1000)
+        )
+    assert [r["fb_no"] for r in items] == ["FB0", "FB1", None]
+    assert b'"fb_no": null' in blob
+
+    (path,) = glob.glob(str(tmp_path / "adb" / "data" / "*" / "*" / "*.parquet"))
+    assert pq.read_schema(path) == pa.schema(
+        [
+            ("id", pa.string()),
+            ("fb_no", pa.string()),
+            ("record_del_time", pa.timestamp("us", tz="UTC")),
+            ("data_json", pa.string()),
+        ]
+    )
+    back = pq.read_table(path)
+    assert back.column("fb_no").to_pylist() == ["FB0", "FB1", None]
+    assert back.column("record_del_time").cast(pa.int64()).to_pylist() == [
+        ts[i] * 1000 for i in "123"
+    ]
+
+
+def _adb_rows(n, name="demo_t_0"):
+    """One table's slice of an epoch, as `write_epoch` hands it to a
+    table writer."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "db_tb_name": [name] * n,
+            "id": [str(i) for i in range(n)],
+            "fb_no": ["FB0"] * n,
+            "record_del_time": pa.array(
+                [datetime(2025, 8, 1, 0, 0, i, tzinfo=timezone.utc) for i in range(n)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "data_json": ["{}"] * n,
+        }
+    )
 
 
 def test_adb_table_writer_retry_converges(tmp_path):
@@ -1406,7 +1529,7 @@ def test_adb_table_dir_escapes_like_spark(spark, tmp_path):
     name = "demo_a/b=c%d"
     sink = AdbStyleSink(str(tmp_path / "adb"))
     assert sink.open(1)
-    sink.table_writer(1)(name, [(name,) + r[1:] for r in _adb_rows(2)])
+    sink.table_writer(1)(name, _adb_rows(2, name))
     epoch_dir = tmp_path / "adb" / "data" / "epoch_id=1"
     assert os.listdir(epoch_dir) == ["db_tb_name=demo_a%2Fb%3Dc%25d"]
     by_spark = str(tmp_path / "by_spark")

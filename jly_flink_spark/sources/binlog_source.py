@@ -14,10 +14,10 @@ semantics — the part that makes a CDC source exactly-once-resumable
 — are fully implemented and tested.
 
 Semantics:
-- `initialOffset` = position 0 of the log; `latestOffset` advances
-  to the last COMPLETE line (a half-written line — the tailer's
-  classic race — is never consumed; it is picked up when its
-  newline lands).
+- `initialOffset` = position 0 of the log; each `read(start)`
+  advances to the last COMPLETE line, or to the last one within the
+  read budget (a half-written line — the tailer's classic race — is
+  never consumed; it is picked up when its newline lands).
 - Each micro-batch reads the byte ranges (start, end] and emits one
   row per envelope line: (value, file, pos) — `value` is the raw
   Debezium-shaped JSON the existing `parse_envelope_json` pipeline
@@ -31,13 +31,21 @@ Semantics:
 - Recovery is Structured Streaming's own checkpointed offset log:
   restart resumes from the committed position with no duplicates and
   no gaps (tested), exactly how a binlog client resumes from a
-  stored (file, pos).
+  stored (file, pos); an uncommitted batch is re-read from its
+  checkpointed (start, end) offsets, byte for byte.
 
-Scale shape: one log file is one sequential reader per micro-batch
-(binlog order is total within a server, as in the reference);
-many-instance deployments run one source per `instanceName` exactly
-like the reference's per-instance MySqlSource list (C1), and the
-rows fan out to Spark's parallelism immediately after parse.
+Scale shape: the stream reads on the driver, at parallelism 1 like
+the reference's binlog client (binlog order is total within a
+server). The reader is a `SimpleDataSourceStreamReader`: its
+`read(start)` runs in Spark's driver-side source runner when a
+trigger asks for the latest offset, and the runner ships the rows to
+the JVM as Arrow while the batch is planned, so a live epoch's job
+starts no Python worker. Each read takes at most `READ_BUDGET_BYTES`
+of log (and at least one line), so a long outage's backlog drains as
+a series of bounded epochs. Only a batch replayed after a crash
+(`readBetweenOffsets`) reads in a Python worker. Many-instance
+deployments run one source per `instanceName` exactly like the
+reference's per-instance MySqlSource list (C1).
 """
 
 from __future__ import annotations
@@ -48,8 +56,8 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
     LongType,
@@ -57,6 +65,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# Log bytes one live read takes at most: it bounds the rows the driver
+# holds for one epoch (a read always takes at least one line).
+READ_BUDGET_BYTES = 16 << 20
 
 BINLOG_SCHEMA = StructType(
     [
@@ -148,13 +160,18 @@ def _read_range(name: str, path: str, start: int, end: int):
             pos += len(line)
 
 
+def _read_ranges(ranges):
+    for r in ranges:
+        yield from _read_range(r.name, r.path, r.start, r.end)
+
+
 def _plan_ranges(
     path: str, start: dict, end: dict, pattern: str | None = None
 ) -> list[_Range]:
     """Byte ranges covering ((start.file, start.pos), (end.file,
     end.pos)] across the rotated series. Non-final file ends come
-    from the END OFFSET's recorded `ends` map (captured at
-    latestOffset time), so a checkpointed batch replays the exact
+    from the END OFFSET's recorded `ends` map (captured when the
+    offset was read), so a checkpointed batch replays the exact
     same ranges deterministically — never from a re-read of the live
     filesystem; `_complete_end` is only the fallback for offsets
     written before `ends` existed. Purged files RAISE instead of
@@ -202,7 +219,23 @@ def _plan_ranges(
     return out
 
 
-class _BinlogStreamReader(DataSourceStreamReader):
+def _budget_cut(path: str, start: int, end: int, budget: int, first: bool) -> int:
+    """End of the last complete line of [start, end) that lies within
+    `budget` bytes of `start`. When none does, the end of the first
+    line if `first` (a read always takes at least one line), else
+    `start`. `end` is a line end, so the cut never tears a line."""
+    with open(path, "rb") as f:
+        f.seek(start)
+        nl = f.read(min(budget, end - start)).rfind(b"\n")
+        if nl >= 0:
+            return start + nl + 1
+        if not first:
+            return start
+        f.seek(start)
+        return start + len(f.readline())
+
+
+class _BinlogStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, path: str, pattern: str | None = None):
         self._path = path
         self._pattern = pattern
@@ -213,7 +246,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"file": "", "pos": 0}
 
-    def latestOffset(self) -> dict:
+    def _latest(self) -> dict:
         files = _log_files(self._path, self._pattern)
         if not files:
             return {"file": "", "pos": 0}
@@ -229,13 +262,49 @@ class _BinlogStreamReader(DataSourceStreamReader):
             ends[n] = self._ends_memo[n]
         return {"file": name, "pos": _complete_end(full), "ends": ends}
 
-    def partitions(self, start: dict, end: dict):
-        return _plan_ranges(self._path, start, end, self._pattern)
+    def _ranges(
+        self, start: dict, end: dict, budget: int | None = None
+    ) -> list[_Range]:
+        """The byte ranges of (start, end], cut after the last complete
+        line within `budget` bytes of log when one is given."""
+        out: list[_Range] = []
+        for r in _plan_ranges(self._path, start, end, self._pattern):
+            if budget is not None and r.end - r.start > budget:
+                cut = _budget_cut(r.path, r.start, r.end, budget, not out)
+                if cut > r.start:
+                    out.append(_Range(r.name, r.path, r.start, cut))
+                break
+            out.append(r)
+            if budget is not None:
+                budget -= r.end - r.start
+        return out
 
-    def read(self, partition: _Range):
-        yield from _read_range(
-            partition.name, partition.path, partition.start, partition.end
-        )
+    def read(self, start: dict):
+        """The rows after `start` up to the last complete line within
+        `READ_BUDGET_BYTES`, and the offset they end at. Runs on the
+        driver when Spark asks for the latest offset; Spark caches the
+        rows and serves the batch from them. With no complete line
+        after `start`, returns `start` itself (Spark then plans no
+        batch). The rows come back as a list iterator, which Spark
+        copies."""
+        latest = self._latest()
+        ranges = self._ranges(start, latest, READ_BUDGET_BYTES)
+        if not ranges:
+            return iter(()), start
+        rows = list(_read_ranges(ranges))
+        name, pos = ranges[-1].name, ranges[-1].end
+        if (name, pos) == (latest["file"], latest["pos"]):
+            return iter(rows), latest
+        # a budget cut: `ends` names the rotated files before the one
+        # the offset points into, as a latest offset's map would
+        ends = {n: e for n, e in latest["ends"].items() if n < name}
+        return iter(rows), {"file": name, "pos": pos, "ends": ends}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """Re-read a checkpointed batch (crash replay, in a Python
+        worker): the same ranges `read` took, planned from the
+        offsets alone."""
+        return _read_ranges(self._ranges(start, end))
 
     def commit(self, end: dict) -> None:
         # Offsets live in the query's checkpoint (the binlog-client
@@ -282,7 +351,7 @@ class BinlogDataSource(DataSource):
             self._path(), self.options.get("pattern")
         )
 
-    def streamReader(self, schema):
+    def simpleStreamReader(self, schema):
         return _BinlogStreamReader(
             self._path(), self.options.get("pattern")
         )

@@ -105,8 +105,9 @@ def write_epoch(batch_df: DataFrame, epoch_id: int, query_id: str, sinks) -> Non
     the epoch again.
 
     The driver holds one epoch's archived rows. On the file source
-    `maxFilesPerTrigger` bounds an epoch; the binlog tailer has no read
-    cap, so a long outage's backlog arrives as one epoch."""
+    `maxFilesPerTrigger` bounds an epoch; the binlog tailer reads at
+    most `binlog_source.READ_BUDGET_BYTES` of log per epoch, so a long
+    outage's backlog arrives as a series of bounded epochs."""
     live = [s for s in sinks if s.open(epoch_id, query_id)]
     if not live:
         return

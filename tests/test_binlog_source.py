@@ -326,8 +326,8 @@ def test_purged_intermediate_file_raises(spark, tmp_path):
 def test_purged_final_file_raises(spark, tmp_path):
     """Same crash-replay window as above, but retention removed the
     batch's FINAL file (the one the end offset points into). The end
-    file is not named in `ends` (it was still live at latestOffset
-    time), so the purge guard must cover it explicitly — otherwise
+    file is not named in `ends` (it was still live when the offset
+    was read), so the purge guard must cover it explicitly — otherwise
     the replay silently omits (0..end_pos] of that file and resumes
     past the gap."""
     import shutil
@@ -363,6 +363,74 @@ def test_purged_final_file_raises(spark, tmp_path):
     os.remove(str(d / "binlog.000002"))
     with pytest.raises(Exception, match="purged|no longer exist"):
         run()
+
+
+def test_live_epochs_served_from_prefetch(spark, tmp_path):
+    """A live epoch is served from the rows `read` prefetched on the
+    driver: the replay reader, `readBetweenOffsets` (which runs in a
+    Python worker), is never called. A crash-replay epoch calls it
+    once and yields the rows the live epoch had."""
+    from jly_flink_spark.sources.binlog_source import _BinlogStreamReader
+
+    marker = tmp_path / "replays"
+
+    class _MarkedReader(_BinlogStreamReader):
+        def __init__(self, path, marker):
+            super().__init__(path)
+            self._marker = marker
+
+        def readBetweenOffsets(self, start, end):
+            with open(self._marker, "a") as f:
+                f.write(f"{start} {end}\n")
+            return super().readBetweenOffsets(start, end)
+
+    class _MarkedSource(BinlogDataSource):
+        @classmethod
+        def name(cls):
+            return "jly_binlog_marked"
+
+        def simpleStreamReader(self, schema):
+            return _MarkedReader(self._path(), self.options["marker"])
+
+    spark.dataSource.register(_MarkedSource)
+    log = str(tmp_path / "binlog.jsonl")
+    ckpt = str(tmp_path / "ckpt")
+    seen: list[tuple[int, list]] = []
+
+    def start():
+        return (
+            spark.readStream.format("jly_binlog_marked")
+            .option("path", log)
+            .option("marker", str(marker))
+            .load()
+            .writeStream.foreachBatch(
+                lambda df, eid: seen.append((eid, sorted(df.collect())))
+            )
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    _append(log, [_env_line(i) for i in range(3)])
+    q = start()
+    try:
+        q.processAllAvailable()
+        _append(log, [_env_line(i) for i in range(3, 5)])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert [(e, len(r)) for e, r in seen] == [(0, 3), (1, 2)]
+    assert not marker.exists()
+
+    # crash between the sink and the commit: epoch 1 replays
+    for f in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", f))
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert seen[2:] == [seen[1]]
+    assert len(marker.read_text().splitlines()) == 1
 
 
 def test_plan_ranges_missing_end_file_raises(tmp_path):
@@ -491,66 +559,72 @@ def test_tailer_schedule_property(ops):
     no gap, no torn line), and every batch re-planned from its
     checkpointed (start, end) offsets AFTER the schedule finished —
     i.e. after arbitrary later writes and rotations — replays
-    byte-identically."""
+    byte-identically. Polls are live reads, `read(prev)`; the replay
+    is `readBetweenOffsets(start, end)`. Each schedule runs with the
+    default read budget and with an 8-byte one, under which every
+    poll takes one line and stops mid-file."""
+    import copy
     import tempfile
+    from unittest import mock
 
+    from jly_flink_spark.sources import binlog_source
     from jly_flink_spark.sources.binlog_source import (
         _BinlogStreamReader,
     )
 
-    with tempfile.TemporaryDirectory() as root:
-        w = _WriterSim(os.path.join(root, "logs"))
-        reader = _BinlogStreamReader(w.root)
-        prev = reader.initialOffset()
-        batches = []  # (start, end, rows) per poll
-        got: list[tuple] = []
+    for budget in (binlog_source.READ_BUDGET_BYTES, 8):
+        with tempfile.TemporaryDirectory() as root, mock.patch.object(
+            binlog_source, "READ_BUDGET_BYTES", budget
+        ):
+            w = _WriterSim(os.path.join(root, "logs"))
+            reader = _BinlogStreamReader(w.root)
+            prev = reader.initialOffset()
+            batches = []  # (start, end, rows) per poll
+            got: list[tuple] = []
 
-        def poll():
-            nonlocal prev
-            end = reader.latestOffset()
-            if (end["file"], end["pos"]) == (
-                prev.get("file"),
-                prev.get("pos"),
-            ):
-                return
-            rows = []
-            for part in reader.partitions(prev, end):
-                rows.extend(reader.read(part))
-            batches.append((prev, end, rows))
-            got.extend(rows)
-            prev = end
+            def poll():
+                nonlocal prev
+                it, end = reader.read(prev)
+                # Spark copies the iterator before serving the batch
+                rows = list(copy.copy(it))
+                if end is prev:
+                    assert rows == []
+                    return False
+                batches.append((prev, end, rows))
+                got.extend(rows)
+                prev = end
+                return True
 
-        for opcode, arg in ops:
+            for opcode, arg in ops:
+                if w.pending is not None:
+                    if opcode % 2 == 0:
+                        w.complete()
+                    else:
+                        poll()
+                else:
+                    choice = opcode % 4
+                    if choice == 0:
+                        w.append(arg)
+                    elif choice == 1:
+                        w.partial(arg, opcode)
+                    elif choice == 2:
+                        w.rotate()
+                    else:
+                        poll()
             if w.pending is not None:
-                if opcode % 2 == 0:
-                    w.complete()
-                else:
-                    poll()
-            else:
-                choice = opcode % 4
-                if choice == 0:
-                    w.append(arg)
-                elif choice == 1:
-                    w.partial(arg, opcode)
-                elif choice == 2:
-                    w.rotate()
-                else:
-                    poll()
-        if w.pending is not None:
-            w.complete()
-        poll()
+                w.complete()
+            while poll():  # a budget-cut poll leaves lines for the next
+                pass
 
-        # no dup, no gap, no torn line, in order
-        assert [r[0] for r in got] == w.oracle
-        # positions are strictly increasing within each file
-        by_file: dict[str, int] = {}
-        for text, name, pos in got:
-            assert by_file.get(name, -1) < pos
-            by_file[name] = pos
-        # crash-replay determinism: every batch re-planned NOW (after
-        # later writes/rotations) replays the identical rows
-        for start, end, rows in batches:
-            replay = []
-            for part in reader.partitions(start, end):
-                replay.extend(reader.read(part))
-            assert replay == rows
+            # no dup, no gap, no torn line, in order
+            assert [r[0] for r in got] == w.oracle
+            # positions are strictly increasing within each file
+            by_file: dict[str, int] = {}
+            for text, name, pos in got:
+                assert by_file.get(name, -1) < pos
+                by_file[name] = pos
+            # crash-replay determinism: every batch re-planned NOW (after
+            # later writes/rotations) replays the identical rows
+            for start, end, rows in batches:
+                replay = list(reader.readBetweenOffsets(start, end))
+                assert replay == rows

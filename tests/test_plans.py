@@ -794,6 +794,65 @@ class TestJobBudget:
         info = spark.sparkContext.statusTracker().getJobInfo(jobs[0])
         assert len(info.stageIds) == 1, info
 
+    def test_binlog_trickle_epoch_job_budget(self, spark, tmp_path):
+        """One live trickle epoch of per-instance binlog tailers through
+        parse, guards and enrichment into DualSink: exactly 1 job of 1
+        stage. The tailers read their rows on the driver when the
+        trigger asked for the latest offset, so the stage reads them
+        from the block manager; the sink's Arrow collect is the job."""
+        import json
+
+        from jly_flink_spark.config import demo_task_config
+        from jly_flink_spark.streaming.job import streaming_pipeline_binlogs
+        from jly_flink_spark.streaming.sinks import (
+            AdbStyleSink,
+            DualSink,
+            LocalDirTransport,
+            SrStyleSink,
+        )
+
+        cfg = demo_task_config()
+        logs = {
+            s.instance_name: str(tmp_path / f"{s.instance_name}.log")
+            for s in cfg.sources
+        }
+
+        def append(first, n):
+            for k, path in enumerate(logs.values()):
+                with open(path, "a", encoding="utf-8") as f:
+                    for i in range(first, first + n):
+                        f.write(json.dumps({
+                            "op": "d",
+                            "ts_ms": 1754000000000 + i,
+                            "source": {"db": "demo", "table": "t_orders"},
+                            "before": {"id": str(i * 3 + k), "v": "1.5"},
+                        }) + "\n")
+
+        sink = DualSink(
+            AdbStyleSink(str(tmp_path / "adb")),
+            SrStyleSink(LocalDirTransport(str(tmp_path / "sr")), batch_size=20),
+        )
+        append(0, 50)
+        q = (
+            streaming_pipeline_binlogs(spark, logs, cfg)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        tracker = spark.sparkContext.statusTracker()
+        try:
+            q.processAllAvailable()  # the cold first epoch
+            before = set(tracker.getJobIdsForGroup(str(q.runId)))
+            append(50, 200)
+            q.processAllAvailable()
+            jobs = sorted(set(tracker.getJobIdsForGroup(str(q.runId))) - before)
+        finally:
+            q.stop()
+        assert any((tmp_path / "adb" / "data" / "epoch_id=1").iterdir())
+        assert len(jobs) == 1, jobs
+        info = tracker.getJobInfo(jobs[0])
+        assert len(info.stageIds) == 1, info
+
     def test_pagerank_dup_chunks_job_budget(self, spark):
         """Building and forcing PageRank over the duplicate-chunk
         graph: 16 jobs, counting the plan-time ones (the `documents`

@@ -262,21 +262,19 @@ class _BinlogStreamReader(SimpleDataSourceStreamReader):
             ends[n] = self._ends_memo[n]
         return {"file": name, "pos": _complete_end(full), "ends": ends}
 
-    def _ranges(
-        self, start: dict, end: dict, budget: int | None = None
-    ) -> list[_Range]:
+    def _budget_ranges(self, start: dict, end: dict) -> list[_Range]:
         """The byte ranges of (start, end], cut after the last complete
-        line within `budget` bytes of log when one is given."""
+        line within `READ_BUDGET_BYTES` of log."""
+        budget = READ_BUDGET_BYTES
         out: list[_Range] = []
         for r in _plan_ranges(self._path, start, end, self._pattern):
-            if budget is not None and r.end - r.start > budget:
+            if r.end - r.start > budget:
                 cut = _budget_cut(r.path, r.start, r.end, budget, not out)
                 if cut > r.start:
                     out.append(_Range(r.name, r.path, r.start, cut))
                 break
             out.append(r)
-            if budget is not None:
-                budget -= r.end - r.start
+            budget -= r.end - r.start
         return out
 
     def read(self, start: dict):
@@ -288,15 +286,14 @@ class _BinlogStreamReader(SimpleDataSourceStreamReader):
         batch). The rows come back as a list iterator, which Spark
         copies."""
         latest = self._latest()
-        ranges = self._ranges(start, latest, READ_BUDGET_BYTES)
+        ranges = self._budget_ranges(start, latest)
         if not ranges:
             return iter(()), start
         rows = list(_read_ranges(ranges))
         name, pos = ranges[-1].name, ranges[-1].end
-        if (name, pos) == (latest["file"], latest["pos"]):
-            return iter(rows), latest
-        # a budget cut: `ends` names the rotated files before the one
-        # the offset points into, as a latest offset's map would
+        # `ends` names the rotated files before the one the offset
+        # points into: all of latest's unless a budget cut stopped
+        # in an earlier file
         ends = {n: e for n, e in latest["ends"].items() if n < name}
         return iter(rows), {"file": name, "pos": pos, "ends": ends}
 
@@ -304,7 +301,9 @@ class _BinlogStreamReader(SimpleDataSourceStreamReader):
         """Re-read a checkpointed batch (crash replay, in a Python
         worker): the same ranges `read` took, planned from the
         offsets alone."""
-        return _read_ranges(self._ranges(start, end))
+        return _read_ranges(
+            _plan_ranges(self._path, start, end, self._pattern)
+        )
 
     def commit(self, end: dict) -> None:
         # Offsets live in the query's checkpoint (the binlog-client

@@ -1,17 +1,29 @@
 """Table IO: load the driver's parquet tables and register views.
 
-All analytic queries read `/root/testdata/sf*/{table}.parquet`
-(TESTDATA.md). Loading goes through `spark.read.parquet` so Catalyst
-gets parquet pushdown + column pruning for free; at 100 TB the same
-call reads a partitioned directory tree and prunes partitions.
+All analytic queries read `<sf_dir>/{table}.parquet` (TESTDATA.md).
+Loading goes through `spark.read.parquet` so Catalyst gets parquet
+pushdown + column pruning for free; at 100 TB the same call reads a
+partitioned directory tree and prunes partitions.
+
+A parquet read without a schema runs a Spark job to read the footer
+and infer one. `load_table` pays that job once per (session, file):
+it keeps the inferred schema under the session's application id and
+the file's identity (real path, inode, size, mtime), and later reads
+of the unchanged file pass it to the reader, which plans without a
+job. Rewriting the file changes its identity, so the next read infers
+again. A path that is not a regular local file (a directory, a
+remote URI) is read inferring every time.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -40,12 +52,66 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANO_TS_COLS = {"events": ("ts",)}
 
 
+# (applicationId, real path, inode, size, mtime_ns) → the schema the
+# first read of that file inferred under the two confs above. No lock:
+# two threads reading a new file at once both infer and store the same
+# schema, which costs a job, not a wrong read.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """The cache key of a regular local file, or None for anything
+    `os.stat` cannot see as one (a directory, a remote URI)."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (
+        spark.sparkContext.applicationId,
+        real,
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+    )
+
+
+@contextmanager
+def job_description(sc, text: str):
+    """Name the Spark jobs run inside the block (Spark UI, event log),
+    then restore the caller's description — under foreachBatch that is
+    the micro-batch's own."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read `<sf_dir>/<name>.parquet`, with `events.ts` as microsecond
+    timestamps and TIMESTAMP(MILLIS) columns as session-zone
+    timestamps.
+
+    The first read of a file in a session infers its schema, which
+    runs one Spark job described as `load_table <name>`; later reads
+    of the same unchanged file reuse that schema and run no job. See
+    the module docstring for the key and the fallback."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    with job_description(spark.sparkContext, f"load_table {name}"):
+        df = reader.parquet(path)
+    if key is not None and schema is None:
+        _SCHEMAS[key] = df.schema
     for c in _NANO_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))

@@ -1044,8 +1044,7 @@ def _dup_chunk_frame(docs):
     each doc's distinct chunk hashes, kept when the chunk is in
     PR_EDGE_MIN_DF..PR_EDGE_MAX_DF docs — the Spark side of the `ca`
     CTE in `_chunk_graph_prefix`. Takes the caller's `documents`
-    frame (a second `load_table` would add a parquet schema job).
-    Runs one job at construction: the eager chunk cut below."""
+    frame. Runs one job at construction: the eager chunk cut below."""
     # fan the RAW text to cluster parallelism before tokenize + the
     # md5 chunk grid: the per-row work otherwise runs at the scan's
     # split count — one task on a small single-file scan; a no-op on

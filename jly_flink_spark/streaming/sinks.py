@@ -52,7 +52,6 @@ import json
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -61,21 +60,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql.types import TimestampType
 
+from ..io import job_description
+
 # Sink column order matches the ADB INSERT list (AdbSink.java:111).
 SINK_COLUMNS = ("db_tb_name", "id", "fb_no", "record_del_time", "data_json")
-
-
-@contextmanager
-def _job_description(sc, text: str):
-    """Name the Spark jobs run inside the block (Spark UI, event log),
-    then restore the caller's description — under foreachBatch that is
-    the micro-batch's own."""
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(text)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
 
 
 def _table_slices(rows: pa.Table):
@@ -554,5 +542,5 @@ class DualSink:
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         sinks = [self.adb] if self.sr is None else [self.adb, self.sr]
         sc = batch_df.sparkSession.sparkContext
-        with _job_description(sc, f"sink.dual epoch={epoch_id}"):
+        with job_description(sc, f"sink.dual epoch={epoch_id}"):
             write_epoch(batch_df, epoch_id, self.query_id, sinks)

@@ -742,7 +742,13 @@ class TestJobBudget:
 
     def _forced_jobs(self, spark, name):
         """Jobs to build the registered query and force it through a
-        noop write, plan-time jobs included."""
+        noop write, plan-time jobs included. Every table is loaded
+        first, so the count is of a warm query, whose reads infer no
+        schema, whatever ran before it in the session."""
+        from jly_flink_spark.io import TABLES, load_table
+
+        for table in TABLES:
+            load_table(spark, SF_DIR, table)
 
         def run():
             df = REGISTRY[name].spark_fn(spark, SF_DIR)
@@ -864,79 +870,88 @@ class TestJobBudget:
 
     def test_pagerank_dup_chunks_job_budget(self, spark):
         """Building and forcing PageRank over the duplicate-chunk
-        graph: 16 jobs, counting the plan-time ones (the `documents`
-        schema read, the eager chunk cut, the staged frames). The
-        chunk-graph builder takes the caller's `documents` frame; one
-        that loaded the table again would add a schema job. 21 when
-        every round rebuilt all node ranks; 20 when AQE broadcast the
-        per-node sums into each join."""
-        assert self._forced_jobs(spark, "graph_pagerank_dup_chunks") <= 16
+        graph: 15 jobs, counting the plan-time ones (the eager chunk
+        cut, the staged frames). 16 when every `documents` load
+        inferred its schema; 21 when every round rebuilt all node
+        ranks; 20 when AQE broadcast the per-node sums into each
+        join."""
+        assert self._forced_jobs(spark, "graph_pagerank_dup_chunks") <= 15
 
     def test_bfs_reachability_job_budget(self, spark):
-        """Building and forcing the 4-level BFS: 10 or 15 jobs — 15
+        """Building and forcing the 4-level BFS: 9 or 14 jobs — 14
         when the seeds' exchange finishes before AQE has seen the
         edge list's size and chosen to broadcast it, so every level
-        keeps its min-depth exchange. 41 to 43 when a recursive CTE
-        ran each level as its own round of jobs."""
-        assert self._forced_jobs(spark, "graph_bfs_reachability") <= 15
+        keeps its min-depth exchange. One more when the `documents`
+        load inferred its schema; 41 to 43 when a recursive CTE ran
+        each level as its own round of jobs."""
+        assert self._forced_jobs(spark, "graph_bfs_reachability") <= 14
 
     def test_kmeans_job_budget(self, spark):
-        """Building and forcing the K-means audit: 12 jobs (18 when
-        K-means ran its own loop). K-means runs PQ's Lloyd loop with
+        """Building and forcing the K-means audit: 11 jobs (12 when the
+        `embeddings` load inferred its schema, 18 when K-means ran its
+        own loop). K-means runs PQ's Lloyd loop with
         one subspace: one seed collect, which also yields the
         dimension, then one update action per round against
         driver-side centroids — no centroid staging cut to force."""
-        assert self._forced_jobs(spark, "embedding_kmeans_clusters") <= 12
+        assert self._forced_jobs(spark, "embedding_kmeans_clusters") <= 11
 
     def test_pq_adc_job_budget(self, spark):
-        """Building and forcing the PQ training + ADC audit: 11 jobs
-        (17 with a `first()` probe job for the dimension and a staged
-        codebook per round), the same loop as K-means with M=8."""
-        assert self._forced_jobs(spark, "embedding_pq_adc") <= 11
+        """Building and forcing the PQ training + ADC audit: 10 jobs
+        (11 with a schema-inference job for `embeddings`, 17 with a
+        `first()` probe job for the dimension and a staged codebook
+        per round), the same loop as K-means with M=8."""
+        assert self._forced_jobs(spark, "embedding_pq_adc") <= 10
 
     def test_ivf_int8_build_job_budget(self, spark):
         """Building the IVF-SQ8 layout (centroids, then one write whose
         code kernel runs in the scan stage ahead of the list_id
-        exchange) and serving it: 14 jobs."""
-        assert self._forced_build_jobs(spark, "ann_cosine_ivf_int8") <= 14
+        exchange) and serving it: 13 jobs (14 when the `embeddings`
+        load inferred its schema)."""
+        assert self._forced_build_jobs(spark, "ann_cosine_ivf_int8") <= 13
 
     def test_ivf_pq_build_job_budget(self, spark):
-        """Building the raw IVF-PQ layout and serving it: 21 jobs. The
+        """Building the raw IVF-PQ layout and serving it: 20 jobs. The
         list is assigned ahead of the Lloyd loop and rides through it
         with the code, so the layout write joins nothing back onto the
-        corpus; with that join it took 22."""
-        assert self._forced_build_jobs(spark, "ann_ivf_pq_adc") <= 21
+        corpus; with that join it took 22, and with a schema-inference
+        job for `embeddings` 21."""
+        assert self._forced_build_jobs(spark, "ann_ivf_pq_adc") <= 20
 
     def test_ivf_pq_residual_build_job_budget(self, spark):
-        """Building the residual IVF-PQ layout and serving it: 22 jobs.
+        """Building the residual IVF-PQ layout and serving it: 21 jobs.
         The list and the full code ride through the residual Lloyd
         loop, so the layout write joins nothing back; with that join,
-        whose strategy AQE picked at run time, it took 25 or 26."""
-        assert self._forced_build_jobs(spark, "ann_ivf_pq_residual") <= 22
+        whose strategy AQE picked at run time, it took 25 or 26, and
+        with a schema-inference job for `embeddings` 22."""
+        assert self._forced_build_jobs(spark, "ann_ivf_pq_residual") <= 21
 
     def test_silhouette_job_budget(self, spark):
         """K-means and the silhouette audit over one coded frame, its
-        codes quantized once: 25 jobs."""
+        codes quantized once: 24 jobs (25 when the `embeddings` load
+        inferred its schema)."""
         assert (
-            self._forced_jobs(spark, "embedding_silhouette_by_cluster") <= 25
+            self._forced_jobs(spark, "embedding_silhouette_by_cluster") <= 24
         )
 
     def test_bpe_train_merges_job_budget(self, spark):
-        """Building and forcing 8 BPE rounds: 19 jobs. The score
-        reads no symbol counts, so no round aggregates them."""
-        assert self._forced_jobs(spark, "bpe_train_merges") <= 19
+        """Building and forcing 8 BPE rounds: 18 jobs (19 when the
+        `documents` load inferred its schema). The score reads no
+        symbol counts, so no round aggregates them."""
+        assert self._forced_jobs(spark, "bpe_train_merges") <= 18
 
     def test_bpe_tokenize_corpus_job_budget(self, spark):
         """Training, the merge-table collect and the forced per-row
-        apply: 20 jobs — the apply scan itself adds no shuffle."""
-        assert self._forced_jobs(spark, "bpe_tokenize_corpus") <= 20
+        apply: 19 jobs — the apply scan itself adds no shuffle; 20 when
+        the `documents` load inferred its schema."""
+        assert self._forced_jobs(spark, "bpe_tokenize_corpus") <= 19
 
     def test_wordpiece_train_merges_job_budget(self, spark):
-        """Building and forcing 6 WordPiece rounds: exactly 27 jobs.
-        Both symbol-count sides of each round's score join are
-        broadcast at plan time; left to AQE's run-time re-planning,
-        identical runs took 27 to 31 jobs."""
-        assert self._forced_jobs(spark, "wordpiece_train_merges") == 27
+        """Building and forcing 6 WordPiece rounds: exactly 26 jobs (27
+        when the `documents` load inferred its schema). Both
+        symbol-count sides of each round's score join are broadcast at
+        plan time; left to AQE's run-time re-planning, identical runs
+        took 27 to 31 jobs."""
+        assert self._forced_jobs(spark, "wordpiece_train_merges") == 26
 
 
 class TestScaleShapes:
